@@ -394,11 +394,8 @@ object Main {
     // regenerated corpus or a changed upstream knob recomputes, while
     // a changed LATE knob (budget) reuses the earlier stages. A stage
     // dir without _SUCCESS (killed mid-write) recomputes.
-    val fpBase: String = {
-      val f = new java.io.File(s"$docsDir/documents.parquet")
-      java.lang.Long.toHexString(java.util.Objects.hash(
-        docsDir, f.length(), f.lastModified()).toLong & 0xffffffffL)
-    }
+    val fpBase: String =
+      graft.dedup.DedupIndex.fileFp(new java.io.File(s"$docsDir/documents.parquet"))
     def staged(stage: String, fp: String)(
         compute: => (DataFrame, org.apache.spark.sql.Observation)): DataFrame =
       work match {
@@ -732,16 +729,18 @@ object Main {
   /** Write the full report file tree under `dir`: aggregate tables in
     * TSV/JSON/Markdown plus one markdown file per top-N user/group
     * (reference writeReportFiles, reports.go:128-229 +
-    * markdown.go:32-371). Ids are bounded by `n` and the per-id frames
-    * come from the artifact — bounded collects, no per-id Spark
-    * jobs. */
+    * markdown.go:32-371). Each aggregate table is collected once for
+    * all three formats. Ids are bounded by `n` and the per-id frames
+    * come from the artifact — two bounded collects per tree, no per-id
+    * Spark jobs. */
   private[cli] def writeReportTree(c: Stats.Computed,
       dir: java.nio.file.Path, n: Int, ids: IdMaps): Unit = {
     java.nio.file.Files.createDirectories(dir)
     def emit(base: String, df: DataFrame, title: String): Unit = {
-      java.nio.file.Files.writeString(dir.resolve(s"$base.tsv"), Reports.tsv(df))
-      java.nio.file.Files.writeString(dir.resolve(s"$base.json"), Reports.jsonLines(df))
-      java.nio.file.Files.writeString(dir.resolve(s"$base.md"), Reports.markdown(df, title))
+      val t = Reports.Table.withJson(df)
+      java.nio.file.Files.writeString(dir.resolve(s"$base.tsv"), Reports.tsv(t))
+      java.nio.file.Files.writeString(dir.resolve(s"$base.json"), Reports.jsonLines(t))
+      java.nio.file.Files.writeString(dir.resolve(s"$base.md"), Reports.markdown(t, title))
     }
     emit("totals", c.totals, "Totals")
     Stats.rankedMetrics.foreach { m =>
@@ -765,25 +764,21 @@ object Main {
     }
     def perIdTree(subdir: String, perId: DataFrame, perIdPrefix: DataFrame,
         idCol: String, nameOf: Long => String): Seq[(Long, String)] = {
-      val top = perId.orderBy(desc("bytes")).limit(n)
-        .select(col(idCol)).collect().map(_.getLong(0)).toSeq
+      val topRows = perId.orderBy(desc("bytes")).limit(n).collect().toSeq
+      val top = topRows.map(r => r.getLong(r.fieldIndex(idCol)))
       if (top.isEmpty) return Nil
-      val totalsById = perId.where(col(idCol).isin(top: _*))
-        .collect().map(r => r.getLong(r.fieldIndex(idCol)) -> r).toMap
       val prefixRows = perIdPrefix.where(col(idCol).isin(top: _*))
         .collect().groupBy(r => r.getLong(r.fieldIndex(idCol)))
       val cols = perId.columns
       val metrics = Stats.rankedMetrics.filter(perIdPrefix.columns.contains)
-      top.foreach { id =>
+      top.zip(topRows).foreach { case (id, totals) =>
         val idName = nameOf(id)
         val sb = new StringBuilder(s"# Usage report for $idName ($idCol $id)\n\n")
         sb.append("## Contents\n\n* [Totals](#totals)\n")
         metrics.foreach(m => sb.append(s"* [Top $n prefixes by $m](#top-$m)\n"))
         sb.append("\n## <a id=totals></a> Totals\n\n| Metric | Value |\n| :--- | ---: |\n")
-        totalsById.get(id).foreach { r =>
-          cols.filterNot(_ == idCol).foreach { cn =>
-            sb.append(s"| $cn | ${human(cn, r.get(r.fieldIndex(cn)))} |\n")
-          }
+        cols.filterNot(_ == idCol).foreach { cn =>
+          sb.append(s"| $cn | ${human(cn, totals.get(totals.fieldIndex(cn)))} |\n")
         }
         val mine = prefixRows.getOrElse(id, Array.empty)
         metrics.foreach { m =>
@@ -935,7 +930,7 @@ object Main {
     // predicate pushdown on the log/error scan (reference util.go:20-43).
     val ranged = TimeFlags.predicate(tsCol, o.since, o.from, o.to)
       .map(df.where).getOrElse(df)
-    println(Reports.tsv(ranged))
+    println(Reports.tsv(Reports.Table.of(ranged)))
     spark.stop()
   }
 

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental re-scan (reference analyze.go:226-243,313-331,383-424,
@@ -59,33 +59,49 @@ object Incremental {
     walked.records.cache()
     val entries = walked.entriesWithReuse.cache()
 
-    val currDirs = entries.where(col("is_dir")).select(col("path"), col("reused"))
-    val prevDirs = prev.where(col("is_dir")).select(col("path"))
-    val prevFiles = prev.where(!col("is_dir"))
-
-    // Reused dirs take their file rows from the previous snapshot.
-    val reusedDirPaths = currDirs.where(col("reused")).select(col("path"))
-    val reusedFiles = prevFiles
-      .join(reusedDirPaths.withColumnRenamed("path", "parent"), Seq("parent"), "left_semi")
+    // Reused dirs take their file rows from the previous snapshot. A
+    // new link in a changed dir to a file of a reused dir raises the
+    // file's link count, which only the walked link saw: reused rows
+    // take the fresh nlink of any walked link to the same (device,
+    // inode), so Stats' hardlink canonicalization sees the whole group.
+    val reusedDirs = entries.where(col("is_dir") && col("reused"))
+      .select(col("path").as("parent"))
+    val freshNlink = entries.where(!col("is_dir") && col("nlink") > 1)
+      .groupBy(col("device"), col("inode")).agg(max(col("nlink")).as("fresh_nlink"))
+    val reusedFiles = prev.where(!col("is_dir"))
+      .join(reusedDirs, Seq("parent"), "left_semi")
+      .join(freshNlink, Seq("device", "inode"), "left")
+      .withColumn("nlink", coalesce(col("fresh_nlink"), col("nlink")))
     val walkCols = entries.drop("reused").columns.toIndexedSeq
     val full = entries.drop("reused")
       .unionByName(reusedFiles.select(walkCols.map(col): _*))
 
-    val deletedDirs = prevDirs.join(currDirs, Seq("path"), "left_anti")
-    val deletedFiles = prevFiles.select(col("path"))
-      .join(full.where(!col("is_dir")).select(col("path")), Seq("path"), "left_anti")
-
-    val nUnchanged = currDirs.where(col("reused")).count()
-    val nCurrDirs = currDirs.count()
-    val nNewDirs = currDirs.join(prevDirs, Seq("path"), "left_anti").count()
+    // the seven counts in one aggregation over a full-outer join of
+    // the current rows (walked or reused) and the previous ones
+    def n(c: Column): Column = count(when(c, 1))
+    val isNow = col("src").isNotNull
+    val counts = entries.select(col("path"), col("is_dir"), col("reused"), lit("walk").as("src"))
+      .unionByName(reusedFiles.select(col("path"), col("is_dir"),
+        lit(null).cast("boolean").as("reused"), lit("reuse").as("src")))
+      .join(prev.select(col("path"), col("is_dir"), lit(true).as("before")),
+        Seq("path", "is_dir"), "full_outer")
+      .agg(
+        n(col("is_dir") && col("reused")),
+        n(col("is_dir") && isNow),
+        n(col("is_dir") && isNow && col("before").isNull),
+        n(col("is_dir") && !isNow),
+        n(!col("is_dir") && col("src") === "walk"),
+        n(!col("is_dir") && col("src") === "reuse"),
+        n(!col("is_dir") && !isNow))
+      .head()
     val summary = ChangeSummary(
-      prefixes_unchanged = nUnchanged,
-      prefixes_changed = nCurrDirs - nUnchanged - nNewDirs,
-      prefixes_added = nNewDirs,
-      prefixes_deleted = deletedDirs.count(),
-      files_rescanned = entries.where(!col("is_dir")).count(),
-      files_reused = reusedFiles.count(),
-      files_deleted = deletedFiles.count())
+      prefixes_unchanged = counts.getLong(0),
+      prefixes_changed = counts.getLong(1) - counts.getLong(0) - counts.getLong(2),
+      prefixes_added = counts.getLong(2),
+      prefixes_deleted = counts.getLong(3),
+      files_rescanned = counts.getLong(4),
+      files_reused = counts.getLong(5),
+      files_deleted = counts.getLong(6))
     Result(full, summary)
   }
 }

@@ -891,10 +891,7 @@ object Analytics {
       // the existing one (overwriting in place would invalidate
       // Spark's shared file-listing cache mid-session), and staleness
       // is structurally impossible.
-      val f = new java.io.File(basePath)
-      val fp = java.lang.Long.toHexString(
-        java.util.Objects.hash(basePath, f.length(), f.lastModified()).toLong
-          & 0xffffffffL)
+      val fp = graft.dedup.DedupIndex.fileFp(new java.io.File(basePath))
       val sumDir = System.getProperty("java.io.tmpdir") +
         s"/graft_mv_lineitem_$fp"
       if (!new java.io.File(sumDir).exists()) {

@@ -1,8 +1,10 @@
 package graft.stats
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+
+import graft.ops.Bfs
 
 /** The reference's main query pipeline (`idu stats compute`,
   * stats.go:115-168 → stats/totals.go:150-209 → report_stats.go):
@@ -24,10 +26,15 @@ import org.apache.spark.sql.expressions.Window
   * the canonical link as the lexicographically-least path, computed
   * with one window — a documented, deterministic improvement.
   *
-  * Scale: one semi-join of entries against matched prefixes (broadcast
-  * when the matched-prefix set is small, shuffle otherwise — left to
-  * AQE), then partial+final hash aggregations. No collect, no driver
-  * state; top-N compiles to TakeOrderedAndProject.
+  * Scale: one pass per artifact. The contribution rows are built once
+  * (one semi-join of entries against matched prefixes, broadcast when
+  * the matched-prefix set is small and shuffled otherwise — left to
+  * AQE) and summed by ONE grouping-sets aggregation over (uid, gid,
+  * prefix) whose six sets, tagged by `grouping_id()`, are the six
+  * frames. The result is local-checkpointed and the frames are
+  * filters of it, so writing all six re-reads the aggregate, never the
+  * snapshot. The only collect is the one-row totals; top-N compiles to
+  * TakeOrderedAndProject.
   */
 object Stats {
 
@@ -74,6 +81,10 @@ object Stats {
   private val signedAggCols: Seq[Column] =
     aggSpecs.map { case (n, e) => zsum(e * col("sign")).as(n) }
 
+  /** Sums of already-aggregated metric columns — the merge of
+    * [[computeIncremental]]. */
+  private val aggMergeCols: Seq[Column] = metricNames.map(m => zsum(col(m)).as(m))
+
   /** Compute all stats frames for one expression over the fact table.
     *
     * @param files the FileEntry fact table (see graft.model.FileEntry)
@@ -91,86 +102,112 @@ object Stats {
       entryMatch: Column = lit(true),
       calc: Calculator = Calculator.Identity,
       countHardlinkDupsAsFiles: Boolean = false): Computed = {
-    val contrib = contribOf(files, prefixMatch, entryMatch, calc,
-      countHardlinkDupsAsFiles, onlyPrefixes = None)
-    Computed(
-      totals = contrib.agg(aggCols.head, aggCols.tail: _*),
-      perUser = contrib.groupBy(col("uid")).agg(aggCols.head, aggCols.tail: _*),
-      perGroup = contrib.groupBy(col("gid")).agg(aggCols.head, aggCols.tail: _*),
-      perPrefix = contrib.groupBy(col("agg_prefix").as("prefix"))
-        .agg(aggCols.head, aggCols.tail: _*),
-      perUserPrefix = contrib
-        .groupBy(col("uid"), col("agg_prefix").as("prefix"))
-        .agg(aggCols.head, aggCols.tail: _*),
-      perGroupPrefix = contrib
-        .groupBy(col("gid"), col("agg_prefix").as("prefix"))
-        .agg(aggCols.head, aggCols.tail: _*))
+    val all = aggregateSets(contribOf(files, prefixMatch, entryMatch, calc,
+      countHardlinkDupsAsFiles, onlyPrefixes = None), aggCols)
+      .localCheckpoint(eager = false)
+    // Collecting the totals row is the one job that materializes every
+    // partition of the checkpoint. Over an empty input the () set has
+    // no group at all; the reference's zero-value Totals is one
+    // all-zero row (totals.go:17-27).
+    val t = slice(all, Nil)
+    val row = t.collect().headOption.getOrElse(Row.fromSeq(metricNames.map(_ => 0L)))
+    val totals = all.sparkSession.createDataFrame(java.util.List.of(row), t.schema)
+    computedOf(all, totals)
+  }
+
+  /** The grouping keys of [[Computed]]'s six frames, in field order. */
+  private val keyCols: Seq[String] = Seq("uid", "gid", "prefix")
+  private val frameKeys: Seq[Seq[String]] = Seq(Nil, Seq("uid"), Seq("gid"),
+    Seq("prefix"), Seq("uid", "prefix"), Seq("gid", "prefix"))
+
+  /** `grouping_id()` of the set grouped by `keys`: bit i is set when
+    * key i of [[keyCols]] is rolled up. */
+  private def gsetOf(keys: Seq[String]): Long =
+    keyCols.foldLeft(0L)((id, k) => id * 2 + (if (keys.contains(k)) 0 else 1))
+
+  /** One aggregation for all six frames: grouping sets over (uid, gid,
+    * prefix), each output row tagged with its set in `gset`. */
+  private def aggregateSets(contrib: DataFrame, metrics: Seq[Column]): DataFrame =
+    contrib.groupingSets(frameKeys.map(_.map(col)), keyCols.map(col): _*)
+      .agg(grouping_id().as("gset"), metrics: _*)
+
+  /** The frame grouped by `keys`, in [[Computed]]'s column order. */
+  private def slice(all: DataFrame, keys: Seq[String]): DataFrame =
+    all.where(col("gset") === gsetOf(keys)).select((keys ++ metricNames).map(col): _*)
+
+  private def computedOf(all: DataFrame, totals: DataFrame): Computed = {
+    val Seq(perUser, perGroup, perPrefix, perUserPrefix, perGroupPrefix) =
+      frameKeys.tail.map(slice(all, _))
+    Computed(totals, perUser, perGroup, perPrefix, perUserPrefix, perGroupPrefix)
   }
 
   /** The per-contribution-row frame every stats aggregate sums over.
-    * `onlyPrefixes` (a one-column `prefix` frame) restricts matched
-    * prefixes to the given set AFTER hardlink canonicality is decided
-    * over the FULL input — the restriction the incremental path needs
-    * (canonical choice must not depend on which prefixes changed). */
+    * `onlyPrefixes` (a one-column `prefix` frame and its row count)
+    * restricts matched prefixes to the given set AFTER hardlink
+    * canonicality is decided over the FULL input — the restriction the
+    * incremental path needs (canonical choice must not depend on which
+    * prefixes changed). */
   private def contribOf(
       files: DataFrame,
       prefixMatch: Column,
       entryMatch: Column,
       calc: Calculator,
       countHardlinkDupsAsFiles: Boolean,
-      onlyPrefixes: Option[DataFrame]): DataFrame = {
+      onlyPrefixes: Option[(DataFrame, Long)]): DataFrame = {
 
     // Canonical-hardlink flag: first (device, inode) by path order.
-    // Only the nlink > 1 slice (typically ≪1% of rows) pays the
-    // (device, inode) shuffle for the window; everything else is
-    // canonical by definition and goes around it.
+    // Only linked files (nlink > 1, typically ≪1% of rows) pay the
+    // (device, inode) shuffle for the window; dirs, which cannot be
+    // hard-linked, and single links are canonical by definition and
+    // go around it.
     val withCanon =
       if (countHardlinkDupsAsFiles) files.withColumn("is_canonical", lit(true))
       else {
+        val linked = coalesce(!col("is_dir") && col("nlink") > 1, lit(false))
         val linkRank = row_number().over(
           Window.partitionBy(col("device"), col("inode")).orderBy(col("path")))
-        val multi = files.where(col("nlink") > 1)
-          .withColumn("is_canonical", linkRank === 1)
-        val single = files.where(col("nlink") <= 1 || col("nlink").isNull)
-          .withColumn("is_canonical", lit(true))
-        single.unionByName(multi)
+        files.where(!linked).withColumn("is_canonical", lit(true))
+          .unionByName(files.where(linked).withColumn("is_canonical", linkRank === 1))
       }
 
-    // Matched prefixes (dir rows passing prefixMatch), optionally
-    // restricted to the changed set.
-    val matchedAll = withCanon
-      .where(col("is_dir") && prefixMatch)
-      .select(col("path").as("prefix_path"))
-    val matchedPrefixes = onlyPrefixes match {
-      case Some(p) => matchedAll.join(
-        p.select(col("prefix").as("prefix_path")), Seq("prefix_path"),
-        "left_semi")
-      case None => matchedAll
+    // Matched prefixes: dir rows passing prefixMatch, restricted to
+    // the changed set on the incremental path; their own rows are the
+    // prefix contributions. Restricted, the matched set is no larger
+    // than the changed set, so both broadcast when that is small.
+    def bounded(df: DataFrame) = onlyPrefixes.fold(df) { case (_, n) => Bfs.bcastIfSmall(df, n) }
+    val matchedDirs = files.where(col("is_dir") && prefixMatch)
+    val prefixDirs = onlyPrefixes.fold(matchedDirs) { case (p, _) =>
+      matchedDirs.join(bounded(p.select(col("prefix").as("path"))), Seq("path"), "left_semi")
     }
-
-    // The prefix's own contribution rows (the restricted path pays
-    // the semi-join; the full path keeps the plain filter).
-    val prefixDirs = withCanon.where(col("is_dir") && prefixMatch)
-    val prefixRows = (onlyPrefixes match {
-      case Some(_) => prefixDirs.join(
-        matchedPrefixes.withColumnRenamed("prefix_path", "path"),
-        Seq("path"), "left_semi")
-      case None => prefixDirs
-    }).withColumn("is_prefix_row", lit(true))
-      .withColumn("agg_prefix", col("path"))
+    val prefixRows = prefixDirs
+      .withColumn("is_canonical", lit(true))
+      .withColumn("is_prefix_row", lit(true))
+      .withColumn("prefix", col("path"))
 
     // Entry rows: any row whose parent is a matched prefix and which
     // itself passes entryMatch (dirs count as sub_prefixes).
     val entryRows = withCanon
       .where(entryMatch)
-      .join(matchedPrefixes, col("parent") === col("prefix_path"), "left_semi")
+      .join(bounded(prefixDirs.select(col("path").as("prefix_path"))),
+        col("parent") === col("prefix_path"), "left_semi")
       .withColumn("is_prefix_row", lit(false))
-      .withColumn("agg_prefix", col("parent"))
+      .withColumn("prefix", col("parent"))
 
     prefixRows.unionByName(entryRows)
       .withColumn("storage", calc(col("size"), col("blocks")))
-      .select(col("agg_prefix"), col("uid"), col("gid"), col("is_prefix_row"),
+      .select(col("prefix"), col("uid"), col("gid"), col("is_prefix_row"),
         col("is_dir"), col("is_canonical"), col("size"), col("storage"))
+  }
+
+  /** Materialize a frame that is small by the incremental contract.
+    * The count that fills the checkpoint also decides whether joins
+    * may broadcast it ([[Bfs.bcastIfSmall]]): the planner has no size
+    * estimate for a checkpoint, and without the hint it shuffles both
+    * join sides before AQE can switch to a broadcast.
+    * @return the frame and its row count */
+  private def materialize(df: DataFrame): (DataFrame, Long) = {
+    val cp = df.localCheckpoint(eager = false)
+    (cp, cp.count())
   }
 
   /** The §2.8 changed-prefix set between two snapshots: dir rows
@@ -197,24 +234,25 @@ object Stats {
     * the CHANGED prefixes only — the base table's unchanged prefixes
     * are never re-aggregated. Every metric is a conditional SUM
     * ([[aggSpecs]]), so the merge is exact:
-    * `new_state = prev_state − contrib_old(changed) + contrib_new(changed)`,
-    * one ±1-signed aggregate per keying plus a full-outer merge join
-    * (using-columns coalesce the keys).
+    * `new_state = prev_state − contrib_old(changed) + contrib_new(changed)`.
     *
     * Hardlink exactness: with `countHardlinkDupsAsFiles = false` the
     * canonical link of a (device, inode) group can FLIP to a link in
     * an UNCHANGED prefix when a changed prefix's link disappears, so
     * the changed set auto-expands with every prefix holding a link of
     * a group that any changed prefix touches (two semi-joins over the
-    * nlink > 1 sliver). Canonicality itself is always decided over
+    * linked-file sliver). Canonicality itself is always decided over
     * the FULL snapshot, exactly as [[compute]] does.
     *
     * Scale shape: one dir-slice full-outer join (changed-set
     * discovery is the caller's if it has walker `reused` flags —
-    * [[changedPrefixesOf]] otherwise), two restricted contrib scans
-    * bounded by the changed prefixes' entry rows, six delta
-    * aggregates on those rows alone, six merge joins keyed like the
-    * state. An unchanged-corpus rescan aggregates zero contrib rows. */
+    * [[changedPrefixesOf]] otherwise), materialized with the expanded
+    * set and broadcast into two restricted contrib scans bounded by
+    * the changed prefixes' entry rows; ONE ±1-signed grouping-sets
+    * aggregate of those rows (as in [[compute]]); then ONE union of
+    * the previous six frames with the delta, summed per (set, key) —
+    * one merge for all six frames, keyed like the state. An
+    * unchanged-corpus rescan aggregates zero contrib rows. */
   def computeIncremental(
       prev: Computed,
       prevFiles: DataFrame,
@@ -224,70 +262,55 @@ object Stats {
       entryMatch: Column = lit(true),
       calc: Calculator = Calculator.Identity,
       countHardlinkDupsAsFiles: Boolean = false): Computed = {
-    // hardlink-group expansion (see scaladoc). The result is
-    // CHECKPOINTED (r13): it is consumed by BOTH restricted contrib
-    // scans, and inside each the matched-prefix semi-join subtree is
-    // referenced twice (prefix rows + entry rows) — un-materialized,
-    // the full-outer dir join + expansion joins re-executed up to 4×
-    // inside the delta job. The frame is one column of changed
-    // prefixes (tiny by the incremental contract), so the
-    // materialization job is cheap.
-    val changed = (
-      if (countHardlinkDupsAsFiles) changedPrefixes
+    // hardlink-group expansion (see scaladoc). The changed set and the
+    // linked-file rows are tiny by the incremental contract; each is
+    // materialized once and broadcast into the semi-joins below, and
+    // the expanded set feeds both restricted contribution scans.
+    // Duplicates in it are harmless: it only feeds semi-joins.
+    val (changedCp, nChanged) = materialize(changedPrefixes)
+    val changed =
+      if (countHardlinkDupsAsFiles) (changedCp, nChanged)
       else {
-        val multi = prevFiles.where(col("nlink") > 1)
-          .unionByName(files.where(col("nlink") > 1))
-          .select(col("parent"), col("device"), col("inode"))
+        val linked = !col("is_dir") && col("nlink") > 1
+        val (multi, nMulti) = materialize(
+          prevFiles.where(linked).unionByName(files.where(linked))
+            .select(col("parent"), col("device"), col("inode")))
         val touched = multi.join(
-          changedPrefixes.select(col("prefix").as("parent")),
+          Bfs.bcastIfSmall(changedCp.select(col("prefix").as("parent")), nChanged),
           Seq("parent"), "left_semi")
-          .select(col("device"), col("inode")).distinct()
-        val extra = multi.join(touched, Seq("device", "inode"), "left_semi")
+        val extra = multi.join(Bfs.bcastIfSmall(touched, nMulti),
+          Seq("device", "inode"), "left_semi")
           .select(col("parent").as("prefix"))
-        changedPrefixes.unionByName(extra).distinct()
-      }).localCheckpoint(true)
-    // the two restricted contribution frames, ±1-signed; computed
-    // once and shared by all six delta aggregates
+        materialize(changedCp.unionByName(extra))
+      }
+    // the two restricted contribution frames, ±1-signed, in one
+    // grouping-sets aggregate
     val oldC = contribOf(prevFiles, prefixMatch, entryMatch, calc,
       countHardlinkDupsAsFiles, Some(changed)).withColumn("sign", lit(-1L))
     val newC = contribOf(files, prefixMatch, entryMatch, calc,
       countHardlinkDupsAsFiles, Some(changed)).withColumn("sign", lit(1L))
-    val delta = newC.unionByName(oldC).localCheckpoint(true)
+    val delta = aggregateSets(newC.unionByName(oldC), signedAggCols)
 
-    def merge(prevF: DataFrame, keys: Seq[(String, Column)]): DataFrame =
-      if (keys.isEmpty) {
-        // totals: two one-row frames, plain addition
-        val d = delta.agg(signedAggCols.head, signedAggCols.tail: _*)
-          .select(metricNames.map(m => col(m).as(s"__d_$m")): _*)
-        metricNames.foldLeft(prevF.crossJoin(d)) { (df, m) =>
-          df.withColumn(m, col(m) + coalesce(col(s"__d_$m"), lit(0L)))
-        }.select(metricNames.map(col): _*)
-      } else {
-        val d = delta.groupBy(keys.map { case (n, c) => c.as(n) }: _*)
-          .agg(signedAggCols.head, signedAggCols.tail: _*)
-          .select(keys.map(k => col(k._1)) ++
-            metricNames.map(m => col(m).as(s"__d_$m")): _*)
-        val merged = prevF.join(d, keys.map(_._1), "full_outer")
-        metricNames.foldLeft(merged) { (df, m) =>
-          df.withColumn(m,
-            coalesce(col(m), lit(0L)) + coalesce(col(s"__d_$m"), lit(0L)))
-        }.select(keys.map(k => col(k._1)) ++ metricNames.map(col): _*)
-          // a key whose contributions all vanished has zero rows of
-          // every kind — a full recompute would not emit it
-          .where(col("prefixes") + col("sub_prefixes") +
-            col("files") + col("hardlinks") > 0)
-      }
-
-    Computed(
-      totals = merge(prev.totals, Nil),
-      perUser = merge(prev.perUser, Seq("uid" -> col("uid"))),
-      perGroup = merge(prev.perGroup, Seq("gid" -> col("gid"))),
-      perPrefix = merge(prev.perPrefix,
-        Seq("prefix" -> col("agg_prefix"))),
-      perUserPrefix = merge(prev.perUserPrefix,
-        Seq("uid" -> col("uid"), "prefix" -> col("agg_prefix"))),
-      perGroupPrefix = merge(prev.perGroupPrefix,
-        Seq("gid" -> col("gid"), "prefix" -> col("agg_prefix"))))
+    // prev's six frames in the aggregate's (gset, uid, gid, prefix)
+    // shape, rolled-up keys null
+    def tagged(f: DataFrame, keys: Seq[String]): DataFrame =
+      f.select((lit(gsetOf(keys)).as("gset") +: keyCols.map { k =>
+        if (keys.contains(k)) col(k) else lit(null).cast(delta.schema(k).dataType).as(k)
+      }) ++ metricNames.map(col): _*)
+    val prevFrames = Seq(prev.totals, prev.perUser, prev.perGroup, prev.perPrefix,
+      prev.perUserPrefix, prev.perGroupPrefix)
+    val merged = frameKeys.zip(prevFrames).map { case (k, f) => tagged(f, k) }
+      .reduce(_ unionByName _)
+      .unionByName(delta)
+      .groupBy(("gset" +: keyCols).map(col): _*)
+      .agg(aggMergeCols.head, aggMergeCols.tail: _*)
+      // a key whose contributions all vanished has zero rows of every
+      // kind — a full recompute would not emit it; totals always stays
+      .where(col("gset") === gsetOf(Nil) || col("prefixes") + col("sub_prefixes") +
+        col("files") + col("hardlinks") > 0)
+      .localCheckpoint(eager = false)
+    // prev.totals is one row, so the merged () set is one row too
+    computedOf(merged, slice(merged, Nil))
   }
 
   /** K1/K2: top-N prefixes by one metric (reference heap.MinMax

@@ -130,4 +130,21 @@ class IncrementalSpec extends SparkSpec {
     assert(res.summary.prefixes_changed == 1)
     assert(paths(res.entries) == paths(fullWalk(root)))
   }
+
+  test("a new link to a file of a reused dir: stats equal a fresh full walk") {
+    // d0-0/d1-0 changes (it gains the link); d0-1/d1-1 is reused, and
+    // its file's row must not keep the old nlink of 1
+    val root = buildTree()
+    val prev = snapshotNow(root)
+    Files.createLink(root.resolve("d0-0/d1-0/link"), root.resolve("d0-1/d1-1/f2-0"))
+    val res = Incremental.rescan(spark, root.toString, prev, seedDepth = 1)
+    assert(res.summary.prefixes_changed == 1)
+    def frames(c: graft.stats.Stats.Computed) = Seq(c.totals, c.perUser,
+      c.perGroup, c.perPrefix, c.perUserPrefix, c.perGroupPrefix)
+      .map(_.collect().map(_.toSeq).toSet)
+    val got = frames(graft.stats.Stats.compute(res.entries))
+    val want = frames(graft.stats.Stats.compute(fullWalk(root)))
+    assert(got == want)
+    assert(got.head.head(2) == 21L) // 7 dirs × 3 files, the link a hardlink
+  }
 }

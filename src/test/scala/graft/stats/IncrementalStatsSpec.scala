@@ -156,4 +156,42 @@ class IncrementalStatsSpec extends SparkSpec {
         full.perPrefix.where(col("prefix") === p).collect().toSeq.map(_.toSeq))
     }
   }
+
+  /** `df` with a null uid on /keep/f1 and a null gid on /chg/b. */
+  private def withNullIds(df: DataFrame): DataFrame = df
+    .withColumn("uid", when(col("path") === "/keep/f1", lit(null)).otherwise(col("uid")))
+    .withColumn("gid", when(col("path") === "/chg/b", lit(null)).otherwise(col("gid")))
+
+  test("grouping sets: null uid/gid rows land only in their own set") {
+    val prevN = withNullIds(prevDf)
+    val newN = withNullIds(newDf)
+    val c = Stats.compute(newN)
+    // the rolled-up () set is not confused with a null-key group
+    assert(rows(c.totals) == rows(Stats.compute(newDf).totals))
+    val nullUser = c.perUser.where(col("uid").isNull).collect()
+    assert(nullUser.length == 1)
+    assert(nullUser.head.getAs[Long]("files") == 1L &&
+      nullUser.head.getAs[Long]("bytes") == 100L)
+    assert(c.perGroup.where(col("gid").isNull).collect()
+      .map(_.getAs[Long]("bytes")).toSeq == Seq(200L))
+    assert(c.perUserPrefix.where(col("uid").isNull).collect()
+      .map(_.getAs[String]("prefix")).toSeq == Seq("/keep"))
+    assert(c.perPrefix.where(col("prefix").isNull).count() == 0L)
+    val inc = Stats.computeIncremental(Stats.compute(prevN), prevN, newN,
+      Stats.changedPrefixesOf(prevN, newN))
+    assertSameComputed(inc, c)
+  }
+
+  test("grouping sets: no match gives one zero totals row and empty keyed frames") {
+    val none = lit(false)
+    def assertEmpty(c: Stats.Computed): Unit = {
+      assert(c.totals.collect().map(_.toSeq).toSeq == Seq(Seq.fill(7)(0L)))
+      Seq(c.perUser, c.perGroup, c.perPrefix, c.perUserPrefix, c.perGroupPrefix)
+        .foreach(f => assert(f.count() == 0L))
+    }
+    val prev = Stats.compute(prevDf, none, none)
+    assertEmpty(prev)
+    assertEmpty(Stats.computeIncremental(prev, prevDf, newDf,
+      Stats.changedPrefixesOf(prevDf, newDf), none, none))
+  }
 }
