@@ -2,91 +2,30 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, ExpressionInfo, Lower}
-import org.apache.spark.sql.types.{ArrayType, DoubleType}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{CosineSimExpr, LangIdExpr, MinHashSigExpr, MinMd5FingerprintExpr, RepetitionExpr, RpLshSigExpr, SimHash64Expr, TextStatsExpr, WordShinglesExpr}
+import graft.functions.NativeFunctions
 
-/** Session-extension wiring for cluster deployments: registers the
-  * native expressions into every session built with
+/** Session-extension wiring for cluster deployments: installs graft
+  * into every session built with
   *
   * {{{
   * --conf spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * (or `.withExtensions(new GraftExtensions)`), making `simhash64` and
-  * `cosine_sim` first-class SQL functions without per-session
-  * registration calls. Local code paths that own the session use the
-  * equivalent `SimHash64Expr.register` / `CosineSimExpr.register`.
+  * (or `.withExtensions(new GraftExtensions)`). Every entry of
+  * [[NativeFunctions.table]] becomes a first-class SQL function — the
+  * same builders the Column wrappers install on sessions the code
+  * owns, so SQL text and the Scala API build identical expressions —
+  * plus the AggRewrite optimizer rule and the as-of / interval-join
+  * planner strategies.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // The builders must replicate the Column wrappers' preprocessing:
-    // the kernels read ArrayData.getDouble / expect lowercased text, so
-    // a raw float-array or mixed-case input through SQL would silently
-    // produce garbage (no cast/lower happens inside the kernels).
-    def toDoubles(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-      Cast(e, ArrayType(DoubleType))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64Expr].getName, "simhash64"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHash64Expr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimExpr].getName, "cosine_sim"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CosineSimExpr(toDoubles(exprs(0)), toDoubles(exprs(1)))))
-    def litInt(e: org.apache.spark.sql.catalyst.expressions.Expression): Int =
-      e.eval().asInstanceOf[Number].intValue
-    ext.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShinglesExpr].getName, "word_shingles"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        WordShinglesExpr(exprs.head, litInt(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("text_stats"),
-      new ExpressionInfo(classOf[TextStatsExpr].getName, "text_stats"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        TextStatsExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("repetition_stats"),
-      new ExpressionInfo(classOf[RepetitionExpr].getName, "repetition_stats"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        RepetitionExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("min_md5_fingerprint"),
-      new ExpressionInfo(classOf[MinMd5FingerprintExpr].getName,
-        "min_md5_fingerprint"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MinMd5FingerprintExpr(exprs.head, litInt(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("lang_id"),
-      new ExpressionInfo(classOf[LangIdExpr].getName, "lang_id"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        LangIdExpr(Lower(exprs.head))))
-    ext.injectFunction((
-      FunctionIdentifier("rp_lsh_sig"),
-      new ExpressionInfo(classOf[RpLshSigExpr].getName, "rp_lsh_sig"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        RpLshSigExpr(toDoubles(exprs.head))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSigExpr].getName, "minhash_sig"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MinHashSigExpr(exprs.head, litInt(exprs(1)), litInt(exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier("deflate_size"),
-      new ExpressionInfo(classOf[graft.functions.DeflateSizeExpr].getName,
-        "deflate_size"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.DeflateSizeExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[graft.functions.NfcNormalizeExpr].getName,
-        "nfc_normalize"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.NfcNormalizeExpr(exprs.head)))
+    NativeFunctions.table.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(NativeFunctions.getClass.getName, name), builder))
+    }
     // Materialized-aggregate query rewrite (graft.plans.AggRewrite):
     // a no-op until summaries are registered, then matching aggregates
     // read the summary instead of the base table.

@@ -61,19 +61,14 @@ object BloomProbeExpr {
     true
   }
 
-  def register(spark: SparkSession, name: String, words: Array[Long],
-      numBits: Long, k: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BloomProbeExpr(exprs.head, words, numBits, k),
-      "scala_udf")
-
-  /** Column entry point; registers a filter-specific function name so
+  /** Column entry point; installs a filter-specific function name so
     * concurrent filters don't clobber each other's bit arrays. The
     * name is keyed on a 64-bit XXH64 digest of the whole filter state
-    * (words + numBits + k) — a 32-bit java hashCode gave two distinct
-    * filters a real chance of colliding, and the later
-    * createOrReplaceTempFunction would silently rebind the earlier
-    * plan's probe to the wrong bit array. */
+    * (words + numBits + k), so an existing name means the same filter
+    * and [[NativeFunctions.add]] leaves it as it is — a 32-bit java
+    * hashCode gave two distinct filters a real chance of colliding,
+    * which would bind the later plan's probe to the earlier bit
+    * array. */
   def mightContain(spark: SparkSession, key: Column, words: Array[Long],
       numBits: Long, k: Int): Column = {
     var d = XXH64.hashLong(numBits, 42L)
@@ -81,7 +76,8 @@ object BloomProbeExpr {
     var i = 0
     while (i < words.length) { d = XXH64.hashLong(words(i), d); i += 1 }
     val name = s"bloom_might_contain_${java.lang.Long.toHexString(d)}"
-    register(spark, name, words, numBits, k)
+    NativeFunctions.add(spark, name,
+      exprs => BloomProbeExpr(exprs.head, words, numBits, k))
     call_function(name, key)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.typedLit
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -150,31 +150,12 @@ case class BpeTokenizeExpr(child: Expression, merges: Seq[String])
     copy(child = newChild)
 }
 
+/** Column wrappers; the merge table travels as an array literal that
+  * the builder evaluates once at plan-build time, not per row. */
 object BpeExprs {
-  /** The merge table arrives as an array literal; it is evaluated once
-    * here at plan-build time, not per row. */
-  private def litStrings(e: Expression): Seq[String] =
-    e.eval().asInstanceOf[ArrayData].toArray[UTF8String](StringType)
-      .map(_.toString).toSeq
+  def bpeCount(spark: SparkSession, text: Column, merges: Seq[String]): Column =
+    NativeFunctions.call(spark, "bpe_count", text, typedLit(merges))
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_count", exprs => BpeCountExpr(exprs.head, litStrings(exprs(1))),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_tokenize", exprs => BpeTokenizeExpr(exprs.head, litStrings(exprs(1))),
-      "scala_udf")
-  }
-
-  def bpeCount(spark: SparkSession, text: Column, merges: Seq[String]): Column = {
-    register(spark)
-    call_function("bpe_count", text,
-      org.apache.spark.sql.functions.typedLit(merges))
-  }
-
-  def bpeTokenize(spark: SparkSession, text: Column, merges: Seq[String]): Column = {
-    register(spark)
-    call_function("bpe_tokenize", text,
-      org.apache.spark.sql.functions.typedLit(merges))
-  }
+  def bpeTokenize(spark: SparkSession, text: Column, merges: Seq[String]): Column =
+    NativeFunctions.call(spark, "bpe_tokenize", text, typedLit(merges))
 }

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -71,13 +70,6 @@ case class ByteEntropyExpr(child: Expression) extends UnaryExpression {
 }
 
 object ByteEntropyExpr {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "byte_entropy_micro", exprs => ByteEntropyExpr(exprs.head),
-      "scala_udf")
-
-  def byteEntropyMicro(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function("byte_entropy_micro", text)
-  }
+  def byteEntropyMicro(spark: SparkSession, text: Column): Column =
+    NativeFunctions.call(spark, "byte_entropy_micro", text)
 }

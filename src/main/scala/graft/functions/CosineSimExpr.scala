@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native codegen'd cosine similarity over two ARRAY<DOUBLE> columns.
@@ -53,14 +52,9 @@ object CosineSimExpr {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimExpr(exprs(0), exprs(1)), "scala_udf")
-
-  /** Column entry point; casts both sides to array<double> (cheap,
-    * codegen'd) so the kernel sees one element type. */
-  def cosineSim(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("cosine_sim", a.cast("array<double>"), b.cast("array<double>"))
-  }
+  /** Column entry point; the builder casts both sides to
+    * array<double> (cheap, codegen'd) so the kernel sees one element
+    * type. */
+  def cosineSim(spark: SparkSession, a: Column, b: Column): Column =
+    NativeFunctions.call(spark, "cosine_sim", a, b)
 }

@@ -5,7 +5,6 @@ import java.util.zip.Deflater
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -68,12 +67,6 @@ object DeflateSizeExpr {
     out
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "deflate_size", exprs => DeflateSizeExpr(exprs.head), "scala_udf")
-
-  def deflateSize(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function("deflate_size", c)
-  }
+  def deflateSize(spark: SparkSession, c: Column): Column =
+    NativeFunctions.call(spark, "deflate_size", c)
 }

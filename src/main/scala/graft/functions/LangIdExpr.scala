@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.functions.{call_function, lower}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -100,14 +99,8 @@ object LangIdExpr {
     UTF8String.fromString(if (bi < 0) "und" else langs(bi))
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lang_id", exprs => LangIdExpr(exprs.head), "scala_udf")
-
-  /** Column entry point: lowercases with Spark's own `lower` then runs
-    * the kernel. */
-  def langId(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function("lang_id", lower(text))
-  }
+  /** Column entry point; the builder lowercases with Spark's own
+    * `lower` then runs the kernel. */
+  def langId(spark: SparkSession, text: Column): Column =
+    NativeFunctions.call(spark, "lang_id", text)
 }

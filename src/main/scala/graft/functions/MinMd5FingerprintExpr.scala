@@ -6,7 +6,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -100,14 +100,6 @@ object MinMd5FingerprintExpr {
     hex(min)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "min_md5_fingerprint", exprs => MinMd5FingerprintExpr(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue()), "scala_udf")
-
-  def minMd5Fingerprint(spark: SparkSession, text: Column, k: Int): Column = {
-    register(spark)
-    call_function("min_md5_fingerprint", text,
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def minMd5Fingerprint(spark: SparkSession, text: Column, k: Int): Column =
+    NativeFunctions.call(spark, "min_md5_fingerprint", text, lit(k))
 }

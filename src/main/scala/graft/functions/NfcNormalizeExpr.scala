@@ -5,7 +5,6 @@ import java.text.Normalizer
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -47,12 +46,6 @@ object NfcNormalizeExpr {
     else UTF8String.fromString(Normalizer.normalize(s, Normalizer.Form.NFC))
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalizeExpr(exprs.head), "scala_udf")
-
-  def nfcNormalize(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function("nfc_normalize", c)
-  }
+  def nfcNormalize(spark: SparkSession, c: Column): Column =
+    NativeFunctions.call(spark, "nfc_normalize", c)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.typedLit
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native codegen'd PCA projection: y = M · (x − μ) for a k×d matrix
@@ -69,22 +69,9 @@ object PcaProjectExpr {
     new GenericArrayData(out)
   }
 
-  private def litDoubles(e: Expression): Array[Double] =
-    e.eval().asInstanceOf[ArrayData].toDoubleArray()
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pca_project",
-      exprs => PcaProjectExpr(exprs.head, litDoubles(exprs(1)), litDoubles(exprs(2))),
-      "scala_udf")
-
-  /** Column entry point; casts the vector to array<double>. `mat` is
-    * row-major k×d. */
+  /** Column entry point; the builder casts the vector to
+    * array<double>. `mat` is row-major k×d. */
   def pcaProject(spark: SparkSession, vec: Column, mean: Seq[Double],
-      mat: Seq[Double]): Column = {
-    register(spark)
-    call_function("pca_project", vec.cast("array<double>"),
-      org.apache.spark.sql.functions.typedLit(mean),
-      org.apache.spark.sql.functions.typedLit(mat))
-  }
+      mat: Seq[Double]): Column =
+    NativeFunctions.call(spark, "pca_project", vec, typedLit(mean), typedLit(mat))
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.functions.typedLit
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Multi-phrase occurrence counting in ONE text pass — an
@@ -124,21 +124,8 @@ case class PhraseCountExpr(child: Expression, phrases: Seq[String])
 }
 
 object PhraseCountExpr {
-  private def litStrings(e: Expression): Seq[String] =
-    e.eval().asInstanceOf[ArrayData].toArray[UTF8String](StringType)
-      .map(_.toString).toSeq
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "phrase_count",
-      exprs => PhraseCountExpr(exprs.head, litStrings(exprs(1))),
-      "scala_udf")
-
   /** counts[i] = non-overlapping occurrences of phrases(i) in text. */
   def phraseCounts(spark: SparkSession, text: Column,
-      phrases: Seq[String]): Column = {
-    register(spark)
-    call_function("phrase_count", text,
-      org.apache.spark.sql.functions.typedLit(phrases))
-  }
+      phrases: Seq[String]): Column =
+    NativeFunctions.call(spark, "phrase_count", text, typedLit(phrases))
 }

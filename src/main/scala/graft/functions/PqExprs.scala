@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Native codegen'd kernels for product quantization
@@ -100,32 +100,14 @@ case class PqAdcExpr(left: Expression, right: Expression, ksub: Int)
     copy(left = newLeft, right = newRight)
 }
 
+/** Column wrappers; the builders cast the vector, codebook and LUT to
+  * array<double>. */
 object PqExprs {
-  private def litInt(e: Expression): Int =
-    e.eval().asInstanceOf[Number].intValue
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_encode", exprs => PqEncodeExpr(exprs(0), exprs(1),
-        litInt(exprs(2)), litInt(exprs(3))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_adc", exprs => PqAdcExpr(exprs(0), exprs(1), litInt(exprs(2))),
-      "scala_udf")
-  }
-
   def pqEncode(spark: SparkSession, vec: Column, codebook: Column,
-      m: Int, ksub: Int): Column = {
-    register(spark)
-    call_function("pq_encode", vec.cast("array<double>"),
-      codebook.cast("array<double>"),
-      org.apache.spark.sql.functions.lit(m),
-      org.apache.spark.sql.functions.lit(ksub))
-  }
+      m: Int, ksub: Int): Column =
+    NativeFunctions.call(spark, "pq_encode", vec, codebook, lit(m), lit(ksub))
 
   def pqAdc(spark: SparkSession, codes: Column, lut: Column,
-      ksub: Int): Column = {
-    register(spark)
-    call_function("pq_adc", codes, lut.cast("array<double>"),
-      org.apache.spark.sql.functions.lit(ksub))
-  }
+      ksub: Int): Column =
+    NativeFunctions.call(spark, "pq_adc", codes, lut, lit(ksub))
 }

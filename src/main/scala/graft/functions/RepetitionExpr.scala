@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -87,12 +86,6 @@ object RepetitionExpr {
       math.max(0, words.length - 1).toLong, maxC))
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "repetition_stats", exprs => RepetitionExpr(exprs.head), "scala_udf")
-
-  def repetitionStats(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function("repetition_stats", c)
-  }
+  def repetitionStats(spark: SparkSession, c: Column): Column =
+    NativeFunctions.call(spark, "repetition_stats", c)
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native codegen'd random-hyperplane LSH signature over ARRAY<DOUBLE>
@@ -95,14 +94,8 @@ object RpLshSigExpr {
     out
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rp_lsh_sig", exprs => RpLshSigExpr(exprs.head), "scala_udf")
-
-  /** Column entry point; casts to array<double> to match the
-    * declarative form's per-element cast. */
-  def rpLshSig(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function("rp_lsh_sig", c.cast("array<double>"))
-  }
+  /** Column entry point; the builder casts to array<double> to match
+    * the declarative form's per-element cast. */
+  def rpLshSig(spark: SparkSession, c: Column): Column =
+    NativeFunctions.call(spark, "rp_lsh_sig", c)
 }

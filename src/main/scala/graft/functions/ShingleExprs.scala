@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -382,77 +382,26 @@ case class Md5Simhash52Expr(child: Expression) extends UnaryExpression {
 }
 
 object ShingleExprs {
-  private def litInt(e: Expression): Int =
-    e.eval().asInstanceOf[Number].intValue
+  def wordShingles(spark: SparkSession, text: Column, n: Int): Column =
+    NativeFunctions.call(spark, "word_shingles", text, lit(n))
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles", exprs => WordShinglesExpr(exprs.head, litInt(exprs(1))),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSigExpr(exprs.head, litInt(exprs(1)),
-        litInt(exprs(2))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_windows", exprs => WordWindowsExpr(exprs.head, litInt(exprs(1))),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_window_hashes",
-      exprs => WordWindowHashesExpr(exprs.head, litInt(exprs(1))),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_gram_md5",
-      exprs => WordGramMd5Expr(exprs.head, litInt(exprs(1))),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_minhash_bands",
-      exprs => Md5MinhashBandsExpr(exprs.head, litInt(exprs(1)),
-        litInt(exprs(2)), litInt(exprs(3))),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_simhash52",
-      exprs => Md5Simhash52Expr(exprs.head),
-      "scala_udf")
-  }
+  def minhashSig(spark: SparkSession, text: Column, k: Int, n: Int): Column =
+    NativeFunctions.call(spark, "minhash_sig", text, lit(k), lit(n))
 
-  def wordShingles(spark: SparkSession, text: Column, n: Int): Column = {
-    register(spark)
-    call_function("word_shingles", text, org.apache.spark.sql.functions.lit(n))
-  }
+  def wordWindows(spark: SparkSession, text: Column, n: Int): Column =
+    NativeFunctions.call(spark, "word_windows", text, lit(n))
 
-  def minhashSig(spark: SparkSession, text: Column, k: Int, n: Int): Column = {
-    register(spark)
-    call_function("minhash_sig", text, org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(n))
-  }
+  def wordWindowHashes(spark: SparkSession, text: Column, n: Int): Column =
+    NativeFunctions.call(spark, "word_window_hashes", text, lit(n))
 
-  def wordWindows(spark: SparkSession, text: Column, n: Int): Column = {
-    register(spark)
-    call_function("word_windows", text, org.apache.spark.sql.functions.lit(n))
-  }
-
-  def wordWindowHashes(spark: SparkSession, text: Column, n: Int): Column = {
-    register(spark)
-    call_function("word_window_hashes", text,
-      org.apache.spark.sql.functions.lit(n))
-  }
-
-  def wordGramMd5(spark: SparkSession, text: Column, k: Int): Column = {
-    register(spark)
-    call_function("word_gram_md5", text,
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def wordGramMd5(spark: SparkSession, text: Column, k: Int): Column =
+    NativeFunctions.call(spark, "word_gram_md5", text, lit(k))
 
   def md5MinhashBands(spark: SparkSession, text: Column, k: Int,
-      bands: Int, n: Int): Column = {
-    register(spark)
-    call_function("md5_minhash_bands", text,
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(bands),
-      org.apache.spark.sql.functions.lit(n))
-  }
+      bands: Int, n: Int): Column =
+    NativeFunctions.call(spark, "md5_minhash_bands", text, lit(k), lit(bands),
+      lit(n))
 
-  def md5Simhash52(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function("md5_simhash52", text)
-  }
+  def md5Simhash52(spark: SparkSession, text: Column): Column =
+    NativeFunctions.call(spark, "md5_simhash52", text)
 }

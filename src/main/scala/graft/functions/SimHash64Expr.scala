@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -63,17 +62,9 @@ object SimHash64Expr {
     out
   }
 
-  /** Register `simhash64` in the session's function registry (also
-    * makes it available to SQL text). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64Expr(exprs.head), "scala_udf")
-
-  /** Column-level entry point (requires [[register]] on the active
-    * session — Column construction from a raw Expression is not public
-    * API in Spark 4, so the function registry is the wiring). */
-  def simhash64(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function("simhash64", c)
-  }
+  /** Column-level entry point (Column construction from a raw
+    * Expression is not public API in Spark 4, so the function registry
+    * is the wiring; see [[NativeFunctions]]). */
+  def simhash64(spark: SparkSession, c: Column): Column =
+    NativeFunctions.call(spark, "simhash64", c)
 }

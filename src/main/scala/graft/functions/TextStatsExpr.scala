@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -94,12 +93,6 @@ object TextStatsExpr {
       tokens + bpeOverflow))
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "text_stats", exprs => TextStatsExpr(exprs.head), "scala_udf")
-
-  def textStats(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function("text_stats", c)
-  }
+  def textStats(spark: SparkSession, c: Column): Column =
+    NativeFunctions.call(spark, "text_stats", c)
 }

@@ -108,8 +108,9 @@ object Analytics {
   /** Part co-purchase graph: canonical (src < dst) part pairs sharing
     * at least `minSupport` orders. Pairs-per-order is bounded by order
     * size, the pair aggregate is one shuffle, and the support cutoff
-    * keeps the graph sparse (shared by q_kcore and q_bfs_hops). */
-  private def copurchaseEdges(s: SparkSession, dir: String,
+    * keeps the graph sparse (shared by the graph queries here and in
+    * [[Diagnostics]]). */
+  private[queries] def copurchaseEdges(s: SparkSession, dir: String,
       minSupport: Long): DataFrame =
     copurchaseWeighted(s, dir, minSupport).select(col("src"), col("dst"))
 
@@ -560,8 +561,7 @@ object Analytics {
     // that a SQL-only user of the session extensions gets the full
     // engine, not just the Scala API.
     "q_sql_surface" -> ((s, dir) => {
-      graft.functions.LangIdExpr.register(s)
-      graft.functions.PhraseCountExpr.register(s)
+      graft.functions.NativeFunctions.install(s)
       documents(s, dir).createOrReplaceTempView("docs_v")
       s.sql("""
         SELECT lang_id(lower(text)) AS lang_pred,

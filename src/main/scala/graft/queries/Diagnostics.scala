@@ -731,7 +731,7 @@ object Diagnostics {
     // broadcast join against part, then all arithmetic happens on the
     // |brands|-row frame.
     "q_modularity" -> ((s, dir) => {
-      val e = copurchaseEdges(s, dir, minSupport = 2)
+      val e = Analytics.copurchaseEdges(s, dir, minSupport = 2)
         .localCheckpoint(true) // m count + both aggregate consumers
       // m is a driver scalar off the checkpoint (~no cost) inlined as
       // a SQL literal — the former 1-row m frame cost a broadcast
@@ -768,26 +768,6 @@ object Diagnostics {
             | - 100000000000 AS BIGINT)""".stripMargin).as("contrib_nano"))
         .orderBy(asc("community"))
     }))
-
-  /** Shared with [[Analytics]]: the co-purchase part graph. Per-order
-    * collect + map-side pair emission (the Triangles explode(agg)
-    * rule) — one exchange + map-side pair generation instead of
-    * distinct + checkpoint + both self-join legs (see
-    * Analytics.copurchaseWeighted for the full rationale). */
-  private def copurchaseEdges(s: SparkSession, dir: String,
-      minSupport: Long): DataFrame =
-    lineitem(s, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .groupBy(col("ok"))
-      .agg(sort_array(collect_set(col("pk"))).as("ps"))
-      .select(explode(flatten(transform(col("ps"), (x, i) =>
-        transform(slice(col("ps"), i + lit(2), size(col("ps"))), y =>
-          struct(x.as("src"), y.as("dst")))))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .groupBy(col("src"), col("dst"))
-      .agg(count(lit(1)).as("w"))
-      .where(col("w") >= minSupport)
-      .select(col("src"), col("dst"))
 
   def oracle: Map[String, String] = Map(
     "q_acf" ->
