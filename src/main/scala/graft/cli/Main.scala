@@ -4,7 +4,7 @@ import java.nio.file.{Files, LinkOption, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.expr.FileOperands
@@ -73,8 +73,7 @@ object Main {
     case "stats" :: rest => stats(rest)
     case "errors" :: rest => listTimestamped(rest, Snapshot.readErrors(_, _), "when")
     case "logs" :: rest =>
-      listTimestamped(rest,
-        (s, db) => s.read.parquet(s"$db/scan_log").orderBy("start"), "start")
+      listTimestamped(rest, Snapshot.readLog(_, _).orderBy("start"), "start")
     case "config" :: file :: Nil =>
       graft.config.Config.load(file).foreach(println)
     case "database" :: "locate" :: file :: path :: Nil =>
@@ -159,19 +158,17 @@ object Main {
     * stats.go:213-218 renders names, falling back to the numeric id).
     * The map is a constant expression — resolution never shuffles. */
   private def withName(df: DataFrame, idCol: String,
-      byId: Map[Long, String]): DataFrame = {
-    val nameCol = s"${idCol}_name"
+      byId: Map[Long, String]): DataFrame =
+    df.select((nameOf(idCol, byId).as(s"${idCol}_name") +: df.columns.toSeq.map(col)): _*)
+
+  /** The display name of `idCol`'s id: its `byId` name, else the id. */
+  private def nameOf(idCol: String, byId: Map[Long, String]): Column =
     // try_element_at, not element_at: ANSI mode (Spark 4 default)
     // makes element_at THROW on a missing map key, so a uid absent
     // from /etc/passwd would crash the report instead of rendering
     // numerically.
-    val named =
-      if (byId.isEmpty) df.withColumn(nameCol, col(idCol).cast("string"))
-      else df.withColumn(nameCol,
-        coalesce(try_element_at(typedLit(byId), col(idCol)),
-          col(idCol).cast("string")))
-    named.select((nameCol +: df.columns.toSeq).map(col): _*)
-  }
+    if (byId.isEmpty) col(idCol).cast("string")
+    else coalesce(try_element_at(typedLit(byId), col(idCol)), col(idCol).cast("string"))
 
   private def resolveIdOrDie(v: String, resolve: String => Option[Long],
       kind: String): Long =
@@ -217,12 +214,10 @@ object Main {
           o.maxBatches.getOrElse(Int.MaxValue))
     }
     val name = nameOpt.getOrElse { spark.stop(); return }
-    // One aggregation pass over the fresh snapshot for the summary
-    // line (files/dirs/bytes as conditional sums) WITH the in-flight
-    // quality metrics riding the same job, plus the error count from
-    // its own table.
+    // The summary line and the scan log come from the counts observed
+    // on the snapshot write: no pass over the fresh snapshot.
     val (nFiles, nDirs, bytes, _) = summarize(spark, o.db)
-    val nErr = Snapshot.readErrors(spark, o.db).count()
+    val nErr = Snapshot.summary(o.db).errors
     import spark.implicits._
     Snapshot.appendLog(spark, o.db, Seq(graft.model.ScanLog(
       new java.sql.Timestamp(t0), new java.sql.Timestamp(System.currentTimeMillis()),
@@ -236,25 +231,17 @@ object Main {
     spark.stop()
   }
 
-  /** The analyze summary aggregation with in-flight quality metrics
-    * (ops/Observe — the reference's progress/summary ethos,
-    * analyze.go:144-161, applied to the pipeline ops): rows /
-    * null_keys / violations ride the SAME aggregation job as the
-    * files/dirs/bytes sums — zero extra scans — and print as a
-    * `quality[analyze]:` line. Violation contract: negative size or
-    * negative link count. */
+  /** The analyze summary of the latest snapshot — files, dirs, bytes
+    * and the in-flight quality metrics (rows / null_keys / violations;
+    * violation contract: negative size or negative link count) — read
+    * from the counts [[Snapshot.write]] observed on its own write job
+    * (the reference's scan-time counters, analyze.go:144-161). Runs no
+    * Spark job; prints the `quality[analyze]:` line. */
   private[cli] def summarize(spark: SparkSession, db: String)
       : (Long, Long, Long, Map[String, Any]) = {
-    val files = Snapshot.readFiles(spark, db)
-    val (inst, obs) = graft.ops.Observe.quality(files, "analyze_quality",
-      Seq("path"), col("size") < 0 || col("nlink") < 0)
-    val row = inst.agg(
-      sum(when(!col("is_dir"), 1L).otherwise(0L)),
-      sum(when(col("is_dir"), 1L).otherwise(0L)),
-      coalesce(sum(when(!col("is_dir"), col("size"))), lit(0L))).collect()(0)
-    val m = obs.get
-    println(qualityLine("analyze", m))
-    (row.getLong(0), row.getLong(1), row.getLong(2), m)
+    val s = Snapshot.summary(db)
+    println(qualityLine("analyze", s.quality))
+    (s.files, s.dirs, s.bytes, s.quality)
   }
 
   private[cli] def qualityLine(stage: String, m: Map[String, Any]): String =
@@ -639,17 +626,9 @@ object Main {
       countHardlinkDupsAsFiles = hardlinksAsFiles)
     val name = StatsArtifact.write(o.db, c, root, expr)
     println(s"stats artifact: $name")
-    println(Reports.markdown(c.totals, s"Totals for '$expr'"))
-    Stats.rankedMetrics.foreach { metric =>
-      println(Reports.markdown(
-        Stats.topPrefixes(c.perPrefix, metric, o.n), s"Top ${o.n} by $metric"))
+    reportData(c, o.n, idMaps, withIds = false).tables.foreach { case (base, title, t) =>
+      println(Reports.markdown(t, if (base == "totals") s"Totals for '$expr'" else title))
     }
-    println(Reports.markdown(
-      withName(c.perUser.orderBy(desc("bytes")).limit(o.n), "uid", idMaps.userById),
-      "Usage by user"))
-    println(Reports.markdown(
-      withName(c.perGroup.orderBy(desc("bytes")).limit(o.n), "gid", idMaps.groupById),
-      "Usage by group"))
     spark.stop()
   }
 
@@ -686,17 +665,9 @@ object Main {
         spark.stop(); return
       case _ =>
     }
-    println(Reports.markdown(c.totals, "Totals"))
-    Stats.rankedMetrics.foreach { metric =>
-      println(Reports.markdown(
-        Stats.topPrefixes(c.perPrefix, metric, o.n), s"Top ${o.n} by $metric"))
+    reportData(c, o.n, idMaps, withIds = false).tables.foreach { case (_, title, t) =>
+      println(Reports.markdown(t, title))
     }
-    println(Reports.markdown(
-      withName(c.perUser.orderBy(desc("bytes")).limit(o.n), "uid", idMaps.userById),
-      "Usage by user"))
-    println(Reports.markdown(
-      withName(c.perGroup.orderBy(desc("bytes")).limit(o.n), "gid", idMaps.groupById),
-      "Usage by group"))
     spark.stop()
   }
 
@@ -726,93 +697,142 @@ object Main {
     spark.stop()
   }
 
+  /** A report's aggregate tables as (file base, title, table), in
+    * index order, and the per-user and per-group reports. */
+  private[cli] final case class ReportData(tables: Seq[(String, String, Reports.Table)],
+      users: Seq[IdReport], groups: Seq[IdReport])
+
+  /** One id's report: its metric totals as (metric, value) and, per
+    * ranked metric, its top prefixes as (value, prefix). */
+  private[cli] final case class IdReport(id: Long, name: String,
+      totals: Seq[(String, Any)], top: Seq[(String, Seq[(Any, String)])])
+
+  /** The rows a report renders, from two bounded collects of the
+    * stats table:
+    *   1. the totals, per-uid and per-gid rows, each with its display
+    *      name and its JSON object (`to_json`, in the same job);
+    *   2. per partition, the first `n` rows by each ranked metric of
+    *      the per-prefix set and, with `withIds`, of the per-(id,
+    *      prefix) sets of the ids in the by-user and by-group tables —
+    *      at most partitions × (2n + 1) × 5n rows; the driver ranks
+    *      their union ([[Reports.topN]]).
+    * Prefixes rank by (metric desc, prefix asc); users and groups by
+    * (bytes desc, id asc), so ties render the same on every run. A
+    * null id (a row without an owner) ranks in its table but gets no
+    * per-id report. */
+  private[cli] def reportData(c: Stats.Computed, n: Int, ids: IdMaps,
+      withIds: Boolean): ReportData = {
+    val metrics = Stats.metricNames
+    val mcols = metrics.map(col)
+    val Seq(gTot, gUid, gGid, gPre, gUidPre, gGidPre) = Stats.frameKeys.map(Stats.gsetOf)
+    val gset = col("gset")
+    // Both collects' rows: gset, uid, gid, name or prefix, json, metrics.
+    val m0 = 5
+    def mi(m: String) = m0 + metrics.indexOf(m)
+    def cells(r: Row, idxs: Seq[Int]) = Row.fromSeq(idxs.map(r.get))
+    val metricIdxs = metrics.map(mi)
+
+    val name = when(gset === gUid, nameOf("uid", ids.userById))
+      .otherwise(nameOf("gid", ids.groupById))
+    def json(cs: Column*) = to_json(struct(cs ++ mcols: _*))
+    val rows1 = c.table.where(gset.isin(gTot, gUid, gGid))
+      .select(Seq(gset, col("uid"), col("gid"), name,
+        when(gset === gTot, json())
+          .when(gset === gUid, json(name.as("uid_name"), col("uid")))
+          .otherwise(json(name.as("gid_name"), col("gid")))) ++ mcols: _*)
+      .collect().toSeq
+    def of(g: Long) = rows1.filter(_.getLong(0) == g)
+    val totals = of(gTot).head
+    val users = of(gUid).sorted(Reports.rankOrder(mi("bytes"), 1)).take(n)
+    val groups = of(gGid).sorted(Reports.rankOrder(mi("bytes"), 2)).take(n)
+    def withReport(rows: Seq[Row], i: Int) = if (withIds) rows.filterNot(_.isNullAt(i)) else Nil
+    val (userRows, groupRows) = (withReport(users, 1), withReport(groups, 2))
+
+    val orders = Stats.rankedMetrics.map(m => m -> Reports.rankOrder(mi(m), 3))
+    val key = (r: Row) => (r.getLong(0), r.get(1), r.get(2))
+    val rows2 = c.table
+      .where(gset === gPre || (gset === gUidPre && col("uid").isin(userRows.map(_.get(1)): _*)) ||
+        (gset === gGidPre && col("gid").isin(groupRows.map(_.get(2)): _*)))
+      .select(Seq(gset, col("uid"), col("gid"), col("prefix"),
+        when(gset === gPre, json(col("prefix")))) ++ mcols: _*)
+      .rdd.mapPartitions(Reports.topN(_, key, orders.map(_._2), n))
+      .collect().toSeq.groupBy(key)
+    def top(k: (Long, Any, Any), o: Ordering[Row]) = rows2.getOrElse(k, Nil).sorted(o).take(n)
+
+    def table(columns: Seq[String], rows: Seq[Row], idxs: Seq[Int]) =
+      Reports.Table(columns, rows.map(cells(_, idxs)), rows.map(_.getString(4)))
+    val tables =
+      ("totals", "Totals", table(metrics, Seq(totals), metricIdxs)) +:
+      orders.map { case (m, o) =>
+        (s"top_$m", s"Top $n by $m",
+          table("prefix" +: metrics, top((gPre, null, null), o), 3 +: metricIdxs))
+      } :+
+      ("by_user", "Usage by user", table("uid_name" +: "uid" +: metrics, users, 3 +: 1 +: metricIdxs)) :+
+      ("by_group", "Usage by group", table("gid_name" +: "gid" +: metrics, groups, 3 +: 2 +: metricIdxs))
+    def reportsOf(rows: Seq[Row], idIdx: Int, keyOf: Long => (Long, Any, Any),
+        nameOf: Long => String) = rows.map { r =>
+      val id = r.getLong(idIdx)
+      IdReport(id, nameOf(id), metrics.map(m => m -> r.get(mi(m))), orders.map { case (m, o) =>
+        m -> top(keyOf(id), o).map(p => (p.get(mi(m)), p.getString(3)))
+      })
+    }
+    ReportData(tables, reportsOf(userRows, 1, (gUidPre, _, null), ids.userName),
+      reportsOf(groupRows, 2, (gGidPre, null, _), ids.groupName))
+  }
+
   /** Write the full report file tree under `dir`: aggregate tables in
     * TSV/JSON/Markdown plus one markdown file per top-N user/group
     * (reference writeReportFiles, reports.go:128-229 +
-    * markdown.go:32-371). Each aggregate table is collected once for
-    * all three formats. Ids are bounded by `n` and the per-id frames
-    * come from the artifact — two bounded collects per tree, no per-id
-    * Spark jobs. */
+    * markdown.go:32-371), all rendered from [[reportData]]'s two
+    * bounded collects. */
   private[cli] def writeReportTree(c: Stats.Computed,
       dir: java.nio.file.Path, n: Int, ids: IdMaps): Unit = {
     java.nio.file.Files.createDirectories(dir)
-    def emit(base: String, df: DataFrame, title: String): Unit = {
-      val t = Reports.Table.withJson(df)
+    val d = reportData(c, n, ids, withIds = true)
+    d.tables.foreach { case (base, title, t) =>
       java.nio.file.Files.writeString(dir.resolve(s"$base.tsv"), Reports.tsv(t))
       java.nio.file.Files.writeString(dir.resolve(s"$base.json"), Reports.jsonLines(t))
       java.nio.file.Files.writeString(dir.resolve(s"$base.md"), Reports.markdown(t, title))
     }
-    emit("totals", c.totals, "Totals")
-    Stats.rankedMetrics.foreach { m =>
-      emit(s"top_$m", Stats.topPrefixes(c.perPrefix, m, n), s"Top $n by $m")
-    }
-    emit("by_user",
-      withName(c.perUser.orderBy(desc("bytes")).limit(n), "uid", ids.userById),
-      "Usage by user")
-    emit("by_group",
-      withName(c.perGroup.orderBy(desc("bytes")).limit(n), "gid", ids.groupById),
-      "Usage by group")
     // Per-id markdown mirrors the reference's multi-section templates
     // (markdown.go:32-371): a totals table with human-formatted sizes,
     // then one ranked top-prefix section PER metric (the same five
-    // metrics the aggregate reports rank by), all from the bounded
-    // collected slice — no extra Spark jobs.
+    // metrics the aggregate reports rank by).
     def human(metric: String, v: Any): String = v match {
       case l: java.lang.Long if metric.endsWith("bytes") =>
         s"${Reports.formatSize(l)} ($l)"
       case other => Option(other).map(_.toString).getOrElse("")
     }
-    def perIdTree(subdir: String, perId: DataFrame, perIdPrefix: DataFrame,
-        idCol: String, nameOf: Long => String): Seq[(Long, String)] = {
-      val topRows = perId.orderBy(desc("bytes")).limit(n).collect().toSeq
-      val top = topRows.map(r => r.getLong(r.fieldIndex(idCol)))
-      if (top.isEmpty) return Nil
-      val prefixRows = perIdPrefix.where(col(idCol).isin(top: _*))
-        .collect().groupBy(r => r.getLong(r.fieldIndex(idCol)))
-      val cols = perId.columns
-      val metrics = Stats.rankedMetrics.filter(perIdPrefix.columns.contains)
-      top.zip(topRows).foreach { case (id, totals) =>
-        val idName = nameOf(id)
-        val sb = new StringBuilder(s"# Usage report for $idName ($idCol $id)\n\n")
+    def perIdTree(subdir: String, idCol: String, reports: Seq[IdReport]): Unit =
+      reports.foreach { r =>
+        val sb = new StringBuilder(s"# Usage report for ${r.name} ($idCol ${r.id})\n\n")
         sb.append("## Contents\n\n* [Totals](#totals)\n")
-        metrics.foreach(m => sb.append(s"* [Top $n prefixes by $m](#top-$m)\n"))
+        r.top.foreach { case (m, _) => sb.append(s"* [Top $n prefixes by $m](#top-$m)\n") }
         sb.append("\n## <a id=totals></a> Totals\n\n| Metric | Value |\n| :--- | ---: |\n")
-        cols.filterNot(_ == idCol).foreach { cn =>
-          sb.append(s"| $cn | ${human(cn, totals.get(totals.fieldIndex(cn)))} |\n")
-        }
-        val mine = prefixRows.getOrElse(id, Array.empty)
-        metrics.foreach { m =>
+        r.totals.foreach { case (cn, v) => sb.append(s"| $cn | ${human(cn, v)} |\n") }
+        r.top.foreach { case (m, rows) =>
           sb.append(s"\n## <a id=top-$m></a> Top $n prefixes by $m\n\n")
           sb.append(s"| ${m.capitalize} | Prefix |\n| ---: | :--- |\n")
-          mine.sortBy(r => (-r.getLong(r.fieldIndex(m)),
-              r.getString(r.fieldIndex("prefix"))))
-            .take(n).foreach { r =>
-              sb.append(s"| ${human(m, r.get(r.fieldIndex(m)))} " +
-                s"| ${r.getString(r.fieldIndex("prefix"))} |\n")
-            }
+          rows.foreach { case (v, prefix) => sb.append(s"| ${human(m, v)} | $prefix |\n") }
         }
         val at = dir.resolve(subdir)
         java.nio.file.Files.createDirectories(at)
-        java.nio.file.Files.writeString(at.resolve(s"$id-$idName.md"), sb.toString)
+        java.nio.file.Files.writeString(at.resolve(s"${r.id}-${r.name}.md"), sb.toString)
       }
-      top.map(id => id -> nameOf(id))
-    }
-    val users = perIdTree("by_user", c.perUser, c.perUserPrefix, "uid", ids.userName)
-    val groups = perIdTree("by_group", c.perGroup, c.perGroupPrefix, "gid", ids.groupName)
+    perIdTree("by_user", "uid", d.users)
+    perIdTree("by_group", "gid", d.groups)
 
     // Report-tree TOC (reference mdTOC + mdListUsersAndGroups): one
     // index.md linking every aggregate section and per-id report.
     val idx = new StringBuilder("# Filesystem usage reports\n\n## Contents\n\n")
-    idx.append("* [Totals](totals.md)\n")
-    Stats.rankedMetrics.foreach(m => idx.append(s"* [Top $n by $m](top_$m.md)\n"))
-    idx.append("* [Usage by user](by_user.md)\n* [Usage by group](by_group.md)\n")
-    if (users.nonEmpty) {
+    d.tables.foreach { case (base, title, _) => idx.append(s"* [$title]($base.md)\n") }
+    if (d.users.nonEmpty) {
       idx.append("\n## Per-user reports\n\n")
-      users.foreach { case (id, nm) => idx.append(s"* [$nm](by_user/$id-$nm.md)\n") }
+      d.users.foreach(u => idx.append(s"* [${u.name}](by_user/${u.id}-${u.name}.md)\n"))
     }
-    if (groups.nonEmpty) {
+    if (d.groups.nonEmpty) {
       idx.append("\n## Per-group reports\n\n")
-      groups.foreach { case (id, nm) => idx.append(s"* [$nm](by_group/$id-$nm.md)\n") }
+      d.groups.foreach(g => idx.append(s"* [${g.name}](by_group/${g.id}-${g.name}.md)\n"))
     }
     java.nio.file.Files.writeString(dir.resolve("index.md"), idx.toString)
   }

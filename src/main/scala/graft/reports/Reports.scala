@@ -1,15 +1,19 @@
 package graft.reports
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, struct, to_json}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Report renderers (reference reports.go + tsv.go:18-57,
-  * json.go:16-39, markdown.go:32-371): format ALREADY-LIMITED frames
-  * (top-N rows, single-row totals) for humans/tools. Collect happens
-  * here and only here — inputs are bounded by construction (K8:
-  * compute-N ≤ 2000 rows), so driver-side rendering is safe. A frame
-  * is collected once into a [[Table]] and every format renders from
-  * those rows.
+  * json.go:16-39, markdown.go:32-371): format bounded tables (top-N
+  * rows, single-row totals) for humans/tools — inputs are bounded by
+  * construction (K8: compute-N ≤ 2000 rows), so driver-side rendering
+  * is safe. A table's rows are collected once — from one
+  * ALREADY-LIMITED frame ([[Table.of]], [[Table.withJson]]), or for
+  * the report tree from two bounded collects ranked with [[topN]] and
+  * [[rankOrder]] — and every format renders from those rows.
   */
 object Reports {
 
@@ -28,6 +32,48 @@ object Reports {
       Table(df.columns.toSeq, rows.map(r => Row.fromSeq(r.toSeq.take(n))),
         rows.map(_.getString(n)))
     }
+  }
+
+  /** The order of `orderBy(desc(metric), asc(tie))` on rows, by column
+    * index: the long `metric` descending, then `tie` ascending with
+    * nulls first. String ties compare by UTF-8 bytes, as Spark does
+    * (UTF-16 order differs above U+FFFF). */
+  def rankOrder(metric: Int, tie: Int): Ordering[Row] = new Ordering[Row] {
+    def compare(a: Row, b: Row): Int = {
+      val c = java.lang.Long.compare(b.getLong(metric), a.getLong(metric))
+      if (c != 0) c
+      else (a.get(tie), b.get(tie)) match {
+        case (null, null) => 0
+        case (null, _) => -1
+        case (_, null) => 1
+        case (x: String, y: String) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+        case (x: java.lang.Long, y: java.lang.Long) => x.compareTo(y)
+        case (x, y) => throw new IllegalArgumentException(s"cannot rank ties of $x and $y")
+      }
+    }
+  }
+
+  /** The rows of `rows` that are among the first `n` of their group
+    * (`key`) under at least one of `orders`, each once: one pass with a
+    * heap of `n` per group and order. Run per partition, the union of
+    * the results holds every group's first `n` under every order, so a
+    * driver-side sort of it gives the global top `n` from at most
+    * partitions × groups × orders × n rows. */
+  def topN(rows: Iterator[Row], key: Row => Any, orders: Seq[Ordering[Row]],
+      n: Int): Iterator[Row] = {
+    val heaps = scala.collection.mutable.HashMap.empty[Any, Seq[java.util.PriorityQueue[Row]]]
+    if (n > 0) rows.foreach { r =>
+      // each heap's head is its worst row: the one a better row evicts
+      heaps.getOrElseUpdate(key(r),
+        orders.map(o => new java.util.PriorityQueue[Row](n + 1, o.reverse)))
+        .zip(orders).foreach { case (h, o) =>
+          if (h.size < n) h.add(r)
+          else if (o.lt(r, h.peek())) { h.poll(); h.add(r) }
+        }
+    }
+    val out = new java.util.IdentityHashMap[Row, Unit]()
+    heaps.valuesIterator.flatten.foreach(_.forEach(r => out.put(r, ())))
+    out.keySet().iterator().asScala
   }
 
   def tsv(t: Table): String =

@@ -1,8 +1,9 @@
 package graft.stats
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ops.Bfs
 
@@ -31,29 +32,35 @@ import graft.ops.Bfs
   * the matched-prefix set is small and shuffled otherwise — left to
   * AQE) and summed by ONE grouping-sets aggregation over (uid, gid,
   * prefix) whose six sets, tagged by `grouping_id()`, are the six
-  * frames. The result is local-checkpointed and the frames are
-  * filters of it, so writing all six re-reads the aggregate, never the
-  * snapshot. The only collect is the one-row totals; top-N compiles to
+  * frames. That aggregate, local-checkpointed, IS the result: one
+  * table the artifact persists as is, and every frame is a filter of
+  * it. Nothing is collected; one zero contribution row guarantees the
+  * one-row totals of an empty input. Top-N compiles to
   * TakeOrderedAndProject.
   */
 object Stats {
 
-  final case class Computed(
-      /** single row: global totals (reference Totals struct, totals.go:17-27) */
-      totals: DataFrame,
-      /** one row per uid */
-      perUser: DataFrame,
-      /** one row per gid */
-      perGroup: DataFrame,
-      /** one row per prefix (input to rankings; reference computes these
-        * per-prefix folds as heap inputs, report_stats.go:231-245) */
-      perPrefix: DataFrame,
-      /** one row per (uid, prefix) — feeds the per-user report file
-        * trees (reference PerIDStats, report_stats.go:34-39, consumed
-        * by writeReportFiles, reports.go:128-229) */
-      perUserPrefix: DataFrame,
-      /** one row per (gid, prefix) */
-      perGroupPrefix: DataFrame)
+  /** The six stats frames as ONE table: the grouping-sets aggregate,
+    * one row per (set, key) with the set's `grouping_id()` in `gset`
+    * and its rolled-up keys null ([[TableSchema]]). Each frame is a
+    * slice of it; the artifact persists it as is. */
+  final case class Computed(table: DataFrame) {
+    /** single row: global totals (reference Totals struct, totals.go:17-27) */
+    def totals: DataFrame = slice(table, Nil)
+    /** one row per uid */
+    def perUser: DataFrame = slice(table, Seq("uid"))
+    /** one row per gid */
+    def perGroup: DataFrame = slice(table, Seq("gid"))
+    /** one row per prefix (input to rankings; reference computes these
+      * per-prefix folds as heap inputs, report_stats.go:231-245) */
+    def perPrefix: DataFrame = slice(table, Seq("prefix"))
+    /** one row per (uid, prefix) — feeds the per-user report file
+      * trees (reference PerIDStats, report_stats.go:34-39, consumed
+      * by writeReportFiles, reports.go:128-229) */
+    def perUserPrefix: DataFrame = slice(table, Seq("uid", "prefix"))
+    /** one row per (gid, prefix) */
+    def perGroupPrefix: DataFrame = slice(table, Seq("gid", "prefix"))
+  }
 
   // sum() over zero rows is NULL in SQL; the reference's zero-value
   // Totals struct means empty must aggregate to 0 (totals.go:17-27).
@@ -71,7 +78,7 @@ object Stats {
     "prefix_bytes" -> when(col("is_prefix_row"), col("size")).otherwise(0L),
     "storage_bytes" -> when(col("is_prefix_row") || (!col("is_dir") && col("is_canonical")), col("storage")).otherwise(0L))
 
-  private val metricNames: Seq[String] = aggSpecs.map(_._1)
+  private[graft] val metricNames: Seq[String] = aggSpecs.map(_._1)
 
   private val aggCols: Seq[Column] =
     aggSpecs.map { case (n, e) => zsum(e).as(n) }
@@ -102,44 +109,67 @@ object Stats {
       entryMatch: Column = lit(true),
       calc: Calculator = Calculator.Identity,
       countHardlinkDupsAsFiles: Boolean = false): Computed = {
-    val all = aggregateSets(contribOf(files, prefixMatch, entryMatch, calc,
-      countHardlinkDupsAsFiles, onlyPrefixes = None), aggCols)
-      .localCheckpoint(eager = false)
-    // Collecting the totals row is the one job that materializes every
-    // partition of the checkpoint. Over an empty input the () set has
-    // no group at all; the reference's zero-value Totals is one
-    // all-zero row (totals.go:17-27).
-    val t = slice(all, Nil)
-    val row = t.collect().headOption.getOrElse(Row.fromSeq(metricNames.map(_ => 0L)))
-    val totals = all.sparkSession.createDataFrame(java.util.List.of(row), t.schema)
-    computedOf(all, totals)
+    val contrib = contribOf(files, prefixMatch, entryMatch, calc,
+      countHardlinkDupsAsFiles, onlyPrefixes = None)
+    Computed(aggregateSets(contrib.unionByName(zeroRow(contrib)), aggCols)
+      .where(kept).localCheckpoint(eager = false))
   }
+
+  /** One contribution row that adds zero to every metric (null flags,
+    * zero sizes) and lands in each set's null-key group. [[kept]]
+    * drops those groups except the () set's, so the table holds the
+    * reference's zero-value totals row (totals.go:17-27) even when
+    * nothing matches. */
+  private def zeroRow(contrib: DataFrame): DataFrame =
+    contrib.sparkSession.range(0, 1, 1, 1).select(contrib.schema.map { f =>
+      (if (f.name == "size" || f.name == "storage") lit(0L) else lit(null))
+        .cast(f.dataType).as(f.name)
+    }: _*)
+
+  /** Every contribution row counts once in exactly one of prefixes,
+    * sub_prefixes, files and hardlinks, so a real group has a positive
+    * count; a group without (a zero row's, or one whose contributions
+    * all cancelled in an incremental merge) is dropped — except the ()
+    * set's, which always stays. */
+  private def kept: Column = col("gset") === gsetOf(Nil) ||
+    col("prefixes") + col("sub_prefixes") + col("files") + col("hardlinks") > 0
 
   /** The grouping keys of [[Computed]]'s six frames, in field order. */
   private val keyCols: Seq[String] = Seq("uid", "gid", "prefix")
-  private val frameKeys: Seq[Seq[String]] = Seq(Nil, Seq("uid"), Seq("gid"),
+  private[graft] val frameKeys: Seq[Seq[String]] = Seq(Nil, Seq("uid"), Seq("gid"),
     Seq("prefix"), Seq("uid", "prefix"), Seq("gid", "prefix"))
+
+  /** The schema of [[Computed.table]] and of the persisted artifact. */
+  val TableSchema: StructType = StructType(
+    Seq(StructField("gset", LongType), StructField("uid", LongType),
+      StructField("gid", LongType), StructField("prefix", StringType)) ++
+      metricNames.map(StructField(_, LongType)))
 
   /** `grouping_id()` of the set grouped by `keys`: bit i is set when
     * key i of [[keyCols]] is rolled up. */
-  private def gsetOf(keys: Seq[String]): Long =
+  private[graft] def gsetOf(keys: Seq[String]): Long =
     keyCols.foldLeft(0L)((id, k) => id * 2 + (if (keys.contains(k)) 0 else 1))
 
   /** One aggregation for all six frames: grouping sets over (uid, gid,
     * prefix), each output row tagged with its set in `gset`. */
   private def aggregateSets(contrib: DataFrame, metrics: Seq[Column]): DataFrame =
     contrib.groupingSets(frameKeys.map(_.map(col)), keyCols.map(col): _*)
-      .agg(grouping_id().as("gset"), metrics: _*)
+      .agg(grouping_id().cast(LongType).as("gset"), metrics: _*)
+      .select(TableSchema.fieldNames.toSeq.map(col): _*)
 
   /** The frame grouped by `keys`, in [[Computed]]'s column order. */
-  private def slice(all: DataFrame, keys: Seq[String]): DataFrame =
-    all.where(col("gset") === gsetOf(keys)).select((keys ++ metricNames).map(col): _*)
+  private def slice(table: DataFrame, keys: Seq[String]): DataFrame =
+    table.where(col("gset") === gsetOf(keys)).select((keys ++ metricNames).map(col): _*)
 
-  private def computedOf(all: DataFrame, totals: DataFrame): Computed = {
-    val Seq(perUser, perGroup, perPrefix, perUserPrefix, perGroupPrefix) =
-      frameKeys.tail.map(slice(all, _))
-    Computed(totals, perUser, perGroup, perPrefix, perUserPrefix, perGroupPrefix)
-  }
+  /** Frame `f`, grouped by `keys`, in [[TableSchema]]'s shape: tagged
+    * with its set, rolled-up keys null. */
+  private[stats] def tagged(f: DataFrame, keys: Seq[String]): DataFrame =
+    f.select(TableSchema.fields.toSeq.map { c =>
+      if (c.name == "gset") lit(gsetOf(keys)).as("gset")
+      else if (keyCols.contains(c.name) && !keys.contains(c.name))
+        lit(null).cast(c.dataType).as(c.name)
+      else col(c.name)
+    }: _*)
 
   /** The per-contribution-row frame every stats aggregate sums over.
     * `onlyPrefixes` (a one-column `prefix` frame and its row count)
@@ -250,8 +280,8 @@ object Stats {
     * set and broadcast into two restricted contrib scans bounded by
     * the changed prefixes' entry rows; ONE ±1-signed grouping-sets
     * aggregate of those rows (as in [[compute]]); then ONE union of
-    * the previous six frames with the delta, summed per (set, key) —
-    * one merge for all six frames, keyed like the state. An
+    * the previous table with the delta, summed per (set, key) — one
+    * merge for all six frames, keyed like the state. An
     * unchanged-corpus rescan aggregates zero contrib rows. */
   def computeIncremental(
       prev: Computed,
@@ -291,26 +321,12 @@ object Stats {
       countHardlinkDupsAsFiles, Some(changed)).withColumn("sign", lit(1L))
     val delta = aggregateSets(newC.unionByName(oldC), signedAggCols)
 
-    // prev's six frames in the aggregate's (gset, uid, gid, prefix)
-    // shape, rolled-up keys null
-    def tagged(f: DataFrame, keys: Seq[String]): DataFrame =
-      f.select((lit(gsetOf(keys)).as("gset") +: keyCols.map { k =>
-        if (keys.contains(k)) col(k) else lit(null).cast(delta.schema(k).dataType).as(k)
-      }) ++ metricNames.map(col): _*)
-    val prevFrames = Seq(prev.totals, prev.perUser, prev.perGroup, prev.perPrefix,
-      prev.perUserPrefix, prev.perGroupPrefix)
-    val merged = frameKeys.zip(prevFrames).map { case (k, f) => tagged(f, k) }
-      .reduce(_ unionByName _)
-      .unionByName(delta)
+    // one merge of prev's table and the delta, keyed like the state
+    Computed(prev.table.unionByName(delta)
       .groupBy(("gset" +: keyCols).map(col): _*)
       .agg(aggMergeCols.head, aggMergeCols.tail: _*)
-      // a key whose contributions all vanished has zero rows of every
-      // kind — a full recompute would not emit it; totals always stays
-      .where(col("gset") === gsetOf(Nil) || col("prefixes") + col("sub_prefixes") +
-        col("files") + col("hardlinks") > 0)
-      .localCheckpoint(eager = false)
-    // prev.totals is one row, so the merged () set is one row too
-    computedOf(merged, slice(merged, Nil))
+      .where(kept)
+      .localCheckpoint(eager = false))
   }
 
   /** K1/K2: top-N prefixes by one metric (reference heap.MinMax

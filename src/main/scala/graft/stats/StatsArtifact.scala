@@ -1,17 +1,33 @@
 package graft.stats
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.ingest.Snapshot
 
 /** Persisted stats artifact (reference `.idustats` gob files +
   * `latest` symlink, stats.go:31-82): each `stats compute` writes a
-  * timestamped directory of four parquet tables plus a metadata JSON,
-  * and flips a LATEST pointer. `stats view` / `reports generate` read
-  * the artifact without recomputing — same compute-once/view-many
-  * contract as the reference, in an object-store-safe layout.
+  * timestamped directory holding ONE parquet table — [[Stats.Computed]]'s
+  * grouping-sets table, [[Stats.TableSchema]], in one write job — plus
+  * a metadata JSON, and flips a LATEST pointer atomically. `stats view`
+  * / `reports generate` read the artifact without recomputing — same
+  * compute-once/view-many contract as the reference, in an
+  * object-store-safe layout.
+  *
+  * {{{
+  * <base>/stats/<ts>/table/      the grouping-sets table
+  * <base>/stats/<ts>/meta.json   prefix, expression, date
+  * <base>/stats/LATEST           text file: name of newest artifact
+  * }}}
+  *
+  * Artifacts written before the one-table layout hold one table per
+  * frame (`totals/`, `per_user/`, …); [[read]] still reads them,
+  * tagging each frame into the same one-table shape.
   */
 object StatsArtifact {
 
@@ -24,26 +40,18 @@ object StatsArtifact {
       expression: String): String = {
     val name = tsFmt.format(Instant.now())
     val dir = s"$base/stats/$name"
-    computed.totals.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/totals")
-    computed.perUser.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/per_user")
-    computed.perGroup.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/per_group")
-    computed.perPrefix.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/per_prefix")
-    computed.perUserPrefix.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/per_user_prefix")
-    computed.perGroupPrefix.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/per_group_prefix")
+    computed.table
+      .select(Stats.TableSchema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
+      .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/table")
     def j(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    Files.createDirectories(Paths.get(base, "stats"))
     Files.writeString(Paths.get(dir, "meta.json"),
       s"""{"prefix": ${j(prefix)}, "expression": ${j(expression)}, "date": ${j(name)}}""")
-    Files.write(Paths.get(base, "stats", "LATEST"), name.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    Snapshot.writePointer(Paths.get(base, "stats", "LATEST"), name)
     name
   }
 
-  def latestName(base: String): Option[String] = {
-    val p = Paths.get(base, "stats", "LATEST")
-    if (Files.exists(p)) Some(new String(Files.readAllBytes(p), "UTF-8").trim)
-    else None
-  }
+  def latestName(base: String): Option[String] =
+    Snapshot.readPointer(Paths.get(base, "stats", "LATEST"))
 
   /** All artifacts, newest first. */
   def candidates(base: String): Seq[String] =
@@ -54,31 +62,26 @@ object StatsArtifact {
   def prune(base: String, keep: Int): Seq[String] =
     graft.ingest.Retention.prune(s"$base/stats", keep, protect = latestName(base))
 
+  /** The frame tables of the pre-one-table layout, in
+    * [[Stats.frameKeys]] order. The two per-(id, prefix) tables came
+    * later than the rest; an artifact without them reads them empty. */
+  private val legacyTables = Seq("totals", "per_user", "per_group", "per_prefix",
+    "per_user_prefix", "per_group_prefix")
+
+  /** The artifact's table under its pinned schema — no Spark job. */
   def read(spark: SparkSession, base: String,
       name: Option[String] = None): Stats.Computed = {
     val n = name.orElse(latestName(base)).getOrElse(
       throw new IllegalStateException(s"no stats artifact under $base"))
     val dir = s"$base/stats/$n"
-    val perUser = spark.read.parquet(s"$dir/per_user")
-    val perGroup = spark.read.parquet(s"$dir/per_group")
-    // Artifacts written before the per-(id, prefix) frames existed
-    // lack these tables; degrade to empty frames with the right
-    // schema instead of failing every view/report on an old database.
-    def perIdPrefixOrEmpty(path: String, perId: org.apache.spark.sql.DataFrame,
-        idCol: String): org.apache.spark.sql.DataFrame =
-      if (Files.exists(Paths.get(path))) spark.read.parquet(path)
-      else {
-        import org.apache.spark.sql.functions.{col, lit}
-        val rest = perId.columns.filterNot(_ == idCol)
-        perId.limit(0).withColumn("prefix", lit(""))
-          .select((Seq(idCol, "prefix") ++ rest).map(col): _*)
-      }
-    Stats.Computed(
-      totals = spark.read.parquet(s"$dir/totals"),
-      perUser = perUser,
-      perGroup = perGroup,
-      perPrefix = spark.read.parquet(s"$dir/per_prefix"),
-      perUserPrefix = perIdPrefixOrEmpty(s"$dir/per_user_prefix", perUser, "uid"),
-      perGroupPrefix = perIdPrefixOrEmpty(s"$dir/per_group_prefix", perGroup, "gid"))
+    if (Files.exists(Paths.get(dir, "table")))
+      Stats.Computed(Snapshot.readPinned(spark, s"$dir/table", Stats.TableSchema))
+    else Stats.Computed(legacyTables.zip(Stats.frameKeys)
+      .filter { case (t, _) => Files.exists(Paths.get(dir, t)) }
+      .map { case (t, keys) =>
+        val schema = StructType(keys.map(k => Stats.TableSchema(k)) ++
+          Stats.metricNames.map(StructField(_, LongType)))
+        Stats.tagged(Snapshot.readPinned(spark, s"$dir/$t", schema), keys)
+      }.reduce(_ unionByName _))
   }
 }

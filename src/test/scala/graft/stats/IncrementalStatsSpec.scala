@@ -194,4 +194,80 @@ class IncrementalStatsSpec extends SparkSpec {
     assertEmpty(Stats.computeIncremental(prev, prevDf, newDf,
       Stats.changedPrefixesOf(prevDf, newDf), none, none))
   }
+
+  /** The frames of `c` in [[Stats.frameKeys]] order. */
+  private def frames(c: Stats.Computed): Seq[DataFrame] = Seq(c.totals, c.perUser,
+    c.perGroup, c.perPrefix, c.perUserPrefix, c.perGroupPrefix)
+
+  /** `c` written as the six-table layout artifacts had before the
+    * one-table layout: one parquet table per frame. */
+  private def writeLegacy(db: String, c: Stats.Computed): Unit = {
+    val dir = java.nio.file.Paths.get(db, "stats", "20200101T000000.000")
+    Seq("totals", "per_user", "per_group", "per_prefix", "per_user_prefix",
+      "per_group_prefix").zip(frames(c)).foreach { case (t, f) =>
+      f.write.parquet(dir.resolve(t).toString)
+    }
+    java.nio.file.Files.writeString(dir.getParent.resolve("LATEST"), dir.getFileName.toString)
+  }
+
+  test("artifact round trip: read(write(c)) equals c frame for frame, full and incremental") {
+    val none = lit(false)
+    val prevN = withNullIds(prevDf)
+    val newN = withNullIds(newDf)
+    val cases = Seq(
+      "full" -> Stats.compute(newDf),
+      "canonical-link flip" -> Stats.computeIncremental(Stats.compute(prevDf), prevDf, newDf,
+        Stats.changedPrefixesOf(prevDf, newDf)),
+      "null uid/gid" -> Stats.compute(newN),
+      "null uid/gid incremental" -> Stats.computeIncremental(Stats.compute(prevN), prevN, newN,
+        Stats.changedPrefixesOf(prevN, newN)),
+      "no match" -> Stats.compute(newDf, none, none),
+      "no match incremental" -> Stats.computeIncremental(Stats.compute(prevDf, none, none),
+        prevDf, newDf, Stats.changedPrefixesOf(prevDf, newDf), none, none))
+    cases.foreach { case (what, c) =>
+      val db = java.nio.file.Files.createTempDirectory("graft-artifact").toString
+      StatsArtifact.write(db, c, "/", "")
+      val back = StatsArtifact.read(spark, db)
+      frames(c).zip(frames(back)).foreach { case (a, b) =>
+        assert(a.schema.map(_.name) == b.schema.map(_.name), what)
+        assert(rows(a) == rows(b), what)
+      }
+      assert(back.totals.count() == 1L, what)
+      // an incremental merge over the read-back artifact equals a full recompute
+      if (what == "full") {
+        val prevDb = java.nio.file.Files.createTempDirectory("graft-artifact").toString
+        StatsArtifact.write(prevDb, Stats.compute(prevDf), "/", "")
+        assertSameComputed(Stats.computeIncremental(StatsArtifact.read(spark, prevDb),
+          prevDf, newDf, Stats.changedPrefixesOf(prevDf, newDf)), c)
+      }
+    }
+  }
+
+  test("artifact schema: the written table is TableSchema; a missing column fails the read") {
+    val db = java.nio.file.Files.createTempDirectory("graft-artifact").toString
+    val name = StatsArtifact.write(db, Stats.compute(newDf), "/", "")
+    val table = s"$db/stats/$name/table"
+    assert(spark.read.parquet(table).schema == Stats.TableSchema)
+    // a table without `hardlinks` must not read it as nulls
+    val bad = java.nio.file.Files.createTempDirectory("graft-artifact").toString
+    val badName = StatsArtifact.write(bad, Stats.compute(newDf), "/", "")
+    val badTable = s"$bad/stats/$badName/table"
+    spark.read.parquet(table).drop("hardlinks").write.mode("overwrite").parquet(badTable)
+    val e = intercept[IllegalStateException](StatsArtifact.read(spark, bad))
+    assert(e.getMessage.contains("hardlinks"), e.getMessage)
+  }
+
+  test("six-table artifacts from before the one-table layout read through the same adapter") {
+    val c = Stats.compute(withNullIds(newDf))
+    val db = java.nio.file.Files.createTempDirectory("graft-legacy").toString
+    writeLegacy(db, c)
+    val back = StatsArtifact.read(spark, db)
+    assertSameComputed(back, c)
+    // and an incremental merge reads it as its previous state
+    val prev = Stats.compute(prevDf)
+    val prevDb = java.nio.file.Files.createTempDirectory("graft-legacy").toString
+    writeLegacy(prevDb, prev)
+    assertSameComputed(Stats.computeIncremental(StatsArtifact.read(spark, prevDb),
+      prevDf, newDf, Stats.changedPrefixesOf(prevDf, newDf)), Stats.compute(newDf))
+  }
 }
