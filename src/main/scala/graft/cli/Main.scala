@@ -179,7 +179,10 @@ object Main {
   private def analyze(args: List[String]): Unit = {
     val o0 = parseOpts(args)
     require_(o0.positional.nonEmpty,
-      "analyze [--db DIR | --config FILE] [--incremental] [--keep N] ROOT")
+      "analyze [--db DIR | --config FILE] [--incremental] [--keep N] ROOT\n" +
+        "  --incremental lists only dirs whose mtime or mode changed; a file that\n" +
+        "  grows in place under an unchanged dir keeps its previous size until\n" +
+        "  its dir changes or a full analyze runs")
     // relative roots (".", "", "./x", bare names) resolve against cwd
     // BEFORE lookup and walking, so the snapshot keys are absolute
     // (reference LookupPrefix, internal/util.go:45-56)
@@ -546,7 +549,14 @@ object Main {
     * StringStartsWith pushdown; with path-sorted row groups
     * (Snapshot.write) min/max stats prune whole row groups — the
     * Spark analogue of the reference's key-range seek
-    * (find.go:75-96). */
+    * (find.go:75-96).
+    *
+    * The scan and filter run in parallel; the matches then meet in ONE
+    * partition sorted by path. The driver streams the result serially
+    * anyway, so a single sorted partition costs it nothing, and it
+    * spares the global sort's range-sampling job and its per-partition
+    * result jobs: enumerating the frame runs two jobs (the shuffle into
+    * the partition and its read). */
   private[cli] def findFrame(files: DataFrame, root: Option[String],
       m: org.apache.spark.sql.Column, sep: String = "/",
       long: Boolean = false): DataFrame = {
@@ -568,7 +578,8 @@ object Main {
       else if (sep == "/") col("path")
       else when(col("is_dir"), col("path"))
         .otherwise(concat(col("parent"), lit(sep), col("name")))
-    scoped.where(m).orderBy("path").select(rendered.as("path"))
+    scoped.where(m).repartition(1).sortWithinPartitions("path")
+      .select(rendered.as("path"))
   }
 
   /** `find -l` rendering (reference find.go:36-53): per row, Go's

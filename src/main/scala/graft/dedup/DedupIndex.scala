@@ -307,12 +307,8 @@ object DedupIndex {
     out.toSeq
   }
 
-  def latestName(base: String): Option[String] = {
-    val p = Paths.get(base, "lsh", "LATEST")
-    if (Files.exists(p))
-      Some(new String(Files.readAllBytes(p), "UTF-8").trim)
-    else None
-  }
+  def latestName(base: String): Option[String] =
+    graft.ingest.Snapshot.readPointer(Paths.get(base, "lsh", "LATEST"))
 
   /** Timestamped segment candidates, newest first / retention. The
     * LATEST chain is protected, as in IvfIndex.prune. */
@@ -322,12 +318,10 @@ object DedupIndex {
     graft.ingest.Retention.pruneAll(s"$base/lsh", keep,
       latestName(base).toSeq.flatMap(chain(base, _)).toSet)
 
-  private def writeLatest(base: String, name: String): Unit = {
-    val latest = Paths.get(base, "lsh", "LATEST")
-    Files.createDirectories(latest.getParent)
-    Files.write(latest, name.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-  }
+  /** Point LATEST at `name` atomically (temp file + rename): a crash
+    * or a concurrent reader never sees an empty pointer. */
+  private[dedup] def writeLatest(base: String, name: String): Unit =
+    graft.ingest.Snapshot.writePointer(Paths.get(base, "lsh", "LATEST"), name)
 
   /** Millis-resolution names can collide under rapid build/append —
     * spin until the timestamp ticks past any existing dir. */

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental re-scan (reference analyze.go:226-243,313-331,383-424,
@@ -9,25 +9,39 @@ import org.apache.spark.sql.functions._
   * directories are re-statted, skipping the per-file lstat fan-out
   * that dominates scan cost (reference README.md:13-15).
   *
-  * Plan shape:
-  *   1. walk the tree statting DIRS always; under unchanged dirs the
-  *      walker neither lists nor stats children (POSIX dir mtime
-  *      changes whenever a child is created/renamed/deleted, so an
-  *      unchanged dir implies an unchanged child list — the contract
-  *      the reference relies on, prefixinfo.go:110-116);
-  *   2. file rows of unchanged dirs come from the previous snapshot
-  *      via a semi-join — no filesystem I/O;
-  *   3. deletions need no explicit purge: the snapshot is rebuilt from
+  * Staleness contract (the reference's, prefixinfo.go:110-116): a POSIX
+  * dir's mtime changes when a child is created, renamed or deleted,
+  * not when a child file's content or size changes. A file that grows
+  * in place under a dir whose mtime did not change keeps its previous
+  * row — size, mtime and all — until its dir changes or a full
+  * `analyze` runs.
+  *
+  * Plan shape: the previous snapshot's side is a scan filtered by
+  * small driver-side sets whose size follows the change — no join.
+  *   1. [[Walker.rescan]] walks the tree statting DIRS always; under
+  *      unchanged dirs it neither lists nor stats children. In the
+  *      same job it collects the [[Walker.Delta]]: the walked dirs and
+  *      file paths, the previous dirs it did not reuse, and the fresh
+  *      link counts of walked hard links (two jobs with the read of
+  *      the shallow prev index).
+  *   2. The previous snapshot's file rows are tagged by one scan: a
+  *      row whose parent is not among the stale dirs is reused (with
+  *      the fresh link count of any walked link to the same (device,
+  *      inode)), one whose path was walked again is rescanned, any
+  *      other is deleted. The walked rows and the tagged rows are
+  *      cached once by the job that counts the tags (one job), so
+  *      [[Snapshot.write]] of [[Result.entries]] reads them instead of
+  *      walking or scanning again.
+  *   3. Deletions need no explicit purge: the snapshot is rebuilt from
   *      the live walk, so vanished subtrees simply don't appear (the
   *      reference's DeletePrefix exists because it mutates a KV store;
-  *      an immutable snapshot gets J1 for free — the anti-join below
-  *      only REPORTS deletions).
+  *      an immutable snapshot gets J1 for free — the counts only
+  *      REPORT deletions).
   *
   * The previous snapshot's dir metadata never moves through the
-  * driver: the walker keys each dir row by its seed-ancestor path and
-  * shuffles per-seed slices directly to the walking tasks — at 10⁹
-  * files / ~10⁷ dirs each task holds only its own subtree's index
-  * (see Walker.walk's prevDirs path).
+  * driver whole: the walker ships per-seed slices to the walking
+  * tasks (see [[Walker.rescan]]). The driver holds the change: the
+  * changed and deleted dirs and the walked files' paths.
   */
 object Incremental {
 
@@ -51,57 +65,55 @@ object Incremental {
         unix_millis(col("mod_time")).as("mt_ms"),
         col("mode"), col("n_entries"))
 
+  // the `src` tag of a cached snapshot row
+  private val Walked = 0
+  private val Reused = 1
+  private val Rescanned = 2
+  private val Deleted = 3
+
   /** Re-scan `root` against the previous snapshot's entries. */
   def rescan(spark: SparkSession, root: String, prev: DataFrame,
       exclusions: Seq[String] = Nil, seedDepth: Int = 2): Result = {
-    val walked = Walker.walk(spark, root, exclusions, seedDepth,
-      prevDirs = Some(prevDirFrame(prev)))
-    walked.records.cache()
-    val entries = walked.entriesWithReuse.cache()
+    import spark.implicits._
+    val w = Walker.rescan(spark, root, prevDirFrame(prev), exclusions, seedDepth)
+    val d = w.delta
 
-    // Reused dirs take their file rows from the previous snapshot. A
-    // new link in a changed dir to a file of a reused dir raises the
+    // A new link in a changed dir to a file of a reused dir raises the
     // file's link count, which only the walked link saw: reused rows
     // take the fresh nlink of any walked link to the same (device,
     // inode), so Stats' hardlink canonicalization sees the whole group.
-    val reusedDirs = entries.where(col("is_dir") && col("reused"))
-      .select(col("path").as("parent"))
-    val freshNlink = entries.where(!col("is_dir") && col("nlink") > 1)
-      .groupBy(col("device"), col("inode")).agg(max(col("nlink")).as("fresh_nlink"))
-    val reusedFiles = prev.where(!col("is_dir"))
-      .join(reusedDirs, Seq("parent"), "left_semi")
-      .join(freshNlink, Seq("device", "inode"), "left")
-      .withColumn("nlink", coalesce(col("fresh_nlink"), col("nlink")))
-    val walkCols = entries.drop("reused").columns.toIndexedSeq
-    val full = entries.drop("reused")
-      .unionByName(reusedFiles.select(walkCols.map(col): _*))
+    val nlink =
+      if (d.freshNlink.isEmpty) col("nlink")
+      else when(col("inode").isin(d.freshNlink.keys.map(_._2).toSeq.distinct: _*),
+        coalesce(try_element_at(typedLit(d.freshNlink),
+          struct(col("device").as("_1"), col("inode").as("_2"))), col("nlink")))
+        .otherwise(col("nlink"))
+    // every file row's parent is a dir row of its snapshot, so a row
+    // whose parent is not stale lies in a reused dir
+    val src = when(!col("parent").isin(d.staleDirs.toSeq: _*), Reused)
+      .when(col("path").isin(d.walkedFiles.toSeq: _*), Rescanned)
+      .otherwise(Deleted)
+    val walked = w.records.flatMap(_.entry).toDF()
+    val rows = walked.withColumn("src", lit(Walked))
+      .unionByName(prev.where(!col("is_dir"))
+        .select(walked.columns.toSeq.map(c => if (c == "nlink") nlink.as(c) else col(c)) :+
+          src.as("src"): _*))
+      .persist()
+    // the one job: fills the cache and counts the previous rows by tag
+    val bySrc = rows.select(col("src")).as[Int].rdd
+      .aggregate(new Array[Long](4))((a, s) => { a(s) += 1; a },
+        (a, b) => { a.indices.foreach(i => a(i) += b(i)); a })
+    w.walk.unpersist(blocking = false)
 
-    // the seven counts in one aggregation over a full-outer join of
-    // the current rows (walked or reused) and the previous ones
-    def n(c: Column): Column = count(when(c, 1))
-    val isNow = col("src").isNotNull
-    val counts = entries.select(col("path"), col("is_dir"), col("reused"), lit("walk").as("src"))
-      .unionByName(reusedFiles.select(col("path"), col("is_dir"),
-        lit(null).cast("boolean").as("reused"), lit("reuse").as("src")))
-      .join(prev.select(col("path"), col("is_dir"), lit(true).as("before")),
-        Seq("path", "is_dir"), "full_outer")
-      .agg(
-        n(col("is_dir") && col("reused")),
-        n(col("is_dir") && isNow),
-        n(col("is_dir") && isNow && col("before").isNull),
-        n(col("is_dir") && !isNow),
-        n(!col("is_dir") && col("src") === "walk"),
-        n(!col("is_dir") && col("src") === "reuse"),
-        n(!col("is_dir") && !isNow))
-      .head()
+    val changed = d.walkedDirs.count(d.staleDirs).toLong
     val summary = ChangeSummary(
-      prefixes_unchanged = counts.getLong(0),
-      prefixes_changed = counts.getLong(1) - counts.getLong(0) - counts.getLong(2),
-      prefixes_added = counts.getLong(2),
-      prefixes_deleted = counts.getLong(3),
-      files_rescanned = counts.getLong(4),
-      files_reused = counts.getLong(5),
-      files_deleted = counts.getLong(6))
-    Result(full, summary)
+      prefixes_unchanged = d.reusedDirs,
+      prefixes_changed = changed,
+      prefixes_added = d.walkedDirs.size - changed,
+      prefixes_deleted = d.staleDirs.size - changed,
+      files_rescanned = d.walkedFiles.size,
+      files_reused = bySrc(Reused),
+      files_deleted = bySrc(Deleted))
+    Result(rows.where(col("src") <= Reused).drop("src"), summary)
   }
 }

@@ -7,7 +7,8 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
 
 import graft.model.{FileEntry, ScanError}
@@ -67,11 +68,6 @@ object Walker {
   final case class DirMeta(path: String, parent: String, mt_ms: Long,
       mode: Int, n_entries: Long)
 
-  // NOT private: the Dataset encoder's generated deserializer must be
-  // able to instantiate it (a private nested class fails Janino
-  // compilation with "Private member cannot be accessed").
-  final case class SeedSlice(seed: String, dirs: Option[Seq[DirMeta]])
-
   /** S8-style progress plumbing (reference progress.go:54-316): Spark
     * accumulators updated from inside every `walkOneDir`, readable on
     * the driver WHILE the job runs (accumulator updates flow back with
@@ -126,94 +122,152 @@ object Walker {
       import spark.implicits._
       records.flatMap(_.error)
     }
-    /** Entries as a DataFrame with the per-row `reused` flag. */
-    def entriesWithReuse: org.apache.spark.sql.DataFrame = {
-      val spark = records.sparkSession
-      import spark.implicits._
-      records.flatMap(r => r.entry.map(e => (e, r.reused)))
-        .select(org.apache.spark.sql.functions.col("_1.*"),
-          org.apache.spark.sql.functions.col("_2").as("reused"))
-    }
   }
 
-  /** Walk a tree. For incremental re-scans pass `prevDirs`: the
-    * previous snapshot's DIRECTORY rows as a DataFrame with columns
-    * (path, parent, mt_ms, mode, n_entries). The index is never
-    * collected whole: the driver reads only the rows at or above
-    * seedDepth (bounded by the seed count — thousands), and every
-    * executor task receives exactly its own subtree's slice via a
-    * shuffle keyed by the seed-ancestor path. At the design point
-    * (~10⁷ dirs) nothing proportional to the tree moves through the
-    * driver or a broadcast — the per-seed-slice plan the round-1
-    * review called for.
-    *
-    * `prev` remains for tests / small trees where an in-memory map is
-    * handy; `prevDirs` supersedes it when set. */
+  /** Walk a tree: the driver walks the first `seedDepth` levels, and
+    * the subtrees at that depth are walked in parallel tasks. */
   def walk(
       spark: SparkSession,
       root: String,
       exclusions: Seq[String] = Nil,
       seedDepth: Int = 2,
       parallelism: Int = 0,
-      prev: PrevDirs = PrevDirs.empty,
-      prevDirs: Option[org.apache.spark.sql.DataFrame] = None,
       progress: Option[ProgressHooks] = None): Result = {
-    import org.apache.spark.sql.functions.{array_join, col, collect_list, regexp_replace, size => asize, slice => aslice, split, struct}
+    import spark.implicits._
+    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
+    val (driverRecords, seeds) = driverSeed(Paths.get(root).toAbsolutePath.normalize,
+      exclusions, seedDepth, PrevDirs.empty, progress)
+    val nParts = math.max(1, math.min(par, seeds.size))
+    Result(walkSeeds(spark, seeds, exclusions, nParts, PrevDirs.empty, progress)
+      .union(spark.createDataset(driverRecords)))
+  }
+
+  /** What an incremental walk learned about the change, collected in
+    * the walk's own job. Every set follows the change, not the tree.
+    *
+    * @param reusedDirs dirs whose (mtime, mode) matched: not listed
+    * @param walkedDirs dirs listed afresh (changed or added)
+    * @param staleDirs the previous snapshot's dirs that were not
+    *   reused: the changed ones, and those not reached or not statted
+    *   (deleted, excluded, or under a deleted dir)
+    * @param walkedFiles the non-dir paths listed in walked dirs
+    * @param freshNlink (device, inode) → largest link count of the
+    *   walked files that are hard links (nlink > 1)
+    */
+  final case class Delta(reusedDirs: Long, walkedDirs: Set[String],
+      staleDirs: Set[String], walkedFiles: Set[String],
+      freshNlink: Map[(Long, Long), Long]) {
+    def ++(o: Delta): Delta = Delta(reusedDirs + o.reusedDirs,
+      walkedDirs ++ o.walkedDirs, staleDirs ++ o.staleDirs, walkedFiles ++ o.walkedFiles,
+      o.freshNlink.foldLeft(freshNlink) { case (m, (k, n)) =>
+        m.updated(k, math.max(n, m.getOrElse(k, 0L))) })
+  }
+  object Delta {
+    /** The facts of one stretch of walk output: records, and slices of
+      * the previous snapshot's dirs that the walk did not reuse. */
+    def of(out: Iterator[Either[Seq[String], Record]]): Delta = {
+      var reused = 0L
+      val dirs, stale, files = Set.newBuilder[String]
+      val links = mutable.HashMap.empty[(Long, Long), Long]
+      out.foreach {
+        case Left(paths) => stale ++= paths
+        case Right(r) => r.entry.foreach { e =>
+          if (r.reused) reused += 1
+          else if (e.is_dir) dirs += e.path
+          else {
+            files += e.path
+            if (e.nlink > 1) links.update((e.device, e.inode),
+              math.max(e.nlink, links.getOrElse((e.device, e.inode), 0L)))
+          }
+        }
+      }
+      Delta(reused, dirs.result(), stale.result(), files.result(), links.toMap)
+    }
+  }
+
+  /** An incremental walk's records and what it learned about the
+    * change. `walk` is the persisted output the records read: the walk
+    * ran once. Unpersist it once the records are materialized. */
+  final case class Rescan(records: Dataset[Record], delta: Delta,
+      walk: RDD[Either[Seq[String], Record]])
+
+  /** Walk `root` against the previous snapshot's DIRECTORY rows
+    * `prevDirs` (columns path, parent, mt_ms, mode, n_entries): a dir
+    * whose (mtime, mode) is unchanged is not listed, and its child
+    * dirs come from the previous snapshot.
+    *
+    * The index is never collected whole: the driver reads only the
+    * rows at or above seed depth (bounded by the seed count), and each
+    * task receives exactly the slices of the seeds it walks, shuffled
+    * there keyed by seed-ancestor path. Each seed's walk ends by
+    * naming the dirs of its slice it did not reuse, and a task names
+    * every dir of a slice whose seed was not reached; the driver does
+    * the same for the levels it walks. One job walks the tree, keeps
+    * the records and collects the [[Delta]]; with the prev-index read
+    * before it, an incremental walk runs two jobs. */
+  def rescan(
+      spark: SparkSession,
+      root: String,
+      prevDirs: DataFrame,
+      exclusions: Seq[String] = Nil,
+      seedDepth: Int = 2,
+      parallelism: Int = 0): Rescan = {
+    import org.apache.spark.sql.functions.{col, regexp_replace, size => asize, split}
     import spark.implicits._
     val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
     val rootPath = Paths.get(root).toAbsolutePath.normalize
-    val exPatterns = exclusions // keep as strings: Regex is not serializable-stable
     // Number of path components in a seed path ("/a/b" has 2).
     val seedComponents = rootPath.getNameCount + seedDepth
 
     // The driver's shallow prev index: only dirs at component depth
     // ≤ seedComponents (the levels the driver itself walks plus the
     // seed level) — a bounded collect, NOT the whole tree.
-    val driverPrev = prevDirs match {
-      case Some(df) =>
-        val comps = split(regexp_replace(col("path"), "^/", ""), "/")
-        PrevDirs.fromRows(df.where(asize(comps) <= seedComponents)
-          .as[DirMeta].collect().toSeq)
-      case None => prev
-    }
-
-    // Driver-side seeding: levels [0, seedDepth) are walked here; dirs
-    // at seedDepth become executor work units.
+    val comps = split(regexp_replace(col("path"), "^/", ""), "/")
+    val driverPrev = PrevDirs.fromRows(prevDirs.where(asize(comps) <= seedComponents)
+      .as[DirMeta].collect().toSeq)
     val (driverRecords, seeds) =
-      driverSeed(rootPath, exPatterns, seedDepth, driverPrev, progress)
+      driverSeed(rootPath, exclusions, seedDepth, driverPrev, None)
+    val driverReused = driverRecords.filter(_.reused).flatMap(_.entry).map(_.path).toSet
+    val driverDelta = Delta.of(driverRecords.iterator.map(Right(_)) ++ Iterator.single(Left(
+      driverPrev.meta.keys.filter(p => Paths.get(p).getNameCount < seedComponents &&
+        !driverReused(p)).toSeq)))
 
-    val nParts = math.max(1, math.min(par, math.max(1, seeds.size)))
-    val walked = prevDirs match {
-      case Some(df) =>
-        // Key every prev dir by its seed-ancestor path (its first
-        // seedComponents components) and group into per-seed slices:
-        // one shuffle of dir METADATA, partitioned exactly like the
-        // walk work itself. A seed's slice holds its own row plus all
-        // dirs beneath it.
-        val comps = split(regexp_replace(col("path"), "^/", ""), "/")
-        val slices = df.where(asize(comps) >= seedComponents)
-          .withColumn("seed",
-            org.apache.spark.sql.functions.concat(
-              org.apache.spark.sql.functions.lit("/"),
-              array_join(aslice(comps, 1, seedComponents), "/")))
-          .groupBy(col("seed"))
-          .agg(collect_list(struct(col("path"), col("parent"), col("mt_ms"),
-            col("mode"), col("n_entries"))).as("dirs"))
-        seeds.toDF("seed")
-          .join(slices, Seq("seed"), "left")
-          .as[SeedSlice]
-          .repartition(nParts)
-          .mapPartitions { it =>
-            val ex = exPatterns.map(_.r)
-            it.flatMap { s =>
-              val local = PrevDirs.fromRows(s.dirs.getOrElse(Nil))
-              walkSubtree(Paths.get(s.seed), ex, local, progress)
-            }
-          }
-      case None =>
-        walkSeeds(spark, seeds, exPatterns, nParts, prev, progress)
-    }
-    Result(walked.union(spark.createDataset(driverRecords)))
+    // Seed i is walked by task i mod nParts; every prev dir at or below
+    // seed depth travels to the task of its seed ancestor (or, when
+    // that seed was not reached, to a task that names it stale).
+    val nParts = math.max(1, math.min(par, seeds.size))
+    val seedsOf = seeds.zipWithIndex.groupBy(_._2 % nParts).map { case (i, ss) => i -> ss.map(_._1) }
+    val partOf = seedsOf.flatMap { case (i, ss) => ss.map(_ -> i) }
+    val out = prevDirs.as[DirMeta].rdd
+      .flatMap { d =>
+        val p = Paths.get(d.path)
+        if (p.getNameCount < seedComponents) None
+        else {
+          val seed = p.getRoot.resolve(p.subpath(0, seedComponents)).toString
+          Some(partOf.getOrElse(seed, math.floorMod(seed.hashCode, nParts)) -> (seed -> d))
+        }
+      }
+      .partitionBy(new org.apache.spark.HashPartitioner(nParts))
+      .mapPartitionsWithIndex { (i, it) =>
+        val slices = it.map(_._2).toSeq.groupBy(_._1).map { case (s, ds) => s -> ds.map(_._2) }
+        val exRes = exclusions.map(_.r)
+        val mine = seedsOf.getOrElse(i, Nil)
+        val walked = mine.iterator.flatMap { s =>
+          val local = PrevDirs.fromRows(slices.getOrElse(s, Nil))
+          val reused = mutable.HashSet.empty[String]
+          walkSubtree(Paths.get(s), exRes, local, None).map { r =>
+            if (r.reused) reused += r.entry.get.path
+            Right(r): Either[Seq[String], Record]
+          } ++ Iterator.single(Left(local.meta.keys.filterNot(reused).toSeq))
+        }
+        walked ++ (slices.keySet -- mine).iterator.map(s => Left(slices(s).map(_.path)))
+      }
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val delta = out.mapPartitions(it => Iterator.single(Delta.of(it)))
+      .collect().foldLeft(driverDelta)(_ ++ _)
+    val records = out.flatMap(_.toOption)
+      .union(spark.sparkContext.parallelize(driverRecords, 1))
+    Rescan(spark.createDataset(records), delta, out)
   }
 
   /** Walk the driver levels [0, seedDepth): returns the records those

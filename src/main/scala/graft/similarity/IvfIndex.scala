@@ -47,10 +47,7 @@ object IvfIndex {
       .parquet(s"$dir/centroids")
     assigned.write.mode(SaveMode.ErrorIfExists)
       .partitionBy("centroid_id").parquet(s"$dir/assigned")
-    val latest = Paths.get(base, "ivf", "LATEST")
-    Files.createDirectories(latest.getParent)
-    Files.write(latest, name.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    flipLatest(base, name)
     name
   }
 
@@ -76,9 +73,7 @@ object IvfIndex {
       .partitionBy("centroid_id").parquet(s"$dir/assigned")
     Files.write(Paths.get(dir, "PARENT"), parent.getBytes("UTF-8"),
       StandardOpenOption.CREATE_NEW)
-    val latest = Paths.get(base, "ivf", "LATEST")
-    Files.write(latest, name.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    flipLatest(base, name)
     name
   }
 
@@ -94,9 +89,7 @@ object IvfIndex {
       .parquet(s"$dir/centroids")
     all.write.mode(SaveMode.ErrorIfExists)
       .partitionBy("centroid_id").parquet(s"$dir/assigned")
-    val latest = Paths.get(base, "ivf", "LATEST")
-    Files.write(latest, name.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    flipLatest(base, name)
     name
   }
 
@@ -113,11 +106,13 @@ object IvfIndex {
     out.toSeq
   }
 
-  def latestName(base: String): Option[String] = {
-    val p = Paths.get(base, "ivf", "LATEST")
-    if (Files.exists(p)) Some(new String(Files.readAllBytes(p), "UTF-8").trim)
-    else None
-  }
+  def latestName(base: String): Option[String] =
+    graft.ingest.Snapshot.readPointer(Paths.get(base, "ivf", "LATEST"))
+
+  /** Point LATEST at `name` atomically (temp file + rename): a crash
+    * or a concurrent reader never sees an empty pointer. */
+  private[similarity] def flipLatest(base: String, name: String): Unit =
+    graft.ingest.Snapshot.writePointer(Paths.get(base, "ivf", "LATEST"), name)
 
   def centroids(spark: SparkSession, base: String,
       name: Option[String] = None): DataFrame =

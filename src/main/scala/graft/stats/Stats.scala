@@ -1,11 +1,10 @@
 package graft.stats
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-
-import graft.ops.Bfs
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's main query pipeline (`idu stats compute`,
   * stats.go:115-168 → stats/totals.go:150-209 → report_stats.go):
@@ -83,11 +82,6 @@ object Stats {
   private val aggCols: Seq[Column] =
     aggSpecs.map { case (n, e) => zsum(e).as(n) }
 
-  /** [[aggCols]] with every term multiplied by the row's `sign`
-    * column — the ±1 delta aggregation of [[computeIncremental]]. */
-  private val signedAggCols: Seq[Column] =
-    aggSpecs.map { case (n, e) => zsum(e * col("sign")).as(n) }
-
   /** Sums of already-aggregated metric columns — the merge of
     * [[computeIncremental]]. */
   private val aggMergeCols: Seq[Column] = metricNames.map(m => zsum(col(m)).as(m))
@@ -110,7 +104,7 @@ object Stats {
       calc: Calculator = Calculator.Identity,
       countHardlinkDupsAsFiles: Boolean = false): Computed = {
     val contrib = contribOf(files, prefixMatch, entryMatch, calc,
-      countHardlinkDupsAsFiles, onlyPrefixes = None)
+      countHardlinkDupsAsFiles)
     Computed(aggregateSets(contrib.unionByName(zeroRow(contrib)), aggCols)
       .where(kept).localCheckpoint(eager = false))
   }
@@ -171,19 +165,16 @@ object Stats {
       else col(c.name)
     }: _*)
 
-  /** The per-contribution-row frame every stats aggregate sums over.
-    * `onlyPrefixes` (a one-column `prefix` frame and its row count)
-    * restricts matched prefixes to the given set AFTER hardlink
-    * canonicality is decided over the FULL input — the restriction the
-    * incremental path needs (canonical choice must not depend on which
-    * prefixes changed). */
+  /** The per-contribution-row frame every stats aggregate sums over:
+    * each matched prefix's own row, and each row whose parent is a
+    * matched prefix and which itself passes `entryMatch` (dirs count
+    * as sub_prefixes). */
   private def contribOf(
       files: DataFrame,
       prefixMatch: Column,
       entryMatch: Column,
       calc: Calculator,
-      countHardlinkDupsAsFiles: Boolean,
-      onlyPrefixes: Option[(DataFrame, Long)]): DataFrame = {
+      countHardlinkDupsAsFiles: Boolean): DataFrame = {
 
     // Canonical-hardlink flag: first (device, inode) by path order.
     // Only linked files (nlink > 1, typically ≪1% of rows) pay the
@@ -193,70 +184,64 @@ object Stats {
     val withCanon =
       if (countHardlinkDupsAsFiles) files.withColumn("is_canonical", lit(true))
       else {
-        val linked = coalesce(!col("is_dir") && col("nlink") > 1, lit(false))
         val linkRank = row_number().over(
           Window.partitionBy(col("device"), col("inode")).orderBy(col("path")))
         files.where(!linked).withColumn("is_canonical", lit(true))
           .unionByName(files.where(linked).withColumn("is_canonical", linkRank === 1))
       }
 
-    // Matched prefixes: dir rows passing prefixMatch, restricted to
-    // the changed set on the incremental path; their own rows are the
-    // prefix contributions. Restricted, the matched set is no larger
-    // than the changed set, so both broadcast when that is small.
-    def bounded(df: DataFrame) = onlyPrefixes.fold(df) { case (_, n) => Bfs.bcastIfSmall(df, n) }
     val matchedDirs = files.where(col("is_dir") && prefixMatch)
-    val prefixDirs = onlyPrefixes.fold(matchedDirs) { case (p, _) =>
-      matchedDirs.join(bounded(p.select(col("prefix").as("path"))), Seq("path"), "left_semi")
-    }
-    val prefixRows = prefixDirs
+    val prefixRows = matchedDirs
       .withColumn("is_canonical", lit(true))
       .withColumn("is_prefix_row", lit(true))
       .withColumn("prefix", col("path"))
-
-    // Entry rows: any row whose parent is a matched prefix and which
-    // itself passes entryMatch (dirs count as sub_prefixes).
     val entryRows = withCanon
       .where(entryMatch)
-      .join(bounded(prefixDirs.select(col("path").as("prefix_path"))),
+      .join(matchedDirs.select(col("path").as("prefix_path")),
         col("parent") === col("prefix_path"), "left_semi")
       .withColumn("is_prefix_row", lit(false))
       .withColumn("prefix", col("parent"))
-
-    prefixRows.unionByName(entryRows)
-      .withColumn("storage", calc(col("size"), col("blocks")))
-      .select(col("prefix"), col("uid"), col("gid"), col("is_prefix_row"),
-        col("is_dir"), col("is_canonical"), col("size"), col("storage"))
+    contribCols(prefixRows.unionByName(entryRows), calc)
   }
 
-  /** Materialize a frame that is small by the incremental contract.
-    * The count that fills the checkpoint also decides whether joins
-    * may broadcast it ([[Bfs.bcastIfSmall]]): the planner has no size
-    * estimate for a checkpoint, and without the hint it shuffles both
-    * join sides before AQE can switch to a broadcast.
-    * @return the frame and its row count */
-  private def materialize(df: DataFrame): (DataFrame, Long) = {
-    val cp = df.localCheckpoint(eager = false)
-    (cp, cp.count())
-  }
+  /** A file row that is a hard link: only these go through the
+    * canonical-link choice. */
+  private def linked: Column = coalesce(!col("is_dir") && col("nlink") > 1, lit(false))
+
+  /** The contribution columns the metrics read, plus `extra`. */
+  private def contribCols(rows: DataFrame, calc: Calculator, extra: String*): DataFrame =
+    rows.withColumn("storage", calc(col("size"), col("blocks")))
+      .select((Seq("prefix", "uid", "gid", "is_prefix_row", "is_dir", "is_canonical",
+        "size", "storage") ++ extra).map(col): _*)
 
   /** The §2.8 changed-prefix set between two snapshots: dir rows
     * added, deleted, or with differing (mod_time, mode, n_entries) —
     * the same POSIX contract the incremental WALKER relies on (an
     * unchanged dir implies an unchanged child list,
     * ingest/Incremental.scala), so any entry-row difference implies
-    * its parent appears here. One full-outer join of the two dir
-    * slices. @return a one-column `prefix` frame. */
+    * its parent appears here. One aggregation over the union of the
+    * two dir slices: a path is unchanged when both sides hold it with
+    * one signature. @return a one-column `prefix` frame. */
   def changedPrefixesOf(prevFiles: DataFrame, files: DataFrame): DataFrame = {
-    def dirs(f: DataFrame, tag: String) = f.where(col("is_dir"))
-      .select(col("path").as("prefix"),
-        struct(col("mod_time"), col("mode"), col("n_entries"))
-          .as(s"__sig_$tag"))
-    dirs(prevFiles, "a").join(dirs(files, "b"), Seq("prefix"), "full_outer")
-      .where(col("__sig_a").isNull || col("__sig_b").isNull ||
-        col("__sig_a") =!= col("__sig_b"))
+    def dirs(f: DataFrame, side: Int) = f.where(col("is_dir"))
+      .select(col("path").as("prefix"), lit(side).as("side"),
+        struct(col("mod_time"), col("mode"), col("n_entries")).as("sig"))
+    dirs(prevFiles, 0).unionByName(dirs(files, 1))
+      .groupBy(col("prefix"))
+      .agg(min(col("side")).as("lo"), max(col("side")).as("hi"),
+        min(col("sig")).as("sig_lo"), max(col("sig")).as("sig_hi"))
+      .where(col("lo") === col("hi") || col("sig_lo") =!= col("sig_hi"))
       .select(col("prefix"))
   }
+
+  /** Spark's string order (UTF-8 bytes), which picks the canonical link. */
+  private val utf8Order: Ordering[UTF8String] = Ordering.fromLessThan(_.compareTo(_) < 0)
+
+  /** The most changed prefixes [[computeIncremental]] merges as a
+    * delta: its changed set, hardlink expansion included, lives on the
+    * driver as literal sets. Above it a full [[compute]] runs, which
+    * gives the same result and reads no more than a delta that large. */
+  val IncrementalEnvelope: Int = 100000
 
   /** Incremental `stats compute` (reference contract analyze.go:
     * 226-243 applied to the STATS layer, SURVEY.md §2.8): merge the
@@ -269,20 +254,27 @@ object Stats {
     * Hardlink exactness: with `countHardlinkDupsAsFiles = false` the
     * canonical link of a (device, inode) group can FLIP to a link in
     * an UNCHANGED prefix when a changed prefix's link disappears, so
-    * the changed set auto-expands with every prefix holding a link of
-    * a group that any changed prefix touches (two semi-joins over the
-    * linked-file sliver). Canonicality itself is always decided over
-    * the FULL snapshot, exactly as [[compute]] does.
+    * the changed set expands with every prefix holding a link of a
+    * group that any changed prefix touches, and the canonical link of
+    * each touched group is chosen over all its links in each snapshot,
+    * exactly as [[compute]] does. A link of an untouched group lies in
+    * unchanged prefixes only, whose rows are the same in both
+    * snapshots: it contributes the same to both sides and cancels, so
+    * it counts as canonical on both.
     *
-    * Scale shape: one dir-slice full-outer join (changed-set
-    * discovery is the caller's if it has walker `reused` flags —
-    * [[changedPrefixesOf]] otherwise), materialized with the expanded
-    * set and broadcast into two restricted contrib scans bounded by
-    * the changed prefixes' entry rows; ONE ±1-signed grouping-sets
-    * aggregate of those rows (as in [[compute]]); then ONE union of
-    * the previous table with the delta, summed per (set, key) — one
-    * merge for all six frames, keyed like the state. An
-    * unchanged-corpus rescan aggregates zero contrib rows. */
+    * Scale shape: the changed set and its expansion are collected to
+    * the driver — the changed set (the caller's frame, e.g.
+    * [[changedPrefixesOf]]), then two scan-only collects of the ±1
+    * tagged union of the snapshots: the changed dirs' prefix matches
+    * and the links under them, then every link of the touched groups
+    * (skipped when none), plus one for the match of prefixes the
+    * expansion adds. Those sets filter ONE pass over the union as
+    * literal sets (no join, no window): each row contributes as a
+    * prefix row and as an entry row, signed, already expanded to the
+    * six grouping sets, and ONE aggregation sums them with the
+    * previous table per (set, key). An unchanged-corpus rescan
+    * aggregates zero contribution rows. Above [[IncrementalEnvelope]]
+    * changed prefixes it returns [[compute]] of `files`. */
   def computeIncremental(
       prev: Computed,
       prevFiles: DataFrame,
@@ -291,37 +283,90 @@ object Stats {
       prefixMatch: Column = lit(true),
       entryMatch: Column = lit(true),
       calc: Calculator = Calculator.Identity,
-      countHardlinkDupsAsFiles: Boolean = false): Computed = {
-    // hardlink-group expansion (see scaladoc). The changed set and the
-    // linked-file rows are tiny by the incremental contract; each is
-    // materialized once and broadcast into the semi-joins below, and
-    // the expanded set feeds both restricted contribution scans.
-    // Duplicates in it are harmless: it only feeds semi-joins.
-    val (changedCp, nChanged) = materialize(changedPrefixes)
-    val changed =
-      if (countHardlinkDupsAsFiles) (changedCp, nChanged)
-      else {
-        val linked = !col("is_dir") && col("nlink") > 1
-        val (multi, nMulti) = materialize(
-          prevFiles.where(linked).unionByName(files.where(linked))
-            .select(col("parent"), col("device"), col("inode")))
-        val touched = multi.join(
-          Bfs.bcastIfSmall(changedCp.select(col("prefix").as("parent")), nChanged),
-          Seq("parent"), "left_semi")
-        val extra = multi.join(Bfs.bcastIfSmall(touched, nMulti),
-          Seq("device", "inode"), "left_semi")
-          .select(col("parent").as("prefix"))
-        materialize(changedCp.unionByName(extra))
-      }
-    // the two restricted contribution frames, ±1-signed, in one
-    // grouping-sets aggregate
-    val oldC = contribOf(prevFiles, prefixMatch, entryMatch, calc,
-      countHardlinkDupsAsFiles, Some(changed)).withColumn("sign", lit(-1L))
-    val newC = contribOf(files, prefixMatch, entryMatch, calc,
-      countHardlinkDupsAsFiles, Some(changed)).withColumn("sign", lit(1L))
-    val delta = aggregateSets(newC.unionByName(oldC), signedAggCols)
+      countHardlinkDupsAsFiles: Boolean = false): Computed =
+    incremental(prev, prevFiles, files, changedPrefixes, prefixMatch, entryMatch,
+      calc, countHardlinkDupsAsFiles, IncrementalEnvelope)
 
-    // one merge of prev's table and the delta, keyed like the state
+  /** [[computeIncremental]] with the envelope given. */
+  private[stats] def incremental(
+      prev: Computed,
+      prevFiles: DataFrame,
+      files: DataFrame,
+      changedPrefixes: DataFrame,
+      prefixMatch: Column,
+      entryMatch: Column,
+      calc: Calculator,
+      countHardlinkDupsAsFiles: Boolean,
+      envelope: Int): Computed = {
+    val spark = files.sparkSession
+    import spark.implicits._
+    def full = compute(files, prefixMatch, entryMatch, calc, countHardlinkDupsAsFiles)
+    // each partition sends at most envelope + 1 prefixes
+    val changed = changedPrefixes.select(col("prefix")).as[String].rdd
+      .mapPartitions(_.take(envelope + 1)).collect().toSet
+    if (changed.size > envelope) return full
+
+    val both = prevFiles.withColumn("sign", lit(-1L))
+      .unionByName(files.withColumn("sign", lit(1L)))
+    // The driver-side collects below read (sign, is_dir, path, prefix
+    // match, parent, device, inode) rows of the union.
+    def collectRows(where: Column): Array[Row] = both.where(where).select(col("sign"),
+      col("is_dir"), col("path"), coalesce(when(col("is_dir"), prefixMatch), lit(false)),
+      col("parent"), col("device"), col("inode")).collect()
+    // (sign, path) of the matched dir rows
+    def matchedOf(rows: Array[Row]) = rows.collect {
+      case r if r.getBoolean(1) && r.getBoolean(3) => (r.getLong(0), r.getString(2)) }
+    // (sign, path, parent, (device, inode)) of the link rows
+    def linksOf(rows: Array[Row]) = rows.collect { case r if !r.getBoolean(1) =>
+      (r.getLong(0), r.getString(2), r.getString(4), (r.getLong(5), r.getLong(6))) }
+    def in(set: Iterable[String]): Column => Column = _.isin(set.toSeq: _*)
+
+    // (1) the changed dirs' rows, and the links under changed prefixes
+    val first = if (changed.isEmpty) Array.empty[Row] else collectRows(
+      (col("is_dir") && in(changed)(col("path"))) ||
+        (if (countHardlinkDupsAsFiles) lit(false) else linked && in(changed)(col("parent"))))
+    val touched = linksOf(first).map(_._4).toSet
+    // (2) every link of the touched groups: their prefixes join the set
+    val groupLinks = if (touched.isEmpty) Array.empty[(Long, String, String, (Long, Long))]
+      else linksOf(collectRows(linked && col("inode").isin(touched.map(_._2).toSeq: _*)))
+        .filter(l => touched(l._4))
+    val extra = groupLinks.map(_._3).toSet -- changed
+    if (changed.size + extra.size > envelope) return full
+    // (3) the matches of the prefixes the expansion added
+    val matched = matchedOf(first) ++ (if (extra.isEmpty) Array.empty[(Long, String)]
+      else matchedOf(collectRows(col("is_dir") && in(extra)(col("path")))))
+    // each touched group's links but its canonical one, per snapshot
+    val nonCanonical = groupLinks.groupBy(l => (l._1, l._4)).values.flatMap { ls =>
+      val canon = ls.map(_._2).minBy(UTF8String.fromString)(utf8Order)
+      ls.collect { case (sg, p, _, _) if p != canon => (sg, p) }
+    }
+
+    // `c` is among the (sign, value) pairs of its row's snapshot
+    def bySign(pairs: Iterable[(Long, String)], c: Column): Column = {
+      val (old, cur) = pairs.partition(_._1 < 0)
+      (col("sign") < 0 && in(old.map(_._2))(c)) || (col("sign") > 0 && in(cur.map(_._2))(c))
+    }
+    val isPrefix = col("is_dir") && bySign(matched, col("path"))
+    val isEntry = bySign(matched, col("parent")) && entryMatch
+    val canonical = !bySign(nonCanonical, col("path"))
+    // each row as its prefix's row and as an entry of its parent
+    val roles = both.where(isPrefix || isEntry)
+      .withColumn("role", explode(array(
+        when(isPrefix, struct(lit(true).as("is_prefix_row"), col("path").as("prefix"))),
+        when(isEntry, struct(lit(false).as("is_prefix_row"), col("parent").as("prefix"))))))
+      .where(col("role").isNotNull)
+      .select(col("*"), col("role.is_prefix_row"), col("role.prefix"))
+      .withColumn("is_canonical", col("is_prefix_row") || canonical)
+    val contrib = contribCols(roles, calc, "sign")
+    // signed metric values, expanded to the six grouping sets
+    val signed = contrib.select((keyCols.map(col) ++ aggSpecs.map { case (n, e) =>
+      (e * col("sign")).cast(LongType).as(n) }): _*)
+    val sets = frameKeys.map(ks => struct((lit(gsetOf(ks)).as("gset") +: keyCols.map(k =>
+      (if (ks.contains(k)) col(k) else lit(null).cast(signed.schema(k).dataType)).as(k))) ++
+      metricNames.map(col): _*))
+    val delta = signed.select(explode(array(sets: _*)).as("s")).select(col("s.*"))
+
+    // one aggregation of prev's table and the delta, keyed like the state
     Computed(prev.table.unionByName(delta)
       .groupBy(("gset" +: keyCols).map(col): _*)
       .agg(aggMergeCols.head, aggMergeCols.tail: _*)

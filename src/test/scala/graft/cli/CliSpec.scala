@@ -112,6 +112,28 @@ class CliSpec extends SparkSpec {
       s"expected StartsWith in PushedFilters:\n$plan")
   }
 
+  test("find enumerates in stored-key order across several part files") {
+    val dir = Files.createTempDirectory("graft-clio").toString
+    val tree = (0 until 24).map(i => f"d${i % 3}/s${i % 4}/f$i%02d.txt" -> "x").toMap
+    // hash-partitioned part files: no file holds a contiguous key range
+    snapshotOf(tree).repartition(4, col("name")).write.parquet(s"$dir/files")
+    val files = spark.read.parquet(s"$dir/files")
+    assert(files.inputFiles.length > 1)
+    val want = files.select("path").collect().map(_.getString(0)).toSeq.sorted
+    def enumerate(root: Option[String], sep: String) = {
+      val it = Main.findFrame(files, root, lit(true), sep).toLocalIterator()
+      val out = Seq.newBuilder[String]
+      while (it.hasNext) out += it.next().getString(0)
+      out.result()
+    }
+    assert(enumerate(None, "/") == want)
+    assert(enumerate(Some("/d1"), "/") == want.filter(p => p == "/d1" || p.startsWith("/d1/")))
+    // a display separator renders entries but keeps the stored order
+    assert(enumerate(None, ":") == want.map(p =>
+      if (p.endsWith(".txt")) p.substring(0, p.lastIndexOf('/')) + ":" + p.substring(p.lastIndexOf('/') + 1)
+      else p))
+  }
+
   test("TimeFlags: durations, instants, and range predicate") {
     import java.time.Instant
     assert(TimeFlags.parseDuration("90s").toSeconds == 90)

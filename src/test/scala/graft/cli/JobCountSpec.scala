@@ -5,6 +5,7 @@ import java.nio.file.attribute.FileTime
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.lit
 
 import graft.SparkSpec
 import graft.ids.IdMaps
@@ -13,8 +14,11 @@ import graft.stats.{Stats, StatsArtifact}
 
 /** Regression bounds on the Spark jobs each `idu` artifact costs: the
   * six stats frames come from one aggregation written as one table,
-  * incremental stats merge with one union-aggregate, a report tree is
-  * two bounded collects and the rescan summary is one aggregation.
+  * incremental stats collect their changed set and merge it with one
+  * union-aggregate, a report tree is two bounded collects, a rescan is
+  * the prev-index read, the walk and one counting job whose cache the
+  * snapshot write reads, and a find is one shuffle into a sorted
+  * partition and its read.
   * Opening a snapshot or an artifact reads its pinned schema, and the
   * analyze summary was observed on the snapshot write, so those run no
   * job at all. A per-frame recompute or write adds at least five jobs
@@ -85,7 +89,8 @@ class JobCountSpec extends SparkSpec {
     assert(res.summary.prefixes_changed == 1)
     val s = spark
     import s.implicits._
-    Snapshot.write(db, res.entries, Seq.empty[graft.model.ScanError].toDF())
+    val errs = Seq.empty[graft.model.ScanError].toDF()
+    val (_, rescanWrite) = jobsIn(Snapshot.write(db, res.entries, errs))
 
     val prevFiles = Snapshot.readFiles(spark, db, Some(prevName))
     val files = Snapshot.readFiles(spark, db)
@@ -100,12 +105,21 @@ class JobCountSpec extends SparkSpec {
     val c = StatsArtifact.read(spark, db)
     val (_, reports) = jobsIn(Main.writeReportTree(c, out, 10, IdMaps(Map.empty, Map.empty)))
 
+    val (n, find) = jobsIn {
+      val it = Main.findFrame(files, Some(root.toString), lit(true)).toLocalIterator()
+      var n = 0
+      while (it.hasNext) { it.next(); n += 1 }
+      n
+    }
+    assert(n == 28 + 7 + 1) // the first scan's rows and f-new
+
     val counts = Map("stats" -> full, "incremental" -> incremental,
-      "reports" -> reports, "rescan" -> rescan, "readFiles" -> readFiles,
-      "readArtifact" -> readArtifact, "summarize" -> summarize)
+      "reports" -> reports, "rescan" -> rescan, "rescanWrite" -> rescanWrite,
+      "find" -> find, "readFiles" -> readFiles, "readArtifact" -> readArtifact,
+      "summarize" -> summarize)
     info(s"jobs: $counts")
-    val bounds = Map("stats" -> 4, "incremental" -> 18, "reports" -> 2, "rescan" -> 12,
-      "readFiles" -> 0, "readArtifact" -> 0, "summarize" -> 0)
+    val bounds = Map("stats" -> 4, "incremental" -> 5, "reports" -> 2, "rescan" -> 3,
+      "rescanWrite" -> 2, "find" -> 2, "readFiles" -> 0, "readArtifact" -> 0, "summarize" -> 0)
     bounds.foreach { case (step, bound) =>
       assert(counts(step) <= bound, s"$step ran ${counts(step)} jobs, bound $bound")
     }

@@ -147,4 +147,34 @@ class IncrementalSpec extends SparkSpec {
     assert(got == want)
     assert(got.head.head(2) == 21L) // 7 dirs × 3 files, the link a hardlink
   }
+
+  test("deletion above the seed level: counts and rows equal a seed-level walk's") {
+    val root = buildTree()
+    val prev = snapshotNow(root)
+    import scala.jdk.CollectionConverters._
+    Files.walk(root.resolve("d0-1")).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    // seedDepth 2: d0-1 is walked (and missed) by the driver, its subdirs are seeds
+    val a = Incremental.rescan(spark, root.toString, prev, seedDepth = 1)
+    val b = Incremental.rescan(spark, root.toString, prev, seedDepth = 2)
+    assert(b.summary == a.summary)
+    assert(b.summary.prefixes_deleted == 3 && b.summary.files_deleted == 9)
+    assert(paths(b.entries) == paths(fullWalk(root)))
+  }
+
+  test("staleness contract: a file grown in place under an unchanged dir keeps its old row") {
+    val root = buildTree()
+    val prev = snapshotNow(root)
+    val dir = root.resolve("d0-0")
+    val f = dir.resolve("f1-0")
+    val dirMtime = Files.getLastModifiedTime(dir)
+    Files.write(f, "grown".getBytes, java.nio.file.StandardOpenOption.APPEND)
+    Files.setLastModifiedTime(dir, dirMtime)
+    def sizeIn(df: org.apache.spark.sql.DataFrame) =
+      df.where(org.apache.spark.sql.functions.col("path") === f.toString)
+        .select("size").collect().map(_.getLong(0)).toSeq
+    val res = Incremental.rescan(spark, root.toString, prev, seedDepth = 1)
+    assert(res.summary.prefixes_changed == 0 && res.summary.files_rescanned == 0)
+    assert(sizeIn(res.entries) == Seq(1L)) // the previous row
+    assert(sizeIn(fullWalk(root)) == Seq(6L)) // a full walk reads the file
+  }
 }

@@ -157,6 +157,43 @@ class IncrementalStatsSpec extends SparkSpec {
     }
   }
 
+  test("hardlink expansion: an added prefix's match, an untouched group beside a flip") {
+    // group 5 spans /c (changed) and /x (unchanged): /c/l2 is canonical
+    // before and gone after, so the canonical link flips to /x/l1; group 6
+    // spans /x and /y, both unchanged, so it cancels in the delta
+    val s = spark
+    import s.implicits._
+    val common = Seq(
+      fe("/x", isDir = true, 10, 1, 1, nEntries = 2),
+      fe("/x/l1", isDir = false, 70, 1, 1, inode = 5, nlink = 2),
+      fe("/x/u1", isDir = false, 30, 1, 1, inode = 6, nlink = 2),
+      fe("/y", isDir = true, 10, 2, 2, nEntries = 1),
+      fe("/y/u2", isDir = false, 30, 2, 2, inode = 6, nlink = 2))
+    val before = (common ++ Seq(
+      fe("/c", isDir = true, 10, 3, 3, nEntries = 2),
+      fe("/c/l2", isDir = false, 70, 3, 3, inode = 5, nlink = 2),
+      fe("/c/f", isDir = false, 5, 3, 3))).toDF()
+    val after = (common ++ Seq(
+      fe("/c", isDir = true, 10, 3, 3, nEntries = 1, mt = T1),
+      fe("/c/f", isDir = false, 5, 3, 3))).toDF()
+    val filters = Seq(lit(true) -> lit(true), (col("path") =!= "/x") -> lit(true),
+      (col("path") =!= "/c") -> (col("size") =!= 30L))
+    filters.foreach { case (pm, em) =>
+      val inc = Stats.computeIncremental(Stats.compute(before, pm, em), before, after,
+        Stats.changedPrefixesOf(before, after), pm, em)
+      assertSameComputed(inc, Stats.compute(after, pm, em))
+    }
+  }
+
+  test("above the envelope the full compute answers, equal to the delta merge") {
+    val prev = Stats.compute(prevDf)
+    val changed = Stats.changedPrefixesOf(prevDf, newDf) // 3, and /keep by expansion
+    Seq(1, 3, 4).foreach { envelope =>
+      assertSameComputed(Stats.incremental(prev, prevDf, newDf, changed, lit(true), lit(true),
+        Calculator.Identity, countHardlinkDupsAsFiles = false, envelope), Stats.compute(newDf))
+    }
+  }
+
   /** `df` with a null uid on /keep/f1 and a null gid on /chg/b. */
   private def withNullIds(df: DataFrame): DataFrame = df
     .withColumn("uid", when(col("path") === "/keep/f1", lit(null)).otherwise(col("uid")))
