@@ -551,12 +551,19 @@ object Main {
     * Spark analogue of the reference's key-range seek
     * (find.go:75-96).
     *
-    * The scan and filter run in parallel; the matches then meet in ONE
-    * partition sorted by path. The driver streams the result serially
-    * anyway, so a single sorted partition costs it nothing, and it
-    * spares the global sort's range-sampling job and its per-partition
-    * result jobs: enumerating the frame runs two jobs (the shuffle into
-    * the partition and its read). */
+    * The scan and filter run in parallel; the matches are then range
+    * partitioned by path and sorted within each partition, which the
+    * driver streams one partition at a time (`toLocalIterator` fetches
+    * a partition as one task result). The partition count is the
+    * planner's size estimate of the filtered scan over
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, the size AQE
+    * gives the partitions of a global sort. The estimate ignores the
+    * filter's selectivity and counts parquet bytes, so a partition
+    * holds at most about that many bytes of compressed input. A find
+    * within one such partition (every find on a snapshot of up to
+    * 64 MB of parquet by default) runs two jobs: the shuffle into the
+    * partition and its read, with no range-sampling job; a larger one
+    * adds the sampling job and one result job per further partition. */
   private[cli] def findFrame(files: DataFrame, root: Option[String],
       m: org.apache.spark.sql.Column, sep: String = "/",
       long: Boolean = false): DataFrame = {
@@ -578,7 +585,12 @@ object Main {
       else if (sep == "/") col("path")
       else when(col("is_dir"), col("path"))
         .otherwise(concat(col("parent"), lit(sep), col("name")))
-    scoped.where(m).repartition(1).sortWithinPartitions("path")
+    val matched = scoped.where(m)
+    val advisory = matched.sparkSession.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val est = matched.queryExecution.optimizedPlan.stats.sizeInBytes
+    val parts = ((est + advisory - 1) / advisory).max(1).min(Int.MaxValue).toInt
+    matched.repartitionByRange(parts, col("path")).sortWithinPartitions("path")
       .select(rendered.as("path"))
   }
 

@@ -138,36 +138,70 @@ object Walker {
     val (driverRecords, seeds) = driverSeed(Paths.get(root).toAbsolutePath.normalize,
       exclusions, seedDepth, PrevDirs.empty, progress)
     val nParts = math.max(1, math.min(par, seeds.size))
-    Result(walkSeeds(spark, seeds, exclusions, nParts, PrevDirs.empty, progress)
+    Result(walkSeeds(spark, seeds, exclusions, nParts, progress)
       .union(spark.createDataset(driverRecords)))
   }
 
   /** What an incremental walk learned about the change, collected in
-    * the walk's own job. Every set follows the change, not the tree.
+    * the walk's own job.
     *
     * @param reusedDirs dirs whose (mtime, mode) matched: not listed
     * @param walkedDirs dirs listed afresh (changed or added)
+    * @param changedDirs walked dirs the previous snapshot held (each
+    *   task counts its own: a dir below seed depth and its previous
+    *   row meet in the task of their seed, and the driver's levels
+    *   meet on the driver)
     * @param staleDirs the previous snapshot's dirs that were not
     *   reused: the changed ones, and those not reached or not statted
     *   (deleted, excluded, or under a deleted dir)
     * @param walkedFiles the non-dir paths listed in walked dirs
+    * @param sets the change itself, when it is small enough to
+    *   collect (see [[DeltaSetLimit]]): else None
+    */
+  final case class Delta(reusedDirs: Long, walkedDirs: Long, changedDirs: Long,
+      staleDirs: Long, walkedFiles: Long, sets: Option[DeltaSets]) {
+    def ++(o: Delta): Delta = Delta(reusedDirs + o.reusedDirs, walkedDirs + o.walkedDirs,
+      changedDirs + o.changedDirs, staleDirs + o.staleDirs, walkedFiles + o.walkedFiles,
+      for (a <- sets; b <- o.sets) yield a ++ b)
+  }
+
+  /** The change as driver-side sets, which [[Incremental.rescan]] uses
+    * as literals to tag the previous snapshot's rows without a join.
+    *
+    * @param staleDirs as [[Delta.staleDirs]]
+    * @param walkedFiles as [[Delta.walkedFiles]]
     * @param freshNlink (device, inode) → largest link count of the
     *   walked files that are hard links (nlink > 1)
     */
-  final case class Delta(reusedDirs: Long, walkedDirs: Set[String],
-      staleDirs: Set[String], walkedFiles: Set[String],
+  final case class DeltaSets(staleDirs: Set[String], walkedFiles: Set[String],
       freshNlink: Map[(Long, Long), Long]) {
-    def ++(o: Delta): Delta = Delta(reusedDirs + o.reusedDirs,
-      walkedDirs ++ o.walkedDirs, staleDirs ++ o.staleDirs, walkedFiles ++ o.walkedFiles,
+    def size: Int = staleDirs.size + walkedFiles.size + freshNlink.size
+    def ++(o: DeltaSets): DeltaSets = DeltaSets(staleDirs ++ o.staleDirs,
+      walkedFiles ++ o.walkedFiles,
       o.freshNlink.foldLeft(freshNlink) { case (m, (k, n)) =>
         m.updated(k, math.max(n, m.getOrElse(k, 0L))) })
   }
+
+  /** The most entries [[DeltaSets]] carries to the driver. Every entry
+    * is a literal in the plan of the scan that tags the previous
+    * snapshot, and planning an `isin` list costs time linear in it.
+    * Tagging 400,000 previous rows on a 4-core VM (local[4]) by
+    * literal sets against two left joins: 1,000 entries 0.25–0.34 s
+    * vs 0.71–0.74 s, 10,000 entries 0.53–0.75 s vs 0.60–0.79 s,
+    * 30,000 entries 1.37–1.63 s vs 0.49–0.64 s. The joins shuffle the
+    * previous rows, so on a larger snapshot they cost more and the
+    * crossover moves up. A larger change (an `rm -rf` or `chmod -R`
+    * of a big subtree) tags the previous rows with joins against the
+    * walk's cached output instead. */
+  val DeltaSetLimit: Int = 10000
+
   object Delta {
     /** The facts of one stretch of walk output: records, and slices of
-      * the previous snapshot's dirs that the walk did not reuse. */
-    def of(out: Iterator[Either[Seq[String], Record]]): Delta = {
+      * the previous snapshot's dirs that the walk did not reuse. Its
+      * sets are kept when they hold at most `limit` entries. */
+    def of(out: Iterator[Either[Seq[String], Record]], limit: Int): Delta = {
       var reused = 0L
-      val dirs, stale, files = Set.newBuilder[String]
+      val dirs, stale, files = mutable.HashSet.empty[String]
       val links = mutable.HashMap.empty[(Long, Long), Long]
       out.foreach {
         case Left(paths) => stale ++= paths
@@ -181,15 +215,22 @@ object Walker {
           }
         }
       }
-      Delta(reused, dirs.result(), stale.result(), files.result(), links.toMap)
+      val sets = DeltaSets(stale.toSet, files.toSet, links.toMap)
+      Delta(reused, dirs.size, dirs.count(stale).toLong, stale.size, files.size,
+        Some(sets).filter(_.size <= limit))
     }
   }
 
   /** An incremental walk's records and what it learned about the
-    * change. `walk` is the persisted output the records read: the walk
-    * ran once. Unpersist it once the records are materialized. */
+    * change. `walk` is the persisted output the records and
+    * `staleDirs` read: the walk ran once. Unpersist it once the
+    * records are materialized.
+    *
+    * @param staleDirs [[Delta.staleDirs]] as a frame, for a change
+    *   too large for [[DeltaSets]]
+    */
   final case class Rescan(records: Dataset[Record], delta: Delta,
-      walk: RDD[Either[Seq[String], Record]])
+      staleDirs: Dataset[String], walk: RDD[Either[Seq[String], Record]])
 
   /** Walk `root` against the previous snapshot's DIRECTORY rows
     * `prevDirs` (columns path, parent, mt_ms, mode, n_entries): a dir
@@ -203,18 +244,19 @@ object Walker {
     * naming the dirs of its slice it did not reuse, and a task names
     * every dir of a slice whose seed was not reached; the driver does
     * the same for the levels it walks. One job walks the tree, keeps
-    * the records and collects the [[Delta]]; with the prev-index read
-    * before it, an incremental walk runs two jobs. */
+    * the records and collects the [[Delta]]: its counts always, its
+    * sets while they hold at most `setLimit` entries (each task sends
+    * no more). With the prev-index read before it, an incremental walk
+    * runs two jobs. */
   def rescan(
       spark: SparkSession,
       root: String,
       prevDirs: DataFrame,
-      exclusions: Seq[String] = Nil,
-      seedDepth: Int = 2,
-      parallelism: Int = 0): Rescan = {
+      exclusions: Seq[String],
+      seedDepth: Int,
+      setLimit: Int): Rescan = {
     import org.apache.spark.sql.functions.{col, regexp_replace, size => asize, split}
     import spark.implicits._
-    val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
     val rootPath = Paths.get(root).toAbsolutePath.normalize
     // Number of path components in a seed path ("/a/b" has 2).
     val seedComponents = rootPath.getNameCount + seedDepth
@@ -228,14 +270,15 @@ object Walker {
     val (driverRecords, seeds) =
       driverSeed(rootPath, exclusions, seedDepth, driverPrev, None)
     val driverReused = driverRecords.filter(_.reused).flatMap(_.entry).map(_.path).toSet
-    val driverDelta = Delta.of(driverRecords.iterator.map(Right(_)) ++ Iterator.single(Left(
-      driverPrev.meta.keys.filter(p => Paths.get(p).getNameCount < seedComponents &&
-        !driverReused(p)).toSeq)))
+    val driverStale = driverPrev.meta.keys.filter(p =>
+      Paths.get(p).getNameCount < seedComponents && !driverReused(p)).toSeq
+    val driverDelta = Delta.of(driverRecords.iterator.map(Right(_)) ++
+      Iterator.single(Left(driverStale)), setLimit)
 
     // Seed i is walked by task i mod nParts; every prev dir at or below
     // seed depth travels to the task of its seed ancestor (or, when
     // that seed was not reached, to a task that names it stale).
-    val nParts = math.max(1, math.min(par, seeds.size))
+    val nParts = math.max(1, math.min(spark.sparkContext.defaultParallelism, seeds.size))
     val seedsOf = seeds.zipWithIndex.groupBy(_._2 % nParts).map { case (i, ss) => i -> ss.map(_._1) }
     val partOf = seedsOf.flatMap { case (i, ss) => ss.map(_ -> i) }
     val out = prevDirs.as[DirMeta].rdd
@@ -263,11 +306,14 @@ object Walker {
         walked ++ (slices.keySet -- mine).iterator.map(s => Left(slices(s).map(_.path)))
       }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val delta = out.mapPartitions(it => Iterator.single(Delta.of(it)))
+    val delta = out.mapPartitions(it => Iterator.single(Delta.of(it, setLimit)))
       .collect().foldLeft(driverDelta)(_ ++ _)
+    val capped = delta.copy(sets = delta.sets.filter(_.size <= setLimit))
     val records = out.flatMap(_.toOption)
       .union(spark.sparkContext.parallelize(driverRecords, 1))
-    Rescan(spark.createDataset(records), delta, out)
+    val stale = out.flatMap { case Left(ps) => ps; case _ => Nil }
+      .union(spark.sparkContext.parallelize(driverStale, 1))
+    Rescan(spark.createDataset(records), capped, spark.createDataset(stale), out)
   }
 
   /** Walk the driver levels [0, seedDepth): returns the records those
@@ -294,15 +340,14 @@ object Walker {
   /** Distributed walk of an explicit seed list (no prev-snapshot
     * slices). The unit [[ResumableWalk]] batches over. */
   private[ingest] def walkSeeds(spark: SparkSession, seeds: Seq[String],
-      exclusions: Seq[String], nParts: Int, prev: PrevDirs = PrevDirs.empty,
+      exclusions: Seq[String], nParts: Int,
       progress: Option[ProgressHooks] = None): Dataset[Record] = {
     import spark.implicits._
-    val bcPrev = spark.sparkContext.broadcast(prev)
     spark.createDataset(seeds)
       .repartition(math.max(1, nParts))
       .mapPartitions { it =>
         val ex = exclusions.map(_.r)
-        it.flatMap(dir => walkSubtree(Paths.get(dir), ex, bcPrev.value, progress))
+        it.flatMap(dir => walkSubtree(Paths.get(dir), ex, PrevDirs.empty, progress))
       }
   }
 

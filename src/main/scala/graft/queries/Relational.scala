@@ -291,12 +291,10 @@ object Relational {
     // layer): a deterministic two-level walk is derived from orders
     // (/d<ck%10>/s<ok%4>/f<ok>, file size = floor(totalprice*100),
     // dir rows carry n_entries), the pre-1997 snapshot's six frames
-    // are computed in full, and the full-corpus snapshot is merged in
-    // via changed-prefix discovery + ±1-signed delta aggregates —
-    // unchanged prefixes are never re-aggregated. The oracle
-    // recomputes per-prefix stats FROM SCRATCH over all orders, so a
-    // green row proves delta merge ≡ full recompute on an
-    // independent engine.
+    // are computed in full, and the full-corpus snapshot's stats are
+    // computed incrementally from them and the changed-prefix set.
+    // The oracle recomputes per-prefix stats FROM SCRATCH over all
+    // orders on an independent engine.
     "q_incr_stats" -> ((s, dir) => {
       import graft.stats.Stats
       // ONE orders scan feeds both walks (r13): the projected base

@@ -1,10 +1,9 @@
 package graft.stats
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's main query pipeline (`idu stats compute`,
   * stats.go:115-168 → stats/totals.go:150-209 → report_stats.go):
@@ -66,8 +65,8 @@ object Stats {
   private def zsum(c: Column): Column = coalesce(sum(c), lit(0L))
 
   /** (metric name, per-contrib-row value) — every stats metric is a
-    * conditional SUM, i.e. an abelian-group aggregate: the property
-    * [[computeIncremental]]'s add/subtract merge relies on. */
+    * conditional SUM, i.e. an abelian-group aggregate: a delta merge
+    * `prev − old + new` of them is exact. */
   private val aggSpecs: Seq[(String, Column)] = Seq(
     "prefixes" -> when(col("is_prefix_row"), 1L).otherwise(0L),
     "sub_prefixes" -> when(!col("is_prefix_row") && col("is_dir"), 1L).otherwise(0L),
@@ -81,10 +80,6 @@ object Stats {
 
   private val aggCols: Seq[Column] =
     aggSpecs.map { case (n, e) => zsum(e).as(n) }
-
-  /** Sums of already-aggregated metric columns — the merge of
-    * [[computeIncremental]]. */
-  private val aggMergeCols: Seq[Column] = metricNames.map(m => zsum(col(m)).as(m))
 
   /** Compute all stats frames for one expression over the fact table.
     *
@@ -122,8 +117,7 @@ object Stats {
 
   /** Every contribution row counts once in exactly one of prefixes,
     * sub_prefixes, files and hardlinks, so a real group has a positive
-    * count; a group without (a zero row's, or one whose contributions
-    * all cancelled in an incremental merge) is dropped — except the ()
+    * count; a group without (a zero row's) is dropped — except the ()
     * set's, which always stays. */
   private def kept: Column = col("gset") === gsetOf(Nil) ||
     col("prefixes") + col("sub_prefixes") + col("files") + col("hardlinks") > 0
@@ -184,6 +178,7 @@ object Stats {
     val withCanon =
       if (countHardlinkDupsAsFiles) files.withColumn("is_canonical", lit(true))
       else {
+        val linked = coalesce(!col("is_dir") && col("nlink") > 1, lit(false))
         val linkRank = row_number().over(
           Window.partitionBy(col("device"), col("inode")).orderBy(col("path")))
         files.where(!linked).withColumn("is_canonical", lit(true))
@@ -201,18 +196,11 @@ object Stats {
         col("parent") === col("prefix_path"), "left_semi")
       .withColumn("is_prefix_row", lit(false))
       .withColumn("prefix", col("parent"))
-    contribCols(prefixRows.unionByName(entryRows), calc)
+    prefixRows.unionByName(entryRows)
+      .withColumn("storage", calc(col("size"), col("blocks")))
+      .select(col("prefix"), col("uid"), col("gid"), col("is_prefix_row"),
+        col("is_dir"), col("is_canonical"), col("size"), col("storage"))
   }
-
-  /** A file row that is a hard link: only these go through the
-    * canonical-link choice. */
-  private def linked: Column = coalesce(!col("is_dir") && col("nlink") > 1, lit(false))
-
-  /** The contribution columns the metrics read, plus `extra`. */
-  private def contribCols(rows: DataFrame, calc: Calculator, extra: String*): DataFrame =
-    rows.withColumn("storage", calc(col("size"), col("blocks")))
-      .select((Seq("prefix", "uid", "gid", "is_prefix_row", "is_dir", "is_canonical",
-        "size", "storage") ++ extra).map(col): _*)
 
   /** The §2.8 changed-prefix set between two snapshots: dir rows
     * added, deleted, or with differing (mod_time, mode, n_entries) —
@@ -234,47 +222,23 @@ object Stats {
       .select(col("prefix"))
   }
 
-  /** Spark's string order (UTF-8 bytes), which picks the canonical link. */
-  private val utf8Order: Ordering[UTF8String] = Ordering.fromLessThan(_.compareTo(_) < 0)
-
-  /** The most changed prefixes [[computeIncremental]] merges as a
-    * delta: its changed set, hardlink expansion included, lives on the
-    * driver as literal sets. Above it a full [[compute]] runs, which
-    * gives the same result and reads no more than a delta that large. */
-  val IncrementalEnvelope: Int = 100000
-
   /** Incremental `stats compute` (reference contract analyze.go:
-    * 226-243 applied to the STATS layer, SURVEY.md §2.8): merge the
-    * previous artifact's six frames with recomputed contributions for
-    * the CHANGED prefixes only — the base table's unchanged prefixes
-    * are never re-aggregated. Every metric is a conditional SUM
-    * ([[aggSpecs]]), so the merge is exact:
-    * `new_state = prev_state − contrib_old(changed) + contrib_new(changed)`.
+    * 226-243 applied to the STATS layer, SURVEY.md §2.8): the stats of
+    * `files` given the previous snapshot `prevFiles`, its stats `prev`
+    * and the changed-prefix set between them (e.g.
+    * [[changedPrefixesOf]]). The result equals [[compute]] of `files`,
+    * hardlink canonicalization and filters included.
     *
-    * Hardlink exactness: with `countHardlinkDupsAsFiles = false` the
-    * canonical link of a (device, inode) group can FLIP to a link in
-    * an UNCHANGED prefix when a changed prefix's link disappears, so
-    * the changed set expands with every prefix holding a link of a
-    * group that any changed prefix touches, and the canonical link of
-    * each touched group is chosen over all its links in each snapshot,
-    * exactly as [[compute]] does. A link of an untouched group lies in
-    * unchanged prefixes only, whose rows are the same in both
-    * snapshots: it contributes the same to both sides and cancels, so
-    * it counts as canonical on both.
-    *
-    * Scale shape: the changed set and its expansion are collected to
-    * the driver — the changed set (the caller's frame, e.g.
-    * [[changedPrefixesOf]]), then two scan-only collects of the ±1
-    * tagged union of the snapshots: the changed dirs' prefix matches
-    * and the links under them, then every link of the touched groups
-    * (skipped when none), plus one for the match of prefixes the
-    * expansion adds. Those sets filter ONE pass over the union as
-    * literal sets (no join, no window): each row contributes as a
-    * prefix row and as an entry row, signed, already expanded to the
-    * six grouping sets, and ONE aggregation sums them with the
-    * previous table per (set, key). An unchanged-corpus rescan
-    * aggregates zero contribution rows. Above [[IncrementalEnvelope]]
-    * changed prefixes it returns [[compute]] of `files`. */
+    * Scale shape: it IS [[compute]] of `files` — one contribution pass
+    * and one grouping-sets aggregation; `prev`, `prevFiles` and
+    * `changedPrefixes` are not read. A delta merge (`prev − old + new`
+    * over the changed prefixes, exact since every metric is a
+    * conditional SUM, [[aggSpecs]]) still scans both snapshots to find
+    * the changed rows and shuffles the whole previous table to merge
+    * them; on the one measured workload (perfbench's `tree_flow`) it
+    * ran more jobs and took longer than this one pass. It can pay only
+    * once the layout prunes by prefix (ROADMAP item 4), and only on a
+    * workload that shows where it wins. */
   def computeIncremental(
       prev: Computed,
       prevFiles: DataFrame,
@@ -284,95 +248,7 @@ object Stats {
       entryMatch: Column = lit(true),
       calc: Calculator = Calculator.Identity,
       countHardlinkDupsAsFiles: Boolean = false): Computed =
-    incremental(prev, prevFiles, files, changedPrefixes, prefixMatch, entryMatch,
-      calc, countHardlinkDupsAsFiles, IncrementalEnvelope)
-
-  /** [[computeIncremental]] with the envelope given. */
-  private[stats] def incremental(
-      prev: Computed,
-      prevFiles: DataFrame,
-      files: DataFrame,
-      changedPrefixes: DataFrame,
-      prefixMatch: Column,
-      entryMatch: Column,
-      calc: Calculator,
-      countHardlinkDupsAsFiles: Boolean,
-      envelope: Int): Computed = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    def full = compute(files, prefixMatch, entryMatch, calc, countHardlinkDupsAsFiles)
-    // each partition sends at most envelope + 1 prefixes
-    val changed = changedPrefixes.select(col("prefix")).as[String].rdd
-      .mapPartitions(_.take(envelope + 1)).collect().toSet
-    if (changed.size > envelope) return full
-
-    val both = prevFiles.withColumn("sign", lit(-1L))
-      .unionByName(files.withColumn("sign", lit(1L)))
-    // The driver-side collects below read (sign, is_dir, path, prefix
-    // match, parent, device, inode) rows of the union.
-    def collectRows(where: Column): Array[Row] = both.where(where).select(col("sign"),
-      col("is_dir"), col("path"), coalesce(when(col("is_dir"), prefixMatch), lit(false)),
-      col("parent"), col("device"), col("inode")).collect()
-    // (sign, path) of the matched dir rows
-    def matchedOf(rows: Array[Row]) = rows.collect {
-      case r if r.getBoolean(1) && r.getBoolean(3) => (r.getLong(0), r.getString(2)) }
-    // (sign, path, parent, (device, inode)) of the link rows
-    def linksOf(rows: Array[Row]) = rows.collect { case r if !r.getBoolean(1) =>
-      (r.getLong(0), r.getString(2), r.getString(4), (r.getLong(5), r.getLong(6))) }
-    def in(set: Iterable[String]): Column => Column = _.isin(set.toSeq: _*)
-
-    // (1) the changed dirs' rows, and the links under changed prefixes
-    val first = if (changed.isEmpty) Array.empty[Row] else collectRows(
-      (col("is_dir") && in(changed)(col("path"))) ||
-        (if (countHardlinkDupsAsFiles) lit(false) else linked && in(changed)(col("parent"))))
-    val touched = linksOf(first).map(_._4).toSet
-    // (2) every link of the touched groups: their prefixes join the set
-    val groupLinks = if (touched.isEmpty) Array.empty[(Long, String, String, (Long, Long))]
-      else linksOf(collectRows(linked && col("inode").isin(touched.map(_._2).toSeq: _*)))
-        .filter(l => touched(l._4))
-    val extra = groupLinks.map(_._3).toSet -- changed
-    if (changed.size + extra.size > envelope) return full
-    // (3) the matches of the prefixes the expansion added
-    val matched = matchedOf(first) ++ (if (extra.isEmpty) Array.empty[(Long, String)]
-      else matchedOf(collectRows(col("is_dir") && in(extra)(col("path")))))
-    // each touched group's links but its canonical one, per snapshot
-    val nonCanonical = groupLinks.groupBy(l => (l._1, l._4)).values.flatMap { ls =>
-      val canon = ls.map(_._2).minBy(UTF8String.fromString)(utf8Order)
-      ls.collect { case (sg, p, _, _) if p != canon => (sg, p) }
-    }
-
-    // `c` is among the (sign, value) pairs of its row's snapshot
-    def bySign(pairs: Iterable[(Long, String)], c: Column): Column = {
-      val (old, cur) = pairs.partition(_._1 < 0)
-      (col("sign") < 0 && in(old.map(_._2))(c)) || (col("sign") > 0 && in(cur.map(_._2))(c))
-    }
-    val isPrefix = col("is_dir") && bySign(matched, col("path"))
-    val isEntry = bySign(matched, col("parent")) && entryMatch
-    val canonical = !bySign(nonCanonical, col("path"))
-    // each row as its prefix's row and as an entry of its parent
-    val roles = both.where(isPrefix || isEntry)
-      .withColumn("role", explode(array(
-        when(isPrefix, struct(lit(true).as("is_prefix_row"), col("path").as("prefix"))),
-        when(isEntry, struct(lit(false).as("is_prefix_row"), col("parent").as("prefix"))))))
-      .where(col("role").isNotNull)
-      .select(col("*"), col("role.is_prefix_row"), col("role.prefix"))
-      .withColumn("is_canonical", col("is_prefix_row") || canonical)
-    val contrib = contribCols(roles, calc, "sign")
-    // signed metric values, expanded to the six grouping sets
-    val signed = contrib.select((keyCols.map(col) ++ aggSpecs.map { case (n, e) =>
-      (e * col("sign")).cast(LongType).as(n) }): _*)
-    val sets = frameKeys.map(ks => struct((lit(gsetOf(ks)).as("gset") +: keyCols.map(k =>
-      (if (ks.contains(k)) col(k) else lit(null).cast(signed.schema(k).dataType)).as(k))) ++
-      metricNames.map(col): _*))
-    val delta = signed.select(explode(array(sets: _*)).as("s")).select(col("s.*"))
-
-    // one aggregation of prev's table and the delta, keyed like the state
-    Computed(prev.table.unionByName(delta)
-      .groupBy(("gset" +: keyCols).map(col): _*)
-      .agg(aggMergeCols.head, aggMergeCols.tail: _*)
-      .where(kept)
-      .localCheckpoint(eager = false))
-  }
+    compute(files, prefixMatch, entryMatch, calc, countHardlinkDupsAsFiles)
 
   /** K1/K2: top-N prefixes by one metric (reference heap.MinMax
     * PushMaxN) — TakeOrderedAndProject, not a global sort. */

@@ -132,6 +132,17 @@ class CliSpec extends SparkSpec {
     assert(enumerate(None, ":") == want.map(p =>
       if (p.endsWith(".txt")) p.substring(0, p.lastIndexOf('/')) + ":" + p.substring(p.lastIndexOf('/') + 1)
       else p))
+    assert(Main.findFrame(files, None, lit(true)).rdd.getNumPartitions == 1)
+    // a scan larger than one advisory partition splits into range
+    // partitions, each sorted, in key order
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "1024")
+    try {
+      assert(Main.findFrame(files, None, lit(true)).rdd.getNumPartitions > 1)
+      assert(enumerate(None, "/") == want)
+      assert(enumerate(Some("/d1"), "/") == want.filter(p => p == "/d1" || p.startsWith("/d1/")))
+    } finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("TimeFlags: durations, instants, and range predicate") {

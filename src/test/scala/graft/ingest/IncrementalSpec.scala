@@ -177,4 +177,29 @@ class IncrementalSpec extends SparkSpec {
     assert(sizeIn(res.entries) == Seq(1L)) // the previous row
     assert(sizeIn(fullWalk(root)) == Seq(6L)) // a full walk reads the file
   }
+
+  test("a change above the set limit tags by joins: counts and rows equal the literal sets'") {
+    val root = buildTree()
+    val prev = snapshotNow(root)
+    import scala.jdk.CollectionConverters._
+    // a deleted subtree (3 dirs, 9 files), an added file, and a new link
+    // to a file of a reused dir
+    Files.walk(root.resolve("d0-1")).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    Files.write(root.resolve("d0-0/d1-1/f-new"), "new".getBytes)
+    Files.createLink(root.resolve("d0-0/d1-1/link"), root.resolve("d0-0/d1-0/f2-0"))
+    val limit = 2
+    val w = Walker.rescan(spark, root.toString, Incremental.prevDirFrame(prev), Nil, 1, limit)
+    w.walk.unpersist(blocking = false)
+    assert(w.delta.sets.isEmpty && w.delta.staleDirs > limit)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val joined = Incremental.rescan(spark, root.toString, prev, Nil, 1, limit)
+    val literal = Incremental.rescan(spark, root.toString, prev, seedDepth = 1)
+    assert(joined.summary == literal.summary)
+    assert(joined.summary.prefixes_deleted == 3 && joined.summary.files_deleted == 9)
+    assert(rows(joined.entries) == rows(literal.entries))
+    assert(paths(joined.entries) == paths(fullWalk(root)))
+    val fresh = joined.entries.where(
+      org.apache.spark.sql.functions.col("path") === root.resolve("d0-0/d1-0/f2-0").toString)
+    assert(fresh.select("nlink").collect().map(_.getLong(0)).toSeq == Seq(2L))
+  }
 }

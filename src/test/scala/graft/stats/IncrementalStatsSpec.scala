@@ -160,7 +160,7 @@ class IncrementalStatsSpec extends SparkSpec {
   test("hardlink expansion: an added prefix's match, an untouched group beside a flip") {
     // group 5 spans /c (changed) and /x (unchanged): /c/l2 is canonical
     // before and gone after, so the canonical link flips to /x/l1; group 6
-    // spans /x and /y, both unchanged, so it cancels in the delta
+    // spans /x and /y, both unchanged, so a delta merge must cancel it
     val s = spark
     import s.implicits._
     val common = Seq(
@@ -182,15 +182,6 @@ class IncrementalStatsSpec extends SparkSpec {
       val inc = Stats.computeIncremental(Stats.compute(before, pm, em), before, after,
         Stats.changedPrefixesOf(before, after), pm, em)
       assertSameComputed(inc, Stats.compute(after, pm, em))
-    }
-  }
-
-  test("above the envelope the full compute answers, equal to the delta merge") {
-    val prev = Stats.compute(prevDf)
-    val changed = Stats.changedPrefixesOf(prevDf, newDf) // 3, and /keep by expansion
-    Seq(1, 3, 4).foreach { envelope =>
-      assertSameComputed(Stats.incremental(prev, prevDf, newDf, changed, lit(true), lit(true),
-        Calculator.Identity, countHardlinkDupsAsFiles = false, envelope), Stats.compute(newDf))
     }
   }
 
