@@ -210,8 +210,7 @@ object Main {
       case Some(prev) =>
         val r = graft.ingest.Incremental.rescan(spark, root, prev, o.excludes)
         println(s"incremental: ${r.summary}")
-        val errs = { import spark.implicits._; Seq.empty[graft.model.ScanError].toDF() }
-        Some(Snapshot.write(o.db, r.entries, errs))
+        Some(Snapshot.write(o.db, r.entries, r.errors))
       case None =>
         firstScan(spark, o.db, root, o.excludes, o.batchSize,
           o.maxBatches.getOrElse(Int.MaxValue))
@@ -710,10 +709,10 @@ object Main {
     val name = StatsArtifact.latestName(o.db).getOrElse("unknown")
     val dir = java.nio.file.Paths.get(outBase, name)
     writeReportTree(c, dir, o.n, idMaps)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outBase, "latest"), name)
+    val store = graft.ingest.Versioned(outBase, s"$outBase/latest")
+    store.flip(name)
     o.keep.foreach { k =>
-      val gone = graft.ingest.Retention.prune(outBase, k, protect = Some(name))
+      val gone = store.prune(k)
       if (gone.nonEmpty) println(s"pruned ${gone.size} report dirs")
     }
     println(s"reports written to $dir")
@@ -884,9 +883,8 @@ object Main {
           .filter(f => ext.forall(f.endsWith))
           .toSeq.sorted
         finally s.close()
-      // dir names are yyyyMMdd'T'HHmmss.SSS in UTC → RFC3339 report_time
-      val t = java.time.LocalDateTime.parse(name,
-        java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss.SSS"))
+      // dir names are version names (UTC) → RFC3339 report_time
+      val t = java.time.Instant.from(graft.ingest.Versioned.Name.parse(name))
         .atOffset(java.time.ZoneOffset.UTC)
         .format(java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME)
       s"""{"report_time":"${esc(t)}","report_dir":"${esc(name)}","files":[""" +

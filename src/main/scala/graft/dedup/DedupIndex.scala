@@ -1,11 +1,11 @@
 package graft.dedup
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneOffset}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.ingest.Versioned
 
 /** Persisted LSH dedup index: build once, admit many — the dedup
   * mirror of [[graft.similarity.IvfIndex]] (reference corpus-admission
@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * signature+banding scan of the WHOLE corpus on every run, which at
   * 100 TB makes continuous ingest impossible).
   *
-  * Layout mirrors [[graft.ingest.Snapshot]] (timestamped segment dirs
-  * + LATEST pointer + PARENT chain, object-store safe):
+  * `lsh/` and `lsh/LATEST` are a [[Versioned]] store, its segments
+  * chained by PARENT files:
   *
   * {{{
   * <base>/lsh/<ts>/postings/   (doc, bkeys, bucket) partitioned BY band
@@ -76,8 +76,7 @@ object DedupIndex {
         bytes.length, 42L))
   }
 
-  private val tsFmt = DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss.SSS")
-    .withZone(ZoneOffset.UTC)
+  private def store(base: String) = Versioned(s"$base/lsh", s"$base/lsh/LATEST")
 
   /** The per-doc band-key array for `p` — the SAME chains the inline
     * tiers declare ([[Dedup.minhashNearDupsMd5]] /
@@ -152,7 +151,7 @@ object DedupIndex {
     * shingle sets + frozen params; returns the segment name. */
   def build(base: String, df: DataFrame, textCol: String, idCol: String,
       p: Params = Params("md5", 16, 4, 3)): String = {
-    val name = newName(base)
+    val name = store(base).create()
     val dir = s"$base/lsh/$name"
     postingsOf(bandKeys(df, textCol, idCol, p), p.bands)
       .write.mode(SaveMode.ErrorIfExists).partitionBy("band")
@@ -161,7 +160,7 @@ object DedupIndex {
       .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/shingles")
     Files.write(Paths.get(dir, "PARAMS"),
       paramLines(p).getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-    writeLatest(base, name)
+    store(base).flip(name)
     name
   }
 
@@ -171,9 +170,9 @@ object DedupIndex {
     * rehashing is a new [[build]]). */
   def append(base: String, delta: DataFrame, textCol: String,
       idCol: String): String = {
-    val parent = resolve(base, None)
+    val parent = store(base).resolve(None)
     val p = params(base, Some(parent))
-    val name = newName(base)
+    val name = store(base).create(parent = Some(parent))
     val dir = s"$base/lsh/$name"
     postingsOf(bandKeys(delta, textCol, idCol, p), p.bands)
       .write.mode(SaveMode.ErrorIfExists).partitionBy("band")
@@ -182,9 +181,7 @@ object DedupIndex {
       .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/shingles")
     Files.write(Paths.get(dir, "PARAMS"),
       paramLines(p).getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-    Files.write(Paths.get(dir, "PARENT"), parent.getBytes("UTF-8"),
-      StandardOpenOption.CREATE_NEW)
-    writeLatest(base, name)
+    store(base).flip(name)
     name
   }
 
@@ -194,14 +191,14 @@ object DedupIndex {
     val p = params(base)
     val post = postings(spark, base)
     val sh = shingles(spark, base)
-    val name = newName(base)
+    val name = store(base).create()
     val dir = s"$base/lsh/$name"
     post.write.mode(SaveMode.ErrorIfExists).partitionBy("band")
       .parquet(s"$dir/postings")
     sh.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/shingles")
     Files.write(Paths.get(dir, "PARAMS"),
       paramLines(p).getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-    writeLatest(base, name)
+    store(base).flip(name)
     name
   }
 
@@ -211,14 +208,14 @@ object DedupIndex {
     * to match the probe side's posexplode position type. */
   def postings(spark: SparkSession, base: String,
       name: Option[String] = None): DataFrame =
-    chain(base, resolve(base, name))
+    store(base).chain(store(base).resolve(name))
       .map(n => spark.read.parquet(s"$base/lsh/$n/postings")
         .withColumn("band", col("band").cast("int")))
       .reduce(_ unionByName _)
 
   def shingles(spark: SparkSession, base: String,
       name: Option[String] = None): DataFrame =
-    chain(base, resolve(base, name))
+    store(base).chain(store(base).resolve(name))
       .map(n => spark.read.parquet(s"$base/lsh/$n/shingles"))
       .reduce(_ unionByName _)
 
@@ -230,7 +227,7 @@ object DedupIndex {
 
   def params(base: String, name: Option[String] = None): Params = {
     val lines = new String(Files.readAllBytes(
-      Paths.get(base, "lsh", resolve(base, name), "PARAMS")), "UTF-8")
+      Paths.get(base, "lsh", store(base).resolve(name), "PARAMS")), "UTF-8")
       .split("\n").map(_.trim).filter(_.contains("="))
       .map { l => val Array(a, b) = l.split("=", 2); a -> b }.toMap
     Params(lines("family"), lines("k").toInt, lines("bands").toInt,
@@ -294,47 +291,12 @@ object DedupIndex {
     drop.join(dup, drop(idCol) === dup("doc_new"), "left_anti")
   }
 
-  /** The segment chain for `name` (itself first, then ancestors). */
-  private def chain(base: String, name: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer(name)
-    var cur = name
-    var p = Paths.get(base, "lsh", cur, "PARENT")
-    while (Files.exists(p)) {
-      cur = new String(Files.readAllBytes(p), "UTF-8").trim
-      out += cur
-      p = Paths.get(base, "lsh", cur, "PARENT")
-    }
-    out.toSeq
-  }
+  def latestName(base: String): Option[String] = store(base).latest
 
-  def latestName(base: String): Option[String] =
-    graft.ingest.Snapshot.readPointer(Paths.get(base, "lsh", "LATEST"))
+  /** Index segments, newest first. */
+  def candidates(base: String): Seq[String] = store(base).candidates
 
-  /** Timestamped segment candidates, newest first / retention. The
-    * LATEST chain is protected, as in IvfIndex.prune. */
-  def candidates(base: String): Seq[String] =
-    graft.ingest.Retention.candidates(s"$base/lsh")
-  def prune(base: String, keep: Int): Seq[String] =
-    graft.ingest.Retention.pruneAll(s"$base/lsh", keep,
-      latestName(base).toSeq.flatMap(chain(base, _)).toSet)
-
-  /** Point LATEST at `name` atomically (temp file + rename): a crash
-    * or a concurrent reader never sees an empty pointer. */
-  private[dedup] def writeLatest(base: String, name: String): Unit =
-    graft.ingest.Snapshot.writePointer(Paths.get(base, "lsh", "LATEST"), name)
-
-  /** Millis-resolution names can collide under rapid build/append —
-    * spin until the timestamp ticks past any existing dir. */
-  private def newName(base: String): String = {
-    var n = tsFmt.format(Instant.now())
-    while (Files.exists(Paths.get(base, "lsh", n))) {
-      Thread.sleep(1)
-      n = tsFmt.format(Instant.now())
-    }
-    n
-  }
-
-  private def resolve(base: String, name: Option[String]): String =
-    name.orElse(latestName(base)).getOrElse(
-      throw new IllegalStateException(s"no LSH dedup index under $base"))
+  /** Retention keeps the latest segment's whole chain, as in
+    * IvfIndex.prune. */
+  def prune(base: String, keep: Int): Seq[String] = store(base).prune(keep)
 }

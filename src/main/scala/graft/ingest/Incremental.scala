@@ -31,10 +31,11 @@ import org.apache.spark.sql.functions._
   *      row whose parent is not among the stale dirs is reused (with
   *      the fresh link count of any walked link to the same (device,
   *      inode)), one whose path was walked again is rescanned, any
-  *      other is deleted. The walked rows and the tagged rows are
-  *      cached once by the job that counts the tags (one job), so
-  *      [[Snapshot.write]] of [[Result.entries]] reads them instead of
-  *      walking or scanning again. A change above the limit (an
+  *      other is deleted. The walked rows, the tagged rows and the
+  *      walk's error rows are cached once by the job that counts the
+  *      tags (one job), so [[Snapshot.write]] of [[Result.entries]]
+  *      and [[Result.errors]] reads them instead of walking or
+  *      scanning again. A change above the limit (an
   *      `rm -rf` or `chmod -R` of a big subtree) tags by the same rule
   *      with three joins against the walk's cached output instead,
   *      which shuffle the previous snapshot's file rows.
@@ -60,7 +61,10 @@ object Incremental {
       files_reused: Long,
       files_deleted: Long)
 
-  final case class Result(entries: DataFrame, summary: ChangeSummary)
+  /** @param errors the walk's [[graft.model.ScanError]] rows (a dir
+    *   that vanished or could not be listed), cached by the same job
+    *   as `entries` */
+  final case class Result(entries: DataFrame, summary: ChangeSummary, errors: DataFrame)
 
   /** The previous snapshot's dir rows in the walker's DirMeta shape —
     * stays a DataFrame; the walker ships per-seed slices of it to
@@ -76,6 +80,7 @@ object Incremental {
   private val Reused = 1
   private val Rescanned = 2
   private val Deleted = 3
+  private val Errors = 4 // not a row tag: counts the walk's error rows
 
   /** Re-scan `root` against the previous snapshot's entries. */
   def rescan(spark: SparkSession, root: String, prev: DataFrame,
@@ -126,9 +131,11 @@ object Incremental {
         if (c == "nlink") coalesce(fresh, col("nlink")).as(c) else col(c)) :+
         src.as("src"): _*))
       .persist()
-    // the one job: fills the cache and counts the previous rows by tag
+    val errors = w.records.flatMap(_.error).toDF().persist()
+    // the one job: fills both caches and counts the previous rows by tag
     val bySrc = rows.select(col("src")).as[Int].rdd
-      .aggregate(new Array[Long](4))((a, s) => { a(s) += 1; a },
+      .union(errors.select(lit(Errors)).as[Int].rdd)
+      .aggregate(new Array[Long](5))((a, s) => { a(s) += 1; a },
         (a, b) => { a.indices.foreach(i => a(i) += b(i)); a })
     w.walk.unpersist(blocking = false)
 
@@ -140,6 +147,6 @@ object Incremental {
       files_rescanned = d.walkedFiles,
       files_reused = bySrc(Reused),
       files_deleted = bySrc(Deleted))
-    Result(rows.where(col("src") <= Reused).drop("src"), summary)
+    Result(rows.where(col("src") <= Reused).drop("src"), summary, errors)
   }
 }

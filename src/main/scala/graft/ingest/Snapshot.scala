@@ -1,9 +1,6 @@
 package graft.ingest
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneOffset}
+import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -27,12 +24,10 @@ import graft.model.{FileEntry, ScanError, ScanLog}
   * <base>/LATEST                        text file: name of newest snapshot
   * }}}
   *
-  * A timestamped-directory-plus-LATEST-pointer works on any Hadoop
-  * filesystem (HDFS/S3/GCS have no symlinks). Writers produce a whole
-  * new snapshot dir, summary included, then flip LATEST atomically (a
-  * temp file renamed over it) — readers never see a partial snapshot
-  * or an empty pointer (the reference gets the same property from
-  * Badger transactions).
+  * `snapshots/` and `LATEST` are a [[Versioned]] store: a writer
+  * produces a whole new snapshot dir, summary included, then flips
+  * LATEST, so readers never see a partial snapshot (the reference gets
+  * the same property from Badger transactions).
   *
   * Every read pins its table's schema, so opening a snapshot runs no
   * schema-inference job; a part file lacking a pinned column fails the
@@ -40,8 +35,7 @@ import graft.model.{FileEntry, ScanError, ScanLog}
   */
 object Snapshot {
 
-  private val tsFmt = DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss.SSS")
-    .withZone(ZoneOffset.UTC)
+  private def store(base: String) = Versioned(s"$base/snapshots", s"$base/LATEST")
 
   /** Pinned schemas of the files, errors and scan-log tables. */
   val FilesSchema: StructType = nullable(Encoders.product[FileEntry].schema)
@@ -74,7 +68,7 @@ object Snapshot {
     * a retried task counts once; it lands in the snapshot dir before
     * the flip. */
   def write(base: String, files: DataFrame, errors: DataFrame): String = {
-    val name = tsFmt.format(Instant.now())
+    val name = store(base).create()
     val dir = s"$base/snapshots/$name"
     def n(c: org.apache.spark.sql.Column) = coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
     val obs = Observation()
@@ -96,7 +90,7 @@ object Snapshot {
     val m = obs.get ++ errObs.get
     Files.writeString(Paths.get(dir, SummaryFile),
       summaryFields.map(f => s""""$f": ${m(f)}""").mkString("{", ", ", "}\n"))
-    writePointer(Paths.get(base, "LATEST"), name)
+    store(base).flip(name)
     name
   }
 
@@ -111,23 +105,17 @@ object Snapshot {
     Summary(files, dirs, bytes, rows, nullKeys, violations, errors)
   }
 
-  def latestName(base: String): Option[String] = readPointer(Paths.get(base, "LATEST"))
+  def latestName(base: String): Option[String] = store(base).latest
 
-  /** All snapshots, newest first (reference reports.go:268-282's
-    * candidate listing, applied to snapshots). */
-  def candidates(base: String): Seq[String] =
-    Retention.candidates(s"$base/snapshots")
+  /** All snapshots, newest first. */
+  def candidates(base: String): Seq[String] = store(base).candidates
 
   /** Keep the newest `keep` snapshots (the LATEST target always
-    * survives); returns deleted names. Reference reports.go:284-296. */
-  def prune(base: String, keep: Int): Seq[String] =
-    Retention.prune(s"$base/snapshots", keep, protect = latestName(base))
+    * survives); returns deleted names. */
+  def prune(base: String, keep: Int): Seq[String] = store(base).prune(keep)
 
-  private def snapshotDir(base: String, snapshot: Option[String]): String = {
-    val name = snapshot.orElse(latestName(base)).getOrElse(
-      throw new IllegalStateException(s"no snapshot under $base"))
-    s"$base/snapshots/$name"
-  }
+  private def snapshotDir(base: String, snapshot: Option[String]): String =
+    s"$base/snapshots/${store(base).resolve(snapshot)}"
 
   def readFiles(spark: SparkSession, base: String, snapshot: Option[String] = None): DataFrame =
     readPinned(spark, s"${snapshotDir(base, snapshot)}/files", FilesSchema)
@@ -167,17 +155,4 @@ object Snapshot {
         s" missing or mistyped in ${found.simpleString}")
     spark.read.schema(schema).parquet(dir)
   }
-
-  /** Point the pointer file `p` at `name` atomically: write a temp file
-    * beside it, then rename it over `p`. A reader sees the old name or
-    * the new one, never an empty or partial file. */
-  private[graft] def writePointer(p: Path, name: String): Unit = {
-    Files.createDirectories(p.getParent)
-    val tmp = Files.createTempFile(p.getParent, p.getFileName.toString, ".tmp")
-    Files.write(tmp, name.getBytes(UTF_8))
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private[graft] def readPointer(p: Path): Option[String] =
-    if (Files.exists(p)) Some(new String(Files.readAllBytes(p), UTF_8).trim) else None
 }

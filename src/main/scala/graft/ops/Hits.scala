@@ -74,9 +74,9 @@ object Hits {
     val nNodes = maxDegRow.getLong(1)
     def scoreSide(df: DataFrame): DataFrame =
       Bfs.bcastIfSmall(df, nNodes)
-    // NOTE (r13, measured and KEPT OUT — tools/HitsVariantProbe, ×100
-    // hub-replicated graph, 4 alternating reps): lazily checkpointing
-    // the raw-sum frame before the renorm crossJoin looks like it
+    // NOTE (r13, measured and KEPT OUT — BENCH_NOTES_r13.md "Loop-shape
+    // A/Bs at x100", hub-replicated graph, 4 alternating reps): lazily
+    // checkpointing the raw-sum frame before the renorm crossJoin looks like it
     // should halve the joins (the subtree sits under both the
     // crossJoin's stream side and the broadcast-max branch), but it
     // measured 56-114 s vs 56-75 s for THIS shape. The un-checkpointed

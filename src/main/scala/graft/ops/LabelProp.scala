@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * no-window argmax used by dedup/fuzzy-join; `localCheckpoint`
   * truncates lineage per round.
   *
-  * Measured and KEPT OUT (r13, tools/LpVariantProbe, ×100
+  * Measured and KEPT OUT (r13, BENCH_NOTES_r13.md "Loop-shape A/Bs", ×100
   * hub-replicated co-purchase graph, 4 alternating same-JVM reps):
   *   - `mode(label, deterministic = true)` — semantically identical
   *     (smallest among most frequent, pinned in LabelPropSpec) and one

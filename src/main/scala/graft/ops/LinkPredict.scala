@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   * pair stream reaches the final (u,v) exchange already partially
   * aggregated. Per-row list size is bounded by the cap. The self-join
   * form ([[raJoin]]) is kept for the equivalence spec and the
-  * same-session A/B (tools/AbLinkPredict, sf0.1: copurchase graph
+  * same-session A/B (r13, sf0.1: copurchase graph
   * neutral at 0.63–0.65 s both forms; hub-skewed graph 0.72 s agg vs
   * 0.84 s join — and the gap widens with hub degree, since the join
   * form shuffles the raw wedge stream where this form pre-aggregates).
@@ -104,8 +104,7 @@ object LinkPredict {
 
   /** The self-join form (shuffle_hash on the shared neighbor) — kept
     * as the A/B twin and the spec's independent reference plan;
-    * content-identical to [[ra]] (asserted in LinkPredictSpec and
-    * tools/AbLinkPredict). */
+    * content-identical to [[ra]] (asserted in LinkPredictSpec). */
   def raJoin(edges: DataFrame, degCap: Int = DefaultDegCap): DataFrame = {
     val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
     val adj = e.select(col("src").as("u"), col("dst").as("w"))

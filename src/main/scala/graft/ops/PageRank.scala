@@ -36,7 +36,7 @@ object PageRank {
     // NO size-derived coalesce here, deliberately (r13): PageRank's
     // contrib sums are DOUBLES, so changing the edge frame's
     // partition boundaries changes the floating-point summation
-    // order — HitsVariantProbe's parity gate caught the ranks
+    // order — a ×100 parity gate (BENCH_NOTES_r13.md) caught the ranks
     // diverging in the low-order bits the moment a coalesce landed,
     // and the declared q_pagerank must replay bit-stably against its
     // oracle run-to-run. The integer-grid loops (Hits, KCore,
@@ -66,7 +66,7 @@ object PageRank {
                                 // iteration was pure overhead (no
                                 // exchange reuse at stake: r's only
                                 // consumer is the next broadcast).
-                                // HitsVariantProbe ×100: median 14.8
+                                // ×100 (BENCH_NOTES_r13.md): median 14.8
                                 // vs 18.5 s, better in 3 of 4 reps.
     }
     r

@@ -458,7 +458,7 @@ object Analytics {
     // one pair aggregate; the year-over-year compare is a full-outer
     // join of two edge sets (8-byte keyed), nothing quadratic.
     "q_graph_churn" -> ((s, dir) => {
-      // r13, measured and KEPT OUT (tools/ChurnProbe, sf0.1, 4
+      // r13, measured and KEPT OUT (BENCH_NOTES_r13.md, sf0.1, 4
       // alternating same-JVM reps): the per-(yr, order) collect_set +
       // map-side pair emission (the copurchaseEdges rewrite) measured
       // 2.6-2.8 s vs 1.8-2.6 s for THIS self-join build. Unlike
@@ -2127,7 +2127,7 @@ object Analytics {
     // neighbor lists (the Triangles adjacency lesson — one Σ deg
     // shuffle of the adjacency, the Σ deg² pair stream reaches its
     // exchange partially aggregated; A/B vs the shuffle_hash self-join
-    // in ops/LinkPredict + tools/AbLinkPredict). Existing edges leave
+    // in ops/LinkPredict's scaladoc). Existing edges leave
     // via LEFT ANTI; top-20 by (score, u, v) is one TakeOrdered.
     // Hub-skew scale curve: ScaleCheck link_predict.
     "q_link_predict" -> ((s, dir) => {

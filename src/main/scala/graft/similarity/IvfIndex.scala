@@ -1,19 +1,17 @@
 package graft.similarity
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
-import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneOffset}
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.ingest.Versioned
 
 /** Persisted IVF index: build once, probe many — the missing half of
   * ANN at scale (rebuilding the index per query, as the inline
   * [[Similarity.ivfTopK]] demo does, re-pays the full assignment scan
   * every time).
   *
-  * Layout mirrors [[graft.ingest.Snapshot]] (timestamped dirs + LATEST
-  * pointer, object-store safe):
+  * `ivf/` and `ivf/LATEST` are a [[Versioned]] store, its versions
+  * chained by PARENT files:
   *
   * {{{
   * <base>/ivf/<ts>/centroids/   c rows: (centroid_id, cvec)
@@ -26,12 +24,11 @@ import org.apache.spark.sql.functions._
   * corpus files and Spark never even lists the rest. That turns query
   * cost from O(corpus) to O(corpus × nprobe/c) at the storage layer —
   * the property that makes 100 TB of embeddings probe-able
-  * interactively. Retention/pruning reuse the snapshot machinery.
+  * interactively.
   */
 object IvfIndex {
 
-  private val tsFmt = DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss.SSS")
-    .withZone(ZoneOffset.UTC)
+  private def store(base: String) = Versioned(s"$base/ivf", s"$base/ivf/LATEST")
 
   /** Train centroids, assign the corpus, persist both; returns the
     * index name. One distributed assignment pass (see
@@ -41,13 +38,13 @@ object IvfIndex {
     val cents = Similarity.ivfCentroids(corpus, vecCol, idCol, c,
       iters = iters, trainPct = trainPct)
     val assigned = Similarity.ivfAssign(corpus, vecCol, idCol, cents)
-    val name = newName(base)
+    val name = store(base).create()
     val dir = s"$base/ivf/$name"
     cents.coalesce(1).write.mode(SaveMode.ErrorIfExists)
       .parquet(s"$dir/centroids")
     assigned.write.mode(SaveMode.ErrorIfExists)
       .partitionBy("centroid_id").parquet(s"$dir/assigned")
-    flipLatest(base, name)
+    store(base).flip(name)
     name
   }
 
@@ -62,18 +59,16 @@ object IvfIndex {
     * Call [[compact]] when the chain grows long. */
   def append(base: String, delta: DataFrame, vecCol: String,
       idCol: String): String = {
-    val parent = resolve(base, None)
+    val parent = store(base).resolve(None)
     val cents = centroids(base = base, spark = delta.sparkSession)
     val assignedDelta = Similarity.ivfAssign(delta, vecCol, idCol, cents)
-    val name = newName(base)
+    val name = store(base).create(parent = Some(parent))
     val dir = s"$base/ivf/$name"
     cents.coalesce(1).write.mode(SaveMode.ErrorIfExists)
       .parquet(s"$dir/centroids")
     assignedDelta.write.mode(SaveMode.ErrorIfExists)
       .partitionBy("centroid_id").parquet(s"$dir/assigned")
-    Files.write(Paths.get(dir, "PARENT"), parent.getBytes("UTF-8"),
-      StandardOpenOption.CREATE_NEW)
-    flipLatest(base, name)
+    store(base).flip(name)
     name
   }
 
@@ -83,40 +78,21 @@ object IvfIndex {
   def compact(spark: SparkSession, base: String): String = {
     val cents = centroids(spark, base)
     val all = assigned(spark, base)
-    val name = newName(base)
+    val name = store(base).create()
     val dir = s"$base/ivf/$name"
     cents.coalesce(1).write.mode(SaveMode.ErrorIfExists)
       .parquet(s"$dir/centroids")
     all.write.mode(SaveMode.ErrorIfExists)
       .partitionBy("centroid_id").parquet(s"$dir/assigned")
-    flipLatest(base, name)
+    store(base).flip(name)
     name
   }
 
-  /** The segment chain for `name` (itself first, then ancestors). */
-  private def chain(base: String, name: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer(name)
-    var cur = name
-    var p = Paths.get(base, "ivf", cur, "PARENT")
-    while (Files.exists(p)) {
-      cur = new String(Files.readAllBytes(p), "UTF-8").trim
-      out += cur
-      p = Paths.get(base, "ivf", cur, "PARENT")
-    }
-    out.toSeq
-  }
-
-  def latestName(base: String): Option[String] =
-    graft.ingest.Snapshot.readPointer(Paths.get(base, "ivf", "LATEST"))
-
-  /** Point LATEST at `name` atomically (temp file + rename): a crash
-    * or a concurrent reader never sees an empty pointer. */
-  private[similarity] def flipLatest(base: String, name: String): Unit =
-    graft.ingest.Snapshot.writePointer(Paths.get(base, "ivf", "LATEST"), name)
+  def latestName(base: String): Option[String] = store(base).latest
 
   def centroids(spark: SparkSession, base: String,
       name: Option[String] = None): DataFrame =
-    spark.read.parquet(s"$base/ivf/${resolve(base, name)}/centroids")
+    spark.read.parquet(s"$base/ivf/${store(base).resolve(name)}/centroids")
 
   /** The corpus view of an index = the union of its segment chain
     * (one dir for a built/compacted index). `centroid_id` stays a
@@ -124,7 +100,7 @@ object IvfIndex {
     * prune directories in each before any file I/O. */
   def assigned(spark: SparkSession, base: String,
       name: Option[String] = None): DataFrame =
-    chain(base, resolve(base, name))
+    store(base).chain(store(base).resolve(name))
       .map(n => spark.read.parquet(s"$base/ivf/$n/assigned")
         // partition-dir values read back as int; pin the write-side type
         .withColumn("centroid_id", col("centroid_id").cast("long")))
@@ -144,28 +120,10 @@ object IvfIndex {
     Similarity.topK(cand, vecCol, idCol, query, k)
   }
 
-  /** Timestamped index candidates, newest first / retention. */
-  def candidates(base: String): Seq[String] =
-    graft.ingest.Retention.candidates(s"$base/ivf")
-  /** Retention must never sever the LATEST chain: every ancestor
-    * segment of the latest index is protected, not just LATEST
-    * itself. */
-  def prune(base: String, keep: Int): Seq[String] =
-    graft.ingest.Retention.pruneAll(s"$base/ivf", keep,
-      latestName(base).toSeq.flatMap(chain(base, _)).toSet)
+  /** Index versions, newest first. */
+  def candidates(base: String): Seq[String] = store(base).candidates
 
-  /** Millis-resolution names can collide under rapid build/append —
-    * spin until the timestamp ticks past any existing dir. */
-  private def newName(base: String): String = {
-    var n = tsFmt.format(Instant.now())
-    while (Files.exists(Paths.get(base, "ivf", n))) {
-      Thread.sleep(1)
-      n = tsFmt.format(Instant.now())
-    }
-    n
-  }
-
-  private def resolve(base: String, name: Option[String]): String =
-    name.orElse(latestName(base)).getOrElse(
-      throw new IllegalStateException(s"no IVF index under $base"))
+  /** Retention never severs the LATEST chain: every ancestor segment
+    * of the latest index survives, not just LATEST itself. */
+  def prune(base: String, keep: Int): Seq[String] = store(base).prune(keep)
 }

@@ -1,23 +1,21 @@
 package graft.stats
 
 import java.nio.file.{Files, Paths}
-import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneOffset}
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.ingest.Snapshot
+import graft.ingest.{Snapshot, Versioned}
 
 /** Persisted stats artifact (reference `.idustats` gob files +
   * `latest` symlink, stats.go:31-82): each `stats compute` writes a
   * timestamped directory holding ONE parquet table — [[Stats.Computed]]'s
   * grouping-sets table, [[Stats.TableSchema]], in one write job — plus
-  * a metadata JSON, and flips a LATEST pointer atomically. `stats view`
-  * / `reports generate` read the artifact without recomputing — same
-  * compute-once/view-many contract as the reference, in an
-  * object-store-safe layout.
+  * a metadata JSON, and flips LATEST; `stats/` and `stats/LATEST` are
+  * a [[Versioned]] store. `stats view` / `reports` read the artifact
+  * without recomputing — same compute-once/view-many contract as the
+  * reference.
   *
   * {{{
   * <base>/stats/<ts>/table/      the grouping-sets table
@@ -31,14 +29,13 @@ import graft.ingest.Snapshot
   */
 object StatsArtifact {
 
-  private val tsFmt = DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss.SSS")
-    .withZone(ZoneOffset.UTC)
+  private def store(base: String) = Versioned(s"$base/stats", s"$base/stats/LATEST")
 
   final case class Meta(prefix: String, expression: String, date: String)
 
   def write(base: String, computed: Stats.Computed, prefix: String,
       expression: String): String = {
-    val name = tsFmt.format(Instant.now())
+    val name = store(base).create()
     val dir = s"$base/stats/$name"
     computed.table
       .select(Stats.TableSchema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
@@ -46,21 +43,18 @@ object StatsArtifact {
     def j(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     Files.writeString(Paths.get(dir, "meta.json"),
       s"""{"prefix": ${j(prefix)}, "expression": ${j(expression)}, "date": ${j(name)}}""")
-    Snapshot.writePointer(Paths.get(base, "stats", "LATEST"), name)
+    store(base).flip(name)
     name
   }
 
-  def latestName(base: String): Option[String] =
-    Snapshot.readPointer(Paths.get(base, "stats", "LATEST"))
+  def latestName(base: String): Option[String] = store(base).latest
 
   /** All artifacts, newest first. */
-  def candidates(base: String): Seq[String] =
-    graft.ingest.Retention.candidates(s"$base/stats")
+  def candidates(base: String): Seq[String] = store(base).candidates
 
   /** Keep the newest `keep` artifacts (LATEST target survives);
-    * returns deleted names. Reference reports.go:284-296 semantics. */
-  def prune(base: String, keep: Int): Seq[String] =
-    graft.ingest.Retention.prune(s"$base/stats", keep, protect = latestName(base))
+    * returns deleted names. */
+  def prune(base: String, keep: Int): Seq[String] = store(base).prune(keep)
 
   /** The frame tables of the pre-one-table layout, in
     * [[Stats.frameKeys]] order. The two per-(id, prefix) tables came
@@ -71,9 +65,7 @@ object StatsArtifact {
   /** The artifact's table under its pinned schema — no Spark job. */
   def read(spark: SparkSession, base: String,
       name: Option[String] = None): Stats.Computed = {
-    val n = name.orElse(latestName(base)).getOrElse(
-      throw new IllegalStateException(s"no stats artifact under $base"))
-    val dir = s"$base/stats/$n"
+    val dir = s"$base/stats/${store(base).resolve(name)}"
     if (Files.exists(Paths.get(dir, "table")))
       Stats.Computed(Snapshot.readPinned(spark, s"$dir/table", Stats.TableSchema))
     else Stats.Computed(legacyTables.zip(Stats.frameKeys)

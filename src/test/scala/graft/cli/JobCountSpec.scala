@@ -87,10 +87,7 @@ class JobCountSpec extends SparkSpec {
     Files.write(root.resolve("d0-0/d1-1/f-new"), "new".getBytes)
     val (res, rescan) = jobsIn(Incremental.rescan(spark, root.toString, prev, seedDepth = 1))
     assert(res.summary.prefixes_changed == 1)
-    val s = spark
-    import s.implicits._
-    val errs = Seq.empty[graft.model.ScanError].toDF()
-    val (_, rescanWrite) = jobsIn(Snapshot.write(db, res.entries, errs))
+    val (_, rescanWrite) = jobsIn(Snapshot.write(db, res.entries, res.errors))
 
     val prevFiles = Snapshot.readFiles(spark, db, Some(prevName))
     val files = Snapshot.readFiles(spark, db)

@@ -2,7 +2,6 @@ package graft.cli
 
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.FileTime
-import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.spark.sql.functions.col
 
@@ -11,8 +10,9 @@ import graft.ingest.{Incremental, Snapshot}
 import graft.model.ScanError
 
 /** The snapshot's contracts beyond its rows: pinned schemas that the
-  * writers keep and the readers enforce, the summary observed on the
-  * write, and an atomic LATEST pointer. */
+  * writers keep and the readers enforce, and the summary observed on
+  * the write. Its LATEST pointer is a [[graft.ingest.Versioned]] store's,
+  * covered by RetentionSpec. */
 class SnapshotSpec extends SparkSpec {
 
   /** Two levels, two subdirs and three files per dir, a hardlink, old mtimes. */
@@ -111,26 +111,5 @@ class SnapshotSpec extends SparkSpec {
     assert((nFiles, nDirs, bytes) == ((s.files, s.dirs, s.bytes)))
     assert(q == s.quality)
     assert(out.toString.contains(s"quality[analyze]: rows=${s.rows} null_keys=0 violations=0"))
-  }
-
-  test("LATEST flips are atomic: a reader never sees an empty or partial name") {
-    val base = Files.createTempDirectory("graft-latest")
-    val p = base.resolve("LATEST")
-    val names = (0 until 1000).map(i => f"20260101T000000.$i%03d")
-    Snapshot.writePointer(p, names.head)
-    val done = new AtomicBoolean(false)
-    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
-    val reader = new Thread(() => {
-      while (!done.get()) seen += Snapshot.readPointer(p).get
-    })
-    reader.start()
-    try names.foreach(Snapshot.writePointer(p, _))
-    finally { done.set(true); reader.join() }
-    assert(seen.nonEmpty)
-    val bad = seen.filterNot(names.toSet)
-    assert(bad.isEmpty, s"reader saw ${bad.take(3)}")
-    assert(Snapshot.readPointer(p).contains(names.last))
-    // no temp file is left beside the pointer
-    assert(Files.list(base).count() == 1L)
   }
 }

@@ -202,4 +202,24 @@ class IncrementalSpec extends SparkSpec {
       org.apache.spark.sql.functions.col("path") === root.resolve("d0-0/d1-0/f2-0").toString)
     assert(fresh.select("nlink").collect().map(_.getLong(0)).toSeq == Seq(2L))
   }
+
+  test("a child dir that vanished under a reused dir is recorded in the snapshot's errors") {
+    val root = buildTree()
+    val prev = snapshotNow(root)
+    import scala.jdk.CollectionConverters._
+    val dir = root.resolve("d0-0")
+    val dirMtime = Files.getLastModifiedTime(dir)
+    Files.walk(dir.resolve("d1-0")).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    Files.setLastModifiedTime(dir, dirMtime)
+    // d0-0 is reused, so its child list comes from the previous snapshot
+    // and the walk tries the vanished d1-0
+    val res = Incremental.rescan(spark, root.toString, prev, seedDepth = 1)
+    assert(res.summary.prefixes_changed == 0)
+    val db = Files.createTempDirectory("graft-incr-db").toString
+    Snapshot.write(db, res.entries, res.errors)
+    val errs = Snapshot.readErrors(spark, db).select("path").collect().map(_.getString(0))
+    assert(errs.toSeq == Seq(dir.resolve("d1-0").toString))
+    assert(Snapshot.summary(db).errors == 1L)
+    assert(paths(res.entries) == paths(fullWalk(root)))
+  }
 }
