@@ -2,17 +2,17 @@ package graft.cli
 
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.FileTime
+import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
-import graft.ingest.{Incremental, Snapshot}
+import graft.ingest.{Incremental, Snapshot, Versioned}
 import graft.model.ScanError
 
 /** The snapshot's contracts beyond its rows: pinned schemas that the
-  * writers keep and the readers enforce, and the summary observed on
-  * the write. Its LATEST pointer is a [[graft.ingest.Versioned]] store's,
-  * covered by RetentionSpec. */
+  * writers keep and the readers enforce, the summary observed on the
+  * write, and an atomic LATEST pointer. */
 class SnapshotSpec extends SparkSpec {
 
   /** Two levels, two subdirs and three files per dir, a hardlink, old mtimes. */
@@ -111,5 +111,27 @@ class SnapshotSpec extends SparkSpec {
     assert((nFiles, nDirs, bytes) == ((s.files, s.dirs, s.bytes)))
     assert(q == s.quality)
     assert(out.toString.contains(s"quality[analyze]: rows=${s.rows} null_keys=0 violations=0"))
+  }
+
+  test("LATEST flips are atomic: a reader never sees an empty or partial name") {
+    val base = Files.createTempDirectory("graft-latest")
+    // the store at the snapshot layout; reads go through Snapshot itself
+    val store = Versioned(base.resolve("snapshots").toString, base.resolve("LATEST").toString)
+    val names = (0 until 1000).map(i => f"20260101T000000.$i%03d")
+    store.flip(names.head)
+    val done = new AtomicBoolean(false)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Option[String]]
+    val reader = new Thread(() => {
+      while (!done.get()) seen += Snapshot.latestName(base.toString)
+    })
+    reader.start()
+    try names.foreach(store.flip)
+    finally { done.set(true); reader.join() }
+    assert(seen.nonEmpty)
+    val bad = seen.filterNot(_.exists(names.toSet))
+    assert(bad.isEmpty, s"reader saw ${bad.take(3)}")
+    assert(Snapshot.latestName(base.toString).contains(names.last))
+    // no temp file is left beside the pointer
+    assert(Files.list(base).count() == 1L)
   }
 }

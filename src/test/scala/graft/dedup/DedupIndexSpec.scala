@@ -179,4 +179,26 @@ class DedupIndexSpec extends SparkSpec {
     assert(h1 == DedupIndex.fileFp(new java.io.File(base)))
     assert(h1 != DedupIndex.fileFp(new java.io.File(base + "x")))
   }
+
+  test("LATEST flips are atomic: a reader never sees an empty or partial name") {
+    val base = java.nio.file.Files.createTempDirectory("graft-lsh-latest").toString
+    // the store at the index layout; reads go through DedupIndex itself
+    val store = graft.ingest.Versioned(s"$base/lsh", s"$base/lsh/LATEST")
+    val names = (0 until 1000).map(i => f"20260101T000000.$i%03d")
+    store.flip(names.head)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Option[String]]
+    val reader = new Thread(() => {
+      while (!done.get()) seen += DedupIndex.latestName(base)
+    })
+    reader.start()
+    try names.foreach(store.flip)
+    finally { done.set(true); reader.join() }
+    assert(seen.nonEmpty)
+    val bad = seen.filterNot(_.exists(names.toSet))
+    assert(bad.isEmpty, s"reader saw ${bad.take(3)}")
+    assert(DedupIndex.latestName(base).contains(names.last))
+    // no temp file is left beside the pointer
+    assert(java.nio.file.Files.list(java.nio.file.Paths.get(base, "lsh")).count() == 1L)
+  }
 }
