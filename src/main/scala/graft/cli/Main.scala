@@ -207,10 +207,7 @@ object Main {
         Snapshot.readFiles(spark, o.db))
       else None
     val nameOpt = prevSnapshot match {
-      case Some(prev) =>
-        val r = graft.ingest.Incremental.rescan(spark, root, prev, o.excludes)
-        println(s"incremental: ${r.summary}")
-        Some(Snapshot.write(o.db, r.entries, r.errors))
+      case Some(prev) => Some(incrementalScan(spark, o.db, root, prev, o.excludes))
       case None =>
         firstScan(spark, o.db, root, o.excludes, o.batchSize,
           o.maxBatches.getOrElse(Int.MaxValue))
@@ -390,14 +387,16 @@ object Main {
       work match {
         case Some(w) =>
           val p = s"$w/${stage}_$fp"
+          // pinned-schema reads: a schema-less read infers it in a job
           if (new java.io.File(s"$p/_SUCCESS").exists()) {
             println(s"quality[$stage]: resumed from $p")
-            spark.read.parquet(p)
+            // every stage filters rows of the corpus: its schema
+            Snapshot.readPinned(spark, p, docs.schema)
           } else {
             val (df, obs) = compute
             df.write.mode("overwrite").parquet(p)
             println(qualityLine(stage, obs.get))
-            spark.read.parquet(p)
+            spark.read.schema(df.schema).parquet(p)
           }
         case None =>
           val (df, obs) = compute
@@ -479,6 +478,16 @@ object Main {
       kept3.count(), shards, bad, stageSecs.toList)
   }
 
+  /** Incremental path of `analyze`: rescan `root` against the previous
+    * snapshot `prev`, write the new snapshot, then release the
+    * rescan's caches. Returns the snapshot name. */
+  private[graft] def incrementalScan(spark: SparkSession, db: String, root: String,
+      prev: DataFrame, excludes: Seq[String]): String = {
+    val r = graft.ingest.Incremental.rescan(spark, root, prev, excludes)
+    println(s"incremental: ${r.summary}")
+    try Snapshot.write(db, r.entries, r.errors) finally r.release()
+  }
+
   /** First-scan path of `analyze`: resumable walk (per-seed-batch
     * checkpoints under `<db>/_frontier` — a killed analyze picks up at
     * the first uncommitted batch, reference analyze.go:82-87) with
@@ -489,7 +498,7 @@ object Main {
     * resumes — a partial tree must never masquerade as a snapshot.
     * The frontier is dropped only after the snapshot is durably
     * written. */
-  private[cli] def firstScan(spark: SparkSession, db: String, root: String,
+  private[graft] def firstScan(spark: SparkSession, db: String, root: String,
       excludes: Seq[String], batchSize: Int = 256,
       maxBatches: Int = Int.MaxValue): Option[String] = {
     val progress = new Walker.WalkProgress(spark)
@@ -506,7 +515,8 @@ object Main {
     } else {
       val res = Walker.Result(out.records)
       res.records.cache()
-      val written = Snapshot.write(db, res.entries.toDF(), res.errors.toDF())
+      val written = try Snapshot.write(db, res.entries.toDF(), res.errors.toDF())
+        finally res.records.unpersist(blocking = false)
       ResumableWalk.clear(frontier)
       Some(written)
     }

@@ -63,8 +63,15 @@ object Incremental {
 
   /** @param errors the walk's [[graft.model.ScanError]] rows (a dir
     *   that vanished or could not be listed), cached by the same job
-    *   as `entries` */
-  final case class Result(entries: DataFrame, summary: ChangeSummary, errors: DataFrame)
+    *   as `entries`
+    * @param cached the cached frames `entries` and `errors` read;
+    *   [[release]] drops them once the snapshot is written */
+  final case class Result(entries: DataFrame, summary: ChangeSummary, errors: DataFrame)(
+      cached: Seq[DataFrame] = Nil) {
+    /** Drop the rescan's caches (snapshot-sized); `entries` and
+      * `errors` recompute the walk if read after this. */
+    def release(): Unit = cached.foreach(_.unpersist(blocking = false))
+  }
 
   /** The previous snapshot's dir rows in the walker's DirMeta shape —
     * stays a DataFrame; the walker ships per-seed slices of it to
@@ -147,6 +154,6 @@ object Incremental {
       files_rescanned = d.walkedFiles,
       files_reused = bySrc(Reused),
       files_deleted = bySrc(Deleted))
-    Result(rows.where(col("src") <= Reused).drop("src"), summary, errors)
+    Result(rows.where(col("src") <= Reused).drop("src"), summary, errors)(Seq(rows, errors))
   }
 }

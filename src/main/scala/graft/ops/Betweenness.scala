@@ -20,14 +20,19 @@ import org.apache.spark.sql.functions._
   * end — an unrolled-CTE oracle replays sampling, both passes, and
   * the ranking bit-for-bit (no float ever enters).
   *
-  * Scale shape: the forward pass is ONE multi-source frontier
+  * Below [[LocalGraph.EdgeLimit]] edges both passes run on the driver
+  * over CSR arrays after one bounded collect, per source in the same
+  * layer order (so the envelopes trip on the same layer with the same
+  * value), and the result is a local relation (the [[LocalGraph]]
+  * rule). Above it, scale shape: the forward pass is ONE multi-source
+  * frontier
   * expansion (the [[Centrality]] recipe — per hop: frontier ⋈ edges,
   * groupBy (s,node) summing σ map-side, LEFT ANTI vs visited,
   * count-scaled fan-in, lazy checkpoint materialized by the count
   * probe). The backward pass is `maxDepth` layer joins, each
   * O(edges between adjacent layers), hash-partitioned on node ids;
   * per-layer frames are the already-materialized forward checkpoints.
-  * Nothing collects beyond one-row envelope guards.
+  * Above the bound nothing collects beyond one-row envelope guards.
   *
   * Overflow envelope (fail fast, never silently diverge — the
   * VoptHist/Hits rule): σ_max < 2²⁰ and δ_max < 2⁴² are checked as
@@ -42,8 +47,107 @@ object Betweenness {
     *         sampled sources whose BFS tree contains the node at
     *         depth >= 1. */
   def sampledBrandes(edges: DataFrame, nSources: Int, maxDepth: Int,
-      k: Int): DataFrame = {
+      k: Int): DataFrame =
+    sampledBrandes(edges, nSources, maxDepth, k, LocalGraph.EdgeLimit)
+
+  /** [[sampledBrandes]] on the driver when the graph has at most
+    * `edgeLimit` edges (0 forces the distributed path). */
+  private[graft] def sampledBrandes(edges: DataFrame, nSources: Int,
+      maxDepth: Int, k: Int, edgeLimit: Long): DataFrame = {
     require(nSources >= 1 && maxDepth >= 2 && k >= 1)
+    LocalGraph.collect(edges.select(col("src").cast("long"),
+        col("dst").cast("long")), edgeLimit) match {
+      case Some(Array(a, b)) =>
+        val g = LocalGraph.Csr(a, b, undirected = true)
+        val (node, bc, nSrc) = localBrandes(g, nSources, maxDepth)
+        val top = node.indices.sortBy(i => (-bc(i), node(i))).take(k).toArray
+        LocalGraph.relation(edges.sparkSession, "rk" -> top.indices.map(_ + 1L).toArray,
+          "node" -> top.map(node(_)), "bc_micro" -> top.map(bc(_)), "n_src" -> top.map(nSrc(_)))
+      case _ => distributed(edges, nSources, maxDepth, k)
+    }
+  }
+
+  private def sigmaMessage(sigMax: Long): String =
+    s"Brandes sigma envelope exceeded: max path count $sigMax >= 2^20 " +
+      "— the micro-unit dependency product would overflow BIGINT; " +
+      "lower maxDepth or sample sparser sources"
+
+  private def deltaMessage(dMax: Long): String =
+    s"Brandes delta envelope exceeded: max dependency $dMax >= 2^42 " +
+      "— the next layer's product would overflow BIGINT"
+
+  /** Both passes on the driver, one BFS per sampled source; the
+    * backward pass walks layers deepest first ACROSS sources, so the
+    * delta envelope checks the same layers in the same order as the
+    * distributed pass. @return (node, bc_micro, n_src) of every node
+    * some source reached at depth >= 1. */
+  private def localBrandes(g: LocalGraph.Csr, nSources: Int,
+      maxDepth: Int): (Array[Long], Array[Long], Array[Long]) = {
+    val srcs = LocalGraph.md5Smallest(g.ids, nSources).map(LocalGraph.indexOf(g.ids, _))
+    // per source: depth (-1 unreached), sigma, and its layers 1..h
+    val depth = srcs.map { _ => Array.fill(g.n)(-1) }
+    val sigma = srcs.map { _ => new Array[Long](g.n) }
+    val layers = srcs.map { _ => scala.collection.mutable.ArrayBuffer.empty[Array[Int]] }
+    srcs.indices.foreach { si =>
+      val dep = depth(si); val sg = sigma(si)
+      dep(srcs(si)) = 0; sg(srcs(si)) = 1L
+      var frontier = Array(srcs(si))
+      var h = 1
+      while (h <= maxDepth && frontier.nonEmpty) {
+        val next = scala.collection.mutable.ArrayBuilder.make[Int]
+        frontier.foreach { u =>
+          var e = g.off(u)
+          while (e < g.off(u + 1)) {
+            val v = g.to(e)
+            if (dep(v) < 0) { dep(v) = h; next += v }
+            if (dep(v) == h) sg(v) += sg(u)
+            e += 1
+          }
+        }
+        frontier = next.result()
+        if (frontier.nonEmpty) layers(si) += frontier
+        h += 1
+      }
+    }
+    val hmax = layers.map(_.size).maxOption.getOrElse(0)
+    if (hmax == 0) return (Array.emptyLongArray, Array.emptyLongArray, Array.emptyLongArray)
+    val sigMax = layers.indices.iterator.flatMap(si =>
+      layers(si).iterator.flatMap(_.iterator.map(sigma(si)(_)))).max
+    require(sigMax < (1L << 20), sigmaMessage(sigMax))
+    val delta = srcs.map { _ => new Array[Long](g.n) }
+    var bh = hmax - 1
+    while (bh >= 1) {
+      var dMax = Long.MinValue
+      srcs.indices.foreach { si =>
+        if (layers(si).size >= bh) {
+          val dep = depth(si); val sg = sigma(si); val dl = delta(si)
+          layers(si)(bh - 1).foreach { v =>
+            var acc = 0L
+            var e = g.off(v)
+            while (e < g.off(v + 1)) {
+              val w = g.to(e)
+              if (dep(w) == bh + 1) acc += (sg(v) * (1000000L + dl(w))) / sg(w)
+              e += 1
+            }
+            dl(v) = acc
+            dMax = math.max(dMax, acc)
+          }
+        }
+      }
+      require(dMax < (1L << 42), deltaMessage(dMax))
+      bh -= 1
+    }
+    val bc = new Array[Long](g.n)
+    val nSrc = new Array[Long](g.n)
+    srcs.indices.foreach { si =>
+      layers(si).foreach(_.foreach { v => bc(v) += delta(si)(v); nSrc(v) += 1 })
+    }
+    val reached = (0 until g.n).filter(nSrc(_) > 0).toArray
+    (reached.map(g.ids(_)), reached.map(bc(_)), reached.map(nSrc(_)))
+  }
+
+  private def distributed(edges: DataFrame, nSources: Int, maxDepth: Int,
+      k: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val shuffleParts = spark.sessionState.conf.numShufflePartitions
@@ -106,10 +210,7 @@ object Betweenness {
     // ONE envelope job over the already-materialized layer frames
     val sigMax = layers.map(_.select(col("sigma"))).reduce(_ union _)
       .agg(max(col("sigma"))).collect()(0).getLong(0)
-    require(sigMax < (1L << 20),
-      s"Brandes sigma envelope exceeded: max path count $sigMax >= 2^20 " +
-        "— the micro-unit dependency product would overflow BIGINT; " +
-        "lower maxDepth or sample sparser sources")
+    require(sigMax < (1L << 20), sigmaMessage(sigMax))
 
     // ---- backward pass: per-layer dependency accumulation ----
     // deepest layer has delta = 0; layer h reads layer h+1 only
@@ -140,9 +241,7 @@ object Betweenness {
           coalesce(col("dsum"), lit(0L)).as("delta"))
         .localCheckpoint(false) // lazy: the envelope agg materializes it
       val dMax = dh.agg(max(col("delta"))).collect()(0).getLong(0)
-      require(dMax < (1L << 42),
-        s"Brandes delta envelope exceeded: max dependency $dMax >= 2^42 " +
-          "— the next layer's product would overflow BIGINT")
+      require(dMax < (1L << 42), deltaMessage(dMax))
       deltas += dh
       deltaNext = dh
       bh -= 1

@@ -18,7 +18,11 @@ import org.apache.spark.sql.functions._
   *   `h(u) = Σ_{u→p} a(p)` then `h ← h·10⁶ div max(h)`,
   *
   * where every sum is an exact BIGINT and the truncating div agrees in
-  * every engine on nonnegatives. Spark shape per iteration: two
+  * every engine on nonnegatives. Below [[LocalGraph.EdgeLimit]] edges
+  * the iterations run on the driver over the collected edge arrays
+  * (same grid, same truncating div), and both frames are local
+  * relations (the [[LocalGraph]] rule). Above it, Spark shape per
+  * iteration: two
   * equi-join + hash-aggregate passes keyed on node ids (successive
   * iterations reuse the partitioning — the PageRank loop), and the
   * max-norm rides as a one-row broadcast crossJoin — a mid-loop
@@ -36,8 +40,65 @@ object Hits {
 
   /** @param edges directed edges (src, dst), no duplicates.
     * @return (hubs, authorities): (id, s) frames on the 10⁶ grid. */
-  def scores(edges: DataFrame, iters: Int = 4): (DataFrame, DataFrame) = {
+  def scores(edges: DataFrame, iters: Int = 4): (DataFrame, DataFrame) =
+    scores(edges, iters, LocalGraph.EdgeLimit)
+
+  /** [[scores]] on the driver when the graph has at most `edgeLimit`
+    * edges (0 forces the distributed path). */
+  private[graft] def scores(edges: DataFrame, iters: Int,
+      edgeLimit: Long): (DataFrame, DataFrame) = {
     require(iters >= 1, s"iters $iters")
+    LocalGraph.collect(edges.select(col("src").cast("long"),
+        col("dst").cast("long")), edgeLimit) match {
+      case Some(Array(src, dst)) =>
+        val (ids, h, a) = localScores(src, dst, iters)
+        def frame(score: Array[Long]) = {
+          val scored = ids.indices.filter(score(_) >= 0).toArray
+          LocalGraph.relation(edges.sparkSession, "id" -> scored.map(ids(_)),
+            "s" -> scored.map(score(_)))
+        }
+        (frame(h), frame(a))
+      case _ => distributed(edges, iters)
+    }
+  }
+
+  private def degreeMessage(maxDeg: Long): String =
+    s"max degree $maxDeg would wrap raw*1000000 in BIGINT on the " +
+      "10^6 grid — move the renorm product to DECIMAL(38,0)"
+
+  /** The iterations on the driver. @return (node ids, hub scores,
+    * authority scores), a score -1 where the node has no out-edge
+    * (hub) or no in-edge (authority), as the frames hold no row. */
+  private def localScores(src: Array[Long], dst: Array[Long],
+      iters: Int): (Array[Long], Array[Long], Array[Long]) = {
+    val (ids, s, d) = LocalGraph.indexed(src, dst)
+    if (ids.nonEmpty) {
+      val deg = new Array[Long](ids.length)
+      s.foreach(deg(_) += 1); d.foreach(deg(_) += 1)
+      require(deg.max <= Long.MaxValue / 1000000L / 1000000L, degreeMessage(deg.max))
+    }
+    var hub = Array.fill(ids.length)(-1L)
+    s.foreach(hub(_) = 1000000L)
+    var auth = Array.fill(ids.length)(-1L)
+    /** `raw * 10⁶ div max(raw)` over the nodes that got a sum. */
+    def renorm(from: Array[Int], to: Array[Int], score: Array[Long]): Array[Long] = {
+      val raw = Array.fill(ids.length)(-1L)
+      var j = 0
+      while (j < from.length) {
+        raw(to(j)) = math.max(raw(to(j)), 0L) + score(from(j))
+        j += 1
+      }
+      val mx = raw.max
+      raw.map(r => if (r < 0) r else r * 1000000L / mx)
+    }
+    if (ids.nonEmpty) (1 to iters).foreach { _ =>
+      auth = renorm(s, d, hub)
+      hub = renorm(d, s, auth)
+    }
+    (ids, hub, auth)
+  }
+
+  private def distributed(edges: DataFrame, iters: Int): (DataFrame, DataFrame) = {
     // size-derived partition count for the iterated edge frame (the
     // Bfs.undOf coalesce rule, r13): the checkpoint's parent is a
     // NARROW select, so it inherits the caller's partition count —
@@ -64,8 +125,7 @@ object Hits {
     if (!maxDegRow.isNullAt(0)) {
       val maxDeg = maxDegRow.getLong(0)
       require(maxDeg <= Long.MaxValue / 1000000L / 1000000L,
-        s"max degree $maxDeg would wrap raw*1000000 in BIGINT on the " +
-          "10^6 grid — move the renorm product to DECIMAL(38,0)")
+        degreeMessage(maxDeg))
     }
     // count-informed broadcast (the Bfs rule): the checkpointed edge
     // frame has UnknownPartitioning, so joining the O(V) score frame

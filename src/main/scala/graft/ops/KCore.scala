@@ -9,10 +9,13 @@ import org.apache.spark.sql.functions._
   * until the survivor set is stable — the fixpoint is the unique
   * maximal subgraph with minimum degree >= k.
   *
-  * Scale shape: each round is one degree aggregate (map-side combined)
-  * plus two semi-join-shaped equi joins of the edge list against the
-  * survivor set — all hash-partitioned on node ids, nothing quadratic,
-  * no windows. `localCheckpoint` truncates lineage per round (the same
+  * Below [[LocalGraph.EdgeLimit]] edges the peel runs on the driver
+  * after one bounded collect, with the same round count and stop rule,
+  * and the core is a local relation (the [[LocalGraph]] rule). Above
+  * it, scale shape: each round is one degree aggregate (map-side
+  * combined) plus two semi-join-shaped equi joins of the edge list
+  * against the survivor set — all hash-partitioned on node ids,
+  * nothing quadratic, no windows. `localCheckpoint` truncates lineage per round (the same
   * recipe as ConnectedComponents/PageRank); rounds are bounded by the
   * degeneracy peeling depth, which is small for power-law graphs.
   * Convergence is detected from the survivor COUNT: the set shrinks
@@ -25,8 +28,54 @@ object KCore {
     * @return (coreEdges, rounds): the induced edge list of the k-core
     *         (same canonical form; derive nodes by unioning endpoints)
     *         and the number of peeling rounds to the fixpoint. */
-  def core(edges: DataFrame, k: Int, maxRounds: Int = 64): (DataFrame, Int) = {
+  def core(edges: DataFrame, k: Int, maxRounds: Int = 64): (DataFrame, Int) =
+    core(edges, k, maxRounds, LocalGraph.EdgeLimit)
+
+  /** [[core]] on the driver when the graph has at most `edgeLimit`
+    * edges (0 forces the distributed path). */
+  private[graft] def core(edges: DataFrame, k: Int, maxRounds: Int,
+      edgeLimit: Long): (DataFrame, Int) = {
     require(k >= 1, s"k must be >= 1, got $k")
+    val pair = edges.select(col("src"), col("dst"))
+    LocalGraph.collect(pair, edgeLimit) match {
+      case Some(Array(src, dst)) =>
+        val (kept, rounds) = localCore(src, dst, k, maxRounds)
+        val out = LocalGraph.relation(edges.sparkSession,
+          "src" -> kept.map(src(_)), "dst" -> kept.map(dst(_)))
+        (out.select(pair.schema.fields.map(f => col(f.name).cast(f.dataType)).toIndexedSeq: _*),
+          rounds)
+      case _ => distributed(edges, k, maxRounds)
+    }
+  }
+
+  /** The peel on the driver: per round, the degrees of the surviving
+    * edge rows, the nodes at degree >= k, and the rows with both ends
+    * kept; stops on an empty or unchanged node set or at `maxRounds`.
+    * @return (indices of the core's edge rows, rounds). */
+  private def localCore(src: Array[Long], dst: Array[Long], k: Int,
+      maxRounds: Int): (Array[Int], Int) = {
+    val (ids, s, d) = LocalGraph.indexed(src, dst)
+    var cur: Array[Int] = src.indices.toArray
+    var survivors = -1
+    var round = 0
+    var done = false
+    while (!done && round < maxRounds) {
+      val deg = new Array[Int](ids.length)
+      cur.foreach { j => deg(s(j)) += 1; deg(d(j)) += 1 }
+      val n = deg.count(_ >= k)
+      if (n == 0) { cur = Array.emptyIntArray; done = true }
+      else if (n == survivors) done = true
+      else {
+        survivors = n
+        cur = cur.filter(j => deg(s(j)) >= k && deg(d(j)) >= k)
+        round += 1
+      }
+    }
+    (cur, round)
+  }
+
+  private def distributed(edges: DataFrame, k: Int,
+      maxRounds: Int): (DataFrame, Int) = {
     // size-derived partition count (the Bfs.undOf coalesce rule, r13):
     // the initial checkpoint's parent is a narrow select inheriting
     // the caller's partition count, and every peel round's

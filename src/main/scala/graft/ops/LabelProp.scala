@@ -12,8 +12,12 @@ import org.apache.spark.sql.functions._
   * function of the graph, so a SQL oracle can replay it round by
   * round).
   *
-  * Scale shape per round: one equi join labels->edges (map-side while
-  * the label frame broadcasts) + one (node, label) count aggregate +
+  * Below [[LocalGraph.EdgeLimit]] edges the rounds run on the driver
+  * over CSR arrays after one bounded collect (same packed argmin,
+  * literally), and the result is a local relation (the [[LocalGraph]]
+  * rule). Above it, scale shape per round: one equi join
+  * labels->edges (map-side while the label frame broadcasts) + one
+  * (node, label) count aggregate +
   * the packed-BIGINT argmin (count desc, label asc) — the same
   * no-window argmax used by dedup/fuzzy-join; `localCheckpoint`
   * truncates lineage per round.
@@ -41,7 +45,63 @@ import org.apache.spark.sql.functions._
   */
 object LabelProp {
 
-  def run(edges: DataFrame, rounds: Int): DataFrame = {
+  def run(edges: DataFrame, rounds: Int): DataFrame =
+    run(edges, rounds, LocalGraph.EdgeLimit)
+
+  /** [[run]] on the driver when the graph has at most `edgeLimit`
+    * edges (0 forces the distributed path). */
+  private[graft] def run(edges: DataFrame, rounds: Int,
+      edgeLimit: Long): DataFrame =
+    LocalGraph.collect(edges.select(col("src"), col("dst")), edgeLimit) match {
+      case Some(Array(a, b)) =>
+        val g = LocalGraph.Csr(a, b, undirected = true)
+        val label = localRun(g, rounds)
+        LocalGraph.relation(edges.sparkSession, "node" -> g.ids, "label" -> label)
+      case _ => distributed(edges, rounds)
+    }
+
+  private def boundMessage(bound: Long): String =
+    s"LabelProp: node ids must be < 1e10 for the oracle's argmin packing (max=$bound)"
+
+  private def degreeMessage(maxDeg: Long): String =
+    s"LabelProp: max degree must be < 1e6 for the oracle's argmin packing (max=$maxDeg)"
+
+  /** The rounds on the driver: each node's neighbour labels (one per
+    * arc, so duplicate edges count twice) sorted and run-length
+    * counted, then the same packed argmin. @return label per node. */
+  private def localRun(g: LocalGraph.Csr, rounds: Int): Array[Long] = {
+    if (g.n > 0) {
+      require(g.ids.last < 10000000000L, boundMessage(g.ids.last))
+      val maxDeg = (0 until g.n).map(i => g.off(i + 1) - g.off(i)).max
+      require(maxDeg < 1000000L, degreeMessage(maxDeg))
+    }
+    var label = g.ids.clone()
+    val nb = new Array[Long](g.to.length)
+    (1 to rounds).foreach { _ =>
+      val next = new Array[Long](g.n)
+      var i = 0
+      while (i < g.n) {
+        val lo = g.off(i); val hi = g.off(i + 1)
+        var e = lo
+        while (e < hi) { nb(e) = label(g.to(e)); e += 1 }
+        java.util.Arrays.sort(nb, lo, hi)
+        var pk = Long.MaxValue
+        e = lo
+        while (e < hi) {
+          var f = e
+          while (f < hi && nb(f) == nb(e)) f += 1
+          pk = math.min(pk, (1000000L - (f - e)) * 10000000000L + nb(e))
+          e = f
+        }
+        next(i) = pk % 10000000000L
+        i += 1
+      }
+      label = next
+    }
+    label
+  }
+
+  private def distributed(edges: DataFrame, rounds: Int): DataFrame = {
     // Repartitioned on the join key before materializing. NOTE the
     // honest mechanism: Spark 4.1's localCheckpoint drops partitioning
     // metadata (LogicalRDD reports UnknownPartitioning — pinned in
@@ -74,12 +134,13 @@ object LabelProp {
       .agg(count(lit(1)).as("d"), max(greatest(col("a"), col("b"))).as("mx"))
       .agg(max(col("d")).as("maxDeg"), max(col("mx")).as("bound"))
       .collect()(0)
-    val maxDeg = env.getLong(0)
-    val bound = env.getLong(1)
-    require(bound < 10000000000L,
-      s"LabelProp: node ids must be < 1e10 for the oracle's argmin packing (max=$bound)")
-    require(maxDeg < 1000000L,
-      s"LabelProp: max degree must be < 1e6 for the oracle's argmin packing (max=$maxDeg)")
+    // null maxima = an empty graph, which the rounds handle
+    if (!env.isNullAt(0)) {
+      val maxDeg = env.getLong(0)
+      val bound = env.getLong(1)
+      require(bound < 10000000000L, boundMessage(bound))
+      require(maxDeg < 1000000L, degreeMessage(maxDeg))
+    }
     var labels = und.select(col("a").as("node")).distinct()
       .withColumn("label", col("node"))
       .localCheckpoint(true)

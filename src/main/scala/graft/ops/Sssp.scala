@@ -21,18 +21,25 @@ import org.apache.spark.sql.functions._
   * q_sssp query uses `10⁶ div support`), so min/plus arithmetic is
   * engine-exact; ties in the final ranking break by node id.
   *
-  * Scale shape: per round, one equi join (frontier ⋈ edges, hash on
-  * node ids), one (node → min) hash agg, and ONE full-outer min-merge
-  * into the dist frame that also tags improvements — a single lazy
-  * checkpoint materialized by the improvement-count probe (one Spark
-  * job per round), with next round's frontier a free filter over the
+  * Below [[LocalGraph.EdgeLimit]] edges the rounds run on the driver
+  * over CSR arrays after one bounded collect, and the result is a
+  * local relation (the [[LocalGraph]] rule). Above it, scale shape:
+  * per round, one equi join (frontier ⋈ edges, hash on node ids), one
+  * (node → min) hash agg, and ONE full-outer min-merge into the dist
+  * frame that also tags improvements — a single lazy checkpoint
+  * materialized by the improvement-count probe (one Spark job per
+  * round), with next round's frontier a free filter over the
   * materialized merge. Rounds are bounded; nothing collects. */
 object Sssp {
 
-  /** @param edges weighted (src, dst, cost) list, traversed both
-    *              directions; cost must be a nonneg integer column.
-    * @param seed  source node id.
-    * @return (node, d) exact min path cost within maxRounds edges. */
+  /** The edge list as (a, b, cost) longs: what both paths read. */
+  private def weighted(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long").as("a"),
+      col("dst").cast("long").as("b"), col("cost").cast("long"))
+
+  private def nonnegMessage(minCost: Long): String =
+    s"Sssp requires nonneg integer costs; min(cost) = $minCost"
+
   /** The materialized bidirectional weighted traversal frame — built
     * ONCE per graph and shared with the seed scan (the Bfs.undOf
     * rule: every consumer of a raw edge frame re-executes the whole
@@ -41,9 +48,7 @@ object Sssp {
     // checkpoint the DIRECTED projection, derive the reverse
     // direction narrowly (the Bfs.undOf rule: checkpointing the
     // union would run the upstream build once per leg)
-    val e = edges.select(col("src").cast("long").as("a"),
-        col("dst").cast("long").as("b"), col("cost").cast("long"))
-      .localCheckpoint(true)
+    val e = weighted(edges).localCheckpoint(true)
     val ed = e.union(e.select(col("b").as("a"), col("a").as("b"),
       col("cost")))
     // fail-fast envelope (the VoptHist rule): the bounded-round
@@ -57,16 +62,81 @@ object Sssp {
     val probe = ed.agg(min(col("cost")),
       org.apache.spark.sql.functions.count(lit(1))).collect()(0)
     require(probe.isNullAt(0) || probe.getLong(0) >= 0L,
-      s"Sssp requires nonneg integer costs; min(cost) = " +
-        s"${probe.getLong(0)}")
+      nonnegMessage(probe.getLong(0)))
     val shuffleParts =
       edges.sparkSession.sessionState.conf.numShufflePartitions
     ed.coalesce(Bfs.fanIn(probe.getLong(1), shuffleParts))
   }
 
+  /** @param edges weighted (src, dst, cost) list, traversed both
+    *              directions; cost must be a nonneg integer column.
+    * @param seed  source node id.
+    * @return (node, d) exact min path cost within maxRounds edges. */
   def boundedBellmanFord(edges: DataFrame, seed: Long,
       maxRounds: Int): DataFrame =
-    bellmanFordOnEd(edOf(edges), seed, maxRounds)
+    boundedBellmanFord(edges, seed, maxRounds, LocalGraph.EdgeLimit)
+
+  /** [[boundedBellmanFord]] on the driver when the graph has at most
+    * `edgeLimit` edges (0 forces the distributed path). */
+  private[graft] def boundedBellmanFord(edges: DataFrame, seed: Long,
+      maxRounds: Int, edgeLimit: Long): DataFrame =
+    LocalGraph.collect(weighted(edges), edgeLimit) match {
+      case Some(Array(a, b, cost)) =>
+        val g = localGraph(a, b, cost)
+        require(maxRounds >= 1)
+        val (nodes, d) = localBellmanFord(g, seed, maxRounds)
+        LocalGraph.relation(edges.sparkSession, "node" -> nodes, "d" -> d)
+      case _ => bellmanFordOnEd(edOf(edges), seed, maxRounds)
+    }
+
+  /** The undirected weighted CSR of the collected edges, after the
+    * [[edOf]] envelope. */
+  private def localGraph(a: Array[Long], b: Array[Long],
+      cost: Array[Long]): LocalGraph.Csr = {
+    if (cost.nonEmpty) require(cost.min >= 0L, nonnegMessage(cost.min))
+    LocalGraph.Csr(a, b, undirected = true, weight = cost)
+  }
+
+  /** [[bellmanFordOnEd]]'s rounds on the driver: per round, relax the
+    * frontier's arcs to a per-node min, then keep the candidates that
+    * are new or strictly better; the improved nodes are the next
+    * frontier. @return (node ids, distances) of the reached nodes. */
+  private def localBellmanFord(g: LocalGraph.Csr, seed: Long,
+      maxRounds: Int): (Array[Long], Array[Long]) = {
+    val s = LocalGraph.indexOf(g.ids, seed)
+    // the seed of an empty or foreign graph reaches only itself
+    if (s < 0) return (Array(seed), Array(0L))
+    val dist = new Array[Long](g.n)
+    val reached = new Array[Boolean](g.n)
+    val cand = new Array[Long](g.n)
+    val touched = new Array[Boolean](g.n)
+    dist(s) = 0L
+    reached(s) = true
+    var frontier = Array(s)
+    var r = 1
+    while (r <= maxRounds && frontier.nonEmpty) {
+      val hit = scala.collection.mutable.ArrayBuilder.make[Int]
+      frontier.foreach { u =>
+        var e = g.off(u)
+        while (e < g.off(u + 1)) {
+          val v = g.to(e)
+          val nd = dist(u) + g.w(e)
+          if (!touched(v)) { touched(v) = true; cand(v) = nd; hit += v }
+          else if (nd < cand(v)) cand(v) = nd
+          e += 1
+        }
+      }
+      frontier = hit.result().filter { v =>
+        touched(v) = false
+        val better = !reached(v) || cand(v) < dist(v)
+        if (better) { dist(v) = cand(v); reached(v) = true }
+        better
+      }
+      r += 1
+    }
+    val idx = (0 until g.n).filter(reached(_))
+    (idx.map(g.ids(_)).toArray, idx.map(dist(_)).toArray)
+  }
 
   /** ONE Bellman-Ford round body — the per-round plan the loop
     * materializes. Factored out so the plan-evidence spec/tool assert
@@ -128,6 +198,32 @@ object Sssp {
   /** Top-k nearest nodes from the md5-rank-smallest seed:
     * (rk, node, dist_cost), dist ascending, ties by node id. */
   def nearestFromMd5Seed(edges: DataFrame, maxRounds: Int,
+      k: Int): DataFrame =
+    nearestFromMd5Seed(edges, maxRounds, k, LocalGraph.EdgeLimit)
+
+  /** [[nearestFromMd5Seed]] on the driver when the graph has at most
+    * `edgeLimit` edges (0 forces the distributed path). */
+  private[graft] def nearestFromMd5Seed(edges: DataFrame, maxRounds: Int,
+      k: Int, edgeLimit: Long): DataFrame =
+    LocalGraph.collect(weighted(edges), edgeLimit) match {
+      case Some(Array(a, b, cost)) =>
+        val g = localGraph(a, b, cost)
+        if (g.n == 0) return noSeed(edges)
+        val seed = LocalGraph.md5Smallest(g.ids, 1).head
+        require(maxRounds >= 1)
+        val (nodes, d) = localBellmanFord(g, seed, maxRounds)
+        val top = nodes.indices.sortBy(i => (d(i), nodes(i))).take(k).toArray
+        LocalGraph.relation(edges.sparkSession, "rk" -> top.indices.map(_ + 1L).toArray,
+          "node" -> top.map(nodes(_)), "dist_cost" -> top.map(d(_)))
+      case _ => distributedNearest(edges, maxRounds, k)
+    }
+
+  /** The empty (rk, node, dist_cost) frame of a graph with no edges. */
+  private def noSeed(edges: DataFrame): DataFrame =
+    edges.sparkSession.range(0).select(col("id").as("rk"),
+      col("id").as("node"), col("id").as("dist_cost"))
+
+  private def distributedNearest(edges: DataFrame, maxRounds: Int,
       k: Int): DataFrame = {
     // one graph build: the seed scan reads the materialized frame
     val ed = edOf(edges)
@@ -139,11 +235,7 @@ object Sssp {
     import org.apache.spark.sql.expressions.Window
     // empty-graph-safe (the sampledBrandes rule): no edges -> no seed
     // -> an empty (rk, node, dist_cost) frame, not an AIOOBE
-    if (seedRows.isEmpty) {
-      val spark = edges.sparkSession
-      return spark.range(0).select(col("id").as("rk"),
-        col("id").as("node"), col("id").as("dist_cost"))
-    }
+    if (seedRows.isEmpty) return noSeed(edges)
     val seed = seedRows(0).getLong(0)
     bellmanFordOnEd(ed, seed, maxRounds)
       .orderBy(asc("d"), asc("node")).limit(k)

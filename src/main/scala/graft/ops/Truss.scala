@@ -18,6 +18,12 @@ import org.apache.spark.sql.functions._
   * set shrinks monotonically, so an unchanged count IS the fixpoint
   * (the KCore stop rule); `localCheckpoint` truncates lineage per
   * round. Rounds are bounded by the peeling depth.
+  *
+  * Below [[LocalGraph.EdgeLimit]] edges the peel runs on the driver
+  * after one bounded collect — the same orientation, intersection,
+  * round count, stop rule and `maxRounds` throw — and the truss is a
+  * local relation (the [[LocalGraph]] rule); the distributed rounds
+  * above run only above the bound.
   */
 object Truss {
 
@@ -64,8 +70,95 @@ object Truss {
     * @return (trussEdges, rounds): the k-truss edge list and the
     *         number of strict-shrink peeling rounds to the fixpoint. */
   def truss(edges: DataFrame, k: Int,
-      maxRounds: Int = 64): (DataFrame, Int) = {
+      maxRounds: Int = 64): (DataFrame, Int) =
+    truss(edges, k, maxRounds, LocalGraph.EdgeLimit)
+
+  /** [[truss]] on the driver when the graph has at most `edgeLimit`
+    * edges (0 forces the distributed path). */
+  private[graft] def truss(edges: DataFrame, k: Int, maxRounds: Int,
+      edgeLimit: Long): (DataFrame, Int) = {
     require(k >= 3, s"k must be >= 3, got $k")
+    LocalGraph.collect(edges.select(col("src").cast("long"),
+        col("dst").cast("long")), edgeLimit) match {
+      case Some(Array(src, dst)) =>
+        val (s, d, rounds) = localTruss(src, dst, k, maxRounds)
+        (LocalGraph.relation(edges.sparkSession, "src" -> s, "dst" -> d), rounds)
+      case _ => distributed(edges, k, maxRounds)
+    }
+  }
+
+  private def roundsMessage(maxRounds: Int, k: Int, edges: Long): String =
+    s"k-truss peel still shrinking after maxRounds=$maxRounds " +
+      s"(edges=$edges): result would not be a $k-truss; raise " +
+      "maxRounds (and any paired oracle's nLayers)"
+
+  /** [[supports]] on the driver, over node indices `0 until n` (index
+    * order = id order): per canonical (lo, hi) index pair, keyed
+    * `lo << 32 | hi`, the number of triangles found through it — each
+    * oriented edge row intersects its two ends' distinct out-lists,
+    * as `array_intersect` does. Pairs in no triangle are absent. */
+  private def localSupports(s: Array[Int], d: Array[Int],
+      n: Int): scala.collection.mutable.LongMap[Int] = {
+    val deg = new Array[Long](n)
+    s.foreach(deg(_) += 1); d.foreach(deg(_) += 1)
+    def lower(x: Int, y: Int) = deg(x) < deg(y) || (deg(x) == deg(y) && x < y)
+    val arcs = s.indices.map { j =>
+      if (lower(s(j), d(j))) (s(j).toLong << 32) | d(j) else (d(j).toLong << 32) | s(j)
+    }.toArray
+    // distinct out-lists in CSR form
+    val sorted = LocalGraph.sortedDistinct(arcs)
+    val off = new Array[Int](n + 1)
+    sorted.foreach(key => off((key >>> 32).toInt + 1) += 1)
+    (0 until n).foreach(i => off(i + 1) += off(i))
+    val nbr = sorted.map(key => (key & 0xffffffffL).toInt)
+    val sup = scala.collection.mutable.LongMap.empty[Int]
+    def emit(x: Int, y: Int): Unit = {
+      val key = (math.min(x, y).toLong << 32) | math.max(x, y)
+      sup(key) = sup.getOrElse(key, 0) + 1
+    }
+    arcs.foreach { key =>
+      val a = (key >>> 32).toInt; val b = (key & 0xffffffffL).toInt
+      var p = off(a); var q = off(b)
+      while (p < off(a + 1) && q < off(b + 1)) {
+        if (nbr(p) < nbr(q)) p += 1
+        else if (nbr(p) > nbr(q)) q += 1
+        else {
+          emit(a, b); emit(a, nbr(p)); emit(b, nbr(p))
+          p += 1; q += 1
+        }
+      }
+    }
+    sup
+  }
+
+  /** The peel on the driver, with the distributed round count, stop
+    * rule and `maxRounds` throw. @return (src, dst, rounds) of the
+    * truss: the input rows when round 1 drops nothing, else the
+    * surviving canonical pairs. */
+  private def localTruss(src: Array[Long], dst: Array[Long], k: Int,
+      maxRounds: Int): (Array[Long], Array[Long], Int) = {
+    val (ids, s0, d0) = LocalGraph.indexed(src, dst)
+    var s = s0
+    var d = d0
+    var round = 0
+    var done = s.isEmpty
+    while (!done && round < maxRounds) {
+      val keep = localSupports(s, d, ids.length).iterator
+        .collect { case (key, n) if n >= k - 2 => key }.toArray
+      if (keep.length == s.length) done = true
+      else {
+        s = keep.map(key => (key >>> 32).toInt)
+        d = keep.map(key => (key & 0xffffffffL).toInt)
+        round += 1
+        if (keep.isEmpty) done = true
+      }
+    }
+    if (!done) throw new IllegalStateException(roundsMessage(maxRounds, k, s.length))
+    (s.map(ids(_)), d.map(ids(_)), round)
+  }
+
+  private def distributed(edges: DataFrame, k: Int,
+      maxRounds: Int): (DataFrame, Int) = {
     // size-derived partition count on the INITIAL frame only (the
     // Bfs.undOf coalesce rule, r13): the narrow-select checkpoint
     // inherits the caller's partition count and round 1's whole
@@ -93,10 +186,7 @@ object Truss {
         if (m == 0) done = true
       }
     }
-    if (!done) throw new IllegalStateException(
-      s"k-truss peel still shrinking after maxRounds=$maxRounds " +
-        s"(edges=$curCount): result would not be a $k-truss; raise " +
-        "maxRounds (and any paired oracle's nLayers)")
+    if (!done) throw new IllegalStateException(roundsMessage(maxRounds, k, curCount))
     (if (curCount == 0) cur.limit(0) else cur, round)
   }
 }

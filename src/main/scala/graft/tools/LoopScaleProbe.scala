@@ -18,6 +18,10 @@ import org.apache.spark.sql.functions._
   * parallelizes with data; ratios pinned at ~1 at 10× would be a real
   * structural finding (per-round stage count / partition counts).
   *
+  * Every loop runs twice per rep, on the driver path
+  * ([[graft.ops.LocalGraph]]) and on the forced distributed path, so
+  * each factor is also a crossover point for `LocalGraph.EdgeLimit`.
+  *
   * Usage: runMain graft.tools.LoopScaleProbe [sfDir] [factor] [reps]
   */
 object LoopScaleProbe {
@@ -67,58 +71,65 @@ object LoopScaleProbe {
     val nE = g.count()
     println(s"[loopscale] cpus=$cpus factor=$factor edges=$nE")
 
-    def timed(label: String)(f: => Unit): Unit = {
-      val times = (1 to reps).map { _ =>
-        System.gc(); Thread.sleep(500)
-        val t0 = System.nanoTime()
-        f
-        (System.nanoTime() - t0) / 1e9
+    // Each loop runs on both paths, alternating local/distributed
+    // within every rep (a same-session A/B): the driver path under
+    // LocalGraph.EdgeLimit, and the distributed rounds forced with a
+    // bound of 0. The crossover that sets EdgeLimit is where the
+    // local arm stops winning.
+    def timed(label: String)(f: Long => Unit): Unit = {
+      val arms = Seq("local" -> graft.ops.LocalGraph.EdgeLimit, "distributed" -> 0L)
+      val times = (1 to reps).flatMap { _ =>
+        arms.map { case (arm, limit) =>
+          System.gc(); Thread.sleep(500)
+          val t0 = System.nanoTime()
+          f(limit)
+          arm -> (System.nanoTime() - t0) / 1e9
+        }
+      }.groupMap(_._1)(_._2)
+      arms.foreach { case (arm, _) =>
+        val ts = times(arm)
+        println(f"[loopscale] $label%-14s $arm%-11s cpus=$cpus x$factor: " +
+          f"best=${ts.min}%6.2f s  runs=${ts.map(t => f"$t%.2f").mkString(",")}")
       }
-      println(f"[loopscale] $label%-14s cpus=$cpus x$factor: " +
-        f"best=${times.min}%6.2f s  runs=${times.map(t => f"$t%.2f").mkString(",")}")
     }
+    def sink(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
-    timed("sssp") {
-      graft.ops.Sssp.boundedBellmanFord(
-          g.withColumn("cost", lit(1000L)), seed = 999999999L,
-          maxRounds = 6)
-        .write.format("noop").mode("overwrite").save()
+    timed("sssp") { limit =>
+      sink(graft.ops.Sssp.boundedBellmanFord(
+        g.withColumn("cost", lit(1000L)), seed = 999999999L,
+        maxRounds = 6, edgeLimit = limit))
     }
-    timed("betweenness") {
-      graft.ops.Betweenness.sampledBrandes(g, nSources = 4,
-          maxDepth = 3, k = 20)
-        .write.format("noop").mode("overwrite").save()
+    timed("betweenness") { limit =>
+      sink(graft.ops.Betweenness.sampledBrandes(g, nSources = 4,
+        maxDepth = 3, k = 20, edgeLimit = limit))
     }
-    timed("label_prop") {
-      graft.ops.LabelProp.run(g, rounds = 3)
-        .write.format("noop").mode("overwrite").save()
+    timed("label_prop") { limit =>
+      sink(graft.ops.LabelProp.run(g, rounds = 3, edgeLimit = limit))
     }
     // r13 session-3 additions: the loops whose OWN edge checkpoints
     // (not Bfs.undOf/edOf) also need size-derived partition counts —
     // this probe's hub-replicated union hands them factor×legs cached
     // partitions and every round pays one task per partition
-    timed("hits") {
-      val (h, a) = graft.ops.Hits.scores(g, iters = 4)
-      h.write.format("noop").mode("overwrite").save()
-      a.write.format("noop").mode("overwrite").save()
+    timed("hits") { limit =>
+      val (h, a) = graft.ops.Hits.scores(g, iters = 4, edgeLimit = limit)
+      sink(h)
+      sink(a)
     }
-    timed("pagerank") {
+    timed("pagerank") { limit =>
       val nodes = g.select(col("src").as("id"))
         .union(g.select(col("dst").as("id"))).distinct()
         .localCheckpoint(true)
-      graft.ops.PageRank.ranks(nodes, g, nodes.count(), iters = 3)
-        .write.format("noop").mode("overwrite").save()
+      sink(graft.ops.PageRank.ranks(nodes, g, nodes.count(), iters = 3,
+        damping = 0.85, edgeLimit = limit))
     }
-    timed("kcore") {
-      graft.ops.KCore.core(g, k = 3)._1
-        .write.format("noop").mode("overwrite").save()
+    timed("kcore") { limit =>
+      sink(graft.ops.KCore.core(g, k = 3, maxRounds = 64, edgeLimit = limit)._1)
     }
-    timed("ktruss") {
-      graft.ops.Truss.truss(
+    timed("ktruss") { limit =>
+      sink(graft.ops.Truss.truss(
           g.select(least(col("src"), col("dst")).as("src"),
             greatest(col("src"), col("dst")).as("dst")).distinct(),
-          k = 3)._1
-        .write.format("noop").mode("overwrite").save()
+          k = 3, maxRounds = 64, edgeLimit = limit)._1)
     }
     spark.stop()
   }

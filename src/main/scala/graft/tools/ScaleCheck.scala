@@ -26,6 +26,11 @@ import org.apache.spark.sql.functions._
   * consecutive-doubling ratio ≤ 3.0 passes (linear = 2, quadratic = 4,
   * n·log n ≈ 2.2); metrics below a noise floor are skipped. Exits
   * non-zero on any violated curve. Runtime ≈ 1–2 min at sf0.1.
+  *
+  * The graph-loop families (label_prop, ktruss, hits, betweenness,
+  * sssp) force the distributed path (`edgeLimit = 0`): their curves
+  * describe the distributed rounds' shuffle bytes, and below
+  * `LocalGraph.EdgeLimit` the driver path shuffles nothing to measure.
   */
 object ScaleCheck {
 
@@ -284,7 +289,7 @@ object ScaleCheck {
         lpaEdges.select((col("src") + lit(k * 10000000L)).as("src"),
           (col("dst") + lit(k * 10000000L)).as("dst"))
       }.reduce(_ union _)
-      graft.ops.LabelProp.run(g, rounds = 3)
+      graft.ops.LabelProp.run(g, rounds = 3, edgeLimit = 0L)
     })
 
     // 9b. k-truss support peeling (ops/Truss — per-round triangle
@@ -297,7 +302,7 @@ object ScaleCheck {
         lpaEdges.select((col("src") + lit(k * 10000000L)).as("src"),
           (col("dst") + lit(k * 10000000L)).as("dst"))
       }.reduce(_ union _)
-      graft.ops.Truss.truss(g, k = 3)._1
+      graft.ops.Truss.truss(g, k = 3, maxRounds = 64, edgeLimit = 0L)._1
     })
 
     // 9c. Integer-grid HITS (ops/Hits — two join+agg passes per
@@ -317,7 +322,7 @@ object ScaleCheck {
         hitsEdges.select((col("src") + lit(k * 10000000L)).as("src"),
           (col("dst") + lit(k * 10000000L)).as("dst"))
       }.reduce(_ union _)
-      graft.ops.Hits.scores(g, iters = 2)._1
+      graft.ops.Hits.scores(g, iters = 2, edgeLimit = 0L)._1
     })
 
     // 9d. Sampled harmonic centrality (ops/Centrality — the
@@ -361,7 +366,7 @@ object ScaleCheck {
     // would grow super-linearly here.
     check("betweenness", Seq(1, 2, 4), useBytes = true, { f =>
       graft.ops.Betweenness.sampledBrandes(hubbed(f), nSources = 4,
-        maxDepth = 3, k = 20)
+        maxDepth = 3, k = 20, edgeLimit = 0L)
     })
 
     // 9g. Bounded-round weighted SSSP (ops/Sssp): hub-connected
@@ -371,7 +376,8 @@ object ScaleCheck {
     // size with a flat round count.
     check("sssp", Seq(1, 2, 4), useBytes = true, { f =>
       graft.ops.Sssp.nearestFromMd5Seed(
-        hubbed(f).withColumn("cost", lit(1000L)), maxRounds = 4, k = 20)
+        hubbed(f).withColumn("cost", lit(1000L)), maxRounds = 4, k = 20,
+        edgeLimit = 0L)
     })
 
     // 9h. Luby MIS (ops/Mis): hub-connected copies — actives span all

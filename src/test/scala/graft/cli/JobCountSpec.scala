@@ -24,7 +24,9 @@ import graft.stats.{Stats, StatsArtifact}
   * job at all. A per-frame recompute or write adds at least five jobs
   * to a step and fails its bound. The bounds are the counts measured
   * on this spec's tree under the shared test session (`local[4]`, 4
-  * shuffle partitions). */
+  * shuffle partitions). A graph loop below `LocalGraph.EdgeLimit` is
+  * one bounded collect, and a resumed `pipeline --work` stage reads
+  * its dir with a pinned schema. */
 class JobCountSpec extends SparkSpec {
 
   /** Jobs started in `body`'s job group. */
@@ -120,5 +122,51 @@ class JobCountSpec extends SparkSpec {
     bounds.foreach { case (step, bound) =>
       assert(counts(step) <= bound, s"$step ran ${counts(step)} jobs, bound $bound")
     }
+  }
+
+  test("each graph loop below the edge limit is one collect: 1 job with its output read") {
+    import spark.implicits._
+    // a checkpointed edge frame, as the loops' callers hand them over
+    val g = (for (a <- 1L to 30L; b <- (a + 1) to 30L if (a * 7 + b * 3) % 5 == 0)
+      yield (a, b)).toDF("src", "dst").localCheckpoint()
+    val w = g.withColumn("cost", lit(10L))
+    val nodes = g.select($"src".as("id")).union(g.select($"dst".as("id"))).distinct()
+      .localCheckpoint()
+    val n = nodes.count()
+    import graft.ops._
+    val loops: Seq[(String, () => Seq[org.apache.spark.sql.DataFrame])] = Seq(
+      "sssp" -> (() => Seq(Sssp.boundedBellmanFord(w, 1L, 3))),
+      "nearest" -> (() => Seq(Sssp.nearestFromMd5Seed(w, 3, 5))),
+      "betweenness" -> (() => Seq(Betweenness.sampledBrandes(g, 2, 2, 20))),
+      "label_prop" -> (() => Seq(LabelProp.run(g, 2))),
+      "hits" -> (() => { val (h, a) = Hits.scores(g, 2); Seq(h, a) }),
+      "pagerank" -> (() => Seq(PageRank.ranks(nodes, g, n, 2))),
+      "kcore" -> (() => Seq(KCore.core(g, 3)._1)),
+      "ktruss" -> (() => Seq(Truss.truss(g, 3)._1)))
+    val counts = loops.map { case (name, run) =>
+      val (rows, jobs) = jobsIn(run().map(_.collect().length).sum)
+      assert(rows > 0, name)
+      name -> jobs
+    }
+    info(s"jobs: $counts")
+    // the collect; the local relation it returns reads without a job
+    counts.foreach { case (name, jobs) =>
+      assert(jobs <= 1, s"$name ran $jobs jobs, bound 1")
+    }
+  }
+
+  test("pipeline --work reads its stage dirs with pinned schemas: no inference job") {
+    val dir = "/root/testdata/sf0.001"
+    val work = Files.createTempDirectory("graft-jobs-work").toString
+    def run(tag: String) = jobsIn(Console.withOut(new java.io.ByteArrayOutputStream()) {
+      Main.pipelineRun(spark, dir, Files.createTempDirectory(s"graft-jobs-$tag").toString + "/p",
+        nShards = 2, minQualityBp = 7640, budget = 100L, work = Some(work))
+    })._2
+    val (computed, resumed) = (run("a"), run("b"))
+    info(s"jobs: computed $computed, resumed $resumed")
+    // a schema-less read of each of the three stage dirs added one
+    // inference job per read: 38 and 19 before the reads were pinned
+    assert(computed <= 35, s"computed run: $computed jobs")
+    assert(resumed <= 16, s"resumed run: $resumed jobs")
   }
 }

@@ -222,4 +222,19 @@ class IncrementalSpec extends SparkSpec {
     assert(Snapshot.summary(db).errors == 1L)
     assert(paths(res.entries) == paths(fullWalk(root)))
   }
+
+  test("analyze's first scan then incremental scan leave no cached frame behind") {
+    // the shared session may hold other suites' caches
+    spark.catalog.clearCache()
+    val root = buildTree()
+    val db = Files.createTempDirectory("graft-incr-db").toString
+    Console.withOut(new java.io.ByteArrayOutputStream()) {
+      graft.cli.Main.firstScan(spark, db, root.toString, Nil).get
+      Files.write(root.resolve("d0-0/f-new"), "new".getBytes)
+      val name = graft.cli.Main.incrementalScan(spark, db, root.toString,
+        Snapshot.readFiles(spark, db), Nil)
+      assert(Snapshot.latestName(db).contains(name))
+    }
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }

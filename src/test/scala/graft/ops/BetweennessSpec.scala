@@ -11,7 +11,7 @@ import graft.SparkSpec
   * depth, σ path counts, per-edge `(σ_v·(10⁶+δ_w)) div σ_w`
   * dependency terms — Long `/` truncates and everything is nonneg,
   * so it matches Spark `div` / DuckDB `//`). */
-class BetweennessSpec extends SparkSpec {
+class BetweennessSpec extends SparkSpec with BothPaths {
 
   // two communities bridged through 3 and the 5-8-9 cycle; 6-10
   // dangles so depth caps bite
@@ -67,50 +67,50 @@ class BetweennessSpec extends SparkSpec {
   }
 
   private def run(edges: Seq[(Long, Long)], nSources: Int,
-      maxDepth: Int): Map[Long, (Long, Long)] = {
+      maxDepth: Int, limit: Long): Map[Long, (Long, Long)] = {
     import spark.implicits._
     Betweenness
       .sampledBrandes(edges.toDF("src", "dst"), nSources, maxDepth,
-        k = 1000)
+        k = 1000, limit)
       .collect()
       .map(r => r.getLong(1) -> (r.getLong(2), r.getLong(3))).toMap
   }
 
-  test("all-sources parity with the brute-force integer Brandes") {
-    val got = run(fixture, nSources = 10, maxDepth = 4)
+  bothPaths("all-sources parity with the brute-force integer Brandes") { limit =>
+    val got = run(fixture, nSources = 10, maxDepth = 4, limit)
     val want = brute(fixture, nSources = 10, maxDepth = 4)
     assert(got == want)
   }
 
-  test("depth cap changes the result and parity holds under it") {
-    val got = run(fixture, nSources = 10, maxDepth = 2)
+  bothPaths("depth cap changes the result and parity holds under it") { limit =>
+    val got = run(fixture, nSources = 10, maxDepth = 2, limit)
     val want = brute(fixture, nSources = 10, maxDepth = 2)
     assert(got == want)
     assert(got != brute(fixture, nSources = 10, maxDepth = 4))
   }
 
-  test("pivot sample subsets parity (md5-rank source selection)") {
-    val got = run(fixture, nSources = 3, maxDepth = 4)
+  bothPaths("pivot sample subsets parity (md5-rank source selection)") { limit =>
+    val got = run(fixture, nSources = 3, maxDepth = 4, limit)
     val want = brute(fixture, nSources = 3, maxDepth = 4)
     assert(got == want)
   }
 
-  test("path graph: the interior broker dominates the leaves") {
+  bothPaths("path graph: the interior broker dominates the leaves") { limit =>
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
-    val got = run(path, nSources = 5, maxDepth = 4)
+    val got = run(path, nSources = 5, maxDepth = 4, limit)
     assert(got(3L)._1 > got(1L)._1 && got(3L)._1 > got(5L)._1)
     assert(got == brute(path, nSources = 5, maxDepth = 4))
   }
 
-  test("single edge: both endpoints reached, zero dependency") {
-    val got = run(Seq((1L, 2L)), nSources = 2, maxDepth = 4)
+  bothPaths("single edge: both endpoints reached, zero dependency") { limit =>
+    val got = run(Seq((1L, 2L)), nSources = 2, maxDepth = 4, limit)
     assert(got == Map(1L -> (0L, 1L), 2L -> (0L, 1L)))
   }
 
-  test("rank ordering is (bc desc, node asc) with dense rk") {
+  bothPaths("rank ordering is (bc desc, node asc) with dense rk") { limit =>
     import spark.implicits._
     val rows = Betweenness
-      .sampledBrandes(fixture.toDF("src", "dst"), 10, 4, k = 1000)
+      .sampledBrandes(fixture.toDF("src", "dst"), 10, 4, k = 1000, limit)
       .collect()
     val sorted = rows.sortBy(r => (-r.getLong(2), r.getLong(1)))
     assert(rows.toSeq == sorted.toSeq)

@@ -13,7 +13,7 @@ import graft.SparkSpec
   * DIFFERENT algorithm than the engine's Bellman-Ford, so shared-bug
   * blindness is off the table; the declared md5 replays for
   * Brandes/Luby). */
-class GraphOpsPropSpec extends SparkSpec {
+class GraphOpsPropSpec extends SparkSpec with BothPaths {
 
   private def md5hex13(s: String): String = {
     val d = MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
@@ -36,7 +36,7 @@ class GraphOpsPropSpec extends SparkSpec {
     adj
   }
 
-  test("SSSP equals full-horizon Dijkstra on random weighted graphs") {
+  bothPaths("SSSP equals full-horizon Dijkstra on random weighted graphs") { limit =>
     import spark.implicits._
     val rng = new Random(11)
     for (trial <- 1 to 5) {
@@ -47,7 +47,7 @@ class GraphOpsPropSpec extends SparkSpec {
         // which Dijkstra computes by a different route entirely
         val got = Sssp
           .boundedBellmanFord(edges.toDF("src", "dst", "cost"),
-            seed = edges.head._1, maxRounds = 20)
+            seed = edges.head._1, maxRounds = 20, limit)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         val adjW = mutable.Map[Long, mutable.Map[Long, Long]]()
         for ((a, b, c) <- edges) {
@@ -76,7 +76,7 @@ class GraphOpsPropSpec extends SparkSpec {
     }
   }
 
-  test("betweenness equals the sequential Brandes replay on random graphs") {
+  bothPaths("betweenness equals the sequential Brandes replay on random graphs") { limit =>
     import spark.implicits._
     val rng = new Random(23)
     for (trial <- 1 to 4) {
@@ -86,7 +86,7 @@ class GraphOpsPropSpec extends SparkSpec {
         val nSources = adj.size // all sources: full Brandes at this depth
         val got = Betweenness
           .sampledBrandes(edges.toDF("src", "dst"), nSources,
-            maxDepth = 4, k = 1000)
+            maxDepth = 4, k = 1000, limit)
           .collect()
           .map(r => r.getLong(1) -> (r.getLong(2), r.getLong(3))).toMap
         val bc = mutable.Map[Long, Long]()

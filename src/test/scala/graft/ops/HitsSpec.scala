@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.SparkSpec
 
-class HitsSpec extends SparkSpec {
+class HitsSpec extends SparkSpec with BothPaths {
   import spark.implicits._
 
   // bipartite: hub 1 buys ALL of parts 100-109; hubs 2-4 buy three
@@ -32,8 +32,8 @@ class HitsSpec extends SparkSpec {
     (h, a)
   }
 
-  test("distributed integer HITS equals the driver replay exactly") {
-    val (hubs, auths) = Hits.scores(edges.toDF("src", "dst"), iters = 4)
+  bothPaths("distributed integer HITS equals the driver replay exactly") { limit =>
+    val (hubs, auths) = Hits.scores(edges.toDF("src", "dst"), iters = 4, limit)
     val gh = hubs.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val ga = auths.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val (wh, wa) = replay(edges, 4)
@@ -41,8 +41,8 @@ class HitsSpec extends SparkSpec {
     assert(ga == wa, s"auths $ga vs $wa")
   }
 
-  test("mutual reinforcement: the broad hub tops; its exclusive parts outrank the obscure one") {
-    val (hubs, auths) = Hits.scores(edges.toDF("src", "dst"), iters = 4)
+  bothPaths("mutual reinforcement: the broad hub tops; its exclusive parts outrank the obscure one") { limit =>
+    val (hubs, auths) = Hits.scores(edges.toDF("src", "dst"), iters = 4, limit)
     val gh = hubs.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val ga = auths.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // hub 1 (10 purchases incl. the popular trio) beats hubs 2-4

@@ -14,7 +14,7 @@ import graft.SparkSpec
   * on ×100 measurements; LabelProp.scala scaladoc) has a correctness
   * gate ready.
   */
-class LabelPropSpec extends SparkSpec {
+class LabelPropSpec extends SparkSpec with BothPaths {
 
   /** The pre-r13 round body: per-(node,label) count + packed argmin. */
   private def referenceRun(edges: DataFrame, rounds: Int): DataFrame = {
@@ -56,9 +56,9 @@ class LabelPropSpec extends SparkSpec {
     (intra ++ bridge ++ chains).toDF("src", "dst")
   }
 
-  test("production round body equals the packed-argmin reference, all rounds") {
+  bothPaths("production round body equals the packed-argmin reference, all rounds") { limit =>
     (1 to 4).foreach { r =>
-      val got = LabelProp.run(fixture, r)
+      val got = LabelProp.run(fixture, r, limit)
         .orderBy(col("node")).collect().map(x => (x.getLong(0), x.getLong(1)))
       val want = referenceRun(fixture, r)
         .orderBy(col("node")).collect().map(x => (x.getLong(0), x.getLong(1)))
@@ -66,12 +66,21 @@ class LabelPropSpec extends SparkSpec {
     }
   }
 
-  test("envelope still fails loudly when oracle packing would overflow") {
+  bothPaths("envelope still fails loudly when oracle packing would overflow") { limit =>
     val s = spark
     import s.implicits._
     val bad = Seq((10000000000L, 1L)).toDF("src", "dst")
-    intercept[IllegalArgumentException] {
-      LabelProp.run(bad, 1).collect()
+    val e = intercept[IllegalArgumentException] {
+      LabelProp.run(bad, 1, limit).collect()
     }
+    assert(e.getMessage.endsWith(
+      "LabelProp: node ids must be < 1e10 for the oracle's argmin packing (max=10000000000)"))
+    // the degree bound: one hub with 10^6 neighbours
+    val hub = spark.range(1, 1000001).select(lit(0L).as("src"), col("id").as("dst"))
+    val d = intercept[IllegalArgumentException] {
+      LabelProp.run(hub, 1, limit).collect()
+    }
+    assert(d.getMessage.endsWith(
+      "LabelProp: max degree must be < 1e6 for the oracle's argmin packing (max=1000000)"))
   }
 }

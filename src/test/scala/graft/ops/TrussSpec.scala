@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.SparkSpec
 
-class TrussSpec extends SparkSpec {
+class TrussSpec extends SparkSpec with BothPaths {
   import spark.implicits._
 
   /** Independent brute-force peel: per round, count each edge's
@@ -28,9 +28,9 @@ class TrussSpec extends SparkSpec {
     (cur, rounds)
   }
 
-  private def run(edges: Set[(Long, Long)], k: Int): (Set[(Long, Long)], Int) = {
+  private def run(edges: Set[(Long, Long)], k: Int, limit: Long): (Set[(Long, Long)], Int) = {
     val df = edges.toSeq.toDF("src", "dst")
-    val (t, r) = Truss.truss(df, k)
+    val (t, r) = Truss.truss(df, k, maxRounds = 64, limit)
     (t.collect().map(x => (x.getLong(0), x.getLong(1))).toSet, r)
   }
 
@@ -45,8 +45,8 @@ class TrussSpec extends SparkSpec {
   private val pendants = Set((4L, 30L), (30L, 31L))
   private val g = clique ++ strip ++ bridge ++ pendants
 
-  test("k=4 equals brute force: clique survives, strip cascades away") {
-    val (got, rounds) = run(g, 4)
+  bothPaths("k=4 equals brute force: clique survives, strip cascades away") { limit =>
+    val (got, rounds) = run(g, 4, limit)
     val (want, wantRounds) = brute(g, 4)
     assert(got == want, s"got $got\nwant $want")
     assert(rounds == wantRounds, s"rounds $rounds vs $wantRounds")
@@ -54,31 +54,31 @@ class TrussSpec extends SparkSpec {
     assert(rounds >= 2, "the strip must peel in a cascade, not one pass")
   }
 
-  test("k=3 equals brute force: every triangle edge survives, pendants drop") {
-    val (got, rounds) = run(g, 3)
+  bothPaths("k=3 equals brute force: every triangle edge survives, pendants drop") { limit =>
+    val (got, rounds) = run(g, 3, limit)
     val (want, wantRounds) = brute(g, 3)
     assert(got == want && rounds == wantRounds)
     assert(got.contains((0L, 20L)) && got.contains((11L, 13L)))
     assert(!got.exists(e => e._1 == 30L || e._2 == 30L || e._2 == 31L))
   }
 
-  test("exhausting maxRounds mid-peel throws instead of returning a non-truss") {
+  bothPaths("exhausting maxRounds mid-peel throws instead of returning a non-truss") { limit =>
     // k=4 on g needs a >= 2-round cascade (asserted above); capping at
     // 1 round must fail LOUDLY — a silent non-fixpoint edge set would
     // diverge any unrolled SQL oracle past its nLayers
     val df = g.toSeq.toDF("src", "dst")
     val ex = intercept[IllegalStateException] {
-      Truss.truss(df, 4, maxRounds = 1)
+      Truss.truss(df, 4, maxRounds = 1, limit)
     }
-    assert(ex.getMessage.contains("maxRounds"))
+    assert(ex.getMessage.startsWith("k-truss peel still shrinking after maxRounds=1 (edges="))
   }
 
-  test("k=5 and k=6: the clique is a 5-truss but not a 6-truss; empty handled") {
-    val (g5, _) = run(g, 5)
+  bothPaths("k=5 and k=6: the clique is a 5-truss but not a 6-truss; empty handled") { limit =>
+    val (g5, _) = run(g, 5, limit)
     assert(g5 == clique)
-    val (g6, r6) = run(g, 6)
+    val (g6, r6) = run(g, 6, limit)
     assert(g6.isEmpty && r6 >= 1)
-    val (e0, r0) = run(Set.empty[(Long, Long)], 3)
+    val (e0, r0) = run(Set.empty[(Long, Long)], 3, limit)
     assert(e0.isEmpty && r0 == 0)
   }
 }
