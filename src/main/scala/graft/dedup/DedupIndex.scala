@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
 
 import graft.ingest.Versioned
 
-/** Persisted LSH dedup index: build once, admit many — the dedup
-  * mirror of [[graft.similarity.IvfIndex]] (reference corpus-admission
-  * contract: `cloudengio/dudb` keeps its analysis artifacts persistent
-  * and incremental, `internal/database` + `analyze.go:226-243`; the
+/** Persisted LSH dedup index: build once, admit many (reference
+  * corpus-admission contract: `cloudengio/dudb` keeps its analysis
+  * artifacts persistent and incremental, `internal/database` +
+  * `analyze.go:226-243`; the
   * inline [[Dedup.minhashNearDupsMd5]] tier re-pays the full
   * signature+banding scan of the WHOLE corpus on every run, which at
   * 100 TB makes continuous ingest impossible).
@@ -38,9 +38,9 @@ import graft.ingest.Versioned
   * bucket collisions — the whole index corpus is never re-hashed.
   *
   * [[append]] extends the index with an already-admitted drop WITHOUT
-  * rewriting existing postings (the Lucene-segment design shared with
-  * IvfIndex.append): a new timestamped segment holds only the delta's
-  * postings/shingles, chained via PARENT; readers union the chain.
+  * rewriting existing postings (the Lucene-segment design): a new
+  * timestamped segment holds only the delta's postings/shingles,
+  * chained via PARENT; readers union the chain.
   * Hash params are frozen at build time (stored in PARAMS), so every
   * segment's band keys live in one key space. [[compact]] merges a
   * long chain into one self-contained dir.
@@ -99,36 +99,6 @@ object DedupIndex {
           bnd => xxhash64(concat_ws("_", bnd, concat_ws(",",
             slice(col("sig"), bnd * lit(r) + 1, lit(r))
               .cast("array<string>"))))).as("bkeys"))
-    }
-  }
-
-  /** (doc, bkeys, ws) in ONE projection-only lineage — the shape the
-    * STREAMING probe needs (joining two derivations of a stream is a
-    * stream-stream join; projections are free). The xx family chains
-    * two selects so the per-band slice reads the materialized `sig`
-    * ATTRIBUTE, never re-evaluating the kernel per band. */
-  def keyedWithShingles(df: DataFrame, textCol: String, idCol: String,
-      p: Params): DataFrame = {
-    val spark = df.sparkSession
-    val ws = graft.functions.ShingleExprs.wordShingles(spark,
-      col(textCol), p.n)
-    if (p.family == "md5")
-      df.select(col(idCol).as("doc"),
-        graft.functions.ShingleExprs.md5MinhashBands(spark, col(textCol),
-          p.k, p.bands, p.n).as("bkeys"),
-        ws.as("ws"))
-    else {
-      val r = p.k / p.bands
-      df.select(col(idCol).as("doc"),
-          graft.functions.ShingleExprs.minhashSig(spark, col(textCol),
-            p.k, p.n).as("sig"),
-          ws.as("ws"))
-        .select(col("doc"), transform(
-          sequence(lit(0), lit(p.bands - 1)),
-          bnd => xxhash64(concat_ws("_", bnd, concat_ws(",",
-            slice(col("sig"), bnd * lit(r) + 1, lit(r))
-              .cast("array<string>"))))).as("bkeys"),
-          col("ws"))
     }
   }
 
@@ -204,7 +174,7 @@ object DedupIndex {
 
   /** The posting view of an index = the union of its segment chain.
     * `band` is a partition DIRECTORY column — it reads back as int
-    * whatever was written (the IvfIndex.assigned rule); pinned to int
+    * whatever was written; pinned to int
     * to match the probe side's posexplode position type. */
   def postings(spark: SparkSession, base: String,
       name: Option[String] = None): DataFrame =
@@ -293,10 +263,7 @@ object DedupIndex {
 
   def latestName(base: String): Option[String] = store(base).latest
 
-  /** Index segments, newest first. */
-  def candidates(base: String): Seq[String] = store(base).candidates
-
-  /** Retention keeps the latest segment's whole chain, as in
-    * IvfIndex.prune. */
+  /** Retention keeps the latest segment's whole chain
+    * ([[graft.ingest.Versioned.prune]]). */
   def prune(base: String, keep: Int): Seq[String] = store(base).prune(keep)
 }

@@ -31,7 +31,6 @@ object Multimodal {
   final case class MediaRow(media_id: Long, kind: String, payload: Array[Byte], meta: MediaMeta)
   final case class MediaFeatures(media_id: Long, feature_dim: Int,
       features: Array[Float], checksum: Long)
-  final case class FrameSample(media_id: Long, frame_idx: Int, offset_ms: Long)
 
   /** Build a media table from the documents fixture: each doc's text
     * bytes stand in for an encoded image payload. Deterministic. */

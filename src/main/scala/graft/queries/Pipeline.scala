@@ -1242,7 +1242,7 @@ object Pipeline {
     // PERSISTED-index admission (dedup/DedupIndex): split the corpus
     // by an md5 coin (3/4 index, 1/4 incoming drop), BUILD the banded
     // LSH index once — postings partitioned by band + shingle sets,
-    // timestamped segments + LATEST, the IvfIndex layout — then admit
+    // timestamped segments + LATEST (a Versioned store) — then admit
     // the drop against the index: band-key the DROP only, probe the
     // persisted postings (the index corpus is never re-hashed),
     // first-agreeing-band, exact-Jaccard verify in basis points

@@ -237,7 +237,7 @@ object Stats {
     * the changed rows and shuffles the whole previous table to merge
     * them; on the one measured workload (perfbench's `tree_flow`) it
     * ran more jobs and took longer than this one pass. It can pay only
-    * once the layout prunes by prefix (ROADMAP item 4), and only on a
+    * once the layout prunes by prefix (ROADMAP item 1), and only on a
     * workload that shows where it wins. */
   def computeIncremental(
       prev: Computed,
@@ -250,31 +250,8 @@ object Stats {
       countHardlinkDupsAsFiles: Boolean = false): Computed =
     compute(files, prefixMatch, entryMatch, calc, countHardlinkDupsAsFiles)
 
-  /** K1/K2: top-N prefixes by one metric (reference heap.MinMax
-    * PushMaxN) — TakeOrderedAndProject, not a global sort. */
-  def topPrefixes(perPrefix: DataFrame, metric: String, n: Int): DataFrame =
-    perPrefix.orderBy(desc(metric), asc("prefix")).limit(n)
-
-  /** K2: the reference's five ranked metrics in one pass over the
-    * already-aggregated per-prefix frame. */
+  /** K2: the reference's five ranked metrics, in the order the report
+    * tree ranks prefixes by them (`cli.Main` reports). */
   val rankedMetrics: Seq[String] =
     Seq("bytes", "storage_bytes", "prefix_bytes", "files", "prefixes")
-
-  /** K3: top-N prefixes for EACH uid (reference PerIDStats,
-    * report_stats.go:34-39,169-182) — window per id, no global sort. */
-  def topPrefixesPerId(files: DataFrame, idCol: String, metric: String,
-      n: Int, calc: Calculator = Calculator.Identity): DataFrame = {
-    val perIdPrefix = files
-      .where(!col("is_dir"))
-      .withColumn("storage", calc(col("size"), col("blocks")))
-      .groupBy(col(idCol), col("parent").as("prefix"))
-      .agg(count(lit(1)).as("files"), sum(col("size")).as("bytes"),
-        sum(col("storage")).as("storage_bytes"))
-    val w = Window.partitionBy(col(idCol)).orderBy(desc(metric), asc("prefix"))
-    perIdPrefix.withColumn("rk", row_number().over(w)).where(col("rk") <= n)
-  }
-
-  /** K4: top-N users/groups overall by a metric. */
-  def topIds(perId: DataFrame, idCol: String, metric: String, n: Int): DataFrame =
-    perId.orderBy(desc(metric), asc(idCol)).limit(n)
 }

@@ -31,8 +31,6 @@ object StatsArtifact {
 
   private def store(base: String) = Versioned(s"$base/stats", s"$base/stats/LATEST")
 
-  final case class Meta(prefix: String, expression: String, date: String)
-
   def write(base: String, computed: Stats.Computed, prefix: String,
       expression: String): String = {
     val name = store(base).create()

@@ -1,18 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.text.TextAnalysis
 
-/** Streaming form of the document-pipeline gates: language-ID, quality
-  * scoring, and token budgeting applied continuously as documents
-  * arrive (file/queue source), with exact-dedup within the watermark
-  * horizon available via [[EventStream.dedupByKey]].
+/** The streaming pipeline twin (`cli pipeline --stream`): the batch
+  * pipeline's quality gate, a first-arrival exact dedup and the sharded
+  * export, applied continuously as documents arrive in a directory.
   *
-  * All three gates are STATELESS scan-stage work through the native
-  * kernels — per-microbatch plans are identical to the batch plan, so
+  * The quality gate is STATELESS scan-stage work through the native
+  * kernel — per-microbatch plans are identical to the batch plan, so
   * streaming ≡ batch row-for-row (asserted in DocumentStreamSpec) and
   * throughput scales with source parallelism, no state store involved.
   */
@@ -21,290 +20,6 @@ object DocumentStream {
   /** Schema of the documents parquet (TESTDATA.md). */
   val docSchema =
     "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
-
-  /** Score + gate one batch or microbatch of documents: predicted
-    * language, composite quality, approx-BPE token count; keeps docs
-    * at or above `minQuality`. */
-  def scoreAndGate(spark: SparkSession, docs: DataFrame,
-      minQuality: Double): DataFrame = {
-    val st: Column = graft.functions.TextStatsExpr.textStats(spark, col("text"))
-    docs.select(col("doc_id"), col("lang"),
-        graft.functions.LangIdExpr.langId(spark, col("text")).as("lang_pred"),
-        TextAnalysis.qualityScoreFast(spark, col("text")).as("quality"),
-        element_at(st, 5).as("bpe_tokens"))
-      .where(col("quality") >= minQuality)
-  }
-
-  /** Parquet-directory streaming source of documents → scored/gated
-    * stream. Append-mode safe: no aggregation state. */
-  def scoredStream(spark: SparkSession, sourceDir: String,
-      minQuality: Double): DataFrame =
-    scoreAndGate(spark,
-      spark.readStream.schema(docSchema).parquet(sourceDir), minQuality)
-
-  /** State per LSH bucket: the documents currently inside the horizon
-    * (with event times), plus the bucket's high-water mark for pruning
-    * and timeout scheduling. */
-  final case class BucketState(docs: List[(Long, Long)], maxTs: Long)
-  final case class NearDupCand(doc_a: Long, doc_b: Long, band: Int,
-      bucket: Long)
-
-  /** Streaming MinHash-LSH near-dup CANDIDATES — the streaming twin of
-    * [[graft.dedup.Dedup.lshCandidatePairs]]: as documents arrive,
-    * each one's banded signature buckets join against the documents
-    * already seen in the same bucket within `horizonMs` of EVENT time.
-    *
-    * Correctness under disorder: a pair emits only when the two
-    * documents' event times differ by at most the horizon — checked
-    * per pair in BOTH directions, so a late row cannot pair with a
-    * far-future row merely because it arrived after it. An entry is
-    * evicted only once the WATERMARK passes its ts + horizon: the
-    * watermark bounds how late a row can still arrive, so only then
-    * is no future pairing possible (pruning at the bucket's own
-    * high-water mark would evict entries that in-flight late rows may
-    * legitimately pair with).
-    *
-    * State story: keyed state holds (doc_id, ts) per occupied
-    * bucket — not text, not signatures — pruned on every arrival AND
-    * expired by event-time timeout: when the watermark passes a
-    * bucket's high-water mark + horizon, the whole entry is removed.
-    * Buckets touched once do not linger forever; state is bounded by
-    * (docs inside horizon + watermark delay) × bands, regardless of
-    * stream history. Banding math is expression-identical to the
-    * batch path, so within one horizon the emitted candidate set
-    * equals the batch candidate set exactly (asserted in
-    * DocumentStreamSpec); a pair colliding in several bands emits
-    * per-band — downstream exact verification dedups (the batch path
-    * instead emits once, from the first agreeing band).
-    *
-    * `docs` must carry (doc_id, text, ts TIMESTAMP). */
-  def nearDupCandidateStream(spark: SparkSession, docs: DataFrame,
-      k: Int = 64, bands: Int = 16, n: Int = 3,
-      horizonMs: Long = 3600L * 1000,
-      watermarkDelay: String = "10 minutes"): DataFrame = {
-    import spark.implicits._
-    val sig = graft.functions.ShingleExprs.minhashSig(spark, col("text"), k, n)
-    // Banding expression mirrors Dedup.lshCandidatePairs verbatim so
-    // bucket ids are bit-identical between batch and streaming.
-    val rowsPerBand = size(col("sig")) / bands
-    val banded = docs
-      .withWatermark("ts", watermarkDelay)
-      .select(col("doc_id").cast("long").as("doc_id"), col("ts"),
-        sig.as("sig"))
-      .select(col("doc_id"), col("ts"),
-        posexplode(transform(
-          sequence(lit(0), lit(bands - 1)),
-          bnd => xxhash64(concat_ws("_",
-            bnd, concat_ws(",", slice(col("sig"),
-              bnd * rowsPerBand + 1, rowsPerBand).cast("array<string>")))))))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket")
-      .as[(Long, java.sql.Timestamp, Int, Long)]
-    banded.groupByKey { case (_, _, band, bucket) => (band, bucket) }
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(
-        (key: (Int, Long), rows: Iterator[(Long, java.sql.Timestamp, Int, Long)],
-            state: GroupState[BucketState]) => {
-          if (state.hasTimedOut) {
-            // watermark passed maxTs + horizon: nothing in this bucket
-            // can ever pair again
-            state.remove()
-            Iterator.empty
-          } else {
-            val arrived = rows.map(r => (r._1, r._2.getTime)).toSeq
-              .sortBy { case (doc, ts) => (ts, doc) }
-            val prev = state.getOption.getOrElse(BucketState(Nil, Long.MinValue))
-            val watermarkMs = state.getCurrentWatermarkMs()
-            // evict only entries no future row can pair with: arrivals
-            // have ts ≥ watermark, so t is dead once t + horizon < W
-            var held = prev.docs.filter { case (_, t) =>
-              t + horizonMs >= watermarkMs }
-            var maxTs = prev.maxTs
-            val out = Seq.newBuilder[NearDupCand]
-            arrived.foreach { case (doc, ts) =>
-              maxTs = math.max(maxTs, ts)
-              held = held.filter { case (d, _) => d != doc }
-              held.foreach { case (d, t) =>
-                if (math.abs(ts - t) <= horizonMs)
-                  out += NearDupCand(math.min(d, doc), math.max(d, doc),
-                    key._1, key._2)
-              }
-              held = (doc, ts) :: held
-            }
-            state.update(BucketState(held, maxTs))
-            // a batch of only very-late rows could put maxTs + horizon
-            // behind the watermark, which setTimeoutTimestamp rejects
-            state.setTimeoutTimestamp(
-              math.max(maxTs + horizonMs, watermarkMs + 1))
-            out.result().iterator
-          }
-        }).toDF()
-  }
-
-  /** Deterministic stratified sampling + context-chunk planning as a
-    * streaming stage. Both are pure scan-stage expressions: the md5
-    * sampling coin (graft.ops.Sampling) needs no state, so a given
-    * document samples identically in batch, in streaming, and on
-    * every re-run — the property that makes streaming curation
-    * reproducible and replayable. Emits one row per kept doc with its
-    * chunk count under a (win, stride) token windowing. */
-  def sampleAndChunk(spark: SparkSession, docs: DataFrame,
-      rates: Map[String, Double], win: Long = 128L,
-      stride: Long = 112L): DataFrame = {
-    val st: Column = graft.functions.TextStatsExpr.textStats(spark, col("text"))
-    docs
-      .where(graft.ops.Sampling.stratifiedAt(col("doc_id"), col("lang"), rates))
-      .select(col("doc_id"), col("lang"), element_at(st, 1).as("tok"))
-      .withColumn("n_chunks",
-        when(col("tok") <= win, 1L)
-          .otherwise(ceil((col("tok") - win).cast("double") / stride)
-            .cast("long") + 1L))
-  }
-
-  /** Streaming twin of [[graft.text.NaiveBayes.predict]]: classify
-    * documents as they arrive with a batch-trained model. The model
-    * is frozen weights riding every microbatch plan as literal arrays
-    * — stateless scan-stage arithmetic, so streaming ≡ batch doc for
-    * doc (asserted in DocumentStreamSpec), append-mode safe, and a
-    * model refresh is just restarting the query with new literals
-    * (the train side stays a batch job — the standard
-    * train-offline / score-online split). */
-  def classify(docs: DataFrame, textCol: String,
-      model: graft.text.NaiveBayes.Model): DataFrame =
-    graft.text.NaiveBayes.predict(docs, textCol, model)
-
-  /** Streaming twin of the Aho–Corasick taxonomy tagger
-    * ([[graft.functions.PhraseCountExpr]]): per-document phrase
-    * occurrence counts as documents arrive. The automaton is built
-    * ONCE at plan time and rides every microbatch via the expression's
-    * reference object — stateless scan-stage work, so streaming ≡
-    * batch doc for doc (asserted in DocumentStreamSpec), append-mode
-    * safe; a taxonomy refresh is a query restart with new literals. */
-  def tagPhrases(docs: DataFrame, textCol: String,
-      phrases: Seq[String]): DataFrame =
-    docs.select(col("doc_id"),
-      posexplode(graft.functions.PhraseCountExpr.phraseCounts(
-        docs.sparkSession, col(textCol), phrases)).as(Seq("pos", "cnt")))
-      .where(col("cnt") > 0)
-
-  /** Streaming exact dedup-on-ingest — the streaming twin of
-    * [[graft.dedup.Dedup.exact]]: only the FIRST copy of each
-    * normalized text ever passes through (the crawl-ingest rule: drop
-    * re-crawls at the door, never store them). Emits one Append-mode
-    * row per NEW content hash — (text_hash, canonical_id,
-    * first_batch_copies) — where canonical_id is the min id among the
-    * copies in the first microbatch that contains the hash;
-    * re-arrivals in later batches emit nothing.
-    *
-    * State is the irreducible exact-dedup minimum: one long per
-    * DISTINCT document seen (the same bound a batch exact dedup's
-    * shuffle keys occupy). When that is too large, the bounded
-    * alternatives are the horizon-windowed [[EventStream.dedupByKey]]
-    * or the probabilistic gate in [[graft.dedup.BloomFilters]] —
-    * this operator is the exact tier.
-    *
-    * First-ARRIVAL semantics, not global min-id: a later batch can
-    * carry a smaller id and the earlier canonical stands (matching
-    * what an ingest pipeline can know online). Over a stream whose
-    * first-containing batches also hold the min ids, streaming output
-    * equals the batch [[graft.dedup.Dedup.exact]] canonicals
-    * (asserted both ways in DocumentStreamSpec). */
-  def dedupOnIngest(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    docs.select(
-        md5(regexp_replace(lower(trim(col(textCol))), "\\s+", " ")).as("text_hash"),
-        col(idCol).cast("long").as("id"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (hash: String, rows: Iterator[(String, Long)], st: GroupState[Long]) =>
-          if (st.exists) Iterator.empty
-          else {
-            var minId = Long.MaxValue
-            var n = 0L
-            rows.foreach { r => n += 1; if (r._2 < minId) minId = r._2 }
-            st.update(minId)
-            Iterator.single((hash, minId, n))
-          })
-      .toDF("text_hash", "canonical_id", "first_batch_copies")
-  }
-
-  /** Streaming admission probe against the PERSISTED LSH dedup index
-    * ([[graft.dedup.DedupIndex]]) — the streaming half of the
-    * build-once/admit-many contract: each arriving document band-keys
-    * itself (stateless scan-stage kernel), probes the index postings
-    * via a STREAM-STATIC equi join (the index corpus is never
-    * re-hashed), keeps each (index, new) pair once via the
-    * first-agreeing-band ARITHMETIC — load-bearing here: the batch
-    * tier's alternative, a distinct over candidates, would be a
-    * streaming aggregate needing watermark state, while the
-    * arithmetic form keeps the whole probe STATELESS — and verifies
-    * exact Jaccard in basis points against the persisted shingle
-    * sets. The new doc's own shingle set rides the banded row (a
-    * second join against the stream would be stream-stream and need
-    * watermarks).
-    *
-    * Emits the verified near-dup pairs (doc_idx, doc_new, j_bp) — the
-    * per-doc REJECT decisions; admitted docs are the stream minus
-    * emitted `doc_new` ids, exactly as [[graft.dedup.DedupIndex
-    * .admitted]] derives batch-side. Append-mode-safe with no
-    * watermark; streaming ≡ batch admit asserted in
-    * DocumentStreamSpec. */
-  def admitProbeStream(spark: SparkSession, docs: DataFrame,
-      indexBase: String, textCol: String = "text",
-      idCol: String = "doc_id", thresholdBp: Long = 3000L): DataFrame = {
-    import graft.dedup.DedupIndex
-    val p = DedupIndex.params(indexBase)
-    val dropSide = DedupIndex.keyedWithShingles(docs, textCol, idCol, p)
-      .withColumnRenamed("doc", "doc_new")
-      .withColumnRenamed("bkeys", "bkeys_n")
-      .withColumnRenamed("ws", "ws_n")
-    val banded = dropSide
-      .select(col("doc_new"), col("bkeys_n"), col("ws_n"),
-        posexplode_outer(col("bkeys_n")))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket")
-    val idx = DedupIndex.postings(spark, indexBase)
-      .select(col("doc").as("doc_idx"), col("bkeys").as("bkeys_i"),
-        col("band"), col("bucket"))
-    val priorBands = filter(sequence(lit(0), lit(p.bands - 1)),
-      b => b < col("band"))
-    banded.join(idx, Seq("band", "bucket"))
-      .where(!exists(priorBands, b =>
-        element_at(col("bkeys_i"), (b + 1).cast("int")) ===
-          element_at(col("bkeys_n"), (b + 1).cast("int"))))
-      .join(DedupIndex.shingles(spark, indexBase)
-        .select(col("doc").as("doc_idx"), col("ws").as("ws_i")),
-        Seq("doc_idx"))
-      .withColumn("inter",
-        size(array_intersect(col("ws_i"), col("ws_n"))).cast("long"))
-      .withColumn("j_bp", expr(
-        "inter * 10000 div (size(ws_i) + size(ws_n) - inter)"))
-      .where(col("j_bp") >= thresholdBp)
-      .select(col("doc_idx"), col("doc_new"), col("j_bp"))
-  }
-
-  /** Streaming heavy hitters — the streaming twin of
-    * [[graft.ops.HeavyHitters.topK]]: the corpus-wide top tokens
-    * maintained continuously as documents arrive. The Space-Saving
-    * UDAF is the streaming aggregation state itself (one
-    * capacity-bounded sketch in the state store, merged per
-    * microbatch by the sketch's mergeable-summaries rule), so state
-    * is CONSTANT-size regardless of stream length or vocabulary —
-    * Complete output mode re-emits the current top list each batch.
-    * With capacity ≥ distinct items the counts are exact and
-    * streaming ≡ batch (asserted in DocumentStreamSpec); beyond it,
-    * the usual Space-Saving estimate/error bounds apply. */
-  def tokenHeavyHitters(docs: DataFrame, textCol: String,
-      capacity: Int): DataFrame =
-    docs.select(explode(TextAnalysis.tokens(col(textCol))).as("token"))
-      .where(length(col("token")) > 0)
-      .groupBy()
-      .agg(graft.ops.HeavyHitters.sketch(col("token"), capacity)
-        .as("__hitters"))
-      .select(explode(col("__hitters")).as("h"))
-      .select(col("h.item"), col("h.est_count"), col("h.max_err"))
 
   /** Streaming sharded export with a CUMULATIVE read-back manifest —
     * the streaming twin of [[graft.ingest.Export.shards]] (and of the
@@ -327,8 +42,8 @@ object DocumentStream {
     *     sees counts/checksums that attest real files, never plan-side
     *     expectations.
     *
-    * Dedup-before-export composes upstream ([[dedupOnIngest]] /
-    * [[scoredStream]]); this operator is purely the durable tail. */
+    * Dedup-before-export composes upstream ([[canonicalOnIngest]]);
+    * this operator is purely the durable tail. */
   def exportOnIngest(docs: DataFrame, idCol: String, outDir: String,
       nShards: Int, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -345,30 +60,9 @@ object DocumentStream {
       }
       .start()
 
-  /** Streaming boilerplate-gram detection — the streaming twin of
-    * q_boilerplate_grams: the corpus-wide most-duplicated k-token
-    * windows maintained continuously as documents arrive, via the
-    * same Space-Saving state machinery as [[tokenHeavyHitters]]
-    * (constant-size sketch in the state store, mergeable across
-    * microbatches; capacity ≥ distinct windows → exact counts and
-    * streaming ≡ batch, asserted in DocumentStreamSpec). Items are
-    * the window STRINGS (an operator watching the stream wants the
-    * span text, not a key); the batch query's md5 keys exist only for
-    * its DuckDB oracle. */
-  def boilerplateGrams(docs: DataFrame, textCol: String, k: Int,
-      capacity: Int): DataFrame =
-    docs.select(explode(graft.functions.ShingleExprs.wordWindows(
-        docs.sparkSession, col(textCol), k)).as("gram"))
-      .groupBy()
-      .agg(graft.ops.HeavyHitters.sketch(col("gram"), capacity)
-        .as("__hitters"))
-      .select(explode(col("__hitters")).as("h"))
-      .select(col("h.item"), col("h.est_count"), col("h.max_err"))
-
-  /** Quality gate that KEEPS the document columns (unlike
-    * [[scoreAndGate]]'s scored projection) — the streaming pipeline's
-    * first stage, bit-identical to the batch pipeline's stage 1
-    * predicate (same qualityScoreFast kernel, same threshold). */
+  /** Quality gate that keeps the document columns — the streaming
+    * pipeline's first stage, bit-identical to the batch pipeline's
+    * stage 1 predicate (same qualityScoreFast kernel, same threshold). */
   def qualityGate(spark: SparkSession, docs: DataFrame,
       minQuality: Double): DataFrame =
     docs.withColumn("__q", TextAnalysis.qualityScoreFast(spark, col("text")))
@@ -380,13 +74,15 @@ object DocumentStream {
       lang: String, source: String, n_chars: Long)
 
   /** First-arrival exact dedup that emits the CANONICAL DOCUMENT (the
-    * min-id row of the first batch containing its normalized text),
-    * not just its id — [[dedupOnIngest]]'s full-row twin, so the
-    * export tail has something to write. State per distinct content
-    * is ONE long (the canonical id); the candidate rows a batch holds
-    * are bounded by the batch. Same first-arrival caveat as
-    * dedupOnIngest: a later batch carrying a smaller id does not
-    * reopen the group. */
+    * min-id row of the first batch containing its normalized text) —
+    * the streaming twin of [[graft.dedup.Dedup.exact]], emitting whole
+    * rows so the export tail has something to write. State per
+    * distinct content is ONE long (the canonical id); the candidate
+    * rows a batch holds are bounded by the batch.
+    *
+    * First-ARRIVAL semantics, not global min-id: a later batch
+    * carrying a smaller id does not reopen the group (what an ingest
+    * pipeline can know online). */
   def canonicalOnIngest(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
@@ -419,8 +115,7 @@ object DocumentStream {
     * pipelineRun): stage 1 is the SAME predicate (streaming ≡ batch
     * row-for-row, stateless); stage 2 is the exact-dedup tier (the
     * batch pipeline's span-dedup screen needs corpus-wide gram
-    * aggregates — its online twin is [[boilerplateGrams]]'s sketch,
-    * and the exact screen remains a batch pass); the mixture stage is
+    * aggregates and remains a batch pass); the mixture stage is
     * inherently a corpus decision (a global water-fill budget) and
     * stays batch; stage 4 is [[exportOnIngest]] unchanged. The E2E
     * count parity against independently computed batch stages is

@@ -133,19 +133,10 @@ object TextAnalysis {
   /** Winnowing-style document fingerprint: the minimum hash over all
     * character k-shingles. Content moves/edits far from the minimum
     * shingle leave the fingerprint unchanged — the classic rolling-hash
-    * fingerprint property. md5 keeps it oracle-comparable; see
-    * [[fingerprint64]] for the fast path. */
+    * fingerprint property. md5 keeps it oracle-comparable. */
   def fingerprintMd5(text: Column, k: Int = 8): Column =
     when(length(text) < k, md5(text)).otherwise(
       array_min(transform(
         sequence(lit(1), length(text) - (k - 1)),
         i => md5(text.substr(i, lit(k))))))
-
-  /** 64-bit xxhash64 variant of [[fingerprintMd5]] — the production
-    * fingerprint (8 bytes/doc instead of a hex string). */
-  def fingerprint64(text: Column, k: Int = 8): Column =
-    when(length(text) < k, xxhash64(text)).otherwise(
-      array_min(transform(
-        sequence(lit(1), length(text) - (k - 1)),
-        i => xxhash64(text.substr(i, lit(k))))))
 }

@@ -139,26 +139,4 @@ class StatsSpec extends SparkSpec {
     assert(t2("files") == 3)
     assert(t2("bytes") == 3 + 10 + 10 + 5)
   }
-
-  test("top-N rankings: per-prefix and per-id") {
-    val s = spark
-    import s.implicits._
-    // prefixes with file counts 2, 6, 9, 7 (report_stats_test.go:189-197)
-    val nf = Seq(2, 6, 9, 7)
-    val rows = nf.zipWithIndex.flatMap { case (n, p) =>
-      fe(s"/p$p", isDir = true, 1, 1, 100 + p / 2L, 2, nEntries = n.toLong) +:
-        (0 until n).map(i => fe(s"/p$p/f$i", isDir = false, i + 1L, 1, 100 + p / 2L, 2))
-    }
-    val c = Stats.compute(rows.toDF())
-    val topFiles = Stats.topPrefixes(c.perPrefix, "files", 2).collect()
-    assert(topFiles.map(_.getString(0)).toSeq == Seq("/p2", "/p3"))
-    val topBytes = Stats.topPrefixes(c.perPrefix, "bytes", 1).collect()
-    // bytes per prefix = 1 + n(n+1)/2 → p2: 1+45=46
-    assert(topBytes.head.getString(0) == "/p2")
-    assert(topBytes.head.getLong(topFiles.head.fieldIndex("bytes")) == 46)
-
-    val perId = Stats.topPrefixesPerId(rows.toDF(), "uid", "files", 1)
-    val got = perId.collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(got == Set((100L, "/p1"), (101L, "/p2")))
-  }
 }

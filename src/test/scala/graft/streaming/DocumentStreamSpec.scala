@@ -3,512 +3,10 @@ package graft.streaming
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
-import graft.{SparkSpec, Tables}
+import graft.SparkSpec
 
 class DocumentStreamSpec extends SparkSpec {
-
-  test("streaming admission probe equals the batch index admit") {
-    val s = spark
-    import s.implicits._
-    val rnd = new scala.util.Random(19)
-    val vocab = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-      .split(" ")
-    def text() = (0 until 25).map(_ => vocab(rnd.nextInt(vocab.length)))
-      .mkString(" ")
-    val baseTexts = (0 until 20).map(_ => text())
-    val idxDocs = (0L until 20L).zip(baseTexts).toDF("doc_id", "text")
-    // drop: 6 one-word-substituted near-dups, one exact copy, 4 fresh
-    val dropRows = (0 until 6).map { i =>
-      val w = baseTexts(i).split(" "); w(10) = "REPLACED"
-      (100L + i, w.mkString(" "))
-    } ++ Seq((200L, baseTexts(3))) ++
-      (0 until 4).map(i => (300L + i, text()))
-    val dropDf = dropRows.toDF("doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory("graft-lsh-st")
-      .toString
-    graft.dedup.DedupIndex.build(base, idxDocs, "text", "doc_id")
-    val dropDir = java.nio.file.Files
-      .createTempDirectory("graft-lsh-stdrop").toString + "/p"
-    dropDf.write.parquet(dropDir)
-    val stream = spark.readStream.schema(dropDf.schema).parquet(dropDir)
-    val q = DocumentStream.admitProbeStream(spark, stream, base)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName("admit_probe")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    val streamed = spark.sql(
-      "SELECT doc_idx, doc_new, j_bp FROM admit_probe")
-      .collect().map(key).toSet
-    val batch = graft.dedup.DedupIndex.admit(base, dropDf, "text", "doc_id")
-      .collect().map(key).toSet
-    assert(streamed == batch)
-    // the planted exact copy collides with certainty — parity is
-    // non-vacuous
-    assert(streamed.exists { case (i, n, j) =>
-      i == 3L && n == 200L && j == 10000L })
-  }
-
-  test("streaming document scoring/gating equals the batch pipeline") {
-    val dir = "/root/testdata/sf0.001"
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-docs")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/documents.parquet"),
-      streamDir.resolve("documents.parquet"))
-    // Gate at the corpus's median quality so the threshold provably
-    // drops some documents and keeps some, whatever the distribution.
-    val minQuality = DocumentStream.scoreAndGate(spark,
-        Tables.documents(spark, dir), minQuality = 0.0)
-      .stat.approxQuantile("quality", Array(0.5), 0.0).head
-    val q = DocumentStream
-      .scoredStream(spark, streamDir.toString, minQuality)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName("scored_docs")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getString(1), r.getString(2), r.getDouble(3), r.getLong(4))
-    val streamed = spark.sql(
-      "SELECT doc_id, lang, lang_pred, quality, bpe_tokens FROM scored_docs")
-      .collect().map(key).toSet
-    val batch = DocumentStream.scoreAndGate(spark,
-        Tables.documents(spark, dir), minQuality)
-      .collect().map(key).toSet
-    assert(streamed.nonEmpty && batch.nonEmpty)
-    assert(streamed == batch,
-      s"stream-only: ${(streamed -- batch).take(3)}; batch-only: ${(batch -- streamed).take(3)}")
-    // the gate actually gates: below-threshold docs exist and are dropped
-    val all = Tables.documents(spark, dir).count()
-    assert(batch.size < all, s"gate dropped nothing ($all docs)")
-  }
-
-  test("streaming LSH candidates equal the batch candidate pairs") {
-    val s = spark
-    import s.implicits._
-    // DedupSpec-style corpus: planted near-dups + exact copies
-    val vocab = "alpha beta gamma delta epsilon zeta eta theta".split(" ")
-    val rnd = new scala.util.Random(7)
-    val base = (0 until 30).map { i =>
-      i.toLong -> (0 until 25).map(_ => vocab(rnd.nextInt(vocab.length))).mkString(" ")
-    }
-    val dups = (0 until 8).map { i => (100L + i) -> base(i)._2 }
-    val corpus = (base ++ dups).toDF("doc_id", "text")
-      .withColumn("ts", to_timestamp(lit("2026-01-01 00:00:00")))
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-neardup")
-    corpus.coalesce(1).write.mode("overwrite")
-      .parquet(streamDir.resolve("in").toString)
-    val src = spark.readStream
-      .schema("doc_id LONG, text STRING, ts TIMESTAMP")
-      .parquet(streamDir.resolve("in").toString)
-    val q = DocumentStream.nearDupCandidateStream(spark, src,
-        k = 64, bands = 16, n = 3)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName("neardup_cands")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val streamed = spark.sql("SELECT DISTINCT doc_a, doc_b FROM neardup_cands")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batch = graft.dedup.Dedup.lshCandidatePairs(
-        graft.dedup.Dedup.minhashSignatures(corpus, "text", "doc_id",
-          k = 64, n = 3), bands = 16)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(streamed.nonEmpty)
-    assert(streamed == batch,
-      s"stream-only: ${(streamed -- batch).take(5)}; batch-only: ${(batch -- streamed).take(5)}")
-    // the planted exact copies must all be candidates
-    (0 until 8).foreach { i =>
-      assert(streamed.contains((i.toLong, 100L + i)), s"missing copy pair $i")
-    }
-  }
-
-  test("near-dup horizon: pairs outside the window never emit") {
-    val s = spark
-    import s.implicits._
-    val text = "same words in every copy of this document here"
-    val corpus = Seq(
-      (1L, text, "2026-01-01 00:00:00"),
-      (2L, text, "2026-01-01 00:30:00"), // inside 1h of doc 1
-      (3L, text, "2026-01-01 02:00:00")  // outside 1h of both
-    ).toDF("doc_id", "text", "ts0")
-      .withColumn("ts", to_timestamp(col("ts0"))).drop("ts0")
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-horizon")
-    corpus.coalesce(1).write.mode("overwrite")
-      .parquet(streamDir.resolve("in").toString)
-    val src = spark.readStream
-      .schema("doc_id LONG, text STRING, ts TIMESTAMP")
-      .parquet(streamDir.resolve("in").toString)
-    val q = DocumentStream.nearDupCandidateStream(spark, src,
-        k = 64, bands = 16, n = 3, horizonMs = 3600L * 1000)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName("neardup_horizon")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val pairs = spark.sql("SELECT DISTINCT doc_a, doc_b FROM neardup_horizon")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == Set((1L, 2L)), s"got $pairs")
-  }
-
-  test("near-dup horizon holds for LATE rows arriving in later batches") {
-    val s = spark
-    import s.implicits._
-    val text = "same words in every copy of this document here"
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-late")
-    val in = java.nio.file.Files.createDirectory(streamDir.resolve("in"))
-    // batch 1: docs at 00:00 and 02:00; batch 2 (separate file,
-    // maxFilesPerTrigger=1): a LATE doc at 00:30 — within 1h of doc 1,
-    // but 1.5h from doc 3. Pruning against the current (late) row's ts
-    // would keep doc 3 and emit the out-of-horizon pair (2,3).
-    def writeOne(rows: Seq[(Long, String, String)], name: String,
-        mtime: Long): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-one")
-      rows.toDF("doc_id", "text", "ts0")
-        .withColumn("ts", to_timestamp(col("ts0"))).drop("ts0")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.resolve("d").toString)
-      val part = java.nio.file.Files.list(tmp.resolve("d")).iterator()
-        .asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-      var found: java.nio.file.Path = null
-      while (part.hasNext) {
-        val p = part.next()
-        if (p.getFileName.toString.endsWith(".parquet")) found = p
-      }
-      val target = in.resolve(name)
-      java.nio.file.Files.copy(found, target)
-      java.nio.file.Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime.fromMillis(mtime))
-    }
-    val t0 = System.currentTimeMillis()
-    writeOne(Seq((1L, text, "2026-01-01 00:00:00"),
-      (3L, text, "2026-01-01 02:00:00")), "a.parquet", t0 - 60000)
-    writeOne(Seq((2L, text, "2026-01-01 00:30:00")), "b.parquet", t0)
-    val src = spark.readStream
-      .schema("doc_id LONG, text STRING, ts TIMESTAMP")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(in.toString)
-    // 3h watermark delay: the late row must reach state, not be
-    // watermark-dropped — the horizon check alone must reject (2,3)
-    val q = DocumentStream.nearDupCandidateStream(spark, src,
-        k = 64, bands = 16, n = 3, horizonMs = 3600L * 1000,
-        watermarkDelay = "3 hours")
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName("neardup_late")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val pairs = spark.sql("SELECT DISTINCT doc_a, doc_b FROM neardup_late")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val progress = q.recentProgress.map(p =>
-      s"batch=${p.batchId} in=${p.numInputRows}").mkString("; ")
-    assert(pairs == Set((1L, 2L)), s"got $pairs [$progress]")
-  }
-
-  test("streaming sampling + chunk planning equals batch, bit-for-bit") {
-    val dir = "/root/testdata/sf0.001"
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-docs2")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/documents.parquet"),
-      streamDir.resolve("documents.parquet"))
-    val rates = Map("en" -> 0.5, "zh" -> 0.25)
-    val q = DocumentStream.sampleAndChunk(spark,
-        spark.readStream.schema(DocumentStream.docSchema)
-          .parquet(streamDir.toString), rates)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName("sampled_docs")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))
-    val streamed = spark.sql(
-      "SELECT doc_id, lang, tok, n_chunks FROM sampled_docs")
-      .collect().map(key).toSet
-    val batch = DocumentStream.sampleAndChunk(spark,
-        Tables.documents(spark, dir), rates)
-      .collect().map(key).toSet
-    assert(streamed.nonEmpty)
-    assert(streamed == batch)
-    // the sample really drops rows in the mapped strata
-    val total = Tables.documents(spark, dir)
-      .where(col("lang").isin("en", "zh")).count()
-    val keptMapped = batch.count(t => t._2 == "en" || t._2 == "zh")
-    assert(keptMapped < total)
-  }
-
-  test("streaming phrase tagging equals batch, doc for doc") {
-    val dir = "/root/testdata/sf0.001"
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-docs-tag")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/documents.parquet"),
-      streamDir.resolve("documents.parquet"))
-    val phrases = Seq("hash join", "table scan", "the")
-    val stream = spark.readStream.schema(DocumentStream.docSchema)
-      .parquet(streamDir.toString)
-      .select(col("doc_id"), col("text"))
-    val q = DocumentStream.tagPhrases(stream, "text", phrases)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName("tag_docs")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getInt(1), r.getLong(2))
-    val streamed = spark.sql("SELECT doc_id, pos, cnt FROM tag_docs")
-      .collect().map(key).toSet
-    val batch = DocumentStream.tagPhrases(
-        Tables.documents(spark, dir).select(col("doc_id"), col("text")),
-        "text", phrases)
-      .collect().map(key).toSet
-    assert(streamed.nonEmpty && streamed == batch)
-  }
-
-  test("streaming NB classification equals batch, doc for doc") {
-    val dir = "/root/testdata/sf0.001"
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-docs-nb")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/documents.parquet"),
-      streamDir.resolve("documents.parquet"))
-    // Batch-train offline on a derived label (text contains 'join'),
-    // then score the same corpus as a stream with the frozen model.
-    val labeled = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"),
-        when(col("text").contains("join"), "y").otherwise("n").as("label"))
-    val model = graft.text.NaiveBayes.train(
-      labeled, "text", "label", Seq("n", "y"), 256)
-    val stream = spark.readStream.schema(DocumentStream.docSchema)
-      .parquet(streamDir.toString)
-      .select(col("doc_id"), col("text"))
-    val q = DocumentStream.classify(stream, "text", model)
-      .select(col("doc_id"), col("s_n"), col("s_y"), col("pred"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName("nb_docs")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))
-    val streamed = spark.sql("SELECT doc_id, s_n, s_y, pred FROM nb_docs")
-      .collect().map(key).toSet
-    val batch = DocumentStream.classify(
-        labeled.select(col("doc_id"), col("text")), "text", model)
-      .select(col("doc_id"), col("s_n"), col("s_y"), col("pred"))
-      .collect().map(key).toSet
-    assert(streamed.nonEmpty && streamed == batch)
-    // both classes actually occur
-    assert(streamed.map(_._4).size == 2 || streamed.map(_._4).contains("y"))
-  }
-
-  test("streaming heavy hitters equal batch across multiple microbatches") {
-    val dir = "/root/testdata/sf0.001"
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-hh")
-    // Two files + maxFilesPerTrigger=1 → two microbatches, so the
-    // sketch state genuinely MERGES across batches (a single batch
-    // would only test the batch-side aggregate).
-    val docs = Tables.documents(spark, dir)
-    val scratch = java.nio.file.Files.createTempDirectory("graft-hh-w")
-    Seq(0, 1).foreach { half =>
-      val out = scratch.resolve(s"p$half")
-      docs.where(col("doc_id") % 2 === half).coalesce(1).write
-        .parquet(out.toString)
-      val part = java.nio.file.Files.list(out).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part, streamDir.resolve(s"f$half.parquet"))
-    }
-    val cap = 256 // >= distinct tokens at sf0.001 → exact regime
-    val stream = spark.readStream.schema(DocumentStream.docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(streamDir.toString)
-    val q = DocumentStream.tokenHeavyHitters(stream, "text", cap)
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName("hh_tokens")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getString(0), r.getLong(1), r.getLong(2))
-    val streamed = spark
-      .sql("SELECT item, est_count, max_err FROM hh_tokens")
-      .collect().map(key).toSet
-    val batch = graft.ops.HeavyHitters.topK(
-        docs.select(explode(graft.text.TextAnalysis.tokens(col("text")))
-          .as("token")).where(length(col("token")) > 0),
-        "token", cap, cap)
-      .collect().map(key).toSet
-    assert(streamed.nonEmpty)
-    assert(streamed == batch,
-      s"stream-only: ${(streamed -- batch).take(3)}; " +
-        s"batch-only: ${(batch -- streamed).take(3)}")
-    // exact regime: zero estimation error end to end
-    assert(streamed.forall(_._3 == 0L), "expected exact counts (max_err 0)")
-  }
-
-  test("streaming boilerplate grams equal batch across microbatches") {
-    val s = spark
-    import s.implicits._
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-bp")
-    val planted = "alpha beta gamma delta"
-    // the planted 4-token span rides every 3rd doc of BOTH batches, so
-    // its count must merge across the two Space-Saving states
-    def mk(ids: Range) = ids.map { i =>
-      val body = s"doc $i filler f$i g$i h$i words w$i"
-      (i.toLong, if (i % 3 == 0) s"$body $planted" else body)
-    }.toDF("doc_id", "text")
-    val t0 = System.currentTimeMillis()
-    Seq((mk(0 until 30), "f0", t0 - 60000), (mk(30 until 60), "f1", t0))
-      .foreach { case (df, name, mtime) =>
-        val out = java.nio.file.Files.createTempDirectory("graft-bp-w")
-          .resolve(name)
-        df.coalesce(1).write.parquet(out.toString)
-        val part = java.nio.file.Files.list(out).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        val target = streamDir.resolve(s"$name.parquet")
-        java.nio.file.Files.copy(part, target)
-        java.nio.file.Files.setLastModifiedTime(target,
-          java.nio.file.attribute.FileTime.fromMillis(mtime))
-      }
-    val stream = spark.readStream.schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(streamDir.toString)
-    val cap = 4096 // >= distinct windows → exact regime
-    val q = DocumentStream.boilerplateGrams(stream, "text", k = 4, cap)
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName("bp_grams")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getString(0), r.getLong(1), r.getLong(2))
-    val streamed = spark
-      .sql("SELECT item, est_count, max_err FROM bp_grams")
-      .collect().map(key).toSet
-    val batch = DocumentStream.boilerplateGrams(
-        mk(0 until 30).unionByName(mk(30 until 60)), "text", 4, cap)
-      .collect().map(key).toSet
-    assert(streamed.nonEmpty && streamed == batch,
-      s"stream-only: ${(streamed -- batch).take(3)}; batch-only: ${(batch -- streamed).take(3)}")
-    // exact regime, and the planted span's count merged across batches
-    assert(streamed.forall(_._3 == 0L))
-    assert(streamed.exists(x => x._1 == planted && x._2 == 20L),
-      streamed.filter(_._1 == planted).toString)
-  }
-
-  test("streaming dedup-on-ingest equals batch exact dedup across microbatches") {
-    val s = spark
-    import s.implicits._
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-ingest")
-    // batch 0: originals 0..19 with a SAME-batch duplicate pair
-    // (id 100 copies id 3 with whitespace noise → same normalized hash,
-    // canonical must be min id = 3); batch 1: re-crawls of every even
-    // original (ids 200+) plus two genuinely new docs.
-    val b0 = ((0L until 20L).map(i => i -> s"doc number $i words w$i x y z") :+
-      (100L -> "doc  number 3 words w3 x y  z ")).toDF("doc_id", "text")
-    val b1 = ((0L until 20L by 2).map(i => (200L + i) -> s"doc number $i words w$i x y z") ++
-      Seq(300L -> "fresh content alpha", 301L -> "fresh content beta")).toDF("doc_id", "text")
-    val scratch = java.nio.file.Files.createTempDirectory("graft-ingest-w")
-    val t0 = System.currentTimeMillis()
-    Seq((b0, "f0", t0 - 60000), (b1, "f1", t0)).foreach { case (df, name, mtime) =>
-      val out = scratch.resolve(name)
-      df.coalesce(1).write.parquet(out.toString)
-      val part = java.nio.file.Files.list(out).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      val target = streamDir.resolve(s"$name.parquet")
-      java.nio.file.Files.copy(part, target)
-      java.nio.file.Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime.fromMillis(mtime))
-    }
-    val stream = spark.readStream.schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(streamDir.toString)
-    val q = DocumentStream.dedupOnIngest(stream, "text", "doc_id")
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName("ingest_dedup")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val streamed = spark
-      .sql("SELECT text_hash, canonical_id, first_batch_copies FROM ingest_dedup")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    // exactly one emission per distinct content, never a re-emission
-    assert(streamed.map(_._1).distinct.length == streamed.length)
-    // min ids all live in their first-containing batch here, so the
-    // streaming canonicals equal the batch exact-dedup canonicals
-    val batch = graft.dedup.Dedup.exact(
-        b0.unionByName(b1), "text", "doc_id")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    assert(streamed.map(s0 => s0._1 -> s0._2).toMap == batch.map {
-      case (h, c) => h -> c })
-    assert(streamed.length == batch.size)
-    // the same-batch duplicate collapsed to min id 3 with 2 copies seen
-    val dup3 = streamed.filter(_._2 == 3L)
-    assert(dup3.length == 1 && dup3.head._3 == 2L)
-    // re-crawled batch-1 copies emitted nothing; new docs emitted once
-    assert(streamed.count(x => x._2 >= 300L) == 2)
-    assert(!streamed.exists(x => x._2 >= 200L && x._2 < 300L))
-  }
-
-  test("dedup-on-ingest pins FIRST-ARRIVAL semantics for late smaller ids") {
-    val s = spark
-    import s.implicits._
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-ingest2")
-    // batch 0 carries id 50; batch 1 carries id 7 with the SAME text:
-    // the online canonical must remain 50 (batch exact would say 7).
-    val b0 = Seq(50L -> "same exact text here").toDF("doc_id", "text")
-    val b1 = Seq(7L -> "same exact text here").toDF("doc_id", "text")
-    val scratch = java.nio.file.Files.createTempDirectory("graft-ingest2-w")
-    val t0 = System.currentTimeMillis()
-    Seq((b0, "f0", t0 - 60000), (b1, "f1", t0)).foreach { case (df, name, mtime) =>
-      val out = scratch.resolve(name)
-      df.coalesce(1).write.parquet(out.toString)
-      val part = java.nio.file.Files.list(out).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      val target = streamDir.resolve(s"$name.parquet")
-      java.nio.file.Files.copy(part, target)
-      java.nio.file.Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime.fromMillis(mtime))
-    }
-    val stream = spark.readStream.schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(streamDir.toString)
-    val q = DocumentStream.dedupOnIngest(stream, "text", "doc_id")
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName("ingest_dedup_late")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val rows = spark.sql(
-      "SELECT canonical_id, first_batch_copies FROM ingest_dedup_late")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(rows.toSeq == Seq((50L, 1L)))
-  }
 
   test("streaming sharded export: cumulative manifest equals the batch export") {
     val s = spark
