@@ -356,7 +356,10 @@ object Main {
     * by q_mixture_caps' allocator with quotas drawn by q_group_sample's
     * deterministic md5 rank, and the export is the manifest-attested
     * Export.shards. Stages checkpoint eagerly so each quality line
-    * corresponds to exactly one materializing job. */
+    * corresponds to exactly one materializing job. The result's stage
+    * counts are read off what the stages already observed (each
+    * observation's `rows`, the mixture's per-source counts); only a
+    * stage resumed from `--work` counts its input. */
   private[graft] def pipelineRun(spark: SparkSession, docsDir: String,
       out: String, nShards: Int, format: String = "parquet",
       minQualityBp: Int = 5000, spanK: Int = 8, maxDupBp: Int = 5000,
@@ -382,8 +385,11 @@ object Main {
     // dir without _SUCCESS (killed mid-write) recomputes.
     val fpBase: String =
       graft.dedup.DedupIndex.fileFp(new java.io.File(s"$docsDir/documents.parquet"))
+    // A stage returns its output and the metrics its observation saw
+    // (None when it resumed from --work: nothing flowed through it).
     def staged(stage: String, fp: String)(
-        compute: => (DataFrame, org.apache.spark.sql.Observation)): DataFrame =
+        compute: => (DataFrame, org.apache.spark.sql.Observation))
+        : (DataFrame, Option[Map[String, Any]]) =
       work match {
         case Some(w) =>
           val p = s"$w/${stage}_$fp"
@@ -391,62 +397,71 @@ object Main {
           if (new java.io.File(s"$p/_SUCCESS").exists()) {
             println(s"quality[$stage]: resumed from $p")
             // every stage filters rows of the corpus: its schema
-            Snapshot.readPinned(spark, p, docs.schema)
+            (Snapshot.readPinned(spark, p, docs.schema), None)
           } else {
             val (df, obs) = compute
             df.write.mode("overwrite").parquet(p)
-            println(qualityLine(stage, obs.get))
-            spark.read.schema(df.schema).parquet(p)
+            val m = obs.get
+            println(qualityLine(stage, m))
+            (spark.read.schema(df.schema).parquet(p), Some(m))
           }
         case None =>
           val (df, obs) = compute
           val kept = df.localCheckpoint(eager = true)
-          println(qualityLine(stage, obs.get))
-          kept
+          val m = obs.get
+          println(qualityLine(stage, m))
+          (kept, Some(m))
       }
+    // A stage's input rows as its observation counted them; a resumed
+    // stage counts its input frame instead.
+    def rowsIn(seen: Option[Map[String, Any]], input: DataFrame): Long =
+      seen.fold(input.count())(_("rows").asInstanceOf[Long])
     // Stage 1 — quality screen.
     val minQ = minQualityBp / 10000.0
-    val kept1 = timed("quality") { staged("quality", s"$fpBase-q$minQualityBp") {
+    val (kept1, seen1) = timed("quality") { staged("quality", s"$fpBase-q$minQualityBp") {
       val q = graft.text.TextAnalysis.qualityScoreFast(spark, col("text"))
       val (inst, obs) = graft.ops.Observe.quality(docs.withColumn("__q", q),
         "pipeline_quality", Seq("doc_id"), col("__q") < minQ)
       (inst.where(col("__q") >= minQ).drop("__q"), obs)
     } }
     // Stage 2 — exact duplicated-span screen: drop documents whose
-    // duplicated-token coverage exceeds the threshold.
-    val kept2 = timed("span_dedup") { staged("span_dedup", s"$fpBase-q$minQualityBp-k$spanK-d$maxDupBp") {
-      val spanStats = graft.dedup.SpanDedup.spanStats(kept1, "text",
+    // duplicated-token coverage exceeds the threshold. The coverage
+    // joins onto kept1 once and the screen filters those rows in
+    // kept1's column order (a resumed stage reads the corpus schema).
+    val (kept2, seen2) = timed("span_dedup") { staged("span_dedup", s"$fpBase-q$minQualityBp-k$spanK-d$maxDupBp") {
+      val withStats = graft.dedup.SpanDedup.withSpanStats(kept1, "text",
         "doc_id", spanK)
-      val (inst, obs) = graft.ops.Observe.quality(spanStats,
+      val (inst, obs) = graft.ops.Observe.quality(withStats,
         "pipeline_span", Seq("doc_id"), col("dup_bp") >= maxDupBp)
-      (kept1.join(
-        inst.where(col("dup_bp") < maxDupBp).select(col("doc_id")),
-        Seq("doc_id"), "left_semi"), obs)
+      (inst.where(col("dup_bp") < maxDupBp).select(kept1.columns.map(col): _*),
+        obs)
     } }
     // Stage 3 — mixture selection: temperature weights over the
     // surviving per-source counts, water-filled to the budget; each
     // source's quota filled by its md5-rank-smallest docs (bounded
     // heap — no window sort, deterministic across runs and cluster
-    // sizes). The per-source table is bounded, so the alloc broadcast
-    // is kilobytes.
-    val kept3 = timed("mixture") { staged("mixture",
+    // sizes). One collect of the per-source counts feeds both the
+    // weights and the allocator, and the quotas filter the ranks as a
+    // driver-side literal map (the per-source table is bounded).
+    var nDedup = Option.empty[Long]
+    val (kept3, _) = timed("mixture") { staged("mixture",
         s"$fpBase-q$minQualityBp-k$spanK-d$maxDupBp-b$budget") {
-      val weights = kept2.groupBy(col("source"))
+      val counts = kept2.groupBy(col("source"))
         .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
         .collect()
-        .map(r => r.getString(0) ->
-          math.floor(math.sqrt(r.getLong(1).toDouble) * 100).toLong)
-        .toMap
-      val alloc = graft.ops.WaterFill.allocateByCount(kept2, "source",
-        weights, budget)
-      val ranked = graft.ops.Sampling.groupedExactK(kept2, "source",
-        "doc_id", budget.toInt)
-      val selIds = ranked
-        .join(broadcast(alloc.select(col("source"), col("alloc"))),
-          Seq("source"))
-        .where(col("rk") <= col("alloc")).select(col("doc_id"))
+        .map(r => (r.getString(0), r.getLong(1)))
+        .toSeq
+      nDedup = Some(counts.map(_._2).sum)
+      val quota = graft.ops.WaterFill.allocate(counts.map { case (src, n) =>
+        (src, n, math.floor(math.sqrt(n.toDouble) * 100).toLong)
+      }, budget)
+      val selIds = graft.ops.Sampling.groupedExactK(kept2, "source",
+          "doc_id", budget.toInt)
+        .where(col("rk") <= try_element_at(typedLit(quota), col("source")))
+        .select(col("doc_id"))
       graft.ops.Observe.quality(
-        kept2.join(selIds, Seq("doc_id"), "left_semi"),
+        kept2.join(graft.ops.Bfs.bcastIfSmall(selIds, quota.values.sum),
+          Seq("doc_id"), "left_semi"),
         "pipeline_mixture", Seq("doc_id"), lit(false))
     } }
     // Stage 4 — sharded export. Two attestation tiers:
@@ -473,9 +488,11 @@ object Main {
         (st, graft.ingest.Export.verify(spark, out, "doc_id", format))
       }
     }
-    println(qualityLine("export", obs4.get))
-    PipelineResult(docs.count(), kept1.count(), kept2.count(),
-      kept3.count(), shards, bad, stageSecs.toList)
+    val seen4 = obs4.get
+    println(qualityLine("export", seen4))
+    PipelineResult(rowsIn(seen1, docs), rowsIn(seen2, kept1),
+      nDedup.getOrElse(kept2.count()), seen4("rows").asInstanceOf[Long],
+      shards, bad, stageSecs.toList)
   }
 
   /** Incremental path of `analyze`: rescan `root` against the previous

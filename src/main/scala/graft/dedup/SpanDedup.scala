@@ -28,12 +28,13 @@ import org.apache.spark.sql.functions._
   *      constant width; at production scale you'd use xxhash64, the
   *      md5 prefix is what lets the DuckDB oracle replay bit-for-bit);
   *      text itself never shuffles, only (key, doc_id, pos) triples;
-  *   2. the gram stream is computed ONCE (eager checkpoint) and both
-  *      the ≥ minCount count aggregate and the surviving-position
-  *      semi join read that materialization; crucially there are no
-  *      per-key posting arrays anywhere (a boilerplate gram's df is
+  *   2. the gram stream shuffles ONCE, by key, and a count window
+  *      over that partitioning keeps the positions of every gram
+  *      seen ≥ minCount times (one exchange, one sort, no
+  *      checkpoint, no join back); crucially there are no per-key
+  *      posting arrays anywhere (a boilerplate gram's df is
   *      unbounded, so a collect-per-gram buffer would be a task
-  *      killer);
+  *      killer — the window's key-group buffer spills instead);
   *   3. per-doc covered-token count via interval union on the SORTED
   *      hit positions: sum(min(k, pos − prev_pos)) — a window over
   *      doc_id, a HIGH-cardinality key, so no skew (an unbounded
@@ -47,7 +48,10 @@ import org.apache.spark.sql.functions._
 object SpanDedup {
 
   /** Every k-gram start: (doc_id, pos, g) with g the 52-bit md5-prefix
-    * key of the space-joined gram. Docs shorter than k emit nothing.
+    * key of the space-joined gram, a nonneg bigint (its fixed-width
+    * lowercase hex, `lower(lpad(hex(g), 13, '0'))`, is the md5's first
+    * 13 hex chars and sorts in the same order). Docs shorter than k
+    * emit nothing.
     * Keys come from the native word_gram_md5 kernel (one codegen'd
     * pass per doc); [[gramKeysDeclarative]] is the Column-form
     * reference the SpanDedupSpec equivalence test pins it to. */
@@ -68,7 +72,8 @@ object SpanDedup {
     toks.where(col("n") >= k)
       .select(col("doc_id"),
         posexplode(transform(sequence(lit(0), col("n") - k),
-          p => substring(md5(concat_ws(" ", slice(col("t"), p + 1, lit(k)))), 1, 13))))
+          p => conv(substring(md5(concat_ws(" ", slice(col("t"), p + 1, lit(k)))),
+            1, 13), 16, 10).cast("bigint"))))
       .toDF("doc_id", "pos", "g")
   }
 
@@ -78,46 +83,38 @@ object SpanDedup {
     * Skew-safe shape: a posting-list aggregate (collect per gram)
     * would build one unbounded array per MEGA-BOILERPLATE gram — the
     * grams this operator exists to find are exactly the ones with
-    * millions of occurrences at corpus scale. Instead the gram stream
-    * checkpoints once and the count aggregate plus the semi join both
-    * consume that single materialization (compute-once sharing — a
-    * checkpoint drops partitioning metadata, so both consumers still
-    * plan their own exchange; see PartitionReuseSpec). The
-    * repartition(g) before the checkpoint is shuffle-write locality
-    * for those two key-clustered consumers, and no aggregation
-    * buffer ever exceeds one row. */
+    * millions of occurrences at corpus scale. Instead one count window
+    * partitioned by the key tags every position with its gram's
+    * occurrence count: the gram stream crosses ONE exchange and one
+    * sort, and WindowExec buffers a key group in the spillable
+    * ExternalAppendOnlyUnsafeRowArray (rows past
+    * `spark.sql.windowExec.buffer.spill.threshold` go to disk), so a
+    * gram with millions of occurrences spills rather than building an
+    * array, and no aggregation buffer exceeds one count. */
   def dupSpanPositions(docs: DataFrame, textCol: String, idCol: String,
-      k: Int, minCount: Int = 2): DataFrame = {
-    val grams = gramKeys(docs, textCol, idCol, k)
-      .repartition(col("g"))
-      .localCheckpoint(eager = true) // count agg + semi join, same distribution
-    val dupKeys = grams.groupBy(col("g"))
-      .agg(count(lit(1)).as("c"))
+      k: Int, minCount: Int = 2): DataFrame =
+    gramKeys(docs, textCol, idCol, k)
+      .withColumn("c", count(lit(1)).over(Window.partitionBy("g")))
       .where(col("c") >= minCount)
-      .select(col("g"))
-    grams.join(dupKeys, Seq("g"), "left_semi")
       .select(col("doc_id"), col("pos"))
-  }
 
-  /** Per-document duplicated-span report: total tokens, tokens covered
-    * by some duplicated k-gram (interval union of the hit spans), and
-    * the duplicated fraction in basis points. Every input doc appears
-    * (zero coverage included). */
+  /** `docs` with its duplicated-span report appended: total tokens
+    * (`n_tokens`), tokens covered by some duplicated k-gram
+    * (`dup_tokens`, the interval union of the hit spans) and the
+    * duplicated fraction in basis points (`dup_bp`). One left outer
+    * join of `docs` with the per-doc coverage, so every input doc
+    * appears (zero coverage included) and a screen filters its own
+    * rows with no join back; `idCol` moves to the front. */
+  def withSpanStats(docs: DataFrame, textCol: String, idCol: String,
+      k: Int, minCount: Int = 2): DataFrame =
+    withCoverage(docs, textCol, idCol, k,
+      dupSpanPositions(docs, textCol, idCol, k, minCount))
+
+  /** Per-document duplicated-span report: the [[withSpanStats]]
+    * columns alone, keyed by `doc_id`. */
   def spanStats(docs: DataFrame, textCol: String, idCol: String,
-      k: Int, minCount: Int = 2): DataFrame = {
-    val hits = dupSpanPositions(docs, textCol, idCol, k, minCount)
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val covered = hits
-      .withColumn("gap", col("pos") - coalesce(lag("pos", 1).over(w), col("pos") - k))
-      .groupBy(col("doc_id"))
-      .agg(sum(least(lit(k), col("gap")).cast("long")).as("dup_tokens"))
-    docs.select(col(idCol).as("doc_id"),
-      size(split(col(textCol), " ")).cast("long").as("n_tokens"))
-      .join(covered, Seq("doc_id"), "left")
-      .na.fill(0L, Seq("dup_tokens"))
-      .selectExpr("doc_id", "n_tokens", "dup_tokens",
-        "CAST(dup_tokens * 10000 DIV n_tokens AS BIGINT) AS dup_bp")
-  }
+      k: Int, minCount: Int = 2): DataFrame =
+    report(withSpanStats(docs, textCol, idCol, k, minCount), idCol)
 
   /** Incremental twin of [[spanStats]]: per NEW-BATCH document, the
     * tokens covered by some k-gram already present in the CORPUS —
@@ -132,18 +129,30 @@ object SpanDedup {
       .join(gramKeys(corpus, textCol, idCol, k).select(col("g")).distinct(),
         Seq("g"), "left_semi")
       .select(col("doc_id"), col("pos"))
+    report(withCoverage(batch, textCol, idCol, k, hits), idCol)
+  }
+
+  /** `docs` joined with the interval union of its `hits` (doc_id, pos
+    * of k-gram starts): the [[withSpanStats]] columns. `n_tokens` is
+    * taken before the join, so [[report]]'s projection prunes the text
+    * off the join's inputs. */
+  private def withCoverage(docs: DataFrame, textCol: String, idCol: String,
+      k: Int, hits: DataFrame): DataFrame = {
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val covered = hits
       .withColumn("gap", col("pos") - coalesce(lag("pos", 1).over(w), col("pos") - k))
-      .groupBy(col("doc_id"))
+      .groupBy(col("doc_id").as(idCol))
       .agg(sum(least(lit(k), col("gap")).cast("long")).as("dup_tokens"))
-    batch.select(col(idCol).as("doc_id"),
-      size(split(col(textCol), " ")).cast("long").as("n_tokens"))
-      .join(covered, Seq("doc_id"), "left")
-      .na.fill(0L, Seq("dup_tokens"))
-      .selectExpr("doc_id", "n_tokens", "dup_tokens",
-        "CAST(dup_tokens * 10000 DIV n_tokens AS BIGINT) AS dup_bp")
+    docs.withColumn("n_tokens", size(split(col(textCol), " ")).cast("long"))
+      .join(covered, Seq(idCol), "left")
+      .withColumn("dup_tokens", coalesce(col("dup_tokens"), lit(0L)))
+      .withColumn("dup_bp",
+        expr("CAST(dup_tokens * 10000 DIV n_tokens AS BIGINT)"))
   }
+
+  private def report(stats: DataFrame, idCol: String): DataFrame =
+    stats.select(col(idCol).as("doc_id"), col("n_tokens"), col("dup_tokens"),
+      col("dup_bp"))
 
   /** Per-document n-gram NOVELTY: the share of the doc's DISTINCT
     * k-grams whose corpus-wide FIRST occurrence (min doc_id) is this

@@ -124,38 +124,38 @@ object ShingleKernels {
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  /** 13-hex-char md5 prefixes of every k-token window under
-    * split-on-SINGLE-SPACE semantics — the 52-bit gram KEY of
-    * [[graft.dedup.SpanDedup]], bit-identical to the declarative
-    * `transform(sequence(0, n−k), p → substring(md5(concat_ws(" ",
-    * slice(t, p+1, k))), 1, 13))` (equivalence asserted in
-    * SpanDedupSpec). Docs shorter than k tokens yield an EMPTY array
-    * (the declarative form's `size >= k` guard). The md5 prefix is
-    * what lets the DuckDB oracle replay the keys; the kernel exists
-    * because the lambda form pays interpreted slice+concat+md5
-    * Column-tree evaluation per position. */
-  def gramMd5Prefix(text: UTF8String, k: Int): ArrayData = {
-    val toks = text.toString.split(" ", -1)
-    if (toks.length < k) return new GenericArrayData(Array.empty[Any])
-    val md = md5Local.get()
-    val out = new Array[Any](toks.length - k + 1)
+  /** 52-bit md5 keys of every k-token window under split-on-SINGLE-SPACE
+    * semantics — the gram KEY of [[graft.dedup.SpanDedup]]: the top 13
+    * hex chars of the window's md5 as a nonneg long, bit-identical to
+    * the declarative `transform(sequence(0, n−k), p → conv(substring(
+    * md5(concat_ws(" ", slice(t, p+1, k))), 1, 13), 16, 10))`
+    * (equivalence asserted in SpanDedupSpec). Docs shorter than k
+    * tokens yield an EMPTY array (the declarative form's `size >= k`
+    * guard). The md5 prefix is what lets the DuckDB oracle replay the
+    * keys; the kernel exists because the lambda form pays interpreted
+    * slice+concat+md5 Column-tree evaluation per position. */
+  def gramMd5Keys(text: UTF8String, k: Int): ArrayData = {
+    // A gram of single-space-separated tokens is the text's own byte
+    // range from its first token's start to its last token's end, so
+    // each key digests a slice of the UTF-8 bytes: no gram is built.
+    val bytes = text.getBytes
+    var n = 1
+    var b = 0
+    while (b < bytes.length) { if (bytes(b) == ' ') n += 1; b += 1 }
+    if (n < k) return new GenericArrayData(Array.empty[Long])
+    // token t spans [starts(t), starts(t + 1) - 1)
+    val starts = new Array[Int](n + 1)
+    var t = 1
+    b = 0
+    while (b < bytes.length) {
+      if (bytes(b) == ' ') { starts(t) = b + 1; t += 1 }
+      b += 1
+    }
+    starts(n) = bytes.length + 1
+    val out = new Array[Long](n - k + 1)
     var i = 0
-    while (i + k <= toks.length) {
-      val sb = new StringBuilder(toks(i))
-      var j = 1
-      while (j < k) { sb.append(' ').append(toks(i + j)); j += 1 }
-      md.reset()
-      val dig = md.digest(
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val hex = new Array[Char](13)
-      var b = 0
-      while (b < 7) {
-        val v = dig(b) & 0xff
-        hex(2 * b) = Character.forDigit(v >>> 4, 16)
-        if (2 * b + 1 < 13) hex(2 * b + 1) = Character.forDigit(v & 0xf, 16)
-        b += 1
-      }
-      out(i) = UTF8String.fromString(new String(hex))
+    while (i < out.length) {
+      out(i) = md5Prefix52(bytes, starts(i), starts(i + k) - 1 - starts(i))
       i += 1
     }
     new GenericArrayData(out)
@@ -165,9 +165,16 @@ object ShingleKernels {
     * digest as a nonneg long, ≡ `conv(substring(md5(s),1,13),16,10)`
     * ≡ DuckDB `('0x'||substr(md5(s),1,13))::BIGINT`. */
   private def md5Prefix52(s: String): Long = {
+    val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    md5Prefix52(bytes, 0, bytes.length)
+  }
+
+  /** [[md5Prefix52]] of `len` bytes at `off`. */
+  private def md5Prefix52(bytes: Array[Byte], off: Int, len: Int): Long = {
     val md = md5Local.get()
     md.reset()
-    val dig = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    md.update(bytes, off, len)
+    val dig = md.digest()
     var v = 0L
     var b = 0
     while (b < 7) { v = (v << 8) | (dig(b) & 0xffL); b += 1 }
@@ -319,15 +326,15 @@ case class WordWindowHashesExpr(child: Expression, n: Int) extends UnaryExpressi
 }
 
 case class WordGramMd5Expr(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "word_gram_md5"
 
   protected override def nullSafeEval(input: Any): Any =
-    ShingleKernels.gramMd5Prefix(input.asInstanceOf[UTF8String], k)
+    ShingleKernels.gramMd5Keys(input.asInstanceOf[UTF8String], k)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleKernels.gramMd5Prefix($c, $k)")
+      s"graft.functions.ShingleKernels.gramMd5Keys($c, $k)")
 
   override protected def withNewChildInternal(newChild: Expression): WordGramMd5Expr =
     copy(child = newChild)

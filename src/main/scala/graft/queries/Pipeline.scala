@@ -641,10 +641,11 @@ object Pipeline {
     // window occurring verbatim >= 2 times corpus-wide marks its
     // tokens duplicated; per-doc coverage = interval union of the hit
     // spans (sum over sorted positions of min(k, pos - prev)). Only
-    // (52-bit gram key, doc_id, pos) triples shuffle — never text —
-    // the gram count and semi join share one key-partitioned
-    // checkpoint (no posting lists: boilerplate grams have unbounded
-    // df), and the union window partitions by doc_id (high
+    // (52-bit integer gram key, doc_id, pos) triples shuffle — never
+    // text — and they shuffle once: a count window partitioned by the
+    // key keeps the duplicated positions (no posting lists:
+    // boilerplate grams have unbounded df, and the window's key-group
+    // buffer spills), and the union window partitions by doc_id (high
     // cardinality, no skew). Coverage in basis points (floor div).
     // See dedup/SpanDedup.
     "q_span_dedup" -> ((s, dir) => {
@@ -677,7 +678,10 @@ object Pipeline {
     // the same gram keys q_span_dedup masks. Per-(gram, doc) counts
     // first, then the gram rollup (ONE aggregate each — a mixed
     // distinct + non-distinct agg would plan an Expand); ranking is a
-    // fully tie-broken TakeOrdered top-20, never a global sort.
+    // fully tie-broken TakeOrdered top-20, never a global sort. The
+    // tie-break ranks the 52-bit key itself (fixed-width lowercase hex
+    // sorts in the same order as its value), and only the 20 printed
+    // keys render as the md5's first 13 hex chars.
     "q_boilerplate_grams" -> ((s, dir) => {
       SpanDedup.gramKeys(spread(documents(s, dir)), "text", "doc_id", 8)
         .groupBy(col("g"), col("doc_id"))
@@ -687,6 +691,8 @@ object Pipeline {
         .where(col("n_occ") >= 2)
         .orderBy(desc("n_occ"), desc("n_docs"), asc("g"))
         .limit(20)
+        .select(lower(lpad(hex(col("g")), 13, "0")).as("g"), col("n_occ"),
+          col("n_docs"))
     }),
 
     // Per-doc n-gram novelty: the share of a doc's DISTINCT 8-grams

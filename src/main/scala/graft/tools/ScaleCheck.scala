@@ -443,10 +443,11 @@ object ScaleCheck {
 
     // 12. Duplicated-span masking (dedup/SpanDedup): token-tagged
     // copies share zero grams across copies, so dup-gram groups and
-    // hit positions replicate per copy — shuffle bytes (the gram
-    // posting shuffle dominates) must track the corpus. A broken
-    // postings aggregate (e.g. a count-then-join-back second
-    // exchange, or pair-wise gram matching) would grow super-linearly.
+    // hit positions replicate per copy — shuffle bytes (the one
+    // key-partitioned shuffle of the gram stream under the count
+    // window dominates) must track the corpus. A broken postings
+    // aggregate (e.g. a count-then-join-back second exchange, or
+    // pair-wise gram matching) would grow super-linearly.
     // The filter references the coverage column: count() over the bare
     // left-outer join would let Catalyst ELIMINATE the join (unique
     // right key) and skip the whole gram pipeline.

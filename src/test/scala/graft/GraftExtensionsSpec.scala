@@ -104,6 +104,17 @@ class GraftExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("word_gram_md5 returns each gram's 52-bit md5 key as bigint") {
+    def key(gram: String): Long = java.lang.Long.parseLong(
+      java.security.MessageDigest.getInstance("MD5").digest(gram.getBytes("UTF-8"))
+        .map(b => f"${b & 0xff}%02x").mkString.take(13), 16)
+    NativeFunctions.install(spark)
+    val r = spark.sql("SELECT word_gram_md5('a b c', 2) AS g")
+    assert(r.schema("g").dataType ==
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, false))
+    assert(r.collect()(0).getSeq[Long](0) == Seq(key("a b"), key("b c")))
+  }
+
   test("a repeat wrapper build keeps the registered function") {
     // A replacement (which Spark logs as "replaced a previously
     // registered function") installs a new ExpressionInfo, and for the

@@ -165,8 +165,10 @@ class JobCountSpec extends SparkSpec {
     val (computed, resumed) = (run("a"), run("b"))
     info(s"jobs: computed $computed, resumed $resumed")
     // a schema-less read of each of the three stage dirs added one
-    // inference job per read: 38 and 19 before the reads were pinned
-    assert(computed <= 35, s"computed run: $computed jobs")
-    assert(resumed <= 16, s"resumed run: $resumed jobs")
+    // inference job per read: 38 and 19 before the reads were pinned;
+    // 35 and 16 before the span screen shuffled its grams once and the
+    // stage counts came from the stages' observations
+    assert(computed <= 18, s"computed run: $computed jobs")
+    assert(resumed <= 14, s"resumed run: $resumed jobs")
   }
 }

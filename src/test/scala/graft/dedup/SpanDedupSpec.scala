@@ -1,5 +1,7 @@
 package graft.dedup
 
+import org.apache.spark.sql.functions.{hex, lower, lpad}
+
 import graft.SparkSpec
 
 class SpanDedupSpec extends SparkSpec {
@@ -161,12 +163,54 @@ class SpanDedupSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     for (df <- Seq(corpus, edge); k <- Seq(3, 8)) {
       val kern = SpanDedup.gramKeys(df, "text", "doc_id", k)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
       val decl = SpanDedup.gramKeysDeclarative(df, "text", "doc_id", k)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
       assert(kern == decl,
         s"k=$k kern-only=${(kern -- decl).take(3)} decl-only=${(decl -- kern).take(3)}")
-      assert(kern.forall(_._3.length == 13))
+      assert(kern.forall(t => t._3 >= 0L && t._3 < (1L << 52)))
+    }
+  }
+
+  test("a gram key prints as the md5's first 13 hex chars, leading zeros kept") {
+    import spark.implicits._
+    def md5Hex(s: String): String = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    // the first 2-token gram "w<i> x" whose md5 begins with '0'
+    val text = Iterator.from(0).map(i => s"w$i x")
+      .find(t => md5Hex(t).startsWith("0")).get
+    val printed = SpanDedup.gramKeys(Seq((1L, text)).toDF("doc_id", "text"),
+        "text", "doc_id", 2)
+      .select(lower(lpad(hex($"g"), 13, "0"))).as[String].collect().toSeq
+    assert(printed == Seq(md5Hex(text).take(13)))
+  }
+
+  test("a gram in every doc spills the count window and still matches brute force") {
+    val docs = (0L until 200L).map { id =>
+      id -> s"boiler plate one two three four five six unique$id tail$id"
+    }
+    // past the in-memory threshold the buffer moves to a sorter, which
+    // spills every `spill.threshold` rows
+    val confs = Map("spark.sql.windowExec.buffer.in.memory.threshold" -> "1",
+      "spark.sql.windowExec.buffer.spill.threshold" -> "16")
+    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val spilled = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => spilled.addAndGet(m.diskBytesSpilled))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val got = run(docs, 8)
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      for ((id, (n, cov)) <- brute(docs, 8, 2))
+        assert(got(id) == ((n, cov, cov * 10000 / n)), s"doc $id")
+      assert(got(0L)._2 == 8L)
+      assert(spilled.get > 0, "the 200-row key group never spilled")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     }
   }
 
