@@ -358,8 +358,9 @@ object Main {
     * Export.shards. Stages checkpoint eagerly so each quality line
     * corresponds to exactly one materializing job. The result's stage
     * counts are read off what the stages already observed (each
-    * observation's `rows`, the mixture's per-source counts); only a
-    * stage resumed from `--work` counts its input. */
+    * observation's `rows`, the mixture's per-source counts); under
+    * `--work` each stage keeps its count next to its dir, and a resumed
+    * stage reads it back instead of counting. */
   private[graft] def pipelineRun(spark: SparkSession, docsDir: String,
       out: String, nShards: Int, format: String = "parquet",
       minQualityBp: Int = 5000, spanK: Int = 8, maxDupBp: Int = 5000,
@@ -385,40 +386,43 @@ object Main {
     // dir without _SUCCESS (killed mid-write) recomputes.
     val fpBase: String =
       graft.dedup.DedupIndex.fileFp(new java.io.File(s"$docsDir/documents.parquet"))
-    // A stage returns its output and the metrics its observation saw
-    // (None when it resumed from --work: nothing flowed through it).
+    // A stage returns its output and its input rows, which `inputRows`
+    // reads off the metrics its observation saw. Under --work the count
+    // is kept in the stage dir's `_ROWS_IN` (Spark skips `_` files), so
+    // a resumed stage, through which nothing flowed, counts nothing; a
+    // dir without it recomputes.
     def staged(stage: String, fp: String)(
-        compute: => (DataFrame, org.apache.spark.sql.Observation))
-        : (DataFrame, Option[Map[String, Any]]) =
+        compute: => (DataFrame, org.apache.spark.sql.Observation),
+        inputRows: Map[String, Any] => Long = _("rows").asInstanceOf[Long])
+        : (DataFrame, Long) =
       work match {
         case Some(w) =>
           val p = s"$w/${stage}_$fp"
+          val rowsFile = Paths.get(p, "_ROWS_IN")
           // pinned-schema reads: a schema-less read infers it in a job
-          if (new java.io.File(s"$p/_SUCCESS").exists()) {
+          if (Files.exists(Paths.get(p, "_SUCCESS")) && Files.exists(rowsFile)) {
             println(s"quality[$stage]: resumed from $p")
             // every stage filters rows of the corpus: its schema
-            (Snapshot.readPinned(spark, p, docs.schema), None)
+            (Snapshot.readPinned(spark, p, docs.schema), Files.readString(rowsFile).trim.toLong)
           } else {
             val (df, obs) = compute
             df.write.mode("overwrite").parquet(p)
             val m = obs.get
             println(qualityLine(stage, m))
-            (spark.read.schema(df.schema).parquet(p), Some(m))
+            val n = inputRows(m)
+            Files.writeString(rowsFile, s"$n\n")
+            (spark.read.schema(df.schema).parquet(p), n)
           }
         case None =>
           val (df, obs) = compute
           val kept = df.localCheckpoint(eager = true)
           val m = obs.get
           println(qualityLine(stage, m))
-          (kept, Some(m))
+          (kept, inputRows(m))
       }
-    // A stage's input rows as its observation counted them; a resumed
-    // stage counts its input frame instead.
-    def rowsIn(seen: Option[Map[String, Any]], input: DataFrame): Long =
-      seen.fold(input.count())(_("rows").asInstanceOf[Long])
     // Stage 1 — quality screen.
     val minQ = minQualityBp / 10000.0
-    val (kept1, seen1) = timed("quality") { staged("quality", s"$fpBase-q$minQualityBp") {
+    val (kept1, nInput) = timed("quality") { staged("quality", s"$fpBase-q$minQualityBp") {
       val q = graft.text.TextAnalysis.qualityScoreFast(spark, col("text"))
       val (inst, obs) = graft.ops.Observe.quality(docs.withColumn("__q", q),
         "pipeline_quality", Seq("doc_id"), col("__q") < minQ)
@@ -428,7 +432,7 @@ object Main {
     // duplicated-token coverage exceeds the threshold. The coverage
     // joins onto kept1 once and the screen filters those rows in
     // kept1's column order (a resumed stage reads the corpus schema).
-    val (kept2, seen2) = timed("span_dedup") { staged("span_dedup", s"$fpBase-q$minQualityBp-k$spanK-d$maxDupBp") {
+    val (kept2, nQuality) = timed("span_dedup") { staged("span_dedup", s"$fpBase-q$minQualityBp-k$spanK-d$maxDupBp") {
       val withStats = graft.dedup.SpanDedup.withSpanStats(kept1, "text",
         "doc_id", spanK)
       val (inst, obs) = graft.ops.Observe.quality(withStats,
@@ -443,15 +447,15 @@ object Main {
     // sizes). One collect of the per-source counts feeds both the
     // weights and the allocator, and the quotas filter the ranks as a
     // driver-side literal map (the per-source table is bounded).
-    var nDedup = Option.empty[Long]
-    val (kept3, _) = timed("mixture") { staged("mixture",
-        s"$fpBase-q$minQualityBp-k$spanK-d$maxDupBp-b$budget") {
+    var counted = 0L
+    val (kept3, nDedup) = timed("mixture") { staged("mixture",
+        s"$fpBase-q$minQualityBp-k$spanK-d$maxDupBp-b$budget")({
       val counts = kept2.groupBy(col("source"))
         .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
         .collect()
         .map(r => (r.getString(0), r.getLong(1)))
         .toSeq
-      nDedup = Some(counts.map(_._2).sum)
+      counted = counts.map(_._2).sum
       val quota = graft.ops.WaterFill.allocate(counts.map { case (src, n) =>
         (src, n, math.floor(math.sqrt(n.toDouble) * 100).toLong)
       }, budget)
@@ -463,7 +467,7 @@ object Main {
         kept2.join(graft.ops.Bfs.bcastIfSmall(selIds, quota.values.sum),
           Seq("doc_id"), "left_semi"),
         "pipeline_mixture", Seq("doc_id"), lit(false))
-    } }
+    }, _ => counted) }
     // Stage 4 — sharded export. Two attestation tiers:
     //   - procedural (parquet/json): Export.shards — manifest cut
     //     from a READ-BACK of the artifact (a write-side fault shows
@@ -490,8 +494,7 @@ object Main {
     }
     val seen4 = obs4.get
     println(qualityLine("export", seen4))
-    PipelineResult(rowsIn(seen1, docs), rowsIn(seen2, kept1),
-      nDedup.getOrElse(kept2.count()), seen4("rows").asInstanceOf[Long],
+    PipelineResult(nInput, nQuality, nDedup, seen4("rows").asInstanceOf[Long],
       shards, bad, stageSecs.toList)
   }
 

@@ -3,6 +3,7 @@ package graft.ops
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -58,17 +59,10 @@ object LocalGraph {
     collectAll(Seq(frame), limit).map(_.head)
 
   /** [[collect]] of several frames in the same job, their rows
-    * counted together against `limit`: the columns of each frame.
-    *
-    * One job, one task: `coalesce(1)` makes the limit's input a
-    * single partition, so the planner needs no exchange for it, and
-    * the task stops reading after `limit + 1` rows. The task packs the
-    * rows into primitive arrays, so the driver receives one array per
-    * column, not one object per row. */
+    * counted together against `limit`: the columns of each frame. */
   private[graft] def collectAll(frames: Seq[DataFrame],
       limit: Long): Option[Seq[Array[Array[Long]]]] = {
-    if (limit <= 0 || !frames.forall(_.schema.fields.forall(f => integral(f.dataType))))
-      return None
+    if (!frames.forall(_.schema.fields.forall(f => integral(f.dataType)))) return None
     val widths = frames.map(_.columns.length)
     val n = widths.max + 1 // a frame tag, then the widest frame's columns
     val tagged = frames.zipWithIndex.map { case (f, t) =>
@@ -77,30 +71,57 @@ object LocalGraph {
         .select((lit(t.toLong) +: (1 to w).map(i => col(s"c$i").cast(LongType))) ++
           Seq.fill(n - 1 - w)(lit(0L)): _*)
     }.reduce(_ unionAll _)
-    val packed = tagged
+    val packed = bounded(tagged, limit) { rows =>
+      val cols = Array.fill(n)(new scala.collection.mutable.ArrayBuilder.ofLong)
+      var sawNull = false
+      rows.foreach { r =>
+        var i = 0
+        while (i < n) {
+          if (r.isNullAt(i)) sawNull = true else cols(i) += r.getLong(i)
+          i += 1
+        }
+      }
+      if (sawNull) null else cols.map(_.result())
+    }.flatMap(Option(_))
+    packed.map { cols =>
+      if (frames.size == 1) Seq(cols.tail)
+      else frames.indices.map { t =>
+        val rows = cols(0).indices.filter(cols(0)(_) == t.toLong).toArray
+        Array.tabulate(widths(t))(c => rows.map(cols(c + 1)(_)))
+      }
+    }
+  }
+
+  /** ONE bounded collect of `frame`, packed in the task: Some(what
+    * `pack` made of the rows) when the frame has at most `limit` rows,
+    * None when it has more. A `limit` of 0 or less returns None without
+    * running a job: specs and probes force the distributed path that
+    * way. Every driver path ([[collectAll]], `stats.Stats.compute`)
+    * makes its collect through it.
+    *
+    * One job, one task: `coalesce(1)` makes the limit's input a
+    * single partition, so the planner needs no exchange for it, and
+    * the task stops reading after `limit + 1` rows. `pack` runs in
+    * that task over the rows it reads (and on the driver over no rows
+    * when the frame has no partition), so the driver receives what it
+    * packs, e.g. one array per column, not one object per row. The
+    * rows are Spark's internal ones, unconverted; a row object may be
+    * reused for the next row, so `pack` copies what it keeps. */
+  private[graft] def bounded[P](frame: DataFrame, limit: Long)(
+      pack: Iterator[InternalRow] => P): Option[P] = {
+    if (limit <= 0) return None
+    val parts = frame
       .coalesce(1)
       .limit(math.min(limit, Int.MaxValue - 1L).toInt + 1)
-      .rdd
+      .queryExecution.toRdd
       .mapPartitions { rows =>
-        val cols = Array.fill(n)(new scala.collection.mutable.ArrayBuilder.ofLong)
-        var sawNull = false
-        rows.foreach { r =>
-          var i = 0
-          while (i < n) {
-            if (r.isNullAt(i)) sawNull = true else cols(i) += r.getLong(i)
-            i += 1
-          }
-        }
-        Iterator.single(if (sawNull) null else cols.map(_.result()))
+        var n = 0L
+        val p = pack(rows.map { r => n += 1; r })
+        Iterator.single((n, p))
       }
       .collect()
-    val cols = packed.headOption.getOrElse(Array.fill(n)(Array.emptyLongArray))
-    if (cols == null || cols(0).length > limit) None
-    else if (frames.size == 1) Some(Seq(cols.tail))
-    else Some(frames.indices.map { t =>
-      val rows = cols(0).indices.filter(cols(0)(_) == t.toLong).toArray
-      Array.tabulate(widths(t))(c => rows.map(cols(c + 1)(_)))
-    })
+    val (n, p) = parts.headOption.getOrElse((0L, pack(Iterator.empty)))
+    if (n > limit) None else Some(p)
   }
 
   /** A local relation of named, equal-length long or double columns:

@@ -10,11 +10,13 @@ import org.apache.spark.sql.functions.lit
 import graft.SparkSpec
 import graft.ids.IdMaps
 import graft.ingest.{Incremental, Snapshot}
-import graft.stats.{Stats, StatsArtifact}
+import graft.stats.{Calculator, Stats, StatsArtifact}
 
 /** Regression bounds on the Spark jobs each `idu` artifact costs: the
-  * six stats frames come from one aggregation written as one table,
-  * incremental stats are that same computation, a report tree is two
+  * six stats frames of a snapshot below `Stats.RowLimit` come from one
+  * bounded collect written as one table (the distributed aggregation,
+  * forced, keeps its own bound), incremental stats are that same
+  * computation, a report tree is two
   * bounded collects, a rescan is
   * the prev-index read, the walk and one counting job whose cache the
   * snapshot write reads, and a find is one shuffle into a sorted
@@ -26,7 +28,7 @@ import graft.stats.{Stats, StatsArtifact}
   * on this spec's tree under the shared test session (`local[4]`, 4
   * shuffle partitions). A graph loop below `LocalGraph.EdgeLimit` is
   * one bounded collect, and a resumed `pipeline --work` stage reads
-  * its dir with a pinned schema. */
+  * its dir with a pinned schema and its row count from a file. */
 class JobCountSpec extends SparkSpec {
 
   /** Jobs started in `body`'s job group. */
@@ -84,6 +86,8 @@ class JobCountSpec extends SparkSpec {
     })
 
     val (_, full) = jobsIn(StatsArtifact.write(db, Stats.compute(prev), "/", ""))
+    val (_, distributed) = jobsIn(StatsArtifact.write(db,
+      Stats.compute(prev, lit(true), lit(true), Calculator.Identity, false, 0L), "/", ""))
     val (_, readArtifact) = jobsIn(StatsArtifact.read(spark, db))
 
     Files.write(root.resolve("d0-0/d1-1/f-new"), "new".getBytes)
@@ -112,12 +116,14 @@ class JobCountSpec extends SparkSpec {
     }
     assert(n == 28 + 7 + 1) // the first scan's rows and f-new
 
-    val counts = Map("stats" -> full, "incremental" -> incremental,
+    val counts = Map("stats" -> full, "distributedStats" -> distributed,
+      "incremental" -> incremental,
       "reports" -> reports, "rescan" -> rescan, "rescanWrite" -> rescanWrite,
       "find" -> find, "readFiles" -> readFiles, "readArtifact" -> readArtifact,
       "summarize" -> summarize)
     info(s"jobs: $counts")
-    val bounds = Map("stats" -> 4, "incremental" -> 4, "reports" -> 2, "rescan" -> 3,
+    val bounds = Map("stats" -> 2, "distributedStats" -> 4, "incremental" -> 2,
+      "reports" -> 2, "rescan" -> 3,
       "rescanWrite" -> 2, "find" -> 2, "readFiles" -> 0, "readArtifact" -> 0, "summarize" -> 0)
     bounds.foreach { case (step, bound) =>
       assert(counts(step) <= bound, s"$step ran ${counts(step)} jobs, bound $bound")
@@ -167,8 +173,9 @@ class JobCountSpec extends SparkSpec {
     // a schema-less read of each of the three stage dirs added one
     // inference job per read: 38 and 19 before the reads were pinned;
     // 35 and 16 before the span screen shuffled its grams once and the
-    // stage counts came from the stages' observations
+    // stage counts came from the stages' observations; a resumed run
+    // took 14 while it counted each resumed dir again
     assert(computed <= 18, s"computed run: $computed jobs")
-    assert(resumed <= 14, s"resumed run: $resumed jobs")
+    assert(resumed <= 8, s"resumed run: $resumed jobs")
   }
 }

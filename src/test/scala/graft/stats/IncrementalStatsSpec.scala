@@ -13,7 +13,7 @@ import graft.model.FileEntry
   * full recompute — including the hardlink-canonical flip into an
   * unchanged prefix — while aggregating only the changed prefixes'
   * contribution rows. */
-class IncrementalStatsSpec extends SparkSpec {
+class IncrementalStatsSpec extends SparkSpec with StatsPaths {
 
   private val T0 = new Timestamp(1700000000000L)
   private val T1 = new Timestamp(1700000111000L)
@@ -90,44 +90,44 @@ class IncrementalStatsSpec extends SparkSpec {
     assert(got == Set("/chg", "/del", "/new"))
   }
 
-  test("incremental == full recompute (hardlink flip into an unchanged prefix)") {
+  statsCase("incremental == full recompute (hardlink flip into an unchanged prefix)") { st =>
     val changed = Stats.changedPrefixesOf(prevDf, newDf)
-    val prev = Stats.compute(prevDf)
+    val prev = st.compute(prevDf)
     // sanity: the canonical flip really is planted — /keep/z was the
     // hardlink (non-canonical) before, becomes the file after
-    val prevKeep = Stats.compute(prevDf).perPrefix
+    val prevKeep = st.compute(prevDf).perPrefix
       .where(col("prefix") === "/keep").collect()(0)
-    val fullKeep = Stats.compute(newDf).perPrefix
+    val fullKeep = st.compute(newDf).perPrefix
       .where(col("prefix") === "/keep").collect()(0)
     assert(prevKeep.getAs[Long]("hardlinks") == 1L)
     assert(fullKeep.getAs[Long]("hardlinks") == 0L)
-    val inc = Stats.computeIncremental(prev, prevDf, newDf, changed)
-    assertSameComputed(inc, Stats.compute(newDf))
+    val inc = st.computeIncremental(prev, prevDf, newDf, changed)
+    assertSameComputed(inc, st.compute(newDf))
   }
 
-  test("incremental == full recompute under filters and a calculator") {
+  statsCase("incremental == full recompute under filters and a calculator") { st =>
     val pm = col("path") =!= "/same" // prefix filter
     val em = col("size") =!= 400L    // entry filter
     val calc = Calculator.RawBlocks
-    val prev = Stats.compute(prevDf, pm, em, calc)
-    val inc = Stats.computeIncremental(prev, prevDf, newDf,
+    val prev = st.compute(prevDf, pm, em, calc)
+    val inc = st.computeIncremental(prev, prevDf, newDf,
       Stats.changedPrefixesOf(prevDf, newDf), pm, em, calc)
-    assertSameComputed(inc, Stats.compute(newDf, pm, em, calc))
+    assertSameComputed(inc, st.compute(newDf, pm, em, calc))
   }
 
-  test("incremental == full with countHardlinkDupsAsFiles = true") {
-    val prev = Stats.compute(prevDf, countHardlinkDupsAsFiles = true)
-    val inc = Stats.computeIncremental(prev, prevDf, newDf,
+  statsCase("incremental == full with countHardlinkDupsAsFiles = true") { st =>
+    val prev = st.compute(prevDf, countHardlinkDupsAsFiles = true)
+    val inc = st.computeIncremental(prev, prevDf, newDf,
       Stats.changedPrefixesOf(prevDf, newDf),
       countHardlinkDupsAsFiles = true)
     assertSameComputed(inc,
-      Stats.compute(newDf, countHardlinkDupsAsFiles = true))
+      st.compute(newDf, countHardlinkDupsAsFiles = true))
   }
 
-  test("a vanished key drops; an unchanged-corpus rescan is a no-op delta") {
+  statsCase("a vanished key drops; an unchanged-corpus rescan is a no-op delta") { st =>
     val changed = Stats.changedPrefixesOf(prevDf, newDf)
-    val prev = Stats.compute(prevDf)
-    val inc = Stats.computeIncremental(prev, prevDf, newDf, changed)
+    val prev = st.compute(prevDf)
+    val inc = st.computeIncremental(prev, prevDf, newDf, changed)
     // uid 3 owned only /del — gone from the merged per-user frame
     assert(inc.perUser.where(col("uid") === 3).count() == 0L)
     // uid 9 is new — present
@@ -136,17 +136,17 @@ class IncrementalStatsSpec extends SparkSpec {
     val none = Stats.changedPrefixesOf(prevDf, prevDf)
     assert(none.count() == 0L)
     assertSameComputed(
-      Stats.computeIncremental(prev, prevDf, prevDf, none), prev)
+      st.computeIncremental(prev, prevDf, prevDf, none), prev)
   }
 
-  test("recompute touches only the changed prefixes' rows") {
+  statsCase("recompute touches only the changed prefixes' rows") { st =>
     // the restriction is observable through the delta's group keys:
     // only changed prefixes (plus hardlink-expanded ones) may appear
     val changed = Stats.changedPrefixesOf(prevDf, newDf)
-    val prev = Stats.compute(prevDf)
-    val inc = Stats.computeIncremental(prev, prevDf, newDf, changed)
+    val prev = st.compute(prevDf)
+    val inc = st.computeIncremental(prev, prevDf, newDf, changed)
     val unchangedUntouched = Seq("/same") // no hardlink ties, no change
-    val full = Stats.compute(newDf)
+    val full = st.compute(newDf)
     unchangedUntouched.foreach { p =>
       val a = inc.perPrefix.where(col("prefix") === p).collect().toSeq
       val b = prev.perPrefix.where(col("prefix") === p).collect().toSeq
@@ -157,7 +157,7 @@ class IncrementalStatsSpec extends SparkSpec {
     }
   }
 
-  test("hardlink expansion: an added prefix's match, an untouched group beside a flip") {
+  statsCase("hardlink expansion: an added prefix's match, an untouched group beside a flip") { st =>
     // group 5 spans /c (changed) and /x (unchanged): /c/l2 is canonical
     // before and gone after, so the canonical link flips to /x/l1; group 6
     // spans /x and /y, both unchanged, so a delta merge must cancel it
@@ -179,9 +179,9 @@ class IncrementalStatsSpec extends SparkSpec {
     val filters = Seq(lit(true) -> lit(true), (col("path") =!= "/x") -> lit(true),
       (col("path") =!= "/c") -> (col("size") =!= 30L))
     filters.foreach { case (pm, em) =>
-      val inc = Stats.computeIncremental(Stats.compute(before, pm, em), before, after,
+      val inc = st.computeIncremental(st.compute(before, pm, em), before, after,
         Stats.changedPrefixesOf(before, after), pm, em)
-      assertSameComputed(inc, Stats.compute(after, pm, em))
+      assertSameComputed(inc, st.compute(after, pm, em))
     }
   }
 
@@ -190,12 +190,12 @@ class IncrementalStatsSpec extends SparkSpec {
     .withColumn("uid", when(col("path") === "/keep/f1", lit(null)).otherwise(col("uid")))
     .withColumn("gid", when(col("path") === "/chg/b", lit(null)).otherwise(col("gid")))
 
-  test("grouping sets: null uid/gid rows land only in their own set") {
+  statsCase("grouping sets: null uid/gid rows land only in their own set") { st =>
     val prevN = withNullIds(prevDf)
     val newN = withNullIds(newDf)
-    val c = Stats.compute(newN)
+    val c = st.compute(newN)
     // the rolled-up () set is not confused with a null-key group
-    assert(rows(c.totals) == rows(Stats.compute(newDf).totals))
+    assert(rows(c.totals) == rows(st.compute(newDf).totals))
     val nullUser = c.perUser.where(col("uid").isNull).collect()
     assert(nullUser.length == 1)
     assert(nullUser.head.getAs[Long]("files") == 1L &&
@@ -205,21 +205,21 @@ class IncrementalStatsSpec extends SparkSpec {
     assert(c.perUserPrefix.where(col("uid").isNull).collect()
       .map(_.getAs[String]("prefix")).toSeq == Seq("/keep"))
     assert(c.perPrefix.where(col("prefix").isNull).count() == 0L)
-    val inc = Stats.computeIncremental(Stats.compute(prevN), prevN, newN,
+    val inc = st.computeIncremental(st.compute(prevN), prevN, newN,
       Stats.changedPrefixesOf(prevN, newN))
     assertSameComputed(inc, c)
   }
 
-  test("grouping sets: no match gives one zero totals row and empty keyed frames") {
+  statsCase("grouping sets: no match gives one zero totals row and empty keyed frames") { st =>
     val none = lit(false)
     def assertEmpty(c: Stats.Computed): Unit = {
       assert(c.totals.collect().map(_.toSeq).toSeq == Seq(Seq.fill(7)(0L)))
       Seq(c.perUser, c.perGroup, c.perPrefix, c.perUserPrefix, c.perGroupPrefix)
         .foreach(f => assert(f.count() == 0L))
     }
-    val prev = Stats.compute(prevDf, none, none)
+    val prev = st.compute(prevDf, none, none)
     assertEmpty(prev)
-    assertEmpty(Stats.computeIncremental(prev, prevDf, newDf,
+    assertEmpty(st.computeIncremental(prev, prevDf, newDf,
       Stats.changedPrefixesOf(prevDf, newDf), none, none))
   }
 
@@ -238,19 +238,19 @@ class IncrementalStatsSpec extends SparkSpec {
     java.nio.file.Files.writeString(dir.getParent.resolve("LATEST"), dir.getFileName.toString)
   }
 
-  test("artifact round trip: read(write(c)) equals c frame for frame, full and incremental") {
+  statsCase("artifact round trip: read(write(c)) equals c frame for frame, full and incremental") { st =>
     val none = lit(false)
     val prevN = withNullIds(prevDf)
     val newN = withNullIds(newDf)
     val cases = Seq(
-      "full" -> Stats.compute(newDf),
-      "canonical-link flip" -> Stats.computeIncremental(Stats.compute(prevDf), prevDf, newDf,
+      "full" -> st.compute(newDf),
+      "canonical-link flip" -> st.computeIncremental(st.compute(prevDf), prevDf, newDf,
         Stats.changedPrefixesOf(prevDf, newDf)),
-      "null uid/gid" -> Stats.compute(newN),
-      "null uid/gid incremental" -> Stats.computeIncremental(Stats.compute(prevN), prevN, newN,
+      "null uid/gid" -> st.compute(newN),
+      "null uid/gid incremental" -> st.computeIncremental(st.compute(prevN), prevN, newN,
         Stats.changedPrefixesOf(prevN, newN)),
-      "no match" -> Stats.compute(newDf, none, none),
-      "no match incremental" -> Stats.computeIncremental(Stats.compute(prevDf, none, none),
+      "no match" -> st.compute(newDf, none, none),
+      "no match incremental" -> st.computeIncremental(st.compute(prevDf, none, none),
         prevDf, newDf, Stats.changedPrefixesOf(prevDf, newDf), none, none))
     cases.foreach { case (what, c) =>
       val db = java.nio.file.Files.createTempDirectory("graft-artifact").toString
@@ -264,38 +264,38 @@ class IncrementalStatsSpec extends SparkSpec {
       // an incremental merge over the read-back artifact equals a full recompute
       if (what == "full") {
         val prevDb = java.nio.file.Files.createTempDirectory("graft-artifact").toString
-        StatsArtifact.write(prevDb, Stats.compute(prevDf), "/", "")
-        assertSameComputed(Stats.computeIncremental(StatsArtifact.read(spark, prevDb),
+        StatsArtifact.write(prevDb, st.compute(prevDf), "/", "")
+        assertSameComputed(st.computeIncremental(StatsArtifact.read(spark, prevDb),
           prevDf, newDf, Stats.changedPrefixesOf(prevDf, newDf)), c)
       }
     }
   }
 
-  test("artifact schema: the written table is TableSchema; a missing column fails the read") {
+  statsCase("artifact schema: the written table is TableSchema; a missing column fails the read") { st =>
     val db = java.nio.file.Files.createTempDirectory("graft-artifact").toString
-    val name = StatsArtifact.write(db, Stats.compute(newDf), "/", "")
+    val name = StatsArtifact.write(db, st.compute(newDf), "/", "")
     val table = s"$db/stats/$name/table"
     assert(spark.read.parquet(table).schema == Stats.TableSchema)
     // a table without `hardlinks` must not read it as nulls
     val bad = java.nio.file.Files.createTempDirectory("graft-artifact").toString
-    val badName = StatsArtifact.write(bad, Stats.compute(newDf), "/", "")
+    val badName = StatsArtifact.write(bad, st.compute(newDf), "/", "")
     val badTable = s"$bad/stats/$badName/table"
     spark.read.parquet(table).drop("hardlinks").write.mode("overwrite").parquet(badTable)
     val e = intercept[IllegalStateException](StatsArtifact.read(spark, bad))
     assert(e.getMessage.contains("hardlinks"), e.getMessage)
   }
 
-  test("six-table artifacts from before the one-table layout read through the same adapter") {
-    val c = Stats.compute(withNullIds(newDf))
+  statsCase("six-table artifacts from before the one-table layout read through the same adapter") { st =>
+    val c = st.compute(withNullIds(newDf))
     val db = java.nio.file.Files.createTempDirectory("graft-legacy").toString
     writeLegacy(db, c)
     val back = StatsArtifact.read(spark, db)
     assertSameComputed(back, c)
     // and an incremental merge reads it as its previous state
-    val prev = Stats.compute(prevDf)
+    val prev = st.compute(prevDf)
     val prevDb = java.nio.file.Files.createTempDirectory("graft-legacy").toString
     writeLegacy(prevDb, prev)
-    assertSameComputed(Stats.computeIncremental(StatsArtifact.read(spark, prevDb),
-      prevDf, newDf, Stats.changedPrefixesOf(prevDf, newDf)), Stats.compute(newDf))
+    assertSameComputed(st.computeIncremental(StatsArtifact.read(spark, prevDb),
+      prevDf, newDf, Stats.changedPrefixesOf(prevDf, newDf)), st.compute(newDf))
   }
 }

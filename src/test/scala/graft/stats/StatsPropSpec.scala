@@ -12,7 +12,7 @@ import graft.model.FileEntry
   * each sum to the overall totals, for every metric, regardless of the
   * uid/gid distribution. Randomization is seeded (deterministic CI).
   */
-class StatsPropSpec extends SparkSpec {
+class StatsPropSpec extends SparkSpec with StatsPaths {
 
   private val T0 = new Timestamp(1700000000000L)
 
@@ -36,12 +36,12 @@ class StatsPropSpec extends SparkSpec {
     }
   }
 
-  test("per-id totals sum to overall totals across random fixtures") {
+  statsCase("per-id totals sum to overall totals across random fixtures") { st =>
     val s = spark
     import s.implicits._
     for (seed <- 1L to 12L) {
       val df = randomFixture(seed).toDF()
-      val c = Stats.compute(df, calc = Calculator.Block(512))
+      val c = st.compute(df, calc = Calculator.Block(512))
       val metrics = Seq("prefixes", "sub_prefixes", "files", "hardlinks",
         "bytes", "prefix_bytes", "storage_bytes")
       val total = c.totals.collect().head

@@ -16,7 +16,7 @@ import graft.model.FileEntry
   *
   * Test calculator: storage = size + blocks (totals_test.go:22-28).
   */
-class StatsSpec extends SparkSpec {
+class StatsSpec extends SparkSpec with StatsPaths {
 
   private object PlusBlocks extends Calculator {
     def apply(size: org.apache.spark.sql.Column, blocks: org.apache.spark.sql.Column) =
@@ -55,8 +55,8 @@ class StatsSpec extends SparkSpec {
     df.columns.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }.toMap
   }
 
-  test("ug00: both entries same uid/gid — exact totals") {
-    val t = totalsMap(Stats.compute(fixture(Seq((100L, 2L), (100L, 2L))),
+  statsCase("ug00: both entries same uid/gid — exact totals") { st =>
+    val t = totalsMap(st.compute(fixture(Seq((100L, 2L), (100L, 2L))),
       calc = PlusBlocks).totals)
     assert(t("prefixes") == 1)
     assert(t("files") == 2)
@@ -67,8 +67,8 @@ class StatsSpec extends SparkSpec {
     assert(t("hardlinks") == 0)
   }
 
-  test("ug11: mixed ids split per-user/per-group but sum to totals") {
-    val c = Stats.compute(fixture(Seq((100L, 2L), (101L, 3L))), calc = PlusBlocks)
+  statsCase("ug11: mixed ids split per-user/per-group but sum to totals") { st =>
+    val c = st.compute(fixture(Seq((100L, 2L), (101L, 3L))), calc = PlusBlocks)
     val t = totalsMap(c.totals)
     val perUser = c.perUser.collect().map(r =>
       r.getLong(0) -> r.getLong(c.perUser.columns.indexOf("bytes"))).toMap
@@ -82,7 +82,7 @@ class StatsSpec extends SparkSpec {
     }
   }
 
-  test("subdirectories count as sub_prefixes, their size not added") {
+  statsCase("subdirectories count as sub_prefixes, their size not added") { st =>
     val s = spark
     import s.implicits._
     val rows = Seq(
@@ -91,7 +91,7 @@ class StatsSpec extends SparkSpec {
       fe("/p/f1", isDir = false, 1, 1, 100, 2))
     // Only /p matches the prefix gate here; /p/d1 appears both as an
     // entry of /p (sub_prefix) and as its own matched prefix.
-    val c = Stats.compute(rows.toDF(), prefixMatch = col("path") === "/p",
+    val c = st.compute(rows.toDF(), prefixMatch = col("path") === "/p",
       calc = PlusBlocks)
     val t = totalsMap(c.totals)
     assert(t("sub_prefixes") == 1)
@@ -99,18 +99,18 @@ class StatsSpec extends SparkSpec {
     assert(t("bytes") == 3 + 1) // d1's 50 bytes NOT counted (totals.go:144-162)
   }
 
-  test("expression-filtered stats: entry filter gates files only") {
+  statsCase("expression-filtered stats: entry filter gates files only") { st =>
     val ops = FileOperands()
-    val c = Stats.compute(fixture(Seq((100L, 2L), (101L, 2L))),
+    val c = st.compute(fixture(Seq((100L, 2L), (101L, 2L))),
       entryMatch = ops.compile("user=100"), calc = PlusBlocks)
     val t = totalsMap(c.totals)
     assert(t("files") == 1)
     assert(t("bytes") == 3 + 1)
   }
 
-  test("no-match expression yields zero rows counted") {
+  statsCase("no-match expression yields zero rows counted") { st =>
     val ops = FileOperands()
-    val c = Stats.compute(fixture(Seq((100L, 2L), (101L, 2L))),
+    val c = st.compute(fixture(Seq((100L, 2L), (101L, 2L))),
       prefixMatch = ops.compile("user=1000000"),
       entryMatch = ops.compile("user=1000000"))
     val t = totalsMap(c.totals)
@@ -119,7 +119,7 @@ class StatsSpec extends SparkSpec {
     assert(t("bytes") == 0)
   }
 
-  test("hardlink dedup: second link counts as hardlink, not bytes") {
+  statsCase("hardlink dedup: second link counts as hardlink, not bytes") { st =>
     val s = spark
     import s.implicits._
     val rows = Seq(
@@ -127,13 +127,13 @@ class StatsSpec extends SparkSpec {
       fe("/p/a", isDir = false, 10, 10, 100, 2, device = 7, inode = 99, nlink = 2),
       fe("/p/b", isDir = false, 10, 10, 100, 2, device = 7, inode = 99, nlink = 2),
       fe("/p/c", isDir = false, 5, 5, 100, 2))
-    val c = Stats.compute(rows.toDF(), calc = PlusBlocks)
+    val c = st.compute(rows.toDF(), calc = PlusBlocks)
     val t = totalsMap(c.totals)
     assert(t("files") == 2) // a (canonical: least path) + c
     assert(t("hardlinks") == 1) // b
     assert(t("bytes") == 3 + 10 + 5)
     // CountHardlinkAsFiles=true counts everything (stats.go:126)
-    val c2 = Stats.compute(rows.toDF(), calc = PlusBlocks,
+    val c2 = st.compute(rows.toDF(), calc = PlusBlocks,
       countHardlinkDupsAsFiles = true)
     val t2 = totalsMap(c2.totals)
     assert(t2("files") == 3)
