@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Bounded-depth breadth-first search over an undirected edge list:
@@ -17,6 +19,8 @@ import org.apache.spark.sql.functions._
   * hop (the ConnectedComponents/PageRank/KCore recipe). The visited
   * frame stays distributed throughout — nothing collects.
   *
+  * [[frontier]] is the one copy of that loop: BFS, harmonic
+  * centrality, the double sweep and Brandes' forward pass all run it.
   * Per-round economics (measured — job latency dominates wall time on
   * small graphs, task fan-in dominates at scale):
   *   - ONE Spark job per hop: the checkpoint is LAZY and materializes
@@ -36,12 +40,21 @@ object Bfs {
     * while never letting a large frontier funnel through few tasks. */
   private[ops] val TargetRowsPerPartition = 65536L
 
-  /** Count-scaled coalesce fan-in: floor 8 (sliver frontiers pay the
-    * fewest per-job tasks), ceiling `shuffleParts` (coalesce above the
-    * parent partition count is a no-op anyway). */
-  private[ops] def fanIn(prevRows: Long, shuffleParts: Int): Int =
-    math.max(8L, math.min(shuffleParts.toLong,
-      prevRows / TargetRowsPerPartition + 1L)).toInt
+  /** Count-scaled partition count for a frame of `rows` rows: floor 8
+    * (sliver frames pay the fewest per-job tasks), ceiling the
+    * session's shuffle partitions (coalesce above the parent partition
+    * count is a no-op anyway). */
+  private[ops] def fanIn(spark: SparkSession, rows: Long): Int =
+    math.max(8L, math.min(spark.sessionState.conf.numShufflePartitions.toLong,
+      rows / TargetRowsPerPartition + 1L)).toInt
+
+  /** `frame` coalesced to [[fanIn]] partitions for `rows` rows. A frame
+    * checkpointed off a narrow op inherits its parent's partition
+    * count, and every loop round then pays one task per cached
+    * partition per stage; coalesce is narrow, so this adds no shuffle.
+    * Never for frames feeding double sums (see PageRank). */
+  private[ops] def fitted(frame: DataFrame, rows: Long): DataFrame =
+    frame.coalesce(fanIn(frame.sparkSession, rows))
 
   /** Row ceiling for count-informed broadcasts inside frontier loops.
     * The traversal frame is a localCheckpoint — UnknownPartitioning
@@ -72,201 +85,81 @@ object Bfs {
     * q_diameter_2sweep's 5.7 at sf0.1) — and would also double the
     * stored bytes at scale.
     *
-    * The union is COALESCED to a size-derived partition count (the
-    * fanIn rule applied to the edge frame — one cheap count over the
-    * cached RDD): the checkpoint inherits the session's shuffle
-    * partition count however small the graph is, and every loop
-    * round then pays one task per cached partition per stage. The
-    * r13 LoopScaleProbe measured the cost directly — at 100×
-    * replication (360 k edges) the loop bodies ran ~1.8× SLOWER on 32
-    * cores than on 8, pure per-round task overhead. coalesce is
-    * narrow (no shuffle, no new checkpoint), the floor keeps small
-    * graphs on few tasks, and the `shuffleParts` ceiling hands a
-    * genuinely large frame back to every core. */
+    * The union is [[fitted]] to the edge count (one cheap count over
+    * the cached RDD): the checkpoint inherits the session's shuffle
+    * partition count however small the graph is. The r13
+    * LoopScaleProbe measured the cost directly — at 100× replication
+    * (360 k edges) the loop bodies ran ~1.8× SLOWER on 32 cores than
+    * on 8, pure per-round task overhead. */
   def undOf(edges: DataFrame): DataFrame = {
     val e = edges.select(col("src").cast("long").as("a"),
         col("dst").cast("long").as("b"))
       .localCheckpoint(true)
-    val und = e.union(e.select(col("b").as("a"), col("a").as("b")))
-    val shuffleParts =
-      edges.sparkSession.sessionState.conf.numShufflePartitions
-    und.coalesce(fanIn(2L * e.count(), shuffleParts))
+    fitted(e.union(e.select(col("b").as("a"), col("a").as("b"))), 2L * e.count())
+  }
+
+  /** The `n` md5-rank-smallest node ids of `und` (replayable, the
+    * GridKmeans sample rule): the sampled sources and the sweep seed. */
+  private[ops] def md5Smallest(und: DataFrame, n: Int): Array[Long] =
+    und.select(col("a")).distinct()
+      .orderBy(substring(md5(col("a").cast("string")), 1, 13), col("a"))
+      .limit(n).collect().map(_.getLong(0))
+
+  /** The frontier loop: a multi-source BFS from `seed` (`seedRows`
+    * rows, unique on `keys` — `Seq("node")` or `Seq("s", "node")`)
+    * over an [[undOf]] frame, for at most `maxDepth` hops. Each hop
+    * moves the frontier across its edges (`node` becomes the far end,
+    * every other column rides along), `candidates` reduces that to one
+    * row per key (`distinct` for plain BFS; Brandes sums sigma here,
+    * BEFORE the anti join — anti-joining the edge-level rows re-shuffles
+    * the whole wedge stream), and a LEFT ANTI against the visited keys
+    * leaves the next layer. Both joins broadcast their small side by
+    * its known count (the checkpointed edge frame otherwise
+    * re-exchanges every hop); the layer is [[fitted]] to the previous
+    * frontier's count and checkpointed lazily, so its count — the
+    * emptiness probe — is the hop's one job. The visited union is
+    * never re-checkpointed: it is a shallow union of materialized
+    * layers.
+    * @return the layers, seed layer first (layer d holds the keys at
+    *         depth d), and their row counts; it stops at the first
+    *         empty layer, which it leaves out. */
+  private[ops] def frontier(und: DataFrame, seed: DataFrame, seedRows: Long,
+      keys: Seq[String], maxDepth: Int)(
+      candidates: DataFrame => DataFrame = _.distinct())
+      : (IndexedSeq[DataFrame], IndexedSeq[Long]) = {
+    val layers = ArrayBuffer(seed)
+    val rows = ArrayBuffer(seedRows)
+    val keyCols = keys.map(col)
+    var visited = seed.select(keyCols: _*)
+    var more = true
+    while (more && layers.size <= maxDepth) {
+      val front = layers.last
+      val next = candidates(bcastIfSmall(front, rows.last)
+          .join(und, col("node") === col("a"))
+          .select(front.columns.toIndexedSeq.map(c =>
+            if (c == "node") col("b").as("node") else col(c)): _*))
+        .join(bcastIfSmall(visited, rows.sum), keys, "left_anti")
+      val layer = fitted(next, rows.last).localCheckpoint(false)
+      val n = layer.count()
+      more = n > 0L
+      if (more) {
+        layers += layer
+        rows += n
+        visited = visited.union(layer.select(keyCols: _*))
+      }
+    }
+    (layers.toIndexedSeq, rows.toIndexedSeq)
   }
 
   /** @param edges undirected `(src, dst)` edge list (canonical
     *              direction fine — both directions are traversed).
     * @return (node, hop) — minimum hop distance, hop <= maxHops. */
-  def hops(edges: DataFrame, seed: Long, maxHops: Int): DataFrame =
-    hopsDetailed(edges, seed, maxHops)._1
-
-  /** [[hops]] plus the loop telemetry the caller otherwise pays extra
-    * jobs to recover: (visited, deepestHop, lastNonEmptyFrontier).
-    * `deepestHop` is the max hop in `visited` (0 when the seed never
-    * expands) and the last frontier is exactly the `deepestHop`-hop
-    * node set — the double-sweep argmax reads off it with a one-row
-    * `min` instead of sorting the whole visited union. */
-  def hopsDetailed(edges: DataFrame, seed: Long,
-      maxHops: Int): (DataFrame, Int, DataFrame) =
-    hopsOnUnd(undOf(edges), seed, maxHops)
-
-  /** [[hopsDetailed]] over an already-materialized [[undOf]] frame. */
-  def hopsOnUnd(und: DataFrame, seed: Long,
-      maxHops: Int): (DataFrame, Int, DataFrame) = {
-    val spark = und.sparkSession
+  def hops(edges: DataFrame, seed: Long, maxHops: Int): DataFrame = {
+    val spark = edges.sparkSession
     import spark.implicits._
-    val shuffleParts = spark.sessionState.conf.numShufflePartitions
-    var visited = Seq((seed, 0)).toDF("node", "hop").localCheckpoint(true)
-    var visitedRows = 1L
-    var frontier = visited.select(col("node"))
-    var frontierRows = 1L
-    var h = 1
-    var exhausted = false
-    while (h <= maxHops && !exhausted) {
-      // count-informed broadcasts: the expansion probes the
-      // checkpointed edge frame MAP-SIDE (no per-hop edge exchange)
-      // and the anti-join stays map-side while visited is small
-      val next = bcastIfSmall(frontier, frontierRows)
-        .join(und, col("node") === col("a"))
-        .select(col("b").as("node")).distinct()
-        .join(bcastIfSmall(visited.select(col("node")), visitedRows),
-          Seq("node"), "left_anti")
-        .coalesce(fanIn(frontierRows, shuffleParts))
-        .localCheckpoint(false) // lazy: materializes inside count()
-      val n = next.count() // the one job per hop; count IS the probe
-      if (n == 0L) exhausted = true
-      else {
-        // NO re-checkpoint of visited: it is a shallow union of
-        // already-materialized per-hop frames, so re-checkpointing it
-        // every round was one full extra job per hop for nothing
-        visited = visited.union(next.select(col("node"), lit(h).as("hop")))
-        visitedRows += n
-        frontier = next
-        frontierRows = n
-        h += 1
-      }
-    }
-    (visited, h - 1, frontier)
-  }
-
-  /** Per-layer telemetry of one batched sweep: hop, node count, min
-    * node id. */
-  final case class LayerStat(hop: Int, n: Long, minNode: Long)
-
-  /** BFS sweep returning telemetry only — the probe that materializes
-    * each round is a per-layer `(count, min(node))` aggregate instead
-    * of a bare count, so eccentricity, the farthest-node argmax (hop
-    * desc, node asc ⇒ last layer's min) and the reached count all
-    * come out of the loop probes; callers pay ZERO extra jobs after
-    * the sweep (the double-sweep formerly paid an argmax job and a
-    * count job on top). Layer semantics are EXACTLY [[hopsOnUnd]]'s
-    * (asserted in CentralitySpec), so oracles are untouched.
-    *
-    * `hopsPerJob > 1` additionally expands that many layers inside
-    * one Spark job: cascaded DEDUPED one-hop candidate sets (layer
-    * i+1 expands from layer i's candidates minus the visited set),
-    * per-node `min(d)` attributing intra-batch layers, one ANTI, one
-    * probe. Measured on q_diameter_2sweep's tiny-ball sweeps this is
-    * a LOSS (the floor is sequential shuffle STAGES, not jobs, and
-    * batching adds stages), so the default stays 1 — the dial exists
-    * for genuinely job-latency-bound deployments (e.g. high
-    * scheduler-overhead clusters).
-    *
-    * @return (ecc, farMinNode, nReached): deepest nonempty hop (0 if
-    *         the seed never expands), min node id of that deepest
-    *         layer (the seed itself at ecc 0), total nodes reached
-    *         including the seed. */
-  def sweepStats(und: DataFrame, seed: Long, maxHops: Int,
-      hopsPerJob: Int = 1): (Int, Long, Long) = {
-    require(hopsPerJob >= 1)
-    val spark = und.sparkSession
-    import spark.implicits._
-    val shuffleParts = spark.sessionState.conf.numShufflePartitions
-    var visited = Seq((seed, 0)).toDF("node", "hop").localCheckpoint(true)
-    var frontier = visited.select(col("node"))
-    var frontierRows = 1L
-    var ecc = 0
-    var farMin = seed
-    var farMinStale = false // true while the deepest layer's argmax
-                            // hasn't been read (count-probe rounds)
-    var nReached = 1L
-    var h = 0
-    var exhausted = false
-    while (h < maxHops && !exhausted) {
-      val steps = math.min(hopsPerJob, maxHops - h)
-      // count-informed broadcast of the visited set (the frontier
-      // broadcast only applies to the batch's FIRST expansion — the
-      // inner layers' sizes are unknown until the probe)
-      val vSmall = bcastIfSmall(visited.select(col("node")), nReached)
-      val layers = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      var cur = bcastIfSmall(frontier, frontierRows)
-      for (i <- 1 to steps) {
-        val c = cur.join(und, col("node") === col("a"))
-          .select(col("b").as("node")).distinct()
-        layers += c.withColumn("hop", lit(h + i))
-        // exact layer h+i membership feeds the next expansion: the
-        // candidate set minus everything visited BEFORE this batch
-        // (intra-batch earlier layers can't appear — a candidate at
-        // layer i+1 with true distance <= h+i is already in layer i's
-        // candidate set, and min(hop) below attributes it there)
-        if (i < steps)
-          cur = c.join(vSmall, Seq("node"), "left_anti")
-      }
-      // single-layer rounds skip the min(hop) attribution aggregate:
-      // the candidate set is already deduped by its distinct
-      val merged =
-        if (steps == 1) layers.head
-        else layers.reduce(_ unionByName _)
-          .groupBy(col("node")).agg(min(col("hop")).as("hop"))
-      val batch = merged
-        .join(vSmall, Seq("node"), "left_anti")
-        .coalesce(fanIn(frontierRows, shuffleParts))
-        .localCheckpoint(false)
-      if (steps == 1) {
-        // single-layer probe: a bare count (one stage, no exchange —
-        // a per-layer aggregate probe measured ~1 extra stage per hop
-        // and ate the savings); farMin recovers in ONE argmax job
-        // after the loop
-        val n = batch.count()
-        if (n == 0L) exhausted = true
-        else {
-          ecc = h + 1; nReached += n; frontierRows = n
-          farMinStale = true
-          visited = visited.union(batch)
-          frontier = batch.where(col("hop") === ecc).select(col("node"))
-          h += 1
-        }
-      } else {
-        // batched rounds need per-layer attribution: ONE probe job
-        // returning each new layer's count + min node id
-        val stats = batch.groupBy(col("hop"))
-          .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"),
-            min(col("node")).as("mn"))
-          .collect()
-          .map(r => LayerStat(r.getInt(0), r.getLong(1), r.getLong(2)))
-          .sortBy(_.hop)
-        var d = h + 1
-        var open = true
-        stats.foreach { s =>
-          if (open && s.hop == d) {
-            ecc = s.hop; farMin = s.minNode; nReached += s.n
-            frontierRows = s.n
-            farMinStale = false
-            d += 1
-          } else open = false // a gap means the sweep ended mid-batch
-        }
-        if (ecc < h + steps) exhausted = true
-        else {
-          visited = visited.union(batch)
-          frontier = batch.where(col("hop") === ecc).select(col("node"))
-          h += steps
-        }
-      }
-    }
-    // the min-node argmax of the deepest layer is one tiny job over
-    // the final (coalesced, materialized) frontier — only when a
-    // count-probe round left it unread
-    if (farMinStale && ecc > 0)
-      farMin = frontier.agg(min(col("node"))).collect()(0).getLong(0)
-    (ecc, farMin, nReached)
+    val (layers, _) = frontier(undOf(edges), Seq(seed).toDF("node"), 1L,
+      Seq("node"), maxHops)()
+    layers.zipWithIndex.map { case (l, h) => l.select(col("node"), lit(h).as("hop")) }
+      .reduce(_ union _)
   }
 }

@@ -18,12 +18,11 @@ import org.apache.spark.sql.functions._
   * centralities are integer sums. Sources are the md5-rank-smallest
   * nodes (replayable, the GridKmeans sample rule).
   *
-  * Scale shape: ONE multi-source frontier expansion — the per-hop
-  * frontier carries (source, node) pairs so all |S| BFS trees advance
-  * in the same join (work per hop = Σ frontier boundaries, hash on
-  * node ids), LEFT ANTI against the visited set, `localCheckpoint`
-  * lineage truncation per hop. The |S|× state factor is explicit and
-  * bounded; nothing collects. */
+  * Scale shape: ONE multi-source [[Bfs.frontier]] expansion — the
+  * per-hop frontier carries (source, node) pairs so all |S| BFS trees
+  * advance in the same join (work per hop = Σ frontier boundaries,
+  * hash on node ids). The |S|× state factor is explicit and bounded;
+  * only the |S| sampled source ids collect. */
 object Centrality {
 
   /** @param edges undirected (src, dst) canonical edge list.
@@ -32,51 +31,18 @@ object Centrality {
   def sampledHarmonic(edges: DataFrame, nSources: Int, maxDepth: Int,
       k: Int): DataFrame = {
     require(nSources >= 1 && maxDepth >= 1 && k >= 1)
-    val shuffleParts =
-      edges.sparkSession.sessionState.conf.numShufflePartitions
+    val spark = edges.sparkSession
+    import spark.implicits._
     // long ids at entry (the Hits/Truss rule); one shared recipe for
     // the materialized bidirectional traversal frame
     val und = Bfs.undOf(edges)
-    val srcs = und.select(col("a").as("node")).distinct()
-      .orderBy(substring(md5(col("node").cast("string")), 1, 13),
-        col("node"))
-      .limit(nSources)
-    var visited = srcs.select(col("node").as("s"), col("node"),
-        lit(0).as("d"))
-      .localCheckpoint(true)
-    var visitedRows = nSources.toLong
-    var frontier = visited.select(col("s"), col("node"))
-    var frontierRows = nSources.toLong
-    var h = 1
-    var exhausted = false
-    while (h <= maxDepth && !exhausted) {
-      // same per-round economics as Bfs.hopsDetailed: count-scaled
-      // fan-in on the frontier, lazy checkpoint materialized by the
-      // count that doubles as the emptiness probe (ONE job per hop),
-      // never re-checkpoint the visited union of already-materialized
-      // frames — and count-informed broadcasts (the Bfs rule: the
-      // checkpointed edge frame otherwise re-exchanges every hop)
-      val next = Bfs.bcastIfSmall(frontier, frontierRows)
-        .join(und, col("node") === col("a"))
-        .select(col("s"), col("b").as("node")).distinct()
-        .join(Bfs.bcastIfSmall(visited.select(col("s"), col("node")),
-            visitedRows),
-          Seq("s", "node"), "left_anti")
-        .coalesce(Bfs.fanIn(frontierRows, shuffleParts))
-        .localCheckpoint(false)
-      val n = next.count()
-      if (n == 0L) exhausted = true
-      else {
-        visited = visited
-          .unionByName(next.select(col("s"), col("node"), lit(h).as("d")))
-        visitedRows += n
-        frontier = next.select(col("s"), col("node"))
-        frontierRows = n
-        h += 1
-      }
-    }
+    val srcs = Bfs.md5Smallest(und, nSources)
+    val (layers, _) = Bfs.frontier(und, srcs.toSeq.map(s => (s, s)).toDF("s", "node"),
+      srcs.length.toLong, Seq("s", "node"), maxDepth)()
     import org.apache.spark.sql.expressions.Window
-    visited.where(col("d") >= 1)
+    layers.zipWithIndex.map { case (l, d) => l.select(col("node"), lit(d).as("d")) }
+      .reduce(_ union _)
+      .where(col("d") >= 1)
       .groupBy(col("node"))
       .agg(sum(expr("1000000L div d")).as("h_micro"),
         count(lit(1)).as("n_reached"))
@@ -96,13 +62,13 @@ object Centrality {
     * same frontier + LEFT ANTI machinery), each depth-capped at
     * `maxDepth`.
     *
-    * Round economics: both sweeps run through [[Bfs.sweepStats]] —
-    * ONE job per hop whose probe aggregate carries eccentricity, the
-    * farthest-node argmax (hop desc ⇒ last layer; node asc ⇒ its
-    * min) and the reached count, so the former post-sweep argmax and
-    * count jobs are gone; the edge build materializes ONCE (undOf
-    * checkpoints the directed frame, the reverse derives narrowly).
-    * The driver touches per-layer stat rows only. Returns one row:
+    * Round economics: both sweeps run [[Bfs.frontier]] — ONE job
+    * per hop, a bare count probe. The first sweep's eccentricity is its
+    * layer count and its farthest node one `min(node)` job over its
+    * last layer; the second sweep's reached count is the sum of its
+    * layer counts, so it runs no job after its loop. The edge build
+    * materializes ONCE (undOf checkpoints the directed frame, the
+    * reverse derives narrowly). Returns one row:
     * (seed, far_node, ecc1, diameter_lb, n_reached). */
   def diameterDoubleSweep(edges: DataFrame, maxDepth: Int): DataFrame = {
     val spark = edges.sparkSession
@@ -112,13 +78,13 @@ object Centrality {
     // the whole upstream graph build (measured: the co-purchase
     // self-join ran three times before this hoist)
     val und = Bfs.undOf(edges)
-    val seed = und.select(col("a").as("node")).distinct()
-      .orderBy(substring(md5(col("node").cast("string")), 1, 13),
-        col("node"))
-      .limit(1).collect()(0).getLong(0)
-    val (ecc1, farNode, _) = Bfs.sweepStats(und, seed, maxDepth)
-    val (ecc2, _, nReached) = Bfs.sweepStats(und, farNode, maxDepth)
-    Seq((seed, farNode, ecc1.toLong, ecc2.toLong, nReached))
+    def sweep(from: Long) =
+      Bfs.frontier(und, Seq(from).toDF("node"), 1L, Seq("node"), maxDepth)()
+    val seed = Bfs.md5Smallest(und, 1)(0)
+    val (first, _) = sweep(seed)
+    val farNode = first.last.agg(min(col("node"))).as[Long].head()
+    val (second, reached) = sweep(farNode)
+    Seq((seed, farNode, first.size - 1L, second.size - 1L, reached.sum))
       .toDF("seed", "far_node", "ecc1", "diameter_lb", "n_reached")
   }
 }

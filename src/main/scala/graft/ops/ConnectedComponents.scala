@@ -28,7 +28,9 @@ object ConnectedComponents {
     * minimum vertex id reachable. `maxIter` bounds pathological chain
     * graphs (propagation halves distance per round on stars, but a
     * pure path of length L needs L rounds; 50 covers any plausible
-    * dedup cluster). */
+    * dedup cluster). Labels still changing after `maxIter` rounds
+    * throw (the Truss/Mis rule) rather than return components that
+    * are split. */
   def components(edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 50): DataFrame = {
     // Materialize the DIRECTED edge list before mirroring it: the
@@ -75,6 +77,9 @@ object ConnectedComponents {
       labels = next.select(col("id"), col("label"))
       iter += 1
     }
+    if (!converged) throw new IllegalStateException(
+      s"connected components still changing after maxIter=$maxIter " +
+        "rounds: labels have not reached the component minimum; raise maxIter")
     labels.withColumnRenamed("label", "component")
   }
 

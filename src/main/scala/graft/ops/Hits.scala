@@ -105,11 +105,10 @@ object Hits {
     // LoopScaleProbe's ×100 hub union handed it 400+ cached
     // partitions and all 8 half-iterations paid one task per
     // partition per stage (63 s → measured below after the fix).
-    // coalesce is narrow; the fanIn ceiling keeps large graphs wide.
+    // The fanIn ceiling keeps large graphs wide.
     val e0 = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).localCheckpoint(true)
-    val e = e0.coalesce(Bfs.fanIn(e0.count(),
-      edges.sparkSession.sessionState.conf.numShufflePartitions))
+    val e = Bfs.fitted(e0, e0.count())
     var h = e.select(col("src").as("id")).distinct()
       .select(col("id"), lit(1000000L).as("s"))
       .localCheckpoint(true)

@@ -20,6 +20,9 @@ import org.apache.spark.sql.functions._
   * degeneracy peeling depth, which is small for power-law graphs.
   * Convergence is detected from the survivor COUNT: the set shrinks
   * strictly until the fixpoint, so an unchanged count IS stability.
+  * Fail-fast (the Truss rule): a peel still shrinking after
+  * `maxRounds` rounds throws on both paths instead of returning a
+  * subgraph that is not yet the k-core.
   */
 object KCore {
 
@@ -27,7 +30,9 @@ object KCore {
     *              src < dst, no duplicates.
     * @return (coreEdges, rounds): the induced edge list of the k-core
     *         (same canonical form; derive nodes by unioning endpoints)
-    *         and the number of peeling rounds to the fixpoint. */
+    *         and the number of peeling rounds to the fixpoint.
+    * @throws IllegalStateException if the peel has not reached the
+    *         fixpoint after `maxRounds` rounds. */
   def core(edges: DataFrame, k: Int, maxRounds: Int = 64): (DataFrame, Int) =
     core(edges, k, maxRounds, LocalGraph.EdgeLimit)
 
@@ -47,6 +52,11 @@ object KCore {
       case _ => distributed(edges, k, maxRounds)
     }
   }
+
+  private def roundsMessage(maxRounds: Int, k: Int): String =
+    s"k-core peel still shrinking after maxRounds=$maxRounds: result " +
+      s"would not be the $k-core; raise maxRounds (and any paired " +
+      "oracle's nLayers)"
 
   /** The peel on the driver: per round, the degrees of the surviving
     * edge rows, the nodes at degree >= k, and the rows with both ends
@@ -71,6 +81,7 @@ object KCore {
         round += 1
       }
     }
+    if (!done) throw new IllegalStateException(roundsMessage(maxRounds, k))
     (cur, round)
   }
 
@@ -83,8 +94,7 @@ object KCore {
     // under the broadcast rule) — one task per cached partition per
     // round (LoopScaleProbe ×100: 17 s before the coalesce).
     val cur0 = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    var cur = cur0.coalesce(Bfs.fanIn(cur0.count(),
-      edges.sparkSession.sessionState.conf.numShufflePartitions))
+    var cur = Bfs.fitted(cur0, cur0.count())
     var survivors = -1L
     var round = 0
     var done = false
@@ -127,6 +137,7 @@ object KCore {
         round += 1
       }
     }
+    if (!done) throw new IllegalStateException(roundsMessage(maxRounds, k))
     val coreEdges = if (coreEmpty) cur.limit(0) else cur
     (coreEdges, round)
   }

@@ -123,12 +123,9 @@ object LabelProp {
     // measured 32-core loop bodies ~1.8× SLOWER than 8-core at 100×
     // replication from exactly this). The ceiling keeps genuinely
     // large graphs on every core.
-    val shuffleParts =
-      edges.sparkSession.sessionState.conf.numShufflePartitions
-    val edgeParts = Bfs.fanIn(2L * dir0.count(), shuffleParts)
     val und = dir0
       .union(dir0.select(col("b").as("a"), col("a").as("b")))
-      .repartition(edgeParts, col("b"))
+      .repartition(Bfs.fanIn(edges.sparkSession, 2L * dir0.count()), col("b"))
       .localCheckpoint(true)
     val env = und.groupBy(col("a"))
       .agg(count(lit(1)).as("d"), max(greatest(col("a"), col("b"))).as("mx"))

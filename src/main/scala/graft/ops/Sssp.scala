@@ -63,9 +63,7 @@ object Sssp {
       org.apache.spark.sql.functions.count(lit(1))).collect()(0)
     require(probe.isNullAt(0) || probe.getLong(0) >= 0L,
       nonnegMessage(probe.getLong(0)))
-    val shuffleParts =
-      edges.sparkSession.sessionState.conf.numShufflePartitions
-    ed.coalesce(Bfs.fanIn(probe.getLong(1), shuffleParts))
+    Bfs.fitted(ed, probe.getLong(1))
   }
 
   /** @param edges weighted (src, dst, cost) list, traversed both

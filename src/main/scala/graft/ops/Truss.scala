@@ -169,8 +169,7 @@ object Truss {
     val cur0 = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).localCheckpoint(true)
     var curCount = cur0.count()
-    var cur = cur0.coalesce(Bfs.fanIn(curCount,
-      edges.sparkSession.sessionState.conf.numShufflePartitions))
+    var cur = Bfs.fitted(cur0, curCount)
     var round = 0
     var done = curCount == 0
     while (!done && round < maxRounds) {

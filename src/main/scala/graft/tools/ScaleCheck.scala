@@ -349,7 +349,7 @@ object ScaleCheck {
         maxDepth = 3, k = 20)
     })
 
-    // 9e. Double-sweep diameter bound (ops/Bfs.hopsDetailed twice):
+    // 9e. Double-sweep diameter bound (two ops/Bfs.frontier sweeps):
     // same hub-connected growth — both sweeps' balls cover the whole
     // graph within the depth cap, so the two expansions' shuffle
     // bytes must grow linearly while the round count stays flat.

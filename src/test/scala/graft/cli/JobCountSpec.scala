@@ -130,9 +130,12 @@ class JobCountSpec extends SparkSpec {
     }
   }
 
-  test("each graph loop below the edge limit is one collect: 1 job with its output read") {
+  /** Each named loop's output rows, collected, and the jobs that took.
+    * The loops run on a checkpointed 30-node edge frame, as their
+    * callers hand them over. */
+  private def loopJobs(edgeLimit: Long, extra: org.apache.spark.sql.DataFrame =>
+      Seq[(String, () => Seq[org.apache.spark.sql.DataFrame])]): Seq[(String, Int)] = {
     import spark.implicits._
-    // a checkpointed edge frame, as the loops' callers hand them over
     val g = (for (a <- 1L to 30L; b <- (a + 1) to 30L if (a * 7 + b * 3) % 5 == 0)
       yield (a, b)).toDF("src", "dst").localCheckpoint()
     val w = g.withColumn("cost", lit(10L))
@@ -141,23 +144,47 @@ class JobCountSpec extends SparkSpec {
     val n = nodes.count()
     import graft.ops._
     val loops: Seq[(String, () => Seq[org.apache.spark.sql.DataFrame])] = Seq(
-      "sssp" -> (() => Seq(Sssp.boundedBellmanFord(w, 1L, 3))),
-      "nearest" -> (() => Seq(Sssp.nearestFromMd5Seed(w, 3, 5))),
-      "betweenness" -> (() => Seq(Betweenness.sampledBrandes(g, 2, 2, 20))),
-      "label_prop" -> (() => Seq(LabelProp.run(g, 2))),
-      "hits" -> (() => { val (h, a) = Hits.scores(g, 2); Seq(h, a) }),
-      "pagerank" -> (() => Seq(PageRank.ranks(nodes, g, n, 2))),
-      "kcore" -> (() => Seq(KCore.core(g, 3)._1)),
-      "ktruss" -> (() => Seq(Truss.truss(g, 3)._1)))
+      "sssp" -> (() => Seq(Sssp.boundedBellmanFord(w, 1L, 3, edgeLimit))),
+      "nearest" -> (() => Seq(Sssp.nearestFromMd5Seed(w, 3, 5, edgeLimit))),
+      "betweenness" -> (() => Seq(Betweenness.sampledBrandes(g, 2, 2, 20, edgeLimit))),
+      "label_prop" -> (() => Seq(LabelProp.run(g, 2, edgeLimit))),
+      "hits" -> (() => { val (h, a) = Hits.scores(g, 2, edgeLimit); Seq(h, a) }),
+      "pagerank" -> (() => Seq(PageRank.ranks(nodes, g, n, 2, 0.85, edgeLimit))),
+      "kcore" -> (() => Seq(KCore.core(g, 3, 64, edgeLimit)._1)),
+      "ktruss" -> (() => Seq(Truss.truss(g, 3, 64, edgeLimit)._1))) ++ extra(g)
     val counts = loops.map { case (name, run) =>
       val (rows, jobs) = jobsIn(run().map(_.collect().length).sum)
       assert(rows > 0, name)
       name -> jobs
     }
     info(s"jobs: $counts")
+    counts
+  }
+
+  test("each graph loop below the edge limit is one collect: 1 job with its output read") {
     // the collect; the local relation it returns reads without a job
-    counts.foreach { case (name, jobs) =>
+    loopJobs(graft.ops.LocalGraph.EdgeLimit, _ => Nil).foreach { case (name, jobs) =>
       assert(jobs <= 1, s"$name ran $jobs jobs, bound 1")
+    }
+  }
+
+  test("the distributed graph loops stay within their job bounds") {
+    import graft.ops._
+    val counts = loopJobs(0L, g => Seq(
+      "bfs" -> (() => Seq(Bfs.hops(g, 1L, 4))),
+      "harmonic" -> (() => Seq(Centrality.sampledHarmonic(g, 4, 3, 10))),
+      "diameter" -> (() => Seq(Centrality.diameterDoubleSweep(g, 8))),
+      "mis" -> (() => Seq(Mis.luby(g, 40))),
+      "components" -> (() => Seq(ConnectedComponents.components(g, "src", "dst")))))
+    // the counts measured on this graph under the shared test session;
+    // bfs took 13 and diameter 27 while each sweep checkpointed its
+    // seed and the second sweep also ran the farthest-node job
+    val bounds = Map("sssp" -> 15, "nearest" -> 17, "betweenness" -> 18,
+      "label_prop" -> 21, "hits" -> 30, "pagerank" -> 10, "kcore" -> 14,
+      "ktruss" -> 15, "bfs" -> 12, "harmonic" -> 16, "diameter" -> 23,
+      "mis" -> 20, "components" -> 18)
+    counts.foreach { case (name, jobs) =>
+      assert(jobs <= bounds(name), s"$name ran $jobs jobs, bound ${bounds(name)}")
     }
   }
 

@@ -10,13 +10,28 @@ class CentralitySpec extends SparkSpec {
   private val edges = (1L to 6L).map(l => (0L, l)) ++
     Seq((6L, 7L), (7L, 8L), (8L, 9L))
 
+  private def md5r(id: Long) = java.security.MessageDigest.getInstance("MD5")
+    .digest(id.toString.getBytes("UTF-8"))
+    .map("%02x".format(_)).mkString.substring(0, 13)
+
+  /** Plain BFS from `seed`: hop distance of every node within
+    * `maxHops`, the seed at 0. */
+  private def plainBfs(es: Seq[(Long, Long)], seed: Long,
+      maxHops: Int): Map[Long, Int] = {
+    val adj = (es ++ es.map(_.swap)).groupMap(_._1)(_._2)
+    val dist = scala.collection.mutable.Map(seed -> 0)
+    var frontier = Set(seed)
+    for (d <- 1 to maxHops) {
+      frontier = frontier.flatMap(adj.getOrElse(_, Nil)).filterNot(dist.contains)
+      frontier.foreach(n => dist(n) = d)
+    }
+    dist.toMap
+  }
+
   /** Brute multi-source BFS + harmonic sum, mirroring the declared
     * rules (md5-rank sources, depth bound, 10^6 div d terms). */
   private def brute(es: Seq[(Long, Long)], nSources: Int, maxDepth: Int)
       : Map[Long, (Long, Long)] = {
-    def md5r(id: Long) = java.security.MessageDigest.getInstance("MD5")
-      .digest(id.toString.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.substring(0, 13)
     val adj = (es ++ es.map(_.swap)).groupMap(_._1)(_._2)
     val nodes = adj.keySet.toSeq
     val srcs = nodes.sortBy(n => (md5r(n), n)).take(nSources)
@@ -75,26 +90,33 @@ class CentralitySpec extends SparkSpec {
     assert(r2.getLong(3) == 5L, s"star+chain diameter ${r2.getLong(3)}")
   }
 
-  test("sweepStats telemetry == hopsOnUnd telemetry, every batch width") {
-    // fixtures exercising odd/even depths, mid-batch exhaustion, and
+  test("hops and the double sweep equal a plain BFS at every depth bound") {
+    // fixtures exercising odd/even depths, early exhaustion, and
     // depth-bound truncation: star+chain, pure path, triangle
     val fixtures = Seq(
       edges,
       (0L until 9L).map(i => (i, i + 1)),
       Seq((0L, 1L), (1L, 2L), (2L, 0L)))
-    for (es <- fixtures; seed <- Seq(0L, 9L).filter(s =>
-           es.exists(e => e._1 == s || e._2 == s));
-         maxHops <- Seq(1, 2, 3, 5, 16); hpj <- Seq(1, 2, 3)) {
-      val und = Bfs.undOf(es.toDF("src", "dst"))
-      val (visited, ecc, last) = Bfs.hopsOnUnd(und, seed, maxHops)
-      val wantFar = last.agg(org.apache.spark.sql.functions.min(
-        org.apache.spark.sql.functions.col("node")))
-        .collect()(0).getLong(0)
-      val wantReached = visited.count()
-      val got = Bfs.sweepStats(und, seed, maxHops, hopsPerJob = hpj)
-      assert(got == ((ecc, wantFar, wantReached)),
-        s"es=${es.take(3)}.. seed=$seed maxHops=$maxHops hpj=$hpj: " +
-          s"got $got want (${ecc}, $wantFar, $wantReached)")
+    for (es <- fixtures; maxHops <- Seq(1, 2, 3, 5, 16)) {
+      val df = es.toDF("src", "dst")
+      for (seed <- Seq(0L, 9L).filter(s => es.exists(e => e._1 == s || e._2 == s))) {
+        val got = Bfs.hops(df, seed, maxHops).collect()
+          .map(r => r.getLong(0) -> r.getInt(1))
+        assert(got.length == got.toMap.size, s"duplicate nodes: ${got.toSeq}")
+        assert(got.toMap == plainBfs(es, seed, maxHops),
+          s"es=${es.take(3)}.. seed=$seed maxHops=$maxHops")
+      }
+      // the sweep rules: md5-smallest seed, farthest node (ties to the
+      // smaller id), then the second sweep's depth and reach
+      val seed = es.flatMap(e => Seq(e._1, e._2)).distinct.minBy(n => (md5r(n), n))
+      val first = plainBfs(es, seed, maxHops)
+      val ecc1 = first.values.max
+      val far = first.collect { case (n, d) if d == ecc1 => n }.min
+      val second = plainBfs(es, far, maxHops)
+      val r = Centrality.diameterDoubleSweep(df, maxHops).collect()(0)
+      assert((0 to 4).map(r.getLong) ==
+        Seq(seed, far, ecc1.toLong, second.values.max.toLong, second.size.toLong),
+        s"es=${es.take(3)}.. maxHops=$maxHops: $r")
     }
   }
 

@@ -41,6 +41,16 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got.keySet == (0L to 30L).toSet)
   }
 
+  test("a path longer than the round cap throws instead of returning split components") {
+    val s = spark
+    import s.implicits._
+    // min labels move one hop per round: a 30-edge path needs 30
+    val path = (0L until 30L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalStateException](
+      ConnectedComponents.components(path, "a", "b", maxIter = 10))
+    assert(e.getMessage.contains("maxIter=10"), e.getMessage)
+  }
+
   test("separate components keep separate canonical labels") {
     val edges = Seq((10L, 11L), (11L, 12L), (20L, 21L), (30L, 31L), (31L, 30L))
     val got = run(edges)

@@ -59,4 +59,16 @@ class KCoreSpec extends SparkSpec with BothPaths {
     val (core, _) = run(star, 2, limit)
     assert(core.isEmpty)
   }
+
+  bothPaths("a path longer than the round cap throws instead of returning a partial peel") { limit =>
+    // k=2 peels a path one end edge per side per round: 20 edges need
+    // 10 rounds, so a cap of 5 runs out mid-peel
+    val path = (0L until 20L).map(i => (i, i + 1))
+    val e = intercept[IllegalStateException](
+      KCore.core(path.toDF("src", "dst"), 2, maxRounds = 5, limit))
+    assert(e.getMessage.contains("maxRounds=5"), e.getMessage)
+    // a cap the peel fits in returns the (empty) 2-core
+    val (core, rounds) = KCore.core(path.toDF("src", "dst"), 2, maxRounds = 64, limit)
+    assert(core.isEmpty && rounds == 10)
+  }
 }
