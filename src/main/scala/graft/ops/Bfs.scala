@@ -159,7 +159,16 @@ object Bfs {
     import spark.implicits._
     val (layers, _) = frontier(undOf(edges), Seq(seed).toDF("node"), 1L,
       Seq("node"), maxHops)()
-    layers.zipWithIndex.map { case (l, h) => l.select(col("node"), lit(h).as("hop")) }
-      .reduce(_ union _)
+    depths(layers, "hop")
+  }
+
+  /** The `(node, <depthCol>)` rows of [[frontier]]'s layers from depth
+    * `from` on (the seed layer is depth 0); empty when no layer is that
+    * deep. */
+  private[ops] def depths(layers: IndexedSeq[DataFrame], depthCol: String,
+      from: Int = 0): DataFrame = {
+    val tagged = layers.zipWithIndex.map { case (l, d) =>
+      l.select(col("node"), lit(d).as(depthCol)) }
+    tagged.drop(from).reduceOption(_ union _).getOrElse(tagged.head.limit(0))
   }
 }

@@ -40,9 +40,7 @@ object Centrality {
     val (layers, _) = Bfs.frontier(und, srcs.toSeq.map(s => (s, s)).toDF("s", "node"),
       srcs.length.toLong, Seq("s", "node"), maxDepth)()
     import org.apache.spark.sql.expressions.Window
-    layers.zipWithIndex.map { case (l, d) => l.select(col("node"), lit(d).as("d")) }
-      .reduce(_ union _)
-      .where(col("d") >= 1)
+    Bfs.depths(layers, "d", from = 1)
       .groupBy(col("node"))
       .agg(sum(expr("1000000L div d")).as("h_micro"),
         count(lit(1)).as("n_reached"))

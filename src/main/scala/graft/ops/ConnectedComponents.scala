@@ -28,9 +28,11 @@ object ConnectedComponents {
     * minimum vertex id reachable. `maxIter` bounds pathological chain
     * graphs (propagation halves distance per round on stars, but a
     * pure path of length L needs L rounds; 50 covers any plausible
-    * dedup cluster). Labels still changing after `maxIter` rounds
-    * throw (the Truss/Mis rule) rather than return components that
-    * are split. */
+    * dedup cluster). `maxIter` counts the rounds that change a label;
+    * the round that confirms the fixpoint comes on top, so a
+    * propagation that settles on round `maxIter` returns. A label
+    * still changing on round `maxIter + 1` throws (the Truss/Mis rule)
+    * rather than return components that are split. */
   def components(edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 50): DataFrame = {
     // Materialize the DIRECTED edge list before mirroring it: the
@@ -56,7 +58,7 @@ object ConnectedComponents {
     val nNodes = labels.count()
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIter) {
+    while (!converged) {
       // neighbor messages: for vertex a, the labels of everyone it
       // touches; then the round's label = min(own, best message)
       val msgs = undirected
@@ -74,12 +76,12 @@ object ConnectedComponents {
           (col("msg") < col("label")).as("changed"))
         .localCheckpoint(eager = false)
       converged = next.where(col("changed")).count() == 0L
+      if (!converged && iter == maxIter) throw new IllegalStateException(
+        s"connected components still changing after maxIter=$maxIter " +
+          "rounds: labels have not reached the component minimum; raise maxIter")
       labels = next.select(col("id"), col("label"))
       iter += 1
     }
-    if (!converged) throw new IllegalStateException(
-      s"connected components still changing after maxIter=$maxIter " +
-        "rounds: labels have not reached the component minimum; raise maxIter")
     labels.withColumnRenamed("label", "component")
   }
 

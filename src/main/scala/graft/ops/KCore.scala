@@ -22,7 +22,9 @@ import org.apache.spark.sql.functions._
   * strictly until the fixpoint, so an unchanged count IS stability.
   * Fail-fast (the Truss rule): a peel still shrinking after
   * `maxRounds` rounds throws on both paths instead of returning a
-  * subgraph that is not yet the k-core.
+  * subgraph that is not yet the k-core. The degree check after the
+  * last allowed round still runs, so a peel that reaches its fixpoint
+  * or empties on that round returns.
   */
 object KCore {
 
@@ -60,7 +62,10 @@ object KCore {
 
   /** The peel on the driver: per round, the degrees of the surviving
     * edge rows, the nodes at degree >= k, and the rows with both ends
-    * kept; stops on an empty or unchanged node set or at `maxRounds`.
+    * kept; stops on an empty or unchanged node set. The degree check
+    * also runs after shrink round `maxRounds`, so a peel that converges
+    * or empties on its last allowed round returns; one that would need
+    * another shrink throws.
     * @return (indices of the core's edge rows, rounds). */
   private def localCore(src: Array[Long], dst: Array[Long], k: Int,
       maxRounds: Int): (Array[Int], Int) = {
@@ -69,19 +74,20 @@ object KCore {
     var survivors = -1
     var round = 0
     var done = false
-    while (!done && round < maxRounds) {
+    while (!done) {
       val deg = new Array[Int](ids.length)
       cur.foreach { j => deg(s(j)) += 1; deg(d(j)) += 1 }
       val n = deg.count(_ >= k)
       if (n == 0) { cur = Array.emptyIntArray; done = true }
       else if (n == survivors) done = true
+      else if (round == maxRounds)
+        throw new IllegalStateException(roundsMessage(maxRounds, k))
       else {
         survivors = n
         cur = cur.filter(j => deg(s(j)) >= k && deg(d(j)) >= k)
         round += 1
       }
     }
-    if (!done) throw new IllegalStateException(roundsMessage(maxRounds, k))
     (cur, round)
   }
 
@@ -99,7 +105,7 @@ object KCore {
     var round = 0
     var done = false
     var coreEmpty = false
-    while (!done && round < maxRounds) {
+    while (!done) {
       val deg = cur.select(col("src").as("node"))
         .union(cur.select(col("dst").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -108,6 +114,8 @@ object KCore {
       val n = keep.count()
       if (n == 0) { coreEmpty = true; done = true }
       else if (n == survivors) done = true
+      else if (round == maxRounds)
+        throw new IllegalStateException(roundsMessage(maxRounds, k))
       else {
         survivors = n
         // Alternate the semi-join order. NOT planner reuse (the
@@ -137,7 +145,6 @@ object KCore {
         round += 1
       }
     }
-    if (!done) throw new IllegalStateException(roundsMessage(maxRounds, k))
     val coreEdges = if (coreEmpty) cur.limit(0) else cur
     (coreEdges, round)
   }

@@ -49,6 +49,12 @@ class ConnectedComponentsSpec extends SparkSpec {
     val e = intercept[IllegalStateException](
       ConnectedComponents.components(path, "a", "b", maxIter = 10))
     assert(e.getMessage.contains("maxIter=10"), e.getMessage)
+    // a cap equal to the rounds the labels need returns one component
+    val exact = ConnectedComponents.components(path, "a", "b", maxIter = 30)
+      .collect().map(r => r.getLong(1)).toSet
+    assert(exact == Set(0L))
+    intercept[IllegalStateException](
+      ConnectedComponents.components(path, "a", "b", maxIter = 29))
   }
 
   test("separate components keep separate canonical labels") {

@@ -22,9 +22,10 @@ class KCoreSpec extends SparkSpec with BothPaths {
     es
   }
 
-  private def run(edges: Seq[(Long, Long)], k: Int, limit: Long): (Set[(Long, Long)], Int) = {
+  private def run(edges: Seq[(Long, Long)], k: Int, limit: Long,
+      maxRounds: Int = 64): (Set[(Long, Long)], Int) = {
     val df = edges.toDF("src", "dst")
-    val (core, rounds) = KCore.core(df, k, maxRounds = 64, limit)
+    val (core, rounds) = KCore.core(df, k, maxRounds, limit)
     (core.collect().map(r => (r.getLong(0), r.getLong(1))).toSet, rounds)
   }
 
@@ -67,8 +68,24 @@ class KCoreSpec extends SparkSpec with BothPaths {
     val e = intercept[IllegalStateException](
       KCore.core(path.toDF("src", "dst"), 2, maxRounds = 5, limit))
     assert(e.getMessage.contains("maxRounds=5"), e.getMessage)
-    // a cap the peel fits in returns the (empty) 2-core
-    val (core, rounds) = KCore.core(path.toDF("src", "dst"), 2, maxRounds = 64, limit)
-    assert(core.isEmpty && rounds == 10)
+    // a cap the peel fits in returns the (empty) 2-core, also when the
+    // cap equals the rounds the peel needs
+    for (cap <- Seq(64, 10)) {
+      val (core, rounds) = KCore.core(path.toDF("src", "dst"), 2, maxRounds = cap, limit)
+      assert(core.isEmpty && rounds == 10, s"cap $cap")
+    }
+    val e9 = intercept[IllegalStateException](
+      KCore.core(path.toDF("src", "dst"), 2, maxRounds = 9, limit))
+    assert(e9.getMessage.contains("maxRounds=9"), e9.getMessage)
+  }
+
+  bothPaths("a peel that reaches its fixpoint on the last allowed round returns") { limit =>
+    // a triangle with a 3-edge tail: k=2 peels the tail in 3 rounds and
+    // keeps the triangle, so a cap of 3 fits exactly
+    val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
+    for (cap <- Seq(3, 64)) {
+      val (core, rounds) = run(g, 2, limit, cap)
+      assert(core == brute(g, 2) && rounds == 3, s"cap $cap")
+    }
   }
 }
