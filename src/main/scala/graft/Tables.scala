@@ -67,18 +67,6 @@ object Tables {
   def documents(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "embeddings")
 
-  /** Documents from a JSONL directory (the corpus interchange format
-    * Export writes with format="json"). Schema is PINNED, never
-    * inferred — inference is a full extra pass over the corpus and
-    * can silently retype columns; a reader at 100 TB declares what it
-    * expects and lets corrupt lines surface as nulls in PERMISSIVE
-    * mode (count them) rather than re-shaping the schema. */
-  def documentsJsonl(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-      .json(path)
-      .select("doc_id", "text", "lang", "source", "n_chars")
-
   /** The documents/embeddings parquet are single splits (one row
     * group), so a per-row CPU-heavy stage reading them directly runs
     * in ONE task. Repartition to the cluster's parallelism first; on

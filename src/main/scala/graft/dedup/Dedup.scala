@@ -960,19 +960,4 @@ object Dedup {
           .as("hamming"))
       .where(col("hamming") <= maxDist)
   }
-
-  /** The pipeline's last dedup step: keep one document per duplicate
-    * cluster. `pairs` (doc_a, doc_b) resolve to components
-    * (graft.ops.ConnectedComponents); every NON-canonical member
-    * (id ≠ its component's min id) is anti-joined away. Docs in no
-    * pair pass through untouched — the anti-join's right side is only
-    * the duplicate clusters, which are tiny relative to the corpus. */
-  def keepCanonical(docs: DataFrame, idCol: String,
-      pairs: DataFrame): DataFrame = {
-    val comps = graft.ops.ConnectedComponents
-      .components(pairs, "doc_a", "doc_b")
-    val redundant = comps.where(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    docs.join(redundant, Seq(idCol), "left_anti")
-  }
 }

@@ -42,8 +42,7 @@ import graft.ingest.Versioned
   * timestamped segment holds only the delta's postings/shingles,
   * chained via PARENT; readers union the chain.
   * Hash params are frozen at build time (stored in PARAMS), so every
-  * segment's band keys live in one key space. [[compact]] merges a
-  * long chain into one self-contained dir.
+  * segment's band keys live in one key space.
   */
 object DedupIndex {
 
@@ -155,23 +154,6 @@ object DedupIndex {
     name
   }
 
-  /** Merge a segment chain into one self-contained dir (one rewrite —
-    * amortize over many appends) and point LATEST at it. */
-  def compact(spark: SparkSession, base: String): String = {
-    val p = params(base)
-    val post = postings(spark, base)
-    val sh = shingles(spark, base)
-    val name = store(base).create()
-    val dir = s"$base/lsh/$name"
-    post.write.mode(SaveMode.ErrorIfExists).partitionBy("band")
-      .parquet(s"$dir/postings")
-    sh.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/shingles")
-    Files.write(Paths.get(dir, "PARAMS"),
-      paramLines(p).getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-    store(base).flip(name)
-    name
-  }
-
   /** The posting view of an index = the union of its segment chain.
     * `band` is a partition DIRECTORY column — it reads back as int
     * whatever was written; pinned to int
@@ -252,18 +234,5 @@ object DedupIndex {
       .select(col("doc_idx"), col("doc_new"), col("j_bp"))
   }
 
-  /** The drop rows that survive admission (no verified near-dup in
-    * the index) — the frame a caller [[append]]s. */
-  def admitted(base: String, drop: DataFrame, textCol: String,
-      idCol: String, thresholdBp: Long = 3000L): DataFrame = {
-    val dup = admit(base, drop, textCol, idCol, thresholdBp)
-      .select(col("doc_new"))
-    drop.join(dup, drop(idCol) === dup("doc_new"), "left_anti")
-  }
-
   def latestName(base: String): Option[String] = store(base).latest
-
-  /** Retention keeps the latest segment's whole chain
-    * ([[graft.ingest.Versioned.prune]]). */
-  def prune(base: String, keep: Int): Seq[String] = store(base).prune(keep)
 }

@@ -55,10 +55,7 @@ object IdMaps {
       else f(2).toLongOption.map(_ -> f(0))
     }.toSeq
 
-  /** First entry per id wins, matching libc lookup order. */
-  def parseColonFile(lines: Iterator[String]): Map[Long, String] =
-    firstWins(parseEntries(lines))
-
+  /** First entry per key wins, matching libc lookup order. */
   private def firstWins[A, B](entries: Seq[(A, B)]): Map[A, B] =
     entries.foldLeft(Map.empty[A, B]) { (m, kv) =>
       if (m.contains(kv._1)) m else m + kv

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * delta alone — typically orders of magnitude smaller than state),
   * then ONE full-outer equi join on the key merges it into state.
   * The base table is never read; state shuffles once on its key (or
-  * never, if the state table is bucketed by key — ops/Layout). The
+  * never, if the state table is bucketed by key). The
   * full-outer + using-columns form coalesces the key columns, so
   * keys new to the delta and keys absent from it both survive (the
   * build-note recipe).

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * degeneracy peeling depth, which is small for power-law graphs.
   * Convergence is detected from the survivor COUNT: the set shrinks
   * strictly until the fixpoint, so an unchanged count IS stability.
-  * Fail-fast (the Truss rule): a peel still shrinking after
+  * Fail-fast (the rule Truss shares): a peel still shrinking after
   * `maxRounds` rounds throws on both paths instead of returning a
   * subgraph that is not yet the k-core. The degree check after the
   * last allowed round still runs, so a peel that reaches its fixpoint

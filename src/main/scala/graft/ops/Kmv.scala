@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions._
   * Exactness contract: a sketch holding fewer than k values IS the
   * exact distinct set — estimates degrade to exact counts (the
   * declared query runs in this regime at verify scale, so its oracle
-  * is exact SQL; KmvSpec covers the estimating regime).
+  * is exact SQL; KmvSpec checks the estimating regime with the
+  * (k−1)/U_(k) and combined-bottom-k estimators).
   *
   * Merge = union bottom-k: associative, commutative, idempotent —
   * bit-identical across partitionings (same property the count-min
@@ -71,46 +72,6 @@ object Kmv {
     * sketches). Result: sorted array<bigint> of the bottom-k hashes. */
   def sketch(hashCol: Column, k: Int): Column =
     udaf(agg(k), Encoders.scalaLong)(hashCol.cast("long"))
-
-  /** Distinct-count estimate from a sketch array. Fewer than k values
-    * = the set itself (exact). Otherwise (k-1)/U_(k) with hashes
-    * mapped to (0,1) by unsigned normalization. */
-  def estimateDistinct(sketch: Array[Long], k: Int): Double =
-    if (sketch.length < k) sketch.length.toDouble
-    else {
-      val kth = sketch.last // largest of the bottom-k (sorted asc)
-      // unsigned map of [Long.Min, Long.Max] onto (0, 1)
-      val u = (kth.toDouble - Long.MinValue.toDouble) /
-        math.pow(2.0, 64)
-      (k - 1).toDouble / math.max(u, Double.MinPositiveValue)
-    }
-
-  /** (jaccard, intersection) estimates for two sketches with the same
-    * k (Beyer et al. 2007): evaluate membership on the combined
-    * bottom-k' (k' = min(k, |A∪B sketch|)). Exact when both sketches
-    * are complete. */
-  def estimateOverlap(a: Array[Long], b: Array[Long], k: Int): (Double, Double) = {
-    val sa = a.toSet
-    val sb = b.toSet
-    if (a.length < k && b.length < k) {
-      val inter = sa.intersect(sb).size.toDouble
-      val uni = sa.union(sb).size.toDouble
-      (if (uni == 0) 0.0 else inter / uni, inter)
-    } else {
-      val combined = (a ++ b).distinct.sorted.take(k)
-      val rho = combined.count(h => sa.contains(h) && sb.contains(h))
-      val j = rho.toDouble / combined.length
-      // union distinct from the combined sketch (complete iff < k)
-      val du =
-        if (combined.length < k) combined.length.toDouble
-        else {
-          val u = (combined.last.toDouble - Long.MinValue.toDouble) /
-            math.pow(2.0, 64)
-          (k - 1).toDouble / math.max(u, Double.MinPositiveValue)
-        }
-      (j, j * du)
-    }
-  }
 
   /** Per-group sketches of `hashCol`. */
   def perGroup(df: DataFrame, groupCol: String, hashCol: Column,

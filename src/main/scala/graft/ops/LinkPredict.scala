@@ -37,12 +37,12 @@ import org.apache.spark.sql.functions._
   * the adjacency — never the Σ deg² wedge stream) and emit the
   * C(deg,2) pairs MAP-SIDE from the collected neighbor list, so the
   * pair stream reaches the final (u,v) exchange already partially
-  * aggregated. Per-row list size is bounded by the cap. The self-join
-  * form ([[raJoin]]) is kept for the equivalence spec and the
-  * same-session A/B (r13, sf0.1: copurchase graph
+  * aggregated. Per-row list size is bounded by the cap. Against the
+  * self-join form (a shuffle-hash join of the capped adjacency with
+  * itself on w; same-session A/B, r13, sf0.1): copurchase graph
   * neutral at 0.63–0.65 s both forms; hub-skewed graph 0.72 s agg vs
   * 0.84 s join — and the gap widens with hub degree, since the join
-  * form shuffles the raw wedge stream where this form pre-aggregates).
+  * form shuffles the raw wedge stream where this form pre-aggregates.
   *
   * Scale shape (ScaleCheck `link_predict` family): on a hub-skewed
   * replication (disjoint graph copies PLUS a hub whose degree grows
@@ -72,9 +72,8 @@ object LinkPredict {
   }
 
   /** Aggregate-form core: per-w neighbor lists → map-side pair
-    * explode → one partially-aggregated (u, v) exchange. The pair
-    * weight through w is rw(w) for both wedge legs, so summing rw per
-    * emitted pair equals the join form's sum(a.rw) exactly. */
+    * explode → one partially-aggregated (u, v) exchange; each emitted
+    * pair adds its shared neighbor's rw(w). */
   private def candidatesOn(e: DataFrame, degCap: Int): DataFrame = {
     val adj = e.select(col("src").as("u"), col("dst").as("w"))
       .union(e.select(col("dst").as("u"), col("src").as("w")))
@@ -100,28 +99,5 @@ object LinkPredict {
           |       y -> struct(x AS u, y AS v))))""".stripMargin)).as("p"))
       .groupBy(col("p.u").as("u"), col("p.v").as("v"))
       .agg(sum(col("rw")).as("ra_micro"))
-  }
-
-  /** The self-join form (shuffle_hash on the shared neighbor) — kept
-    * as the A/B twin and the spec's independent reference plan;
-    * content-identical to [[ra]] (asserted in LinkPredictSpec). */
-  def raJoin(edges: DataFrame, degCap: Int = DefaultDegCap): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    val adj = e.select(col("src").as("u"), col("dst").as("w"))
-      .union(e.select(col("dst").as("u"), col("src").as("w")))
-    val deg = adj.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("d"))
-    val wadj = adj.join(deg, col("w") === col("node"))
-      .where(col("d") <= lit(degCap))
-      .select(col("u"), col("w"), expr("1000000 div d").as("rw"))
-    // shuffle_hash: SMJ would sort the Θ(Σ deg²) wedge stream twice
-    // (the q_triangles lesson).
-    val cand = wadj.as("a")
-      .join(wadj.as("b").hint("shuffle_hash"),
-        col("a.w") === col("b.w") && col("a.u") < col("b.u"))
-      .groupBy(col("a.u").as("u"), col("b.u").as("v"))
-      .agg(sum(col("a.rw")).as("ra_micro"))
-    cand.join(e, cand("u") === e("src") && cand("v") === e("dst"),
-      "left_anti")
   }
 }

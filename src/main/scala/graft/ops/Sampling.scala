@@ -20,11 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  /** True iff this row is in the sample at `rate` (0.0 to 1.0), keyed
-    * by `id`'s string form. */
-  def sampleAt(id: Column, rate: Double): Column =
-    coin(id) < lit(threshold(rate))
-
   /** Per-stratum sampling predicate: `rates` maps stratum values to
     * rates; strata not in the map keep everything (rate 1.0). */
   def stratifiedAt(id: Column, stratum: Column,
@@ -33,11 +28,6 @@ object Sampling {
     coin(id) < coalesce(try_element_at(typedLit(thresholds), stratum),
       lit("g"))
   }
-
-  /** Filter to the stratified sample. */
-  def stratified(df: DataFrame, idCol: String, stratumCol: String,
-      rates: Map[String, Double]): DataFrame =
-    df.where(stratifiedAt(col(idCol), col(stratumCol), rates))
 
   /** Weighted Bernoulli (Poisson) sampling: each row kept with
     * probability `weight / wNorm` (clamped at 1), deterministically.

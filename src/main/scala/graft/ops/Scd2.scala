@@ -62,10 +62,4 @@ object Scd2 {
         attrCols.map(col) ++
         Seq(col("valid_from"), col("valid_to"), col("is_current"))): _*)
   }
-
-  /** Point-in-time lookup against an SCD2 frame built by
-    * [[fromChangeLog]]: the version whose interval contains `asOf`. */
-  def asOf(scd2: DataFrame, asOf: Column): DataFrame =
-    scd2.where(col("valid_from") <= asOf &&
-      (col("valid_to").isNull || col("valid_to") > asOf))
 }

@@ -64,20 +64,10 @@ object Shuffle {
       Seq("shuffle_key", idCol), "shuffle_pos", partitions)
       .drop("shuffle_key")
 
-  /** Write the seeded shuffle as training shards: one
-    * `shard_id=<k>/` parquet directory per shard, rows round-robin by
-    * position so shards are equal-sized (±1) and each is itself in
-    * shuffle order. `repartition(shards, shard_id)` puts each shard in
-    * ONE task (hash partitioning may co-locate several shards in a
-    * task — fine, they still land in separate directories), and
-    * `sortWithinPartitions` keeps the in-file row order deterministic,
-    * so the written bytes are reproducible run-to-run. A training job
-    * then reads `shard_id=k` via partition pruning — no filter scan
-    * over the other shards. */
   /** Rendezvous (highest-random-weight) shard assignment: shard =
     * argmax over j∈[0,shards) of md5("<j>|<id>"). Unlike the
-    * position-round-robin [[writeShards]] layout (balanced but
-    * wholesale-reassigned when the corpus changes), HRW assignment is
+    * position-round-robin shards (balanced but wholesale-reassigned
+    * when the corpus changes), HRW assignment is
     * STABLE under shard-count growth: raising `shards` to shards+1
     * moves EXACTLY the docs whose new-shard hash wins — every other
     * doc's argmax over the old range is untouched — so an incremental
@@ -94,16 +84,4 @@ object Shuffle {
       j => struct(
         md5(concat(j.cast("string"), lit("|"), id.cast("string"))).as("h"),
         j.as("j")))).getField("j").cast("long")
-
-  def writeShards(df: DataFrame, idCol: String, seed: Long, shards: Int,
-      outDir: String, partitions: Int = 32): Unit = {
-    import org.apache.spark.sql.functions.pmod
-    shuffled(df, idCol, seed, partitions)
-      .withColumn("shard_id", pmod(col("shuffle_pos"), lit(shards.toLong)))
-      .repartition(shards, col("shard_id"))
-      .sortWithinPartitions(col("shuffle_pos"))
-      .write.mode("overwrite")
-      .partitionBy("shard_id")
-      .parquet(outDir)
-  }
 }

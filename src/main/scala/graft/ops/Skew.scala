@@ -3,21 +3,16 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew tools for hot grouping/join keys.
+/** Skew tools for hot grouping keys.
   *
-  * AQE's skew-join splitting handles most cases at runtime; these
-  * helpers cover the places it can't:
-  *
-  *   - [[saltedAgg]]: a single pathological group key (one user owning
-  *     10⁹ files, one shingle in every document) funnels its whole
-  *     group through one reducer. Salting splits each key into
-  *     `salts` sub-groups for the wide partial aggregate, then
-  *     combines the partials with a second (tiny) aggregate. Only
-  *     algebraic aggregates (sum/count/min/max) compose this way —
-  *     which is why the combine expression is taken explicitly.
-  *   - [[saltedReplicateJoin]]: replicate a small build side `salts`
-  *     times and scatter the probe side, so one hot join key spreads
-  *     across `salts` tasks instead of one.
+  * AQE's skew-join splitting handles hot join keys at runtime; a hot
+  * GROUP key it can't split: a single pathological group key (one
+  * user owning 10⁹ files, one shingle in every document) funnels its
+  * whole group through one reducer. [[saltedAgg]] splits each key
+  * into `salts` sub-groups for the wide partial aggregate, then
+  * combines the partials with a second (tiny) aggregate. Only
+  * algebraic aggregates (sum/count/min/max) compose this way — which
+  * is why the combine expression is taken explicitly.
   */
 object Skew {
 
@@ -40,22 +35,5 @@ object Skew {
       .groupBy(keys.map(col): _*)
       .agg(aggs.head._3.as(aggs.head._1),
         aggs.tail.map(a => a._3.as(a._1)): _*)
-  }
-
-  /** Skew-proof equi-join: scatter each probe row to a random salt,
-    * replicate every build row to ALL salts, join on (key, salt). The
-    * build side must tolerate `salts`× replication (it is small by
-    * assumption); the hot probe key's rows land in `salts` different
-    * tasks. Returns probe columns + build columns (minus the join key
-    * duplicate). */
-  def saltedReplicateJoin(probe: DataFrame, build: DataFrame,
-      key: String, salts: Int): DataFrame = {
-    val saltedProbe = probe.withColumn("__salt",
-      pmod(hash(rand(seed = 7) * Int.MaxValue), lit(salts)))
-    val replicated = build
-      .withColumn("__salts", sequence(lit(0), lit(salts - 1)))
-      .withColumn("__salt", explode(col("__salts")))
-      .drop("__salts")
-    saltedProbe.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
 }

@@ -10,65 +10,21 @@ import org.apache.spark.sql.functions._
   *
   * Every edge is re-oriented from its lower to its higher endpoint
   * under the total order `(degree, node)`; a triangle then has exactly
-  * one "lowest" vertex and is found exactly once as a wedge
-  * `a->b, b->c` closed by `a->c`. Orienting by DEGREE (not id) bounds
-  * every out-degree by O(sqrt(m)), so the wedge join never explodes
-  * on a high-degree hub — the id-ordered form is quadratic in the
-  * hub's degree, the degree-ordered form is not. Two equi-join
-  * shuffles (on node, then on the closing pair); nothing quadratic,
-  * nothing collected.
+  * one "lowest" vertex and is found exactly once. Orienting by DEGREE
+  * (not id) bounds every out-degree by O(sqrt(m)), so a high-degree
+  * hub never explodes the work — the id-ordered form is quadratic in
+  * the hub's degree, the degree-ordered form is not. Nothing
+  * quadratic, nothing collected.
   */
 object Triangles {
 
-  /** Returns one row: (n_nodes, n_edges, n_triangles). */
-  def stats(edges: DataFrame): DataFrame = {
-    // Both the edge list and the oriented list feed MULTIPLE joins of
-    // themselves with themselves; a self-join of one frame gets no
-    // exchange reuse under AQE (build note), so without the eager
-    // localCheckpoints the whole upstream (edge build + degree joins)
-    // re-executes once per consumer — measured 8.9 s -> ~3 s at sf0.1.
-    val e0 = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-      .localCheckpoint(true)
-    val deg = e0.select(col("src").as("node"))
-      .unionAll(e0.select(col("dst").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val withDeg = e0
-      .join(deg.select(col("node").as("src"), col("deg").as("ds")), "src")
-      .join(deg.select(col("node").as("dst"), col("deg").as("dd")), "dst")
-    val oriented = withDeg.select(
-      when(struct(col("ds"), col("src")) < struct(col("dd"), col("dst")),
-        col("src")).otherwise(col("dst")).as("a"),
-      when(struct(col("ds"), col("src")) < struct(col("dd"), col("dst")),
-        col("dst")).otherwise(col("src")).as("b"))
-      .localCheckpoint(true)
-    // Wedge a->b->c closed by a->c; under a total order each triangle
-    // appears exactly once. Both joins are hinted SHUFFLE_HASH: the
-    // wedge side is Θ(Σ outdeg²) rows (72M at sf0.1's near-regular
-    // graph) and sort-merge would SORT it twice — hash-building on
-    // the edge list (the small side) streams the wedges unsorted.
-    val wedges = oriented.select(col("a"), col("b"))
-      .join(oriented.select(col("a").as("b"), col("b").as("c"))
-        .hint("shuffle_hash"), "b")
-    // (Broadcasting the closing edge list was measured SLOWER than
-    // the partitioned hash join here — one 1.2M-entry table probed
-    // 72M times loses to 32 cache-resident per-partition tables.)
-    val tri = wedges
-      .join(oriented.select(col("a"), col("b").as("c"))
-        .hint("shuffle_hash"), Seq("a", "c"))
-      .agg(count(lit(1)).as("n_triangles"))
-    val edgeCount = e0.agg(count(lit(1)).as("n_edges"))
-    val nodeCount = deg.agg(count(lit(1)).as("n_nodes"))
-    nodeCount.crossJoin(edgeCount).crossJoin(tri) // three 1-row frames
-  }
-
-  /** Same count via edge-adjacency intersection (the "node iterator"
-    * form): each oriented edge (a,b) contributes |N+(a) ∩ N+(b)|.
-    * Ships the same Θ(Σ outdeg²) neighbor IDs as the wedge form but
-    * PACKED into per-node long arrays, and replaces the 72M-row
-    * closing shuffle-hash join with one native array_intersect per
-    * EDGE (1.2M calls at sf0.1) — rows through the final shuffle drop
-    * ~60×. Degree orientation still bounds every array at O(sqrt m).
+  /** Returns one row: (n_nodes, n_edges, n_triangles), counted by
+    * edge-adjacency intersection (the "node iterator" form): each
+    * oriented edge (a,b) contributes |N+(a) ∩ N+(b)|. The Θ(Σ outdeg²)
+    * neighbor IDs ship PACKED into per-node long arrays, and one
+    * native array_intersect per EDGE (1.2M calls at sf0.1) replaces
+    * the wedge form's closing shuffle-hash join of the 72M-row wedge
+    * stream — rows through the final shuffle drop ~60×.
     */
   def statsAdjacency(edges: DataFrame): DataFrame = {
     val e0 = edges.select(col("src").cast("long").as("src"),
@@ -97,8 +53,8 @@ object Triangles {
       .select(col("a"), col("na"), explode(col("na")).as("b"))
       .join(adj.select(col("node").as("b"), col("nbrs").as("nb"))
         .hint("shuffle_hash"), "b")
-      .agg(sum(size(array_intersect(col("na"), col("nb"))))
-        .as("n_triangles"))
+      .agg(coalesce(sum(size(array_intersect(col("na"), col("nb")))), lit(0L))
+        .as("n_triangles")) // sum over no wedges is null; no triangles is 0
     val edgeCount = e0.agg(count(lit(1)).as("n_edges"))
     val nodeCount = deg.agg(count(lit(1)).as("n_nodes"))
     nodeCount.crossJoin(edgeCount).crossJoin(tri)

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *
   * Below [[LocalGraph.EdgeLimit]] edges the peel runs on the driver
   * after one bounded collect — the same orientation, intersection,
-  * round count, stop rule and `maxRounds` throw — and the truss is a
+  * round count, stop rule and `maxRounds` cap — and the truss is a
   * local relation (the [[LocalGraph]] rule); the distributed rounds
   * above run only above the bound.
   */
@@ -61,10 +61,13 @@ object Truss {
 
   /** @param edges undirected simple graph, canonical src < dst, no
     *              duplicates.
-    * @param maxRounds hard bound on peeling rounds. Exhausting it
-    *                  without reaching the fixpoint THROWS rather than
-    *                  silently returning a non-truss edge set — callers
-    *                  pairing with an unrolled SQL oracle must keep
+    * @param maxRounds hard bound on shrink rounds (the KCore rule). The
+    *                  support check still runs after shrink round
+    *                  `maxRounds`: an unchanged or empty edge set
+    *                  returns, and a peel that would need another
+    *                  shrink THROWS rather than silently returning a
+    *                  non-truss edge set — callers pairing with an
+    *                  unrolled SQL oracle must keep
     *                  `maxRounds <= nLayers` so a too-deep peel fails
     *                  loudly instead of diverging the hash gate.
     * @return (trussEdges, rounds): the k-truss edge list and the
@@ -132,7 +135,7 @@ object Truss {
   }
 
   /** The peel on the driver, with the distributed round count, stop
-    * rule and `maxRounds` throw. @return (src, dst, rounds) of the
+    * rule and `maxRounds` cap. @return (src, dst, rounds) of the
     * truss: the input rows when round 1 drops nothing, else the
     * surviving canonical pairs. */
   private def localTruss(src: Array[Long], dst: Array[Long], k: Int,
@@ -142,10 +145,12 @@ object Truss {
     var d = d0
     var round = 0
     var done = s.isEmpty
-    while (!done && round < maxRounds) {
+    while (!done) {
       val keep = localSupports(s, d, ids.length).iterator
         .collect { case (key, n) if n >= k - 2 => key }.toArray
       if (keep.length == s.length) done = true
+      else if (round == maxRounds)
+        throw new IllegalStateException(roundsMessage(maxRounds, k, s.length))
       else {
         s = keep.map(key => (key >>> 32).toInt)
         d = keep.map(key => (key & 0xffffffffL).toInt)
@@ -153,7 +158,6 @@ object Truss {
         if (keep.isEmpty) done = true
       }
     }
-    if (!done) throw new IllegalStateException(roundsMessage(maxRounds, k, s.length))
     (s.map(ids(_)), d.map(ids(_)), round)
   }
 
@@ -172,12 +176,14 @@ object Truss {
     var cur = Bfs.fitted(cur0, curCount)
     var round = 0
     var done = curCount == 0
-    while (!done && round < maxRounds) {
+    while (!done) {
       val keep = supports(cur).where(col("sup") >= k - 2)
         .select(col("src"), col("dst"))
         .localCheckpoint(true)
       val m = keep.count()
       if (m == curCount) done = true // nothing dropped: fixpoint
+      else if (round == maxRounds)
+        throw new IllegalStateException(roundsMessage(maxRounds, k, curCount))
       else {
         cur = keep // the support frame's edges ARE the survivors
         curCount = m
@@ -185,7 +191,6 @@ object Truss {
         if (m == 0) done = true
       }
     }
-    if (!done) throw new IllegalStateException(roundsMessage(maxRounds, k, curCount))
     (if (curCount == 0) cur.limit(0) else cur, round)
   }
 }

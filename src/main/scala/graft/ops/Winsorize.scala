@@ -63,20 +63,4 @@ object Winsorize {
       .select(col("dim"), col("lo"), col("hi"), col("n"),
         col("n_below"), col("n_above"))
   }
-
-  /** Apply collected bounds: clamp every coordinate into its dim's
-    * [lo, hi]. Bounds ride the plan as literal arrays (|dims| doubles
-    * — the literal-lookup-table rule), so the clip is one codegen-
-    * friendly projection with zero joins and zero shuffles. */
-  def clipped(df: DataFrame, vecCol: String, lo: Seq[Double],
-      hi: Seq[Double]): DataFrame = {
-    require(lo.length == hi.length, s"${lo.length} vs ${hi.length}")
-    val loA = typedLit(lo)
-    val hiA = typedLit(hi)
-    df.withColumn(s"${vecCol}_clipped",
-      zip_with(col(vecCol).cast("array<double>"),
-        sequence(lit(1), lit(lo.length)),
-        (v, i) => greatest(element_at(loA, i),
-          least(element_at(hiA, i), v))))
-  }
 }

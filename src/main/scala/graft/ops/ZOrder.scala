@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) clustering — the multi-dimensional data-layout
-  * lever that [[Layout]]'s single-key bucketing can't provide.
+  * lever that a single-key sort or bucketing can't provide.
   *
   * A corpus queried by TWO independent dimensions (source and
   * quality bucket, part and supplier, host and language) can only be
@@ -88,17 +88,4 @@ object ZOrder {
         min(col("sy")).as("sy_min"), max(col("sy")).as("sy_max"))
       .orderBy(col("shard"))
   }
-
-  /** Write `df` range-sorted by z-value: ONE range shuffle (sampled
-    * boundaries, so shards are equal-sized even when the z-space is
-    * occupied unevenly), rows laid down in z order within each file —
-    * the write-side half of the layout. Downstream scans prune files
-    * via parquet min/max on BOTH xCol and yCol. */
-  def writeZOrdered(df: DataFrame, xCol: String, yCol: String,
-      path: String, numFiles: Int): Unit =
-    withZ(df, xCol, yCol)
-      .repartitionByRange(numFiles, col("zval"))
-      .sortWithinPartitions(col("zval"))
-      .drop("sx", "sy")
-      .write.mode("overwrite").parquet(path)
 }

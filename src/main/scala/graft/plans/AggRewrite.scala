@@ -48,14 +48,13 @@ object AggRewrite {
   final case class Summary(path: String, groupCols: Seq[String],
       measures: Map[String, String])
 
-  private val registry = new TrieMap[String, Summary]()
+  private[plans] val registry = new TrieMap[String, Summary]()
 
   private def normalize(p: String): String =
     p.replaceFirst("^file:", "").stripSuffix("/")
 
   def register(basePath: String, summary: Summary): Unit =
     registry.put(normalize(basePath), summary)
-  def clear(): Unit = registry.clear()
 
   /** Canonical measure key for a physical aggregate call; None = not
     * rewritable (distinct, filtered, or an unsupported function /

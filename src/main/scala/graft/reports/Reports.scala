@@ -3,7 +3,6 @@ package graft.reports
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, struct, to_json}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Report renderers (reference reports.go + tsv.go:18-57,
@@ -11,27 +10,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * rows, single-row totals) for humans/tools — inputs are bounded by
   * construction (K8: compute-N ≤ 2000 rows), so driver-side rendering
   * is safe. A table's rows are collected once — from one
-  * ALREADY-LIMITED frame ([[Table.of]], [[Table.withJson]]), or for
-  * the report tree from two bounded collects ranked with [[topN]] and
-  * [[rankOrder]] — and every format renders from those rows.
+  * ALREADY-LIMITED frame ([[Table.of]]), or for the report tree from
+  * two bounded collects ranked with [[topN]] and [[rankOrder]] — and
+  * every format renders from those rows.
   */
 object Reports {
 
   /** A frame's column names and rows, collected once; `json` holds
-    * each row's JSON object when the table came from [[Table.withJson]]. */
+    * each row's JSON object (a `to_json` column collected with the
+    * rows, as the report tree does). */
   final case class Table(columns: Seq[String], rows: Seq[Row], json: Seq[String] = Nil)
 
   object Table {
     def of(df: DataFrame): Table = Table(df.columns.toSeq, df.collect().toSeq)
-
-    /** The rows plus each row's JSON object, computed by a `to_json`
-      * column in the same job (the lines `df.toJSON` would give). */
-    def withJson(df: DataFrame): Table = {
-      val n = df.columns.length
-      val rows = df.select(col("*"), to_json(struct(col("*")))).collect().toSeq
-      Table(df.columns.toSeq, rows.map(r => Row.fromSeq(r.toSeq.take(n))),
-        rows.map(_.getString(n)))
-    }
   }
 
   /** The order of `orderBy(desc(metric), asc(tie))` on rows, by column

@@ -77,15 +77,4 @@ object SemanticDedup {
     graft.ops.ConnectedComponents.components(
       pairs.withColumnRenamed("id_a", "doc_a")
         .withColumnRenamed("id_b", "doc_b"), "doc_a", "doc_b")
-
-  /** End-to-end: corpus → one row per corpus vector that SURVIVES
-    * semantic dedup (non-representative members anti-joined away). */
-  def dedup(corpus: DataFrame, vecCol: String, idCol: String,
-      centroids: DataFrame, threshold: Double): DataFrame = {
-    val redundant = dupGroups(clusterPairs(corpus, vecCol, idCol,
-      centroids, threshold))
-      .where(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    corpus.join(redundant, Seq(idCol), "left_anti")
-  }
 }

@@ -49,8 +49,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Rows must be atomic-typed (long/int/string/boolean/double — the
   * OutputContract surface); nested types are rejected at write-build
   * time, not mid-job. Null fields are omitted from the JSON object
-  * (Spark's own JSONL convention, matched by the pinned-schema
-  * reader [[graft.Tables.documentsJsonl]]); non-finite doubles are
+  * (Spark's own JSONL convention, which a pinned-schema JSON read
+  * turns back into nulls); non-finite doubles are
   * likewise omitted (NaN/Infinity are invalid JSON), except in the id
   * column where they are rejected.
   *

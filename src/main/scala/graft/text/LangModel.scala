@@ -71,13 +71,6 @@ object LangModel {
           .as("avg_bigram_prob"))
   }
 
-  /** The gate form: documents whose mean transition probability falls
-    * below `minAvgProb` — the corpus-outlier screen. */
-  def lowLikelihoodDocs(df: DataFrame, textCol: String, idCol: String,
-      minAvgProb: Double): DataFrame =
-    bigramDocScore(df, textCol, idCol)
-      .where(col("avg_bigram_prob") < minAvgProb)
-
   /** Interpolated Kneser–Ney trigram perplexity — the real
     * KenLM-style quality gate (CCNet/RefinedWeb filter perplexity
     * under an LM trained on a reference slice). Complements

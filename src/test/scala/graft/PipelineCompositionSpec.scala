@@ -27,18 +27,21 @@ class PipelineCompositionSpec extends SparkSpec {
     val n1 = kept.count()
     assert(n1 > 0 && n1 <= n0)
 
-    // 2. near-dup dedup: pairs → clusters → one canonical doc each
+    // 2. near-dup dedup: pairs → clusters → one canonical doc each;
+    // every non-canonical member (id ≠ its component's min id) is
+    // anti-joined away
     val pairs = Dedup.jaccardPairs(kept, "text", "doc_id",
       n = 3, threshold = 0.3, maxShingleDf = 10).cache()
     val nPairs = pairs.count()
-    val deduped = Dedup.keepCanonical(kept, "doc_id", pairs).cache()
+    val comps = graft.ops.ConnectedComponents
+      .components(pairs, "doc_a", "doc_b").cache()
+    val deduped = kept.join(comps.where(col("id") =!= col("component"))
+      .select(col("id").as("doc_id")), Seq("doc_id"), "left_anti").cache()
     val n2 = deduped.count()
     assert(n2 <= n1)
     // every pair's min id survives, and no kept doc pairs with a
     // smaller kept doc (the canonical-keep property)
     if (nPairs > 0) {
-      val comps = graft.ops.ConnectedComponents
-        .components(pairs, "doc_a", "doc_b")
       val canonical = comps.select(col("component")).distinct()
       val keptIds = deduped.select(col("doc_id")).collect()
         .map(_.getLong(0)).toSet
@@ -53,7 +56,8 @@ class PipelineCompositionSpec extends SparkSpec {
 
     // 3. stratified sample: per-lang rates bound each stratum
     val rates = Map("en" -> 0.5, "zh" -> 0.5)
-    val sampled = Sampling.stratified(deduped, "doc_id", "lang", rates).cache()
+    val sampled = deduped
+      .where(Sampling.stratifiedAt(col("doc_id"), col("lang"), rates)).cache()
     val byLang = deduped.groupBy("lang").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val sampledByLang = sampled.groupBy("lang").count().collect()

@@ -386,7 +386,7 @@ class CliSpec extends SparkSpec {
     assert(r.nSelected === math.min(80L, r.nDedup))
     assert(r.shards.map(_.rows).sum === r.nSelected)
     // the pinned JSONL reader consumes the sink's artifact directly
-    val back = graft.Tables.documentsJsonl(spark, out)
+    val back = graft.TestTables.documentsJsonl(spark, out)
     assert(back.count() === r.nSelected)
     assert(!new java.io.File(s"$out/_staging").exists())
   }

@@ -18,15 +18,19 @@ class IdMapsSpec extends AnyFunSuite {
       |staff:x:50:alice,bob
       |""".stripMargin
 
-  test("parseColonFile: names by id, first entry wins, junk skipped") {
-    val m = IdMaps.parseColonFile(passwd.linesIterator)
-    assert(m == Map(0L -> "root", 1L -> "daemon", 1000L -> "alice"))
+  private def file(text: String): String = {
+    val f = java.nio.file.Files.createTempFile("ids", "")
+    java.nio.file.Files.writeString(f, text)
+    f.toString
+  }
+
+  private lazy val ids = IdMaps.fromOS(file(passwd), file(group))
+
+  test("passwd parsing: names by id, first entry wins, junk skipped") {
+    assert(ids.userById == Map(0L -> "root", 1L -> "daemon", 1000L -> "alice"))
   }
 
   test("resolution: id or name in both directions, numeric fallback") {
-    val ids = IdMaps(
-      IdMaps.parseColonFile(passwd.linesIterator),
-      IdMaps.parseColonFile(group.linesIterator))
     assert(ids.resolveUser("alice").contains(1000L))
     assert(ids.resolveUser("1000").contains(1000L))
     assert(ids.resolveUser("nosuch").isEmpty)
@@ -42,11 +46,9 @@ class IdMapsSpec extends AnyFunSuite {
         |svc:x:300:1:later dup, must lose:/:/bin/false
         |other:x:400:1::/:/bin/false
         |""".stripMargin
-    val f = java.nio.file.Files.createTempFile("passwd", "")
-    java.nio.file.Files.writeString(f, dupName)
-    val ids = IdMaps.fromOS(f.toString, "/nonexistent/group")
-    assert(ids.resolveUser("svc").contains(200L))
-    assert(ids.userName(200L) == "svc" && ids.userName(300L) == "svc")
+    val dup = IdMaps.fromOS(file(dupName), "/nonexistent/group")
+    assert(dup.resolveUser("svc").contains(200L))
+    assert(dup.userName(200L) == "svc" && dup.userName(300L) == "svc")
   }
 
   test("fromOS degrades to empty maps on unreadable files") {

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, Tables, TestTables}
 
 class ExportSpec extends SparkSpec {
 
@@ -101,7 +101,7 @@ class ExportSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft-exportj2").toString + "/c"
     val docs = Tables.documents(spark, dir)
     Export.shards(docs, "doc_id", out, nShards = 2, format = "json")
-    val back = Tables.documentsJsonl(spark, out)
+    val back = TestTables.documentsJsonl(spark, out)
     assert(back.schema.map(f => f.name -> f.dataType.simpleString) ==
       docs.schema.map(f => f.name -> f.dataType.simpleString))
     assert(back.collect().map(_.toSeq).toSet ==

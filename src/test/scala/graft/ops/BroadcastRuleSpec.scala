@@ -22,28 +22,11 @@ import graft.SparkSpec
   */
 class BroadcastRuleSpec extends SparkSpec {
 
-  /** Shuffle count recursing BOTH AQE hiding spots (executedPlan and
-    * QueryStageExec.plan — the ScaleCheck.maxOpenOf rule), so an
-    * executed adaptive plan can't hide a stage's exchange. */
-  private def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Long = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    p.collectWithSubqueries {
-      case _: ShuffleExchangeLike => 1L
-      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-      case q: QueryStageExec => shuffles(q.plan)
-    }.sum
-  }
+  private def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Long =
+    PlanChecks.count(p) { case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => }
 
-  private def broadcastJoins(p: org.apache.spark.sql.execution.SparkPlan): Long = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    p.collectWithSubqueries {
-      case _: BroadcastHashJoinExec => 1L
-      case a: AdaptiveSparkPlanExec => broadcastJoins(a.executedPlan)
-      case q: QueryStageExec => broadcastJoins(q.plan)
-    }.sum
-  }
+  private def broadcastJoins(p: org.apache.spark.sql.execution.SparkPlan): Long =
+    PlanChecks.count(p) { case _: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => }
 
   private def fixture = {
     val s = spark

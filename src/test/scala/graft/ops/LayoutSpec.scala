@@ -4,75 +4,9 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Bucketed layout: co-bucketed equi-joins plan without an Exchange
-  * on either side, and results equal the plain join. */
+/** Plan layout pins: the queries rebuilt on [[PrefixSum]] positions
+  * plan without a Window operator. */
 class LayoutSpec extends SparkSpec {
-
-  test("co-bucketed join is exchange-free and matches the plain join") {
-    val s = spark
-    import s.implicits._
-    val left = (0L until 500L).map(i => (i, s"text_$i")).toDF("id", "payload")
-    val right = (0L until 500L by 2L).map(i => (i, i * 10)).toDF("id", "score")
-    val dir = java.nio.file.Files.createTempDirectory("graft-bucketed")
-    try {
-      Layout.writeBucketed(left, "bk_left", dir.resolve("l").toString, "id", 4)
-      Layout.writeBucketed(right, "bk_right", dir.resolve("r").toString, "id", 4)
-      val prevThreshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val joined = s.table("bk_left").join(s.table("bk_right"), Seq("id"))
-        assert(Layout.isExchangeFree(joined),
-          s"plan shuffles:\n${joined.queryExecution.executedPlan}")
-        val got = joined.select(col("id"), col("score"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val expected = (0L until 500L by 2L).map(i => (i, i * 10)).toSet
-        assert(got == expected)
-        // the same join on unbucketed frames DOES shuffle — the layout
-        // is what removed it
-        val plain = left.join(right, Seq("id"))
-        assert(!Layout.isExchangeFree(plain))
-      } finally {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      }
-    } finally {
-      s.sql("DROP TABLE IF EXISTS bk_left")
-      s.sql("DROP TABLE IF EXISTS bk_right")
-    }
-  }
-
-  test("compact: many small files become few range-sorted files, content intact") {
-    val s = spark
-    import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact")
-    val in = s"$dir/in"
-    val out = s"$dir/out"
-    // 40 tiny files with interleaved key ranges (the streaming-sink
-    // pathology: every file spans the whole key space)
-    (0L until 4000L).map(i => (i % 40 * 1000 + i / 40, s"payload_$i"))
-      .toDF("id", "payload").repartition(40).write.parquet(in)
-    val df = spark.read.parquet(in)
-    // target ≈ a quarter of the input -> expect ~4 output files
-    val totalIn = new java.io.File(in).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
-    val (nIn, nOut) = Layout.compact(df, out, Seq("id"), targetBytes = totalIn / 4)
-    assert(nIn == 40)
-    assert(nOut >= 3 && nOut <= 6, s"expected ~4 output files, got $nOut")
-    // content identical
-    val a = spark.read.parquet(in).orderBy("id").collect()
-    val b = spark.read.parquet(out).orderBy("id").collect()
-    assert(a.sameElements(b))
-    // data-skipping property: per-file key ranges are disjoint (range
-    // partitioning), so a point/range predicate prunes whole files
-    val ranges = spark.read.parquet(out)
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col("id")).as("lo"), max(col("id")).as("hi"))
-      .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) => assert(hi1 <= lo2,
-        s"overlapping file ranges: $hi1 vs $lo2")
-      case _ =>
-    }
-  }
 
   test("queries rebuilt on PrefixSum plan without any Window operator") {
     // q_context_pack (per-lang running token sum) and q_abc_classes
@@ -80,10 +14,10 @@ class LayoutSpec extends SparkSpec {
     // shapes; they must stay on the range-partitioned prefix-sum plan.
     val dir = "/root/testdata/sf0.001"
     val pack = graft.queries.Pipeline.queries("q_context_pack")(spark, dir)
-    assert(Layout.isWindowFree(pack),
+    assert(PlanChecks.isWindowFree(pack),
       s"q_context_pack regressed to a Window plan:\n${pack.queryExecution.executedPlan}")
     val abc = graft.queries.Analytics.queries("q_abc_classes")(spark, dir)
-    assert(Layout.isWindowFree(abc),
+    assert(PlanChecks.isWindowFree(abc),
       s"q_abc_classes regressed to a Window plan:\n${abc.queryExecution.executedPlan}")
     // sanity: the detector actually fires on a window plan
     val s = spark
@@ -91,6 +25,6 @@ class LayoutSpec extends SparkSpec {
     val w = org.apache.spark.sql.expressions.Window.orderBy("id")
     val windowed = (0L until 10L).toDF("id")
       .withColumn("r", sum(col("id")).over(w))
-    assert(!Layout.isWindowFree(windowed))
+    assert(!PlanChecks.isWindowFree(windowed))
   }
 }

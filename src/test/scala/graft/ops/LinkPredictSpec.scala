@@ -53,15 +53,22 @@ class LinkPredictSpec extends SparkSpec {
     assert(want.size < uncapped.size)
   }
 
-  test("aggregate form and self-join form are content-identical") {
+  test("ra matches brute force on the hub graph and random graphs at both caps") {
+    // deterministic LCG edge sets over 40 nodes, canonical and distinct
+    def random(seed: Long, n: Int): Seq[(Long, Long)] = {
+      var s = seed
+      def nxt(): Long = { s = (s * 1103515245L + 12345L) % 2147483648L; s }
+      (0 until n).map { _ =>
+        val a = nxt() % 40; val b = nxt() % 40
+        (math.min(a, b), math.max(a, b))
+      }.filter(e => e._1 != e._2).distinct
+    }
     val hub = (11L to 16L).map(s => (s, 100L))
-    val e = (g ++ hub).toDF("src", "dst")
-    for (cap <- Seq(5, 1024)) {
-      val viaAgg = LinkPredict.ra(e, cap)
-        .as[(Long, Long, Long)].collect().sorted.toSeq
-      val viaJoin = LinkPredict.raJoin(e, cap)
-        .as[(Long, Long, Long)].collect().sorted.toSeq
-      assert(viaAgg == viaJoin, s"cap=$cap")
+    for (edges <- Seq(g ++ hub, random(777L, 300), random(12345L, 220));
+         cap <- Seq(5, 1024)) {
+      val got = LinkPredict.ra(edges.toDF("src", "dst"), cap)
+        .as[(Long, Long, Long)].collect().map(t => (t._1, t._2) -> t._3).toMap
+      assert(got == bruteRa(edges, cap), s"cap=$cap edges=${edges.size}")
     }
   }
 

@@ -144,7 +144,9 @@ class LocalGraphSpec extends SparkSpec {
     assert(message(Sssp.boundedBellmanFord(bad, 1L, 2, Local)) ==
       message(Sssp.boundedBellmanFord(bad, 1L, 2, Distributed)))
     val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst")
-    assert(message(Truss.truss(g, 3, 0, Local)) == message(Truss.truss(g, 3, 0, Distributed)))
+    val truss = message(Truss.truss(g, 3, 0, Local))
+    assert(truss == message(Truss.truss(g, 3, 0, Distributed)))
+    assert(truss.startsWith("k-truss peel still shrinking after maxRounds=0 (edges=4)"), truss)
     // KCore's cap throws on both paths, like Truss's
     val chain = (1L to 6L).map(v => (v, v + 1)).toDF("src", "dst")
     val cap = message(KCore.core(chain, 2, 1, Local))

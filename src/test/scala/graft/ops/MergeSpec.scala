@@ -89,7 +89,7 @@ class MergeSpec extends SparkSpec {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
     // AQE wraps stages in QueryStageExec whose inner plan is a FIELD,
-    // not a child (the Layout.isExchangeFree lesson) — unwrap all of
+    // not a child (the PlanChecks lesson) — unwrap all of
     // AdaptiveSparkPlanExec / QueryStageExec / ReusedExchangeExec.
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)

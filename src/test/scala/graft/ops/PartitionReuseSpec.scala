@@ -46,7 +46,7 @@ class PartitionReuseSpec extends SparkSpec {
     val small = (0L until 700L).map(i => (i, 1L)).toDF("k", "w")
     val j = pre.join(small.hint("shuffle_hash"), Seq("k"))
     j.foreach(_ => ()) // execute THIS frame so the adaptive plan is final
-    assert(Layout.shuffleCount(j) == 2L,
+    assert(PlanChecks.shuffleCount(j) == 2L,
       "expected both join sides to exchange (no planner reuse of the " +
         "checkpointed distribution) — behavior changed, re-audit")
   }

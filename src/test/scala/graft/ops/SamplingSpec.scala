@@ -6,6 +6,11 @@ import graft.SparkSpec
 
 class SamplingSpec extends SparkSpec {
 
+  /** One stratum sampled at `rate`: the per-row md5 coin against
+    * `rate`'s threshold. */
+  private def sampledAt(rate: Double) =
+    Sampling.stratifiedAt(col("id"), lit("all"), Map("all" -> rate))
+
   test("threshold encoding") {
     assert(Sampling.threshold(0.0) == "0000")
     assert(Sampling.threshold(0.25) == "4000")
@@ -19,15 +24,15 @@ class SamplingSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val df = (1 to 20000).map(_.toLong).toDF("id")
-    val n = df.where(Sampling.sampleAt(col("id"), 0.25)).count()
+    val n = df.where(sampledAt(0.25)).count()
     // md5 is uniform; 20k draws at p=.25 → sd ≈ 61, assert ±5 sd
     assert(math.abs(n - 5000L) < 310, s"rate off: $n/20000")
-    val n2 = df.where(Sampling.sampleAt(col("id"), 0.25)).count()
+    val n2 = df.where(sampledAt(0.25)).count()
     assert(n == n2)
     // monotone: the 25% sample is a subset of the 50% sample
-    val ids25 = df.where(Sampling.sampleAt(col("id"), 0.25))
+    val ids25 = df.where(sampledAt(0.25))
       .collect().map(_.getLong(0)).toSet
-    val ids50 = df.where(Sampling.sampleAt(col("id"), 0.5))
+    val ids50 = df.where(sampledAt(0.5))
       .collect().map(_.getLong(0)).toSet
     assert(ids25.subsetOf(ids50))
   }
@@ -37,8 +42,8 @@ class SamplingSpec extends SparkSpec {
     import s.implicits._
     val df = (1 to 9000).map(i =>
       (i.toLong, Seq("a", "b", "c")(i % 3))).toDF("id", "grp")
-    val out = Sampling.stratified(df, "id", "grp",
-      Map("a" -> 0.1, "b" -> 0.9))
+    val out = df.where(Sampling.stratifiedAt(col("id"), col("grp"),
+      Map("a" -> 0.1, "b" -> 0.9)))
       .groupBy("grp").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(math.abs(out("a") - 300L) < 90, out.toString) // 3000 × .1
@@ -50,8 +55,8 @@ class SamplingSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val df = (1 to 100).map(_.toLong).toDF("id")
-    assert(df.where(Sampling.sampleAt(col("id"), 0.0)).count() == 0L)
-    assert(df.where(Sampling.sampleAt(col("id"), 1.0)).count() == 100L)
+    assert(df.where(sampledAt(0.0)).count() == 0L)
+    assert(df.where(sampledAt(1.0)).count() == 100L)
   }
 
   test("weighted sampling: kept set matches the local md5 draw; rates scale with weight") {

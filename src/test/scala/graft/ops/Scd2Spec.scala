@@ -87,7 +87,9 @@ class Scd2Spec extends SparkSpec {
     val scd2 = build(Seq(
       ("u1", 10L, 1L, "a"), ("u1", 30L, 2L, "b"),
       ("u2", 5L, 3L, "x")))
-    def at(t: Long) = Scd2.asOf(scd2, lit(t)).collect()
+    // the version whose half-open interval [valid_from, valid_to) holds t
+    def at(t: Long) = scd2.where(col("valid_from") <= t &&
+        (col("valid_to").isNull || col("valid_to") > t)).collect()
       .map(r => r.getAs[String]("k") -> r.getAs[String]("attr")).toMap
     assert(at(10L) === Map("u1" -> "a", "u2" -> "x"))
     assert(at(29L) === Map("u1" -> "a", "u2" -> "x"))

@@ -43,33 +43,6 @@ class ShuffleSpec extends SparkSpec {
     assert(a != c)
   }
 
-  test("writeShards: one pruned directory per shard, shards partition the corpus") {
-    val out = java.nio.file.Files.createTempDirectory("graft-shards").toString
-    Shuffle.writeShards(ids(400), "id", seed = 5L, shards = 4, out)
-    val dirs = new java.io.File(out).listFiles()
-      .filter(_.getName.startsWith("shard_id=")).map(_.getName).sorted
-    assert(dirs.toSeq == Seq("shard_id=0", "shard_id=1", "shard_id=2", "shard_id=3"))
-    val back = spark.read.parquet(out)
-    // shards partition the id set exactly, 100 rows each
-    assert(back.count() == 400)
-    assert(back.select("id").distinct().count() == 400)
-    val sizes = back.groupBy("shard_id").count()
-      .collect().map(_.getLong(1)).toSeq
-    assert(sizes == Seq(100L, 100L, 100L, 100L))
-    // reading one shard prunes to its directory's files only
-    val one = spark.read.parquet(out).where(col("shard_id") === 2)
-    val files = one.select(input_file_name()).distinct()
-      .collect().map(_.getString(0))
-    assert(files.nonEmpty && files.forall(_.contains("shard_id=2")))
-    // shard membership matches the shuffle positions
-    val expected = Shuffle.shuffled(ids(400), "id", seed = 5L)
-      .select(col("id"), pmod(col("shuffle_pos"), lit(4L)).as("s"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val got = back.select(col("id"), col("shard_id").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got == expected)
-  }
-
   test("round-robin shards are near-equal in size") {
     val out = Shuffle.shuffled(ids(1000), "id", seed = 3L)
       .select(pmod(col("shuffle_pos"), lit(8L)).as("shard"))

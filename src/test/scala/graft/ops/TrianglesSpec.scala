@@ -20,7 +20,7 @@ class TrianglesSpec extends SparkSpec {
   }
 
   private def run(edges: Set[(Long, Long)]): (Long, Long, Long) = {
-    val r = Triangles.stats(edges.toSeq.toDF("src", "dst")).collect()(0)
+    val r = Triangles.statsAdjacency(edges.toSeq.toDF("src", "dst")).collect()(0)
     (r.getLong(0), r.getLong(1), r.getLong(2))
   }
 
@@ -33,38 +33,49 @@ class TrianglesSpec extends SparkSpec {
     assert(t == bruteTriangles(k4 + ((3L, 9L))))
   }
 
-  test("matches brute force on a pseudo-random graph") {
-    // Deterministic LCG edge set over 30 nodes.
-    var s = 12345L
+  private def lcgEdges(seed: Long, draws: Int, nodes: Int): Set[(Long, Long)] = {
+    var s = seed
     def nxt(): Long = { s = (s * 1103515245L + 12345L) % 2147483648L; s }
-    val edges = (0 until 220).map { _ =>
-      val a = nxt() % 30; val b = nxt() % 30
+    (0 until draws).map { _ =>
+      val a = nxt() % nodes; val b = nxt() % nodes
       (math.min(a, b), math.max(a, b))
     }.filter(e => e._1 != e._2).toSet
+  }
+
+  /** Wedge form: every pair of a node's neighbours is a wedge; a
+    * triangle closes three wedges, one at each corner. */
+  private def wedgeTriangles(edges: Set[(Long, Long)]): Long = {
+    val adj = edges.toSeq.flatMap(e => Seq(e, e.swap))
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sorted }
+    val closed = adj.values.map { nb =>
+      nb.combinations(2).count(p => edges.contains((p(0), p(1)))).toLong
+    }.sum
+    assert(closed % 3 == 0)
+    closed / 3
+  }
+
+  test("matches brute force on a pseudo-random graph") {
+    // Deterministic LCG edge set over 30 nodes.
+    val edges = lcgEdges(12345L, 220, 30)
     val (n, m, t) = run(edges)
+    assert(n == edges.flatMap(e => Seq(e._1, e._2)).size.toLong)
     assert(m == edges.size.toLong)
     assert(t == bruteTriangles(edges), s"got $t (nodes=$n)")
   }
 
   test("adjacency-intersection form equals the wedge form and brute force") {
-    var s = 777L
-    def nxt(): Long = { s = (s * 1103515245L + 12345L) % 2147483648L; s }
-    val edges = (0 until 300).map { _ =>
-      val a = nxt() % 40; val b = nxt() % 40
-      (math.min(a, b), math.max(a, b))
-    }.filter(e => e._1 != e._2).toSet
-    val viaAdj = Triangles.statsAdjacency(edges.toSeq.toDF("src", "dst"))
-      .collect()(0)
+    val edges = lcgEdges(777L, 300, 40)
     val (n, m, t) = run(edges)
-    assert((viaAdj.getLong(0), viaAdj.getLong(1), viaAdj.getLong(2))
-      == ((n, m, t)))
+    assert(n == edges.flatMap(e => Seq(e._1, e._2)).size.toLong)
+    assert(m == edges.size.toLong)
+    assert(t == wedgeTriangles(edges))
     assert(t == bruteTriangles(edges))
-    // and on the wheel (hub stress): both forms agree
+    // and on the wheel (hub stress): all three counts agree
     val star = (1L to 20L).map(i => (0L, i)).toSet
     val rim = (1L to 19L).map(i => (i, i + 1)).toSet + ((1L, 20L))
-    val w = Triangles.statsAdjacency((star ++ rim).toSeq.toDF("src", "dst"))
-      .collect()(0)
-    assert(w.getLong(2) == 20L)
+    val w = run(star ++ rim)._3
+    assert(w == 20L)
+    assert(w == wedgeTriangles(star ++ rim))
   }
 
   test("hub graph: star has zero triangles, wheel has spoke count") {

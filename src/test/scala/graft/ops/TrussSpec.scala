@@ -73,6 +73,20 @@ class TrussSpec extends SparkSpec with BothPaths {
     assert(ex.getMessage.startsWith("k-truss peel still shrinking after maxRounds=1 (edges="))
   }
 
+  bothPaths("a peel that reaches its fixpoint on the last allowed round returns") { limit =>
+    // k=4 on g cascades for `need` shrink rounds and keeps the clique:
+    // a cap of `need` fits exactly, one less runs out mid-peel
+    val (_, need) = brute(g, 4)
+    val df = g.toSeq.toDF("src", "dst")
+    val (t, rounds) = Truss.truss(df, 4, maxRounds = need, limit)
+    assert(t.collect().map(x => (x.getLong(0), x.getLong(1))).toSet == clique)
+    assert(rounds == need)
+    val ex = intercept[IllegalStateException] {
+      Truss.truss(df, 4, maxRounds = need - 1, limit)
+    }
+    assert(ex.getMessage.startsWith(s"k-truss peel still shrinking after maxRounds=${need - 1} (edges="))
+  }
+
   bothPaths("k=5 and k=6: the clique is a 5-truss but not a 6-truss; empty handled") { limit =>
     val (g5, _) = run(g, 5, limit)
     assert(g5 == clique)

@@ -23,26 +23,6 @@ class WinsorizeSpec extends SparkSpec {
     assert(b(1) == ((1, 50.0, 950.0, 100L, 4L, 5L)))
   }
 
-  test("clipped: every coordinate lands in its dim's bounds; change count matches") {
-    val c = Winsorize.clipped(vecs, "embedding",
-      lo = Seq(5.0, 50.0), hi = Seq(95.0, 950.0))
-    import org.apache.spark.sql.functions._
-    val row = c.select(
-      min(element_at(col("embedding_clipped"), 1)),
-      max(element_at(col("embedding_clipped"), 1)),
-      min(element_at(col("embedding_clipped"), 2)),
-      max(element_at(col("embedding_clipped"), 2)),
-      sum(when(element_at(col("embedding_clipped"), 1) =!=
-        element_at(col("embedding").cast("array<double>"), 1), 1L)
-        .otherwise(0L) +
-        when(element_at(col("embedding_clipped"), 2) =!=
-          element_at(col("embedding").cast("array<double>"), 2), 1L)
-          .otherwise(0L))).collect().head
-    assert(row.getDouble(0) == 5.0 && row.getDouble(1) == 95.0)
-    assert(row.getDouble(2) == 50.0 && row.getDouble(3) == 950.0)
-    assert(row.getLong(4) == 18L) // (4 below + 5 above) per dim × 2 dims
-  }
-
   test("positionsBy: deterministic across runs and equal to the total order") {
     val df = Seq((3L, "b"), (1L, "b"), (2L, "a"), (4L, "a"))
       .toDF("id", "g")

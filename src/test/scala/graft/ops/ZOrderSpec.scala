@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -59,38 +57,5 @@ class ZOrderSpec extends SparkSpec {
       .agg((max(col("y")) - min(col("y"))).as("span"))
       .agg(max(col("span"))).head().getLong(0)
     assert(slabY == 63) // full y range — no pruning on y predicates
-  }
-
-  test("writeZOrdered lays shards down as tight parquet files") {
-    val li = graft.Tables.lineitem(spark, "/root/testdata/sf0.001")
-      .select(col("l_partkey"), col("l_suppkey"))
-    val dir = Files.createTempDirectory("zorder").toString
-    ZOrder.writeZOrdered(li, "l_partkey", "l_suppkey", dir, numFiles = 8)
-    val back = spark.read.parquet(dir)
-    assert(back.count() == li.count())
-    // Per-file bounding boxes: every file must span well under the
-    // full partkey range (the parquet min/max stats a scan would
-    // prune on). Range partitioning by zval gives contiguous z runs,
-    // whose projections are bounded rectangles, possibly a few per
-    // file — bound the span at half the global range where a
-    // one-file-per-x-slab layout would approach the full range on one
-    // of the dims for SOME file.
-    val spans = back
-      .groupBy(input_file_name().as("f"))
-      .agg((max(col("l_partkey")) - min(col("l_partkey"))).as("px"),
-        (max(col("l_suppkey")) - min(col("l_suppkey"))).as("py"))
-      .collect()
-    assert(spans.length == 8)
-    val global = li.agg(
-      (max(col("l_partkey")) - min(col("l_partkey"))).cast("double"),
-      (max(col("l_suppkey")) - min(col("l_suppkey"))).cast("double")).head()
-    val (gx, gy) = (global.getDouble(0), global.getDouble(1))
-    // Average per-file extent must be well below the global range on
-    // BOTH dims at once (each file covers a fraction of the z-range ≈
-    // a union of small rectangles).
-    val avgPx = spans.map(_.getAs[Long]("px")).sum.toDouble / spans.length
-    val avgPy = spans.map(_.getAs[Long]("py")).sum.toDouble / spans.length
-    assert(avgPx < 0.8 * gx, s"avg partkey file span $avgPx vs global $gx")
-    assert(avgPy < 0.8 * gy, s"avg suppkey file span $avgPy vs global $gy")
   }
 }

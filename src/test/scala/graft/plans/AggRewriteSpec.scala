@@ -23,7 +23,7 @@ class AggRewriteSpec extends SparkSpec {
     try f
     finally {
       spark.experimental.extraOptimizations = prev
-      AggRewrite.clear()
+      AggRewrite.registry.clear()
     }
   }
 
@@ -65,7 +65,7 @@ class AggRewriteSpec extends SparkSpec {
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         .toSet
       // (the second frame is also rewritten — recompute with the rule off)
-      AggRewrite.clear()
+      AggRewrite.registry.clear()
       val expOff = spark.read.parquet(base).groupBy("g")
         .agg(sum(col("v")).as("sv"), count(lit(1)).as("cnt"),
           round(max(col("w")), 2).as("mw"))
@@ -101,7 +101,7 @@ class AggRewriteSpec extends SparkSpec {
       val h = spark.read.parquet(base).where(col("g") =!= "g3")
         .groupBy("g").agg(sum(col("v")).as("sv"))
       assert(usesSummary(h))
-      AggRewrite.clear()
+      AggRewrite.registry.clear()
       val hExp = spark.read.parquet(base).where(col("g") =!= "g3")
         .groupBy("g").agg(sum(col("v")).as("sv"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toSet
@@ -125,7 +125,7 @@ class AggRewriteSpec extends SparkSpec {
       assert(scanPaths(df).exists(_.contains(sumPath)))
       val got = df.collect().map(r => (r.getString(0), r.getLong(1),
         r.getString(2))).toSet
-      AggRewrite.clear()
+      AggRewrite.registry.clear()
       val exp = spark.read.parquet(base).groupBy("g")
         .agg(sum(col("v")).as("sv")).join(dim, "g")
         .collect().map(r => (r.getString(0), r.getLong(1),
@@ -147,7 +147,7 @@ class AggRewriteSpec extends SparkSpec {
       assert(scanPaths(df).exists(_.contains(sumPath)),
         scanPaths(df).mkString(";"))
       val got = df.collect().map(r => (r.getString(0), r.getLong(1))).toSet
-      AggRewrite.clear()
+      AggRewrite.registry.clear()
       val exp = spark.read.parquet(base).groupBy("g")
         .agg((sum(col("v")) + length(col("g"))).as("svl"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toSet

@@ -7,7 +7,9 @@ import org.apache.spark.sql.{DataFrame, Row}
 import graft.SparkSpec
 
 /** The collect-once renderer: its JSON lines are `df.toJSON`'s, and its
-  * TSV and Markdown equal a per-format collect of the same frame. */
+  * TSV and Markdown equal a per-format collect of the same frame. (The
+  * report tree's `to_json` columns are checked against `df.toJSON` in
+  * ReportTreeSpec.) */
 class ReportsSpec extends SparkSpec {
   import ReportsSpec._
 
@@ -23,8 +25,7 @@ class ReportsSpec extends SparkSpec {
 
   test("JSON lines equal df.toJSON row for row; TSV and Markdown equal a plain collect") {
     Seq(frame, frame.limit(0), frame.select("bytes")).foreach { df =>
-      val t = Reports.Table.withJson(df)
-      assert(t.json == df.toJSON.collect().toSeq)
+      val t = Reports.Table(df.columns.toSeq, df.collect().toSeq, df.toJSON.collect().toSeq)
       assert(Reports.jsonLines(t) == df.toJSON.collect().mkString("\n"))
       assert(Reports.tsv(t) == tsvRef(df))
       assert(Reports.markdown(t, "T") == markdownRef(df, "T"))

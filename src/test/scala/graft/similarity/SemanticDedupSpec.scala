@@ -53,8 +53,11 @@ class SemanticDedupSpec extends SparkSpec {
   test("planted twins resolve to groups and dedup keeps one per group") {
     val pairs = SemanticDedup.clusterPairs(vecs, "embedding", "vec_id",
       centroids, 0.999)
-    val surviving = SemanticDedup.dedup(vecs, "embedding", "vec_id",
-      centroids, 0.999)
+    // every non-representative group member (id ≠ its group's min id)
+    // is anti-joined away
+    val redundant = SemanticDedup.dupGroups(pairs)
+      .where(col("id") =!= col("component")).select(col("id").as("vec_id"))
+    val surviving = vecs.join(redundant, Seq("vec_id"), "left_anti")
       .collect().map(_.getLong(0)).toSet
     // every twin (1000+i) is dominated by its base i → dropped
     val twinIds = data.map(_._1).filter(_ >= 1000L).toSet

@@ -22,7 +22,7 @@ class JsonlSinkSpec extends SparkSpec {
     assert(graft.ingest.Export.verify(spark, out, "doc_id",
       format = "json").isEmpty)
     // the pinned-schema reader round-trips content exactly
-    val back = graft.Tables.documentsJsonl(spark, out)
+    val back = graft.TestTables.documentsJsonl(spark, out)
     assert(back.count() === docs.count())
     assert(back.select("doc_id", "text", "lang", "source", "n_chars")
       .collect().map(_.toSeq).toSet ===

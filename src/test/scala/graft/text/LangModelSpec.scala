@@ -40,12 +40,6 @@ class LangModelSpec extends SparkSpec {
     assert(res.toSeq == Seq((0L, 3L, 0.8333), (1L, 2L, 0.75), (2L, 1L, 1.0)))
   }
 
-  test("low-likelihood gate keeps only corpus outliers") {
-    val low = LangModel.lowLikelihoodDocs(corpus, "text", "doc_id", 0.8)
-      .collect().map(_.getLong(0)).toSet
-    assert(low == Set(1L))
-  }
-
   // ---- interpolated Kneser–Ney trigram perplexity ----
 
   private def md5hex(s: String): String =

@@ -2,8 +2,9 @@
 """Reachability scan over src/main: lists every definition that no root reaches.
 
 Usage:
-    python3 tools/reach.py              # scan the repository; exit 1 on an unlisted finding
-    python3 tools/reach.py --self-test  # run the scan on a small fixture tree
+    python3 tools/reach.py                # scan the repository; exit 1 on an unlisted finding
+    python3 tools/reach.py --loc [PATH...]  # code lines per Scala file and in total (default src/main)
+    python3 tools/reach.py --self-test    # run the scan and the line count on fixtures
 
 A definition is a member of a package, object, class or trait (def, val,
 var, type, object, class, trait). Definitions local to a method body are
@@ -87,10 +88,11 @@ class Tok:
         self.line = line
 
 
-def lex(src):
+def lex(src, comments=None):
     """Tokens of Scala source with comments removed. A string literal is
     kept as the identifiers it contains ("str" tokens); the code inside
-    `${...}` of an interpolated string is lexed as code."""
+    `${...}` of an interpolated string is lexed as code. The (start, end)
+    offsets of each comment are appended to `comments` when given."""
     toks = []
     n = len(src)
     line_starts = [0] + [m.end() for m in re.finditer("\n", src)]
@@ -144,10 +146,12 @@ def lex(src):
             if c in " \t\r\n\f":
                 i += 1
             elif src.startswith("//", i):
-                i = src.find("\n", i)
+                start, i = i, src.find("\n", i)
                 i = n if i < 0 else i
+                if comments is not None:
+                    comments.append((start, i))
             elif src.startswith("/*", i):
-                nest, i = 1, i + 2
+                start, nest, i = i, 1, i + 2
                 while i < n and nest:
                     if src.startswith("/*", i):
                         nest, i = nest + 1, i + 2
@@ -155,6 +159,8 @@ def lex(src):
                         nest, i = nest - 1, i + 2
                     else:
                         i += 1
+                if comments is not None:
+                    comments.append((start, i))
             elif c == '"':
                 i = lex_string(i, interpolated=False)
             elif c == "`":
@@ -187,6 +193,20 @@ def lex(src):
 
     lex_code(0)
     return toks
+
+
+def code_lines(src):
+    """Lines holding a character that is neither whitespace nor part of a
+    comment; comments are found by `lex`, so a `//` inside a string
+    literal starts none."""
+    comments = []
+    lex(src, comments)
+    chars = list(src)
+    for lo, hi in comments:
+        for k in range(lo, hi):
+            if chars[k] != "\n":
+                chars[k] = " "
+    return sum(1 for line in "".join(chars).split("\n") if line.strip())
 
 
 class FileCtx:
@@ -675,6 +695,20 @@ def main_scan():
     return 1 if bad else 0
 
 
+def main_loc(paths):
+    """Prints the code lines of each Scala file under `paths` (files or
+    directories; default src/main) and their total."""
+    total = 0
+    for arg in paths or [str(REPO / "src" / "main")]:
+        p = Path(arg).resolve()
+        for f in (scala_files(p) if p.is_dir() else [p]):
+            n = code_lines(f.read_text(encoding="utf-8"))
+            total += n
+            print(f"{n:7d} {f.relative_to(REPO) if f.is_relative_to(REPO) else f}")
+    print(f"{total:7d} total")
+    return 0
+
+
 FIXTURE = {
     "src/main/scala/app/Entry.scala": '''package app
 
@@ -723,6 +757,25 @@ class UsedSpec { Used.specOnly(); Narrow.run(2) }
 }
 
 
+# Eight code lines: package, object, url, sep (with x), the three lines of s, the brace.
+LOC_FIXTURE = '''package app
+
+// a line comment
+/** A doc comment
+  * over two lines. */
+object Loc {
+  val url = "http://example.com" // a trailing comment
+
+  val sep = "//"; /* a block */ val x = 1
+  /* a block comment
+     over two lines */
+  val s = """
+    |// inside a string
+    |""".stripMargin
+}
+'''
+
+
 def self_test():
     with tempfile.TemporaryDirectory() as d:
         for rel, text in FIXTURE.items():
@@ -747,6 +800,7 @@ def self_test():
             ("interpolation is code", "app.Used.interpolated" not in got and "app.Entry.splice" not in got),
             ("a char literal '\"' opens no string", "app.Used.afterChar" not in got),
             ("services class reached", "app.Sink" not in got and "app.Sink.createRelation" not in got),
+            ("code lines: comments and blanks stripped, `//` in strings kept", code_lines(LOC_FIXTURE) == 8),
         ]
         failed = [name for name, ok in checks if not ok]
         for name, ok in checks:
@@ -758,4 +812,8 @@ def self_test():
 
 
 if __name__ == "__main__":
-    sys.exit(self_test() if sys.argv[1:] == ["--self-test"] else main_scan())
+    if sys.argv[1:] == ["--self-test"]:
+        sys.exit(self_test())
+    if sys.argv[1:2] == ["--loc"]:
+        sys.exit(main_loc(sys.argv[2:]))
+    sys.exit(main_scan())
